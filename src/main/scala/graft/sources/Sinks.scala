@@ -2,6 +2,9 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
+import java.util.concurrent.{ExecutionException, Executors, ThreadFactory, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 /** Output sinks (SURVEY.md §2.1 S3-S6): the reference persists its
   * seven analytics tables to MySQL over JDBC
   * (/root/reference/yellow_taxi_etl.py:37-48, call sites :205-211),
@@ -14,9 +17,12 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   * Scale notes: both file and JDBC writes are executed per partition
   * on the executors (JDBC opens one connection per partition —
   * Spark's JdbcUtils.savePartition), so the sink never funnels
-  * through the driver. For very wide clusters cap write parallelism
-  * upstream (`df.coalesce(n)`) to stay under the database's
-  * connection budget.
+  * through the driver. [[Sinks.writeAll]] calls `write` for all of
+  * its tables at once, from concurrent threads, so an implementation
+  * must be safe to call concurrently for distinct tables. For very
+  * wide clusters cap write parallelism upstream (`df.coalesce(n)`)
+  * to stay under the database's connection budget, per table (see
+  * [[JdbcSink]]).
   */
 trait Sink {
   def write(df: DataFrame, table: String, mode: SaveMode): Unit
@@ -118,7 +124,11 @@ final class PartitionedParquetSink(baseDir: String,
 
 /** JDBC sink (S4) — matches the reference's writer option-for-option
   * (yellow_taxi_etl.py:37-48: url/dbtable/user/password/driver, then
-  * mode + save). */
+  * mode + save). Each write opens one connection per partition of
+  * `df`, and [[Sinks.writeAll]] runs the tables' writes concurrently,
+  * so a fan-out of seven tables can open up to seven times the
+  * per-table partition count: size any `coalesce(n)` connection
+  * budget per table. */
 final class JdbcSink(url: String, user: String, password: String,
     driver: String) extends Sink {
   override def write(df: DataFrame, table: String, mode: SaveMode): Unit =
@@ -144,14 +154,51 @@ object Sinks {
     * tables in append or overwrite per the CLI flag, EXCEPT
     * `fare_anomalies`, which is always overwritten because its p99
     * threshold is recomputed per run and appending would mix
-    * thresholds (yellow_taxi_etl.py:56,207; new_etl.py:94). */
+    * thresholds (yellow_taxi_etl.py:56,207; new_etl.py:94).
+    *
+    * The reference persists its tables one at a time; here every
+    * table's `sink.write` starts together, each as its own Spark job
+    * on its own thread, so the small aggregate jobs overlap instead
+    * of each paying its fixed cost in turn. The pool's threads are
+    * created by the caller and so inherit its Spark local properties
+    * (job group, scheduler pool). The call returns once every write
+    * has finished: if any failed, the first failure in table order is
+    * rethrown with the later ones attached as suppressed, and no pool
+    * thread outlives the call. */
   def writeAll(tables: Seq[(String, DataFrame)], sink: Sink,
       overwrite: Boolean,
       alwaysOverwrite: Set[String] = Set("fare_anomalies")): Unit = {
+    if (tables.isEmpty) return
     val base = if (overwrite) SaveMode.Overwrite else SaveMode.Append
-    tables.foreach { case (name, df) =>
-      val mode = if (alwaysOverwrite(name)) SaveMode.Overwrite else base
-      sink.write(df, name, mode)
+    val pool = Executors.newFixedThreadPool(tables.size, writerThreads)
+    try {
+      val pending = tables.map { case (name, df) =>
+        val mode = if (alwaysOverwrite(name)) SaveMode.Overwrite else base
+        pool.submit(new Runnable { def run(): Unit = sink.write(df, name, mode) })
+      }
+      val failures = pending.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      }
+    } finally {
+      pool.shutdownNow()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
+  }
+
+  /** Name prefix of [[writeAll]]'s pool threads. */
+  val WriterThreadPrefix = "graft-sink-write-"
+
+  private val writerThreads = new ThreadFactory {
+    private val n = new AtomicInteger()
+    def newThread(r: Runnable): Thread = {
+      val t = new Thread(r, WriterThreadPrefix + n.incrementAndGet())
+      t.setDaemon(true)
+      t
     }
   }
 }

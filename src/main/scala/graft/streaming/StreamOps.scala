@@ -448,8 +448,9 @@ object StreamOps {
     * shuffle parallelism (a 100 TB backlog hits the cap and the
     * deployment raises the session setting; the knob only ever
     * SHRINKS state-store count below the batch default, never
-    * schedules more). */
-  /** @param floor minimum partition count — OPERATOR-SHAPE-derived
+    * schedules more).
+    *
+    * @param floor minimum partition count — OPERATOR-SHAPE-derived
     *   (r16): single-store stateful ops keep 4 (r15's measurement:
     *   per-partition store open/commit dominates a near-empty
     *   replay — the simple-agg stream read 1.7 s at 8 vs 1.3 s at
@@ -472,12 +473,6 @@ object StreamOps {
     math.max(floor, math.min(sess, (bytes / (32L << 20)).toInt))
   }
 
-  /** Start an availableNow stream with [[statePartitionsFor]]-sized
-    * state partitioning and drain it to completion, restoring the
-    * session's shuffle-partition setting afterwards (batch queries
-    * sharing the session keep their parallelism). The conf is set
-    * BEFORE start() because the stateful plan reads it at
-    * first-micro-batch planning, which races awaitTermination. */
   /** Fully-qualified class of Spark's spillable state store. The
     * default HDFSBackedStateStoreProvider keeps every state
     * partition's map ON HEAP — fine for watermark-bounded fixture
@@ -517,6 +512,12 @@ object StreamOps {
   def sinkTable(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.table(name).coalesce(statePartitionsFor(spark, dir))
 
+  /** Start an availableNow stream with [[statePartitionsFor]]-sized
+    * state partitioning and drain it to completion, restoring the
+    * session's shuffle-partition setting afterwards (batch queries
+    * sharing the session keep their parallelism). The conf is set
+    * BEFORE start() because the stateful plan reads it at
+    * first-micro-batch planning, which races awaitTermination. */
   def drainSized(spark: SparkSession, dir: String, floor: Int = 4)(
       start: => StreamingQuery): StreamingQuery = {
     val key = "spark.sql.shuffle.partitions"

@@ -21,7 +21,12 @@ import org.apache.spark.sql.functions._
   * keys (≤265 zones × 24 h × 7 dow), so shuffle volume is thousands
   * of rows against billions scanned; the quantile is a driver-side
   * GK sketch (bounded memory) whose scalar re-enters the plan as a
-  * pushed-down literal filter.
+  * pushed-down literal filter. The p99 sketch runs eagerly over the
+  * cached features, so the cache is filled once before any table is
+  * written; the seven writes then run concurrently as separate Spark
+  * jobs over that one cache ([[graft.sources.Sinks.writeAll]]), which
+  * keeps the cores busy where one-at-a-time writes of small
+  * aggregates would leave most of them idle between jobs.
   */
 object TaxiPipeline {
 
@@ -128,8 +133,9 @@ object TaxiPipeline {
         sum("fare_amount").as("total_revenue"))
 
   /** Full flagship run (yellow_taxi_etl.py main): feature + cache the
-    * input once, compute all seven analytics, fan out to the sink
-    * with the reference's mode plumbing (fare_anomalies always
+    * input once, compute all seven analytics (the eager p99 threshold
+    * fills the cache), then write them to the sink concurrently with
+    * the reference's mode plumbing (fare_anomalies always
     * overwritten — threshold is per-run). Returns the table map for
     * inspection/testing. */
   def run(raw: DataFrame, sink: Sink,

@@ -1,10 +1,11 @@
 package graft
 
-import graft.sources.{ConsoleSink, JdbcSink, ParquetSink, Sinks}
-import org.apache.spark.sql.SaveMode
+import graft.sources.{ConsoleSink, JdbcSink, ParquetSink, Sink, Sinks}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** S3-S6 sink surface: parquet round-trip, console, JDBC against the
   * in-process fake driver (the REAL Spark JDBC write path: existence
@@ -160,5 +161,66 @@ class SinksSpec extends AnyFunSuite {
     Sinks.writeAll(tables, jdbcSink, overwrite = false) // append run
     assert(FakeJdbcStore.rows("demand_heatmap").size == 6) // appended
     assert(FakeJdbcStore.rows("fare_anomalies").size == 3) // re-overwritten
+  }
+
+  private val sevenTables = Seq("demand_heatmap", "tip_trends",
+    "fare_anomalies", "trip_performance", "popular_routes",
+    "payment_analysis", "distance_distribution")
+
+  private def liveWriterThreads: Set[String] =
+    Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith(Sinks.WriterThreadPrefix))
+      .map(_.getName).toSet
+
+  test("writeAll: a failed write waits for the others, rethrows the " +
+      "first failure in table order, and leaves no pool thread") {
+    val dir = Files.createTempDirectory("graft_fail").toString
+    val parquet = new ParquetSink(dir)
+    // `slow` fails late and `fast` fails at once, so table order and
+    // completion order disagree
+    def failing(slow: String, fast: Option[String]) = new Sink {
+      override def write(df: DataFrame, table: String, mode: SaveMode): Unit =
+        if (table == slow) { Thread.sleep(300); sys.error(s"boom $table") }
+        else if (fast.contains(table)) sys.error(s"boom $table")
+        else parquet.write(df, table, mode)
+    }
+    val tables = sevenTables.map(_ -> sample)
+    val e = intercept[RuntimeException] {
+      Sinks.writeAll(tables, failing("fare_anomalies", None), overwrite = true)
+    }
+    assert(e.getMessage == "boom fare_anomalies")
+    assert(e.getSuppressed.isEmpty)
+    sevenTables.filterNot(_ == "fare_anomalies").foreach { t =>
+      assert(spark.read.parquet(s"$dir/$t").count() == 3, t)
+    }
+    assert(liveWriterThreads.isEmpty, liveWriterThreads)
+
+    val two = intercept[RuntimeException] {
+      Sinks.writeAll(tables, failing("tip_trends", Some("payment_analysis")),
+        overwrite = true)
+    }
+    assert(two.getMessage == "boom tip_trends")
+    assert(two.getSuppressed.map(_.getMessage).toSeq ==
+      Seq("boom payment_analysis"))
+    assert(liveWriterThreads.isEmpty, liveWriterThreads)
+  }
+
+  test("writeAll: every write sees the caller's job group and local " +
+      "properties") {
+    val sc = spark.sparkContext
+    val key = "graft.test.writeAllProbe"
+    val seen = java.util.concurrent.ConcurrentHashMap
+      .newKeySet[(String, String, String)]()
+    val recorder = new Sink {
+      override def write(df: DataFrame, table: String, mode: SaveMode): Unit =
+        seen.add((table, sc.getLocalProperty("spark.jobGroup.id"),
+          sc.getLocalProperty(key)))
+    }
+    sc.setJobGroup("graft-writeAll-group", "writeAll local properties")
+    sc.setLocalProperty(key, "probe-value")
+    try Sinks.writeAll(sevenTables.map(_ -> sample), recorder, overwrite = true)
+    finally { sc.clearJobGroup(); sc.setLocalProperty(key, null) }
+    assert(seen.asScala.toSet == sevenTables.map(t =>
+      (t, "graft-writeAll-group", "probe-value")).toSet)
   }
 }

@@ -141,23 +141,46 @@ class TaxiPipelineSpec extends AnyFunSuite {
     assert(TaxiPipeline.clean(df(Trip())).count() == 1)
   }
 
+  private val sevenTables = Seq("demand_heatmap", "tip_trends",
+    "fare_anomalies", "trip_performance", "popular_routes",
+    "payment_analysis", "distance_distribution")
+
   test("run: seven tables reach the sink; fare_anomalies always overwrite") {
+    // the writes run concurrently, so the recorder is synchronized and
+    // the check is on what was written, not in which order
     val writes = mutable.ArrayBuffer[(String, SaveMode, Long)]()
     val recorder = new Sink {
-      override def write(d: DataFrame, t: String, m: SaveMode): Unit =
-        writes += ((t, m, d.count()))
+      override def write(d: DataFrame, t: String, m: SaveMode): Unit = {
+        val n = d.count()
+        writes.synchronized { writes += ((t, m, n)) }
+      }
     }
     TaxiPipeline.run(df(Seq.fill(12)(Trip()): _*), recorder,
       overwrite = false)
-    val names = writes.map(_._1).toSeq
-    assert(names == Seq("demand_heatmap", "tip_trends", "fare_anomalies",
-      "trip_performance", "popular_routes", "payment_analysis",
-      "distance_distribution"))
-    val modes = writes.map(w => w._1 -> w._2).toMap
-    assert(modes("fare_anomalies") == SaveMode.Overwrite)
-    assert(modes.filterKeys(_ != "fare_anomalies").values.toSet ==
-      Set(SaveMode.Append))
-    assert(writes.forall(_._3 > 0))
+    val got = writes.synchronized(writes.toList)
+    val expected = sevenTables.map(t => t ->
+      (if (t == "fare_anomalies") SaveMode.Overwrite else SaveMode.Append))
+    assert(got.map(w => w._1 -> w._2).sortBy(_._1) == expected.sortBy(_._1))
+    assert(got.forall(_._3 > 0))
+    Caching.releaseAll()
+  }
+
+  test("run: the seven writes are in flight at the same time") {
+    // each write waits until a second one has started: one-at-a-time
+    // writes would time the first one out
+    val started = new java.util.concurrent.CountDownLatch(2)
+    val overlapped = new java.util.concurrent.atomic.AtomicInteger()
+    val recorder = new Sink {
+      override def write(d: DataFrame, t: String, m: SaveMode): Unit = {
+        started.countDown()
+        if (started.await(60, java.util.concurrent.TimeUnit.SECONDS))
+          overlapped.incrementAndGet()
+      }
+    }
+    TaxiPipeline.run(df(Seq.fill(12)(Trip()): _*), recorder,
+      overwrite = true)
+    assert(overlapped.get == 7)
+    Caching.releaseAll()
   }
 
   test("e2e: nightly re-run through UpsertParquetSink — re-computed " +
@@ -218,10 +241,10 @@ class TaxiPipelineSpec extends AnyFunSuite {
     val writes = mutable.Map[String, DataFrame]()
     val recorder = new Sink {
       override def write(d: DataFrame, t: String, m: SaveMode): Unit =
-        writes(t) = d
+        writes.synchronized { writes(t) = d }
     }
     TaxiPipeline.run(cleaned, recorder, overwrite = false)
-    val heat = writes("demand_heatmap").collect()
+    val heat = writes.synchronized(writes("demand_heatmap")).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
     assert(heat == Map((1, 10) -> 12L, (2, 10) -> 11L, (3, 10) -> 10L))
     Caching.releaseAll()
