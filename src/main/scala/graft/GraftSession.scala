@@ -50,9 +50,9 @@ object GraftSession {
       // LSH key relations — L×combos band keys/row) then build
       // ~260 MB contiguous batches per task, and 32 concurrent
       // builders GC-thrash the executor (measured: the n=200k
-      // bandsweep probe died in GCLocker retries). 512 rows keeps
-      // batch build ≤ ~100 MB even at the widest key config while
-      // costing nothing measurable on fixture-width rows.
+      // banding sweep of SURVEY §13.3 died in GCLocker retries).
+      // 512 rows keeps batch build ≤ ~100 MB even at the widest key
+      // config while costing nothing measurable on fixture-width rows.
       .config("spark.sql.inMemoryColumnarStorage.batchSize",
         sys.env.getOrElse("SPARK_GRAFT_CACHE_BATCH", "512"))
       // BloomFilterAggregate silently min()s both its items and

@@ -1,116 +1,289 @@
 package graft
 
-import graft.vector.VectorOps
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
-/** Dev diagnostic: stage-level timings for the operators Bench flags
-  * as slow — runs each fragment twice cache-cold and prints the min,
-  * so a regression can be localized to a stage instead of re-guessed
-  * from the query total. Not part of the driver contract. */
+/** Dev diagnostics, not part of the driver contract. Usage:
+  *   graft.Profile <mode> [arg ...]
+  * against SPARK_GRAFT_SF_DIR (default: the sf0.1 fixture) at
+  * local[SPARK_GRAFT_CPUS] (default 32). Modes:
+  *  - `q <query>...`: per-query wall, cache-cold, run 1 and run 2,
+  *    with the max task of each run;
+  *  - `qstage <query>...`: the warm run's job count, driver gap and
+  *    per-stage task time, max task and shuffle volume;
+  *  - `explain <outDir> <suffix> <query>...`: executes each query,
+  *    then writes its AQE-final formatted plan (the plan PlanAuditSpec
+  *    gates) to `<outDir>/<query>_<suffix>.txt`;
+  *  - `graph-zipf [tier...]` / `text-skew [tier...]`: power-law skew
+  *    probes for the graph and the shingle-keyed text families;
+  *  - `taxi-year [rows]`: a synthetic reference-scale taxi year
+  *    through the full TaxiPipeline (checked by
+  *    tools/check_taxi_year.py);
+  *  - `rich-fixture [outDir]`: the de-saturated documents/events
+  *    fixture (run by tools/rich_gate.sh).
+  */
 object Profile {
+
+  val modes: Seq[String] = Seq("q", "qstage", "explain", "graph-zipf",
+    "text-skew", "taxi-year", "rich-fixture")
+
   def main(args: Array[String]): Unit = {
+    val mode = args.headOption.getOrElse("")
+    // checked before a session exists: a bad mode builds nothing
+    require(modes.contains(mode),
+      s"usage: Profile <mode> [arg ...] with mode one of " +
+        s"${modes.mkString(", ")}; got '$mode'")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.create(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("ERROR")
+    try mode match {
+      case "q" => timeQueries(spark, sfDir, args)
+      case "qstage" => stageQueries(spark, sfDir, args)
+      case "explain" => explain(spark, sfDir, args)
+      case "graph-zipf" => graphZipf(spark, args)
+      case "text-skew" => textSkew(spark, args)
+      case "taxi-year" => taxiYear(spark, args)
+      case "rich-fixture" => richFixture(spark, args)
+    } finally spark.stop()
+  }
 
-    def timed(name: String)(f: => Unit): Unit = {
-      val ts = (1 to 2).map { _ =>
+  private def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  private def timeQueries(spark: SparkSession, sfDir: String,
+      args: Array[String]): Unit = {
+    // time individual catalog queries by name, cache-cold min-of-2
+    // (same measurement discipline as Bench, without the full
+    // sweep), with max-task attribution so single-task-straggler
+    // shares are visible per run
+    val maxTask = new AtomicLong(0)
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        maxTask.accumulateAndGet(t.taskInfo.duration, math.max)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try args.drop(1).foreach { name =>
+      (1 to 2).foreach { i =>
         Caching.releaseAll()
         spark.catalog.clearCache()
+        maxTask.set(0)
         val t0 = System.nanoTime()
-        f
-        (System.nanoTime() - t0) / 1e9
+        noop(SparkEntry.queries(name)(spark, sfDir))
+        val sec = (System.nanoTime() - t0) / 1e9
+        println(f"[profile] $name%-40s run$i $sec%8.3f s " +
+          f"max_task=${maxTask.get / 1e3}%7.3f s")
       }
-      println(f"[profile] $name%-40s ${ts.min}%8.3f s")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def stageQueries(spark: SparkSession, sfDir: String,
+      args: Array[String]): Unit = {
+    // Per-stage attribution for arbitrary catalog queries: run each
+    // named query twice cache-cold (run 2 is JVM-warm — the number
+    // that matters) and print, for the warm run, every stage's
+    // task-time total / max task / task count / shuffle volume plus
+    // a job-count + driver-gap summary, so "where do the seconds
+    // go" is answerable per operator instead of per query. Every
+    // St field is written and read under the St's own lock.
+    case class St(var name: String = "", var tasks: Int = 0,
+      var taskMs: Long = 0, var maxMs: Long = 0,
+      var srMB: Long = 0, var swMB: Long = 0, var rows: Long = 0)
+    val stages = new ConcurrentHashMap[Int, St]()
+    val jobSpans = new ConcurrentLinkedQueue[(Long, Long)]()
+    val jobStart = new ConcurrentHashMap[Int, Long]()
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        val s = stages.computeIfAbsent(t.stageId, _ => St())
+        s.synchronized {
+          s.tasks += 1
+          s.taskMs += t.taskInfo.duration
+          s.maxMs = math.max(s.maxMs, t.taskInfo.duration)
+          if (t.taskMetrics != null) {
+            s.srMB += t.taskMetrics.shuffleReadMetrics.totalBytesRead
+            s.swMB += t.taskMetrics.shuffleWriteMetrics.bytesWritten
+            s.rows += t.taskMetrics.outputMetrics.recordsWritten
+          }
+        }
+      }
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+        val s = stages.computeIfAbsent(sc.stageInfo.stageId, _ => St())
+        // RDD scope names (the SQL operator tree feeding this
+        // stage) — AQE submits stages from a thread pool, so the
+        // callsite is useless; scopes carry the operator names
+        val name = sc.stageInfo.rddInfos
+          .flatMap(_.scope.map(_.name)).distinct.mkString("|").take(110)
+        s.synchronized { s.name = name }
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobStart.put(j.jobId, j.time)
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = {
+        val t0 = jobStart.getOrDefault(j.jobId, j.time)
+        jobSpans.add((t0, j.time))
+      }
     }
-
-    val emb = Tables.embeddings(spark, sfDir)
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    if (args.nonEmpty && args(0) == "graph-zipf") {
-      // 100× SKEWED graph probe (VERDICT r10 #5, the r9 #6
-      // remainder): a power-law replica generator — not disjoint
-      // uniform replicas, not one planted bucket — driving the graph
-      // structures at 1×/10×/100× volume. Two Zipf surfaces:
-      //  (a) bucket-size-skewed occurrences → the chunked pair
-      //      generation (q196/q184/q243/q267's shared upstream);
-      //  (b) degree-skewed edges → exact wedge expansion (q196
-      //      core), HLL reach (q346 core), label propagation (q243),
-      //      k-core peel (q267), oriented triangles (q184).
-      // Every timing prints ITS honest volume driver (pairs, wedges,
-      // edges) next to wall + max-task: the linearity claim is
-      // time-vs-volume, and the straggler claim is max-task share.
-      // Usage: Profile graph-zipf [tier ...]   (default 1 10 100)
-      import org.apache.spark.sql.DataFrame
-      val tiers = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
-        else Seq(1, 10, 100)
-      def u(salt: Int) =
-        pmod(xxhash64(col("id"), lit(salt)), lit(1000000L))
-          .cast("double") / lit(1000000.0)
-      val only = sys.env.get("SPARK_GRAFT_GZ_ONLY")
-        .map(_.split(",").map(_.trim).toSeq)
-      val maxTask = new java.util.concurrent.atomic.AtomicLong(0)
-      val shufBytes = new java.util.concurrent.atomic.AtomicLong(0)
-      val gzStageMax = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-      val gzStageSlow = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      val gzStageInfo = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            maxTask.accumulateAndGet(t.taskInfo.duration, math.max)
-            shufBytes.addAndGet(
-              t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-            gzStageMax.merge(t.stageId, t.taskInfo.duration,
-              (a, b) => math.max(a, b))
-            if (t.taskInfo.duration >= gzStageMax.getOrDefault(
-                t.stageId, 0L))
-              gzStageSlow.put(t.stageId,
-                s"slowtask_sr=${t.taskMetrics.shuffleReadMetrics.recordsRead} " +
-                  s"sw=${t.taskMetrics.shuffleWriteMetrics.recordsWritten} " +
-                  s"spill=${t.taskMetrics.memoryBytesSpilled / (1 << 20)}MB " +
-                  s"gc=${t.taskMetrics.jvmGCTime}ms")
+    spark.sparkContext.addSparkListener(listener)
+    try args.drop(1).foreach { name =>
+      (1 to 2).foreach { i =>
+        Caching.releaseAll()
+        spark.catalog.clearCache()
+        stages.clear(); jobSpans.clear(); jobStart.clear()
+        val t0 = System.nanoTime()
+        noop(SparkEntry.queries(name)(spark, sfDir))
+        val sec = (System.nanoTime() - t0) / 1e9
+        if (i == 2) {
+          // wall not covered by any running job ≈ driver-side work
+          // (planning, codegen, collect gaps between jobs)
+          val spans = jobSpans.asScala.toSeq.sortBy(_._1)
+          var covered = 0L; var hi = 0L
+          spans.foreach { case (s, e) =>
+            val s2 = math.max(s, hi)
+            if (e > s2) { covered += e - s2; hi = e }
+            else hi = math.max(hi, e)
           }
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler.SparkListenerStageCompleted)
-              : Unit = {
-            val m = s.stageInfo.taskMetrics
-            gzStageInfo.put(s.stageInfo.stageId,
-              s"tasks=${s.stageInfo.numTasks} " +
-                s"sr=${m.shuffleReadMetrics.recordsRead} " +
-                s"sw=${m.shuffleWriteMetrics.recordsWritten} " +
-                s"spill=${m.memoryBytesSpilled / (1 << 20)}MB " +
-                gzStageSlow.getOrDefault(s.stageInfo.stageId, ""))
+          val wallMs = (sec * 1000).toLong
+          println(f"[profile] $name%-34s $sec%8.3f s " +
+            f"jobs=${spans.size}%3d job_wall=${covered / 1e3}%7.3f s " +
+            f"driver_gap=${(wallMs - covered) / 1e3}%7.3f s")
+          stages.asScala.toSeq.map { case (sid, s) =>
+              sid -> s.synchronized(s.copy())
+            }.sortBy(-_._2.taskMs).take(14).foreach {
+            case (sid, s) => println(
+              f"[profile]   stage $sid%4d task_ms=${s.taskMs}%7d " +
+                f"n=${s.tasks}%4d max=${s.maxMs}%6d " +
+                f"sr=${s.srMB / (1 << 20)}%5dMB sw=${s.swMB / (1 << 20)}%5dMB " +
+                s"${s.name}")
           }
-        })
-      def probe(label: String, volume: => Long)(consume: => Long): Unit = {
-        if (only.exists(fs => !fs.exists(label.contains))) return
+        } else println(f"[profile] $name%-34s run1 $sec%8.3f s")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def explain(spark: SparkSession, sfDir: String,
+      args: Array[String]): Unit = {
+    // before/after plan evidence for optimization rounds
+    // (plans/rNN/<query>_{before,after}.txt). Each query is collected
+    // first so AQE finalizes: the dump then shows isFinalPlan=true,
+    // the same physical plan PlanAuditSpec asserts against.
+    require(args.length >= 4,
+      "usage: Profile explain <outDir> <suffix> <query>...")
+    val bad = args.drop(3).filterNot(SparkEntry.queries.contains)
+    require(bad.isEmpty, s"unknown queries: ${bad.mkString(", ")}")
+    val outDir = args(1)
+    val suffix = args(2)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    args.drop(3).foreach { name =>
+      Caching.releaseAll()
+      spark.catalog.clearCache()
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      df.collect()
+      val txt = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
+        txt.getBytes("UTF-8"))
+      println(s"[profile] explained $name -> $outDir/${name}_$suffix.txt")
+    }
+    Caching.releaseAll()
+  }
+
+  /** The skew modes' shared probe. A stage listener records the max
+    * task, shuffle-write bytes and, per stage, the slowest task's
+    * records; `apply(label, volume)(consume)` evaluates `volume`
+    * untimed, then times `consume` cache-cold and prints the wall,
+    * max task and shuffle MB next to the volume driver, followed by
+    * the three stages with the slowest task. When the env var
+    * `onlyEnv` holds a comma list, only labels containing one of its
+    * entries run. */
+  private final class SkewProbe(spark: SparkSession, onlyEnv: String) {
+    private val only = sys.env.get(onlyEnv)
+      .map(_.split(",").map(_.trim).toSeq)
+    private val maxTask = new AtomicLong(0)
+    private val shufBytes = new AtomicLong(0)
+    private val stageMax = new ConcurrentHashMap[Int, Long]()
+    private val stageSlow = new ConcurrentHashMap[Int, String]()
+    private val stageInfo = new ConcurrentHashMap[Int, String]()
+    private val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        maxTask.accumulateAndGet(t.taskInfo.duration, math.max)
+        shufBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        stageMax.merge(t.stageId, t.taskInfo.duration,
+          (a, b) => math.max(a, b))
+        // records read/written by the stage's SLOWEST task — the
+        // straggler-diagnosis signal (is the slow task slow because
+        // it processed more, or slow at the same load?)
+        if (t.taskInfo.duration >= stageMax.getOrDefault(t.stageId, 0L))
+          stageSlow.put(t.stageId,
+            s"slowtask_sr=${t.taskMetrics.shuffleReadMetrics.recordsRead} " +
+              s"sw=${t.taskMetrics.shuffleWriteMetrics.recordsWritten} " +
+              s"spill=${t.taskMetrics.memoryBytesSpilled / (1 << 20)}MB " +
+              s"gc=${t.taskMetrics.jvmGCTime}ms")
+      }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+        val m = s.stageInfo.taskMetrics
+        stageInfo.put(s.stageInfo.stageId,
+          s"tasks=${s.stageInfo.numTasks} " +
+            s"sr=${m.shuffleReadMetrics.recordsRead} " +
+            s"sw=${m.shuffleWriteMetrics.recordsWritten} " +
+            s"spill=${m.memoryBytesSpilled / (1 << 20)}MB " +
+            stageSlow.getOrDefault(s.stageInfo.stageId, ""))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+
+    def apply(label: String, volume: => Long)(consume: => Long): Unit =
+      if (only.forall(_.exists(label.contains))) {
         // volume runs BEFORE the stage maps are cleared so its job's
         // stages never pollute the consume pass's top-3 attribution
-        // (the text-skew probe already did this; ADVICE r12 #2)
         val vol = volume
         Caching.releaseAll(); spark.catalog.clearCache()
         maxTask.set(0); shufBytes.set(0)
-        gzStageMax.clear(); gzStageSlow.clear(); gzStageInfo.clear()
+        stageMax.clear(); stageSlow.clear(); stageInfo.clear()
         val t0 = System.nanoTime()
         val out = consume
         val sec = (System.nanoTime() - t0) / 1e9
-        println(f"[profile] $label%-28s vol=${vol}%12d out=$out%12d " +
+        println(f"[profile] $label%-30s vol=${vol}%12d out=$out%12d " +
           f"$sec%8.3f s max_task=${maxTask.get / 1e3}%7.3f s " +
           f"shuf=${shufBytes.get / (1 << 20)}%6d MB")
-        gzStageMax.asScala.toSeq.sortBy(-_._2).take(3).foreach {
+        stageMax.asScala.toSeq.sortBy(-_._2).take(3).foreach {
           case (sid, ms) => println(
             f"[profile]   stage $sid%4d max_task=${ms / 1e3}%8.3f s " +
-              gzStageInfo.getOrDefault(sid, ""))
+              stageInfo.getOrDefault(sid, ""))
         }
       }
+
+    def close(): Unit = spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def graphZipf(spark: SparkSession, args: Array[String]): Unit = {
+    // 100× SKEWED graph probe (VERDICT r10 #5, the r9 #6
+    // remainder): a power-law replica generator — not disjoint
+    // uniform replicas, not one planted bucket — driving the graph
+    // structures at 1×/10×/100× volume. Two Zipf surfaces:
+    //  (a) bucket-size-skewed occurrences → the chunked pair
+    //      generation (q196/q184/q243/q267's shared upstream);
+    //  (b) degree-skewed edges → exact wedge expansion (q196
+    //      core), HLL reach (q346 core), label propagation (q243),
+    //      k-core peel (q267), oriented triangles (q184).
+    // Every timing prints ITS honest volume driver (pairs, wedges,
+    // edges) next to wall + max-task: the linearity claim is
+    // time-vs-volume, and the straggler claim is max-task share.
+    // Usage: Profile graph-zipf [tier ...]   (default 1 10 100)
+    val tiers = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
+      else Seq(1, 10, 100)
+    def u(salt: Int) =
+      pmod(xxhash64(col("id"), lit(salt)), lit(1000000L))
+        .cast("double") / lit(1000000.0)
+    val probe = new SkewProbe(spark, "SPARK_GRAFT_GZ_ONLY")
+    try {
       for (k <- tiers) {
         // shuffle parallelism grows with the tier, as on a real
-        // cluster (the hot-bucket-probe lesson: fixed-32 partitions
-        // build tier-sized partial-agg maps per task)
+        // cluster (the SURVEY §15.2 hot-bucket lesson: fixed-32
+        // partitions build tier-sized partial-agg maps per task)
         spark.conf.set("spark.sql.shuffle.partitions",
           math.min(512, math.max(32, 8 * k)).toString)
         val dir = graft.sources.ScratchDirs.register(
@@ -306,93 +479,39 @@ object Profile {
             .getLong(0)
         }
       }
-      spark.stop()
-      return
-    }
+    } finally probe.close()
+  }
 
-    if (args.nonEmpty && args(0) == "text-skew") {
-      // Planted stop-shingle probe (VERDICT r11 #2): the graph-zipf
-      // discipline applied to the SHINGLE-keyed text/dedup family.
-      // Synthetic corpus at 1×/10× volume with three populations:
-      //  - TEMPLATE CLUSTER (fixed 2,000 docs): one 40-token template
-      //    with a single doc-dependent token perturbation (J≈0.92) —
-      //    the boilerplate that concentrates LSH/simhash/prefix
-      //    buckets into one hot (band,bucket) cell;
-      //  - STOP-SHINGLE docs (fixed 14,000 — 70% of the 1× corpus):
-      //    one planted 3-gram, the text analogue of the Zipf hub in
-      //    the inverted shingle index (f²/2 ≈ 9.8e7 pairs from ONE
-      //    shingle key — fixed ABSOLUTE df so its pair volume is a
-      //    constant reference line across tiers, exactly like the
-      //    zipf probe's honest volume drivers);
-      //  - BACKGROUND (the remaining (20,000·k − 16,000) docs) over
-      //    a vocabulary that grows with the tier (3,000·k words), so
-      //    background bucket sizes stay Zipf-tail-shaped instead of
-      //    saturating.
-      // Every probe prints its honest volume driver (Σ s(s−1)/2 over
-      // its own bucket relation) next to wall + max-task: linearity
-      // is time-vs-volume, concentration is max-task share. The
-      // NAIVE inverted-index self-join (q230's pre-r12 shape) is
-      // probed at 1× only — its single-task hot-shingle tail is the
-      // finding, re-proving it at 10× would be one ~100× longer task.
-      // Usage: Profile text-skew [tier ...]   (default 1 10)
-      import org.apache.spark.sql.DataFrame
-      val tiers = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
-        else Seq(1, 10)
-      graft.functions.GraftFunctions.register(spark)
-      val only = sys.env.get("SPARK_GRAFT_TS_ONLY")
-        .map(_.split(",").map(_.trim).toSeq)
-      val maxTask = new java.util.concurrent.atomic.AtomicLong(0)
-      val stageMax = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-      val stageInfo = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      val stageSlow = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            maxTask.accumulateAndGet(t.taskInfo.duration, math.max)
-            stageMax.merge(t.stageId, t.taskInfo.duration,
-              (a, b) => math.max(a, b))
-            // records read/written by the stage's SLOWEST task — the
-            // straggler-diagnosis signal (is the slow task slow
-            // because it processed more, or slow at the same load?)
-            if (t.taskInfo.duration >= stageMax.getOrDefault(
-                t.stageId, 0L))
-              stageSlow.put(t.stageId,
-                s"slowtask_sr=${t.taskMetrics.shuffleReadMetrics.recordsRead} " +
-                  s"sw=${t.taskMetrics.shuffleWriteMetrics.recordsWritten} " +
-                  s"spill=${t.taskMetrics.memoryBytesSpilled / (1 << 20)}MB " +
-                  s"gc=${t.taskMetrics.jvmGCTime}ms")
-          }
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler.SparkListenerStageCompleted)
-              : Unit = {
-            val m = s.stageInfo.taskMetrics
-            stageInfo.put(s.stageInfo.stageId,
-              s"tasks=${s.stageInfo.numTasks} " +
-                s"sr=${m.shuffleReadMetrics.recordsRead} " +
-                s"sw=${m.shuffleWriteMetrics.recordsWritten} " +
-                s"spill=${m.memoryBytesSpilled / (1 << 20)}MB " +
-                stageSlow.getOrDefault(s.stageInfo.stageId, ""))
-          }
-        })
-      def probe(label: String, volume: => Long)(consume: => Long): Unit = {
-        if (only.exists(fs => !fs.exists(label.contains))) return
-        // volume runs BEFORE the timed region so its stages never
-        // pollute the consume pass's stage attribution
-        val vol = volume
-        Caching.releaseAll(); spark.catalog.clearCache()
-        maxTask.set(0); stageMax.clear(); stageSlow.clear()
-        val t0 = System.nanoTime()
-        val out = consume
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"[profile] $label%-30s vol=${vol}%12d out=$out%10d " +
-          f"$sec%8.3f s max_task=${maxTask.get / 1e3}%7.3f s")
-        stageMax.asScala.toSeq.sortBy(-_._2).take(3).foreach {
-          case (sid, ms) => println(
-            f"[profile]   stage $sid%4d max_task=${ms / 1e3}%8.3f s " +
-              stageInfo.getOrDefault(sid, ""))
-        }
-      }
+  private def textSkew(spark: SparkSession, args: Array[String]): Unit = {
+    // Planted stop-shingle probe (VERDICT r11 #2): the graph-zipf
+    // discipline applied to the SHINGLE-keyed text/dedup family.
+    // Synthetic corpus at 1×/10× volume with three populations:
+    //  - TEMPLATE CLUSTER (fixed 2,000 docs): one 40-token template
+    //    with a single doc-dependent token perturbation (J≈0.92) —
+    //    the boilerplate that concentrates LSH/simhash/prefix
+    //    buckets into one hot (band,bucket) cell;
+    //  - STOP-SHINGLE docs (fixed 14,000 — 70% of the 1× corpus):
+    //    one planted 3-gram, the text analogue of the Zipf hub in
+    //    the inverted shingle index (f²/2 ≈ 9.8e7 pairs from ONE
+    //    shingle key — fixed ABSOLUTE df so its pair volume is a
+    //    constant reference line across tiers, exactly like the
+    //    zipf probe's honest volume drivers);
+    //  - BACKGROUND (the remaining (20,000·k − 16,000) docs) over
+    //    a vocabulary that grows with the tier (3,000·k words), so
+    //    background bucket sizes stay Zipf-tail-shaped instead of
+    //    saturating.
+    // Every probe prints its honest volume driver (Σ s(s−1)/2 over
+    // its own bucket relation) next to wall + max-task: linearity
+    // is time-vs-volume, concentration is max-task share. The
+    // NAIVE inverted-index self-join (q230's pre-r12 shape) is
+    // probed at 1× only — its single-task hot-shingle tail is the
+    // finding, re-proving it at 10× would be one ~100× longer task.
+    // Usage: Profile text-skew [tier ...]   (default 1 10)
+    val tiers = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
+      else Seq(1, 10)
+    graft.functions.GraftFunctions.register(spark)
+    val probe = new SkewProbe(spark, "SPARK_GRAFT_TS_ONLY")
+    try {
       // Σ s(s−1)/2 over a (bucket..., member) relation
       def pairVol(p: DataFrame, buckets: Seq[String]): Long =
         p.groupBy(buckets.map(col): _*).agg(count(lit(1)).as("s"))
@@ -445,9 +564,9 @@ object Profile {
           .select(col("doc_id"), explode(
             graft.text.TextOps.shingles(col("toks"), 3)).as("shingle"))
         // pair-volume-scaled reducer count for the containment
-        // probes (the cooccur-hot lesson: ~2M pairs/task keeps the
-        // (u,v) partial-agg maps fixture-sized; at a fixed 32 the
-        // 1.6e8-pair tier-1 relation builds 5M-entry maps per task
+        // probes (the SURVEY §15.2 hot-bucket lesson: ~2M pairs/task
+        // keeps the (u,v) partial-agg maps fixture-sized; at a fixed
+        // 32 the 1.6e8-pair tier-1 relation builds 5M-entry maps per task
         // and spill-thrashes — on a real cluster this is just the
         // default-parallelism-scales-with-data operating point)
         val shVol = pairVol(sh, Seq("shingle"))
@@ -600,1594 +719,316 @@ object Profile {
             .agg(count(lit(1))).collect()(0).getLong(0)
         }
       }
-      spark.stop()
-      return
-    }
+    } finally probe.close()
+  }
 
-    if (args.nonEmpty && args(0) == "rich-fixture") {
-      // De-saturated fixture for the overlap/coverage gates (VERDICT
-      // r11 #3): the shipped documents fixture has a 31-word
-      // vocabulary shared by every lang/source and events where every
-      // user does every event_type (SURVEY §16.7) — so q222's source
-      // overlaps and q351's audience intersections pass on DEGENERATE
-      // set relations (≈100% overlap). This generator writes a
-      // 100×-docs / 20×-events fixture where the gates have to earn
-      // their semantics:
-      //  - documents (50,000): token ids drawn u³-Zipf over a 60,000-
-      //    type window PER SOURCE, windows offset 15,000 per source
-      //    index — adjacent sources share 75% of their RANGES,
-      //    distant ones 0%, and realized vocab overlap varies
-      //    smoothly in between (never 0%/100%). The u³ tail gives
-      //    Heaps-ish vocab growth and a real Zipf tier structure for
-      //    q343; doc lengths 20-120 give q352 a non-trivial score
-      //    distribution.
-      //  - events (~200,000 / 2,000 users / 30 days): a user
-      //    participates in event_type t only if hash(user,t) clears
-      //    t's rate (70/50/35/25/15%), so per-(day,type) audiences
-      //    are PARTIAL and pairwise intersections land strictly
-      //    inside (0%, 100%). Per-(day,type) distinct users stay
-      //    well under the theta-sketch exactness bound (4,096), so
-      //    q351 remains hash-exact.
-      // Usage: Profile rich-fixture [outDir]; then run Verify +
-      // tools/check_oracle.py against outDir for
-      // q222/q343/q351/q352 (and any other documents/events query).
-      val out = if (args.length > 1) args(1)
-        else s"${System.getProperty("java.io.tmpdir")}/graft_rich_fixture"
-      val nDocs = 50000L
-      def h(salt: Int, c: org.apache.spark.sql.Column*) =
-        xxhash64((lit(salt) +: c): _*)
-      val docBase = spark.range(nDocs)
-        .select(col("id").as("doc_id"),
-          pmod(h(1, col("id")), lit(100L)).as("lm"),
-          pmod(h(2, col("id")), lit(20L)).cast("int").as("srcIdx"),
-          (pmod(h(3, col("id")), lit(101L)) + 20L).cast("int").as("len"))
-        .select(col("doc_id"), col("srcIdx"), col("len"),
-          when(col("lm") < 40, "en").when(col("lm") < 65, "de")
-            .when(col("lm") < 80, "fr").when(col("lm") < 92, "es")
-            .otherwise("ja").as("lang"))
-      val toks = transform(sequence(lit(1L), col("len").cast("long")),
-        j => {
-          // u ∈ [0,1) from a 48-bit hash slice; rank = ⌊60000·u³⌋ —
-          // power-law CDF P(rank < x) = (x/60000)^(1/3): a dense
-          // Zipf head plus a long rare-type tail (Heaps growth).
-          // 30% of positions draw instead from a SHARED 500-type
-          // Zipf (the stopword layer): consecutive shared draws make
-          // bigrams every source emits, so q222's source-overlap
-          // jaccard lands strictly inside (0, 1) — without it the
-          // per-source windows give ≈0 realized BIGRAM overlap
-          // (measured: 3.5M tokens over (60k)² pair space), the
-          // degeneracy just mirrored to the other end.
-          val u = pmod(h(4, col("doc_id") * lit(131L) + j),
-            lit(1L << 24)).cast("double") / lit((1L << 24).toDouble)
-          val rank = floor(u * u * u * lit(60000.0)).cast("long")
-          val cu = pmod(h(12, col("doc_id") * lit(131L) + j),
-            lit(1L << 24)).cast("double") / lit((1L << 24).toDouble)
-          when(pmod(h(13, col("doc_id") * lit(131L) + j), lit(10L)) < 3,
-            concat(lit("c"),
-              floor(cu * cu * lit(500.0)).cast("long").cast("string")))
-            .otherwise(concat(lit("w"),
-              (col("srcIdx").cast("long") * lit(15000L) + rank)
-                .cast("string")))
-        })
-      val baseDocs = docBase
-        .select(col("doc_id"),
-          concat_ws(" ", toks).as("text"),
-          col("lang"),
-          concat(lit("src"), col("srcIdx").cast("string")).as("source"))
-      // ---- PLANTED STREAMING-TIER SLICES (VERDICT r13 #6, the q361
-      // designed-truth pattern): the base fixture's texts are all
-      // unique, so q120's stream-vs-index anti-join never drops and
-      // q144's contamination set is empty — both families pass on
-      // DEGENERATE relations. Three planted document slices make
-      // every state transition real (max doc_id becomes 51,699 ⇒
-      // q120's mid boundary is 25,849; every copy source sits below
-      // it, every planted id above):
-      //  - 50000-50499 "dup_hist": exact text copies of base docs
-      //    (id-50000)*40 < 20000 — the stream half re-delivers an
-      //    INDEXED fingerprint, the anti-join must drop it;
-      //  - 50500-50999 "dup_batch": 250 pairs of fresh duplicate
-      //    texts entirely INSIDE the stream half — survive the
-      //    anti-join, exercise the min(doc_id) keep fold;
-      //  - 51000-51499 contamination: first 14 tokens copied from a
-      //    bench doc (id%20==0) + unique filler ⇒ 12 shared 3-grams
-      //    ≥ threshold 10, flagged; 51500-51699 copy only 8 tokens
-      //    ⇒ 6 shared < 10, NOT flagged — the HAVING discriminates.
-      // copy sources sit at id ≡ 1 (mod 40): NON-bench (q144's bench
-      // set is id%20==0), so the dup_hist slice never doubles as an
-      // accidental contamination plant
-      val dupHist = baseDocs.filter(col("doc_id") % 40 === 1
-          && col("doc_id") < 20000)
-        .select(((col("doc_id") - 1) / 40 + 50000L).cast("long")
+  private def richFixture(spark: SparkSession, args: Array[String]): Unit = {
+    // De-saturated fixture for the overlap/coverage gates (VERDICT
+    // r11 #3): the shipped documents fixture has a 31-word
+    // vocabulary shared by every lang/source and events where every
+    // user does every event_type (SURVEY §16.7) — so q222's source
+    // overlaps and q351's audience intersections pass on DEGENERATE
+    // set relations (≈100% overlap). This generator writes a
+    // 100×-docs / 20×-events fixture where the gates have to earn
+    // their semantics:
+    //  - documents (50,000): token ids drawn u³-Zipf over a 60,000-
+    //    type window PER SOURCE, windows offset 15,000 per source
+    //    index — adjacent sources share 75% of their RANGES,
+    //    distant ones 0%, and realized vocab overlap varies
+    //    smoothly in between (never 0%/100%). The u³ tail gives
+    //    Heaps-ish vocab growth and a real Zipf tier structure for
+    //    q343; doc lengths 20-120 give q352 a non-trivial score
+    //    distribution.
+    //  - events (~200,000 / 2,000 users / 30 days): a user
+    //    participates in event_type t only if hash(user,t) clears
+    //    t's rate (70/50/35/25/15%), so per-(day,type) audiences
+    //    are PARTIAL and pairwise intersections land strictly
+    //    inside (0%, 100%). Per-(day,type) distinct users stay
+    //    well under the theta-sketch exactness bound (4,096), so
+    //    q351 remains hash-exact.
+    // Usage: Profile rich-fixture [outDir]; then run Verify +
+    // tools/check_oracle.py against outDir for
+    // q222/q343/q351/q352 (and any other documents/events query).
+    val out = if (args.length > 1) args(1)
+      else s"${System.getProperty("java.io.tmpdir")}/graft_rich_fixture"
+    val nDocs = 50000L
+    def h(salt: Int, c: org.apache.spark.sql.Column*) =
+      xxhash64((lit(salt) +: c): _*)
+    val docBase = spark.range(nDocs)
+      .select(col("id").as("doc_id"),
+        pmod(h(1, col("id")), lit(100L)).as("lm"),
+        pmod(h(2, col("id")), lit(20L)).cast("int").as("srcIdx"),
+        (pmod(h(3, col("id")), lit(101L)) + 20L).cast("int").as("len"))
+      .select(col("doc_id"), col("srcIdx"), col("len"),
+        when(col("lm") < 40, "en").when(col("lm") < 65, "de")
+          .when(col("lm") < 80, "fr").when(col("lm") < 92, "es")
+          .otherwise("ja").as("lang"))
+    val toks = transform(sequence(lit(1L), col("len").cast("long")),
+      j => {
+        // u ∈ [0,1) from a 48-bit hash slice; rank = ⌊60000·u³⌋ —
+        // power-law CDF P(rank < x) = (x/60000)^(1/3): a dense
+        // Zipf head plus a long rare-type tail (Heaps growth).
+        // 30% of positions draw instead from a SHARED 500-type
+        // Zipf (the stopword layer): consecutive shared draws make
+        // bigrams every source emits, so q222's source-overlap
+        // jaccard lands strictly inside (0, 1) — without it the
+        // per-source windows give ≈0 realized BIGRAM overlap
+        // (measured: 3.5M tokens over (60k)² pair space), the
+        // degeneracy just mirrored to the other end.
+        val u = pmod(h(4, col("doc_id") * lit(131L) + j),
+          lit(1L << 24)).cast("double") / lit((1L << 24).toDouble)
+        val rank = floor(u * u * u * lit(60000.0)).cast("long")
+        val cu = pmod(h(12, col("doc_id") * lit(131L) + j),
+          lit(1L << 24)).cast("double") / lit((1L << 24).toDouble)
+        when(pmod(h(13, col("doc_id") * lit(131L) + j), lit(10L)) < 3,
+          concat(lit("c"),
+            floor(cu * cu * lit(500.0)).cast("long").cast("string")))
+          .otherwise(concat(lit("w"),
+            (col("srcIdx").cast("long") * lit(15000L) + rank)
+              .cast("string")))
+      })
+    val baseDocs = docBase
+      .select(col("doc_id"),
+        concat_ws(" ", toks).as("text"),
+        col("lang"),
+        concat(lit("src"), col("srcIdx").cast("string")).as("source"))
+    // ---- PLANTED STREAMING-TIER SLICES (VERDICT r13 #6, the q361
+    // designed-truth pattern): the base fixture's texts are all
+    // unique, so q120's stream-vs-index anti-join never drops and
+    // q144's contamination set is empty — both families pass on
+    // DEGENERATE relations. Three planted document slices make
+    // every state transition real (max doc_id becomes 51,699 ⇒
+    // q120's mid boundary is 25,849; every copy source sits below
+    // it, every planted id above):
+    //  - 50000-50499 "dup_hist": exact text copies of base docs
+    //    (id-50000)*40 < 20000 — the stream half re-delivers an
+    //    INDEXED fingerprint, the anti-join must drop it;
+    //  - 50500-50999 "dup_batch": 250 pairs of fresh duplicate
+    //    texts entirely INSIDE the stream half — survive the
+    //    anti-join, exercise the min(doc_id) keep fold;
+    //  - 51000-51499 contamination: first 14 tokens copied from a
+    //    bench doc (id%20==0) + unique filler ⇒ 12 shared 3-grams
+    //    ≥ threshold 10, flagged; 51500-51699 copy only 8 tokens
+    //    ⇒ 6 shared < 10, NOT flagged — the HAVING discriminates.
+    // copy sources sit at id ≡ 1 (mod 40): NON-bench (q144's bench
+    // set is id%20==0), so the dup_hist slice never doubles as an
+    // accidental contamination plant
+    val dupHist = baseDocs.filter(col("doc_id") % 40 === 1
+        && col("doc_id") < 20000)
+      .select(((col("doc_id") - 1) / 40 + 50000L).cast("long")
+        .as("doc_id"),
+        col("text"), lit("xx").as("lang"), lit("srcplant").as("source"))
+    val dupBatch = spark.range(250)
+      .select(col("id"))
+      .withColumn("text", concat_ws(" ", transform(
+        sequence(lit(0L), lit(29L)), j => concat(lit("pb"),
+          col("id").cast("string"), lit("x"), j.cast("string")))))
+      .select(explode(array(
+          (col("id") * 2 + 50500L), (col("id") * 2 + 50501L)))
           .as("doc_id"),
-          col("text"), lit("xx").as("lang"), lit("srcplant").as("source"))
-      val dupBatch = spark.range(250)
-        .select(col("id"))
-        .withColumn("text", concat_ws(" ", transform(
-          sequence(lit(0L), lit(29L)), j => concat(lit("pb"),
-            col("id").cast("string"), lit("x"), j.cast("string")))))
-        .select(explode(array(
-            (col("id") * 2 + 50500L), (col("id") * 2 + 50501L)))
-            .as("doc_id"),
-          col("text"), lit("xx").as("lang"), lit("srcplant").as("source"))
-      def contamPlant(ids: org.apache.spark.sql.DataFrame,
-          keepToks: Int) = ids
-        .withColumn("bsrc", pmod(col("id") * 20L + 20L, lit(40000L)))
-        .join(baseDocs.select(col("doc_id").as("bsrc"),
-          col("text").as("btext")), "bsrc")
-        .select(col("id").as("doc_id"),
-          concat_ws(" ",
-            concat_ws(" ", slice(split(col("btext"), " "), 1, keepToks)),
-            concat_ws(" ", transform(sequence(lit(0L), lit(29L)),
-              j => concat(lit("pf"), col("id").cast("string"),
-                lit("y"), j.cast("string"))))).as("text"),
-          lit("xx").as("lang"), lit("srcplant").as("source"))
-      val contamHot = contamPlant(
-        spark.range(51000L, 51500L).select(col("id")), 14)
-      val contamCold = contamPlant(
-        spark.range(51500L, 51700L).select(col("id")), 8)
-      baseDocs
-        .unionByName(dupHist).unionByName(dupBatch)
-        .unionByName(contamHot).unionByName(contamCold)
-        .withColumn("n_chars", length(col("text")))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$out/documents.parquet")
-      val nEvRaw = 500000L
-      val rates = map(
-        lit("view"), lit(70L), lit("click"), lit(50L),
-        lit("purchase"), lit(35L), lit("share"), lit(25L),
-        lit("refund"), lit(15L))
-      val baseEv = spark.range(nEvRaw)
-        .select(col("id").as("event_id"),
-          pmod(h(5, col("id")), lit(2000L)).as("user_id"),
-          element_at(array(lit("view"), lit("click"), lit("purchase"),
-            lit("share"), lit("refund")),
-            (pmod(h(6, col("id")), lit(5L)) + 1).cast("int"))
-            .as("event_type"),
-          pmod(h(7, col("id")), lit(30L)).as("day"),
-          pmod(h(8, col("id")), lit(86400000000L)).as("us_in_day"),
-          (pmod(h(9, col("id")), lit(100000L)).cast("double") / 100.0)
-            .as("value"))
-        .filter(pmod(h(10, col("user_id"), col("event_type")), lit(100L))
-          < element_at(rates, col("event_type")))
-        .select(col("event_id"),
-          timestamp_micros(lit(1704067200000000L) +
-            col("day") * lit(86400000000L) + col("us_in_day")).as("ts"),
-          col("user_id"), col("event_type"), col("value"),
-          concat(lit("{\"k\": "),
-            pmod(h(11, col("event_id")), lit(100L)).cast("string"),
-            lit("}")).as("props"))
-      // ---- PLANTED STREAMING-TIER EVENT SLICES (VERDICT r13 #6):
-      // base events land on random (day, µs) draws, so whether the
-      // interval-join family's branches fire is fixture luck. Five
-      // designed slices in a dedicated user range (base users are
-      // 0..1999) pin every branch at every scale. All horizons are
-      // relative to a planted ANCHOR at day 30 (beyond every base
-      // draw), which is therefore max(ts) — the watermark the
-      // left/full outer joins prove non-matches against (wm =
-      // max − 2 h; a left needs l.ts+5min < wm provable, a right
-      // only r.ts < wm):
-      //  - anchor (user 10999, day 30): itself an unprovable
-      //    singleton — absent from every null branch;
-      //  - matched pairs (users 10000-10199, day 10): two events
-      //    120 s apart ⇒ inner/left/full all emit the pair;
-      //  - provable singletons (users 10200-10399, day 5): no
-      //    partner ever ⇒ left-null in q347, left- AND right-null
-      //    rows in q355;
-      //  - late singletons (users 10400-10499, anchor − ~1 h):
-      //    inside BOTH horizons ⇒ correctly absent everywhere (the
-      //    "match still in flight" branch);
-      //  - asymmetric singletons (users 10500-10549, just below
-      //    anchor − 2 h): r.ts < wm but l.ts+5min > wm ⇒ q355 emits
-      //    ONLY the right-null row, q347 emits nothing — the one
-      //    branch that separates the two horizon rules.
-      val anchorUs = 1704067200000000L + 30L * 86400000000L
-      def plantedEv(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          eid: org.apache.spark.sql.Column,
-          user: org.apache.spark.sql.Column,
-          tsUs: org.apache.spark.sql.Column) = ids
-        .select(eid.as("event_id"), timestamp_micros(tsUs).as("ts"),
-          user.as("user_id"), lit("view").as("event_type"),
-          lit(1.0).as("value"), lit("{\"k\": 0}").as("props"))
-      val day5 = 1704067200000000L + 5L * 86400000000L
-      val day10 = 1704067200000000L + 10L * 86400000000L
-      val plants = Seq(
-        plantedEv(spark.range(1), lit(1000000L), lit(10999L),
-          lit(anchorUs)),
-        plantedEv(spark.range(200), col("id") + 1000001L,
-          col("id") + 10000L, lit(day10) + col("id") * 600000000L),
-        plantedEv(spark.range(200), col("id") + 1000301L,
-          col("id") + 10000L,
-          lit(day10) + col("id") * 600000000L + 120000000L),
-        plantedEv(spark.range(200), col("id") + 1000601L,
-          col("id") + 10200L, lit(day5) + col("id") * 600000000L),
-        plantedEv(spark.range(100), col("id") + 1000901L,
-          col("id") + 10400L,
-          lit(anchorUs - 3600000000L) - col("id") * 10000000L),
-        plantedEv(spark.range(50), col("id") + 1001101L,
-          col("id") + 10500L,
-          lit(anchorUs - 7350000000L) + col("id") * 2000000L))
-      plants.reduce(_ unionByName _).unionByName(baseEv)
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$out/events.parquet")
-      println(s"[profile] rich fixture written to $out")
-      spark.stop()
-      return
-    }
+        col("text"), lit("xx").as("lang"), lit("srcplant").as("source"))
+    def contamPlant(ids: org.apache.spark.sql.DataFrame,
+        keepToks: Int) = ids
+      .withColumn("bsrc", pmod(col("id") * 20L + 20L, lit(40000L)))
+      .join(baseDocs.select(col("doc_id").as("bsrc"),
+        col("text").as("btext")), "bsrc")
+      .select(col("id").as("doc_id"),
+        concat_ws(" ",
+          concat_ws(" ", slice(split(col("btext"), " "), 1, keepToks)),
+          concat_ws(" ", transform(sequence(lit(0L), lit(29L)),
+            j => concat(lit("pf"), col("id").cast("string"),
+              lit("y"), j.cast("string"))))).as("text"),
+        lit("xx").as("lang"), lit("srcplant").as("source"))
+    val contamHot = contamPlant(
+      spark.range(51000L, 51500L).select(col("id")), 14)
+    val contamCold = contamPlant(
+      spark.range(51500L, 51700L).select(col("id")), 8)
+    baseDocs
+      .unionByName(dupHist).unionByName(dupBatch)
+      .unionByName(contamHot).unionByName(contamCold)
+      .withColumn("n_chars", length(col("text")))
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"$out/documents.parquet")
+    val nEvRaw = 500000L
+    val rates = map(
+      lit("view"), lit(70L), lit("click"), lit(50L),
+      lit("purchase"), lit(35L), lit("share"), lit(25L),
+      lit("refund"), lit(15L))
+    val baseEv = spark.range(nEvRaw)
+      .select(col("id").as("event_id"),
+        pmod(h(5, col("id")), lit(2000L)).as("user_id"),
+        element_at(array(lit("view"), lit("click"), lit("purchase"),
+          lit("share"), lit("refund")),
+          (pmod(h(6, col("id")), lit(5L)) + 1).cast("int"))
+          .as("event_type"),
+        pmod(h(7, col("id")), lit(30L)).as("day"),
+        pmod(h(8, col("id")), lit(86400000000L)).as("us_in_day"),
+        (pmod(h(9, col("id")), lit(100000L)).cast("double") / 100.0)
+          .as("value"))
+      .filter(pmod(h(10, col("user_id"), col("event_type")), lit(100L))
+        < element_at(rates, col("event_type")))
+      .select(col("event_id"),
+        timestamp_micros(lit(1704067200000000L) +
+          col("day") * lit(86400000000L) + col("us_in_day")).as("ts"),
+        col("user_id"), col("event_type"), col("value"),
+        concat(lit("{\"k\": "),
+          pmod(h(11, col("event_id")), lit(100L)).cast("string"),
+          lit("}")).as("props"))
+    // ---- PLANTED STREAMING-TIER EVENT SLICES (VERDICT r13 #6):
+    // base events land on random (day, µs) draws, so whether the
+    // interval-join family's branches fire is fixture luck. Five
+    // designed slices in a dedicated user range (base users are
+    // 0..1999) pin every branch at every scale. All horizons are
+    // relative to a planted ANCHOR at day 30 (beyond every base
+    // draw), which is therefore max(ts) — the watermark the
+    // left/full outer joins prove non-matches against (wm =
+    // max − 2 h; a left needs l.ts+5min < wm provable, a right
+    // only r.ts < wm):
+    //  - anchor (user 10999, day 30): itself an unprovable
+    //    singleton — absent from every null branch;
+    //  - matched pairs (users 10000-10199, day 10): two events
+    //    120 s apart ⇒ inner/left/full all emit the pair;
+    //  - provable singletons (users 10200-10399, day 5): no
+    //    partner ever ⇒ left-null in q347, left- AND right-null
+    //    rows in q355;
+    //  - late singletons (users 10400-10499, anchor − ~1 h):
+    //    inside BOTH horizons ⇒ correctly absent everywhere (the
+    //    "match still in flight" branch);
+    //  - asymmetric singletons (users 10500-10549, just below
+    //    anchor − 2 h): r.ts < wm but l.ts+5min > wm ⇒ q355 emits
+    //    ONLY the right-null row, q347 emits nothing — the one
+    //    branch that separates the two horizon rules.
+    val anchorUs = 1704067200000000L + 30L * 86400000000L
+    def plantedEv(ids: org.apache.spark.sql.Dataset[java.lang.Long],
+        eid: org.apache.spark.sql.Column,
+        user: org.apache.spark.sql.Column,
+        tsUs: org.apache.spark.sql.Column) = ids
+      .select(eid.as("event_id"), timestamp_micros(tsUs).as("ts"),
+        user.as("user_id"), lit("view").as("event_type"),
+        lit(1.0).as("value"), lit("{\"k\": 0}").as("props"))
+    val day5 = 1704067200000000L + 5L * 86400000000L
+    val day10 = 1704067200000000L + 10L * 86400000000L
+    val plants = Seq(
+      plantedEv(spark.range(1), lit(1000000L), lit(10999L),
+        lit(anchorUs)),
+      plantedEv(spark.range(200), col("id") + 1000001L,
+        col("id") + 10000L, lit(day10) + col("id") * 600000000L),
+      plantedEv(spark.range(200), col("id") + 1000301L,
+        col("id") + 10000L,
+        lit(day10) + col("id") * 600000000L + 120000000L),
+      plantedEv(spark.range(200), col("id") + 1000601L,
+        col("id") + 10200L, lit(day5) + col("id") * 600000000L),
+      plantedEv(spark.range(100), col("id") + 1000901L,
+        col("id") + 10400L,
+        lit(anchorUs - 3600000000L) - col("id") * 10000000L),
+      plantedEv(spark.range(50), col("id") + 1001101L,
+        col("id") + 10500L,
+        lit(anchorUs - 7350000000L) + col("id") * 2000000L))
+    plants.reduce(_ unionByName _).unionByName(baseEv)
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"$out/events.parquet")
+    println(s"[profile] rich fixture written to $out")
+  }
 
-    if (args.nonEmpty && args(0) == "anf-frontier") {
-      // Per-round frontier diagnostics for ANF delta propagation
-      // (VERDICT r13 #7): round h's delta frontier = nodes whose
-      // HLL_4 sketch BYTES changed in round h-1. Prints, per round,
-      // |frontier| / |nodes| on (a) the fixture co-occurrence graph
-      // (saturates at hop ~2) and (b) the zipf probe graph at 1×
-      // (keeps growing past hop 5) — the two regimes that decide
-      // whether a delta round ships anything. Usage:
-      //   Profile anf-frontier [maxHops]   (default 6)
-      import graft.functions.SketchFunctions.{hll4Agg, hll4Union, hll4UnionAgg}
-      graft.functions.GraftFunctions.register(spark)
-      val maxHops = if (args.length > 1) args(1).toInt else 6
-      def frontierScan(label: String,
-          ee: org.apache.spark.sql.DataFrame): Unit = {
-        val np = spark.sessionState.conf.numShufflePartitions
-        val nNodes = ee.select(col("u")).distinct().count()
-        var cur = ee.groupBy(col("u")).agg(hll4Agg(col("v")).as("sk"))
-          .withColumn("skp", lit(null).cast("binary"))
-          .localCheckpoint(true)
-        (2 to maxHops).foreach { h =>
-          val nb = ee.join(cur.select(col("u").as("v"), col("sk"))
-              .hint("shuffle_hash"), "v")
-            .repartition(np, col("u"))
-            .groupBy(col("u")).agg(hll4UnionAgg(col("sk")).as("__nb"))
-          cur = cur.select(col("u"), col("sk"))
-            .join(nb.hint("shuffle_hash"), Seq("u"), "left")
-            .select(col("u"),
-              when(col("__nb").isNull, col("sk"))
-                .otherwise(hll4Union(col("sk"), col("__nb"))).as("sk"),
-              col("sk").as("skp"))
-            .localCheckpoint(true)
-          val changed = cur.filter(col("sk") =!= col("skp")).count()
-          println(f"[profile] $label%-22s round $h%2d frontier=" +
-            f"$changed%8d / $nNodes%8d (${100.0 * changed / nNodes}%5.1f%%)")
-        }
-      }
-      val p = Tables.events(spark, sfDir)
-        .select(col("event_type"), date_trunc("hour", col("ts")).as("h"),
-          col("user_id"))
-        .distinct()
-      val e = ops.Graph.cooccurEdges(p,
-        Seq("event_type", "h"), "user_id", minSupport = 3)
-      frontierScan("fixture cooccur",
-        e.select(col("u"), col("v"))
-          .unionByName(e.select(col("v").as("u"), col("u").as("v"))))
-      def u(salt: Int) = pmod(xxhash64(col("id"), lit(salt)),
-        lit(1L << 24)).cast("double") / lit((1L << 24).toDouble)
-      val ez = spark.range(100000L).select(
-          (u(3) * u(3) * lit(10000.0)).cast("long").as("a"),
-          (u(4) * u(4) * lit(10000.0)).cast("long").as("bb"))
-        .filter(col("a") =!= col("bb"))
-        .select(least(col("a"), col("bb")).as("u"),
-          greatest(col("a"), col("bb")).as("v"))
-        .distinct()
-      frontierScan("zipf 1x",
-        ez.select(col("u"), col("v"))
-          .unionByName(ez.select(col("v").as("u"), col("u").as("v"))))
-      spark.stop()
-      return
+  private def taxiYear(spark: SparkSession, args: Array[String]): Unit = {
+    // Reference-scale taxi run (VERDICT r10 #3): a deterministic
+    // synthetic TLC-shaped YEAR at the reference's own operating
+    // point (~40M rows — /root/reference/.MISSING_LARGE_BLOBS
+    // lists 12 monthly files of a yellow-taxi year), then the full
+    // TaxiPipeline e2e: clean → features → cache → 7 analytics +
+    // p99 → parquet sink. Wall time prints per pass;
+    // tools/check_taxi_year.py recomputes all 7 tables in DuckDB
+    // from the same raw parquet and compares. Usage:
+    //   Profile taxi-year [rows=40000000]
+    val rows = if (args.length > 1) args(1).toLong else 40000000L
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_taxi_year"
+    val rawDir = s"$base/raw_$rows"
+    graft.sources.FixtureMemo.once(rawDir, s"taxi_year_gen_v1:$rows") {
+      // every column is a pure hash of the row id (content-
+      // deterministic, RNG-free, cluster-layout-independent — the
+      // q121 replayability discipline). u(salt) ∈ [0,1) uniform.
+      def u(salt: Int) =
+        pmod(xxhash64(col("id"), lit(salt)), lit(1000000L))
+          .cast("double") / lit(1000000.0)
+      def money(c: org.apache.spark.sql.Column) = round(c, 2)
+      val pickup = timestamp_seconds(lit(1704067200L) + // 2024-01-01 UTC
+        pmod(xxhash64(col("id"), lit(1)), lit(31536000L)))
+      // short-trip-heavy distance; ~1% exact zeros (exercises the
+      // revenue_per_mile null-guard), plus rare zero DURATIONS for
+      // the avg_speed guard and NULLs in the four null-prone TLC
+      // columns so clean() has real work (~4% of rows dropped)
+      val dist = when(u(98) < 0.01, lit(0.0))
+        .otherwise(money(u(3) * u(3) * lit(20.0) + lit(0.3)))
+      val durSec = when(u(99) < 0.005, lit(0L))
+        .otherwise((u(2) * u(2) * lit(5340.0)).cast("long") + 60L)
+      val fare = when(u(97) < 0.003, lit(0.0))
+        .otherwise(money(lit(3.0) + lit(2.5) * dist
+          + durSec.cast("double") / 60.0 * lit(0.35)
+          + u(9) * lit(2.0)))
+      val payment = when(u(8) < 0.55, 1).when(u(8) < 0.85, 2)
+        .when(u(8) < 0.90, 3).when(u(8) < 0.95, 4)
+        .otherwise(5) // 5 = "Unknown" branch of the A6 decode
+      val pu = (u(5) * u(5) * lit(265.0)).cast("int") + 1
+      val dO = (u(6) * u(6) * lit(265.0)).cast("int") + 1
+      val tip = when(payment === 1, money(fare * u(10) * lit(0.3)))
+        .otherwise(lit(0.0))
+      val tolls = when(u(11) < 0.05, lit(6.55)).otherwise(lit(0.0))
+      val extra = when(u(12) < 0.3, lit(1.0))
+        .when(u(12) < 0.5, lit(0.5)).otherwise(lit(0.0))
+      val cong = when(u(13) < 0.01, lit(null).cast("double"))
+        .when(pu < 100, lit(2.5)).otherwise(lit(0.0))
+      val airport = when(u(14) < 0.01, lit(null).cast("double"))
+        .when(pu.isin(132, 138), lit(1.75)).otherwise(lit(0.0))
+      spark.range(rows)
+        .select(
+          when(u(0) < 0.55, 1).otherwise(2).as("VendorID"),
+          pickup.as("tpep_pickup_datetime"),
+          timestamp_seconds(unix_timestamp(pickup) + durSec)
+            .as("tpep_dropoff_datetime"),
+          when(u(4) < 0.015, lit(null).cast("long"))
+            .otherwise((u(15) * lit(5.0)).cast("long") + 1)
+            .as("passenger_count"),
+          dist.as("trip_distance"),
+          when(u(7) < 0.015, lit(null).cast("long"))
+            .otherwise(when(pu.isin(132, 138), 2L).otherwise(1L))
+            .as("RatecodeID"),
+          when(u(16) < 0.01, "Y").otherwise("N")
+            .as("store_and_fwd_flag"),
+          pu.as("PULocationID"), dO.as("DOLocationID"),
+          payment.as("payment_type"),
+          fare.as("fare_amount"), extra.as("extra"),
+          lit(0.5).as("mta_tax"), tip.as("tip_amount"),
+          tolls.as("tolls_amount"),
+          lit(1.0).as("improvement_surcharge"),
+          money(fare + extra + lit(0.5) + tip + tolls + lit(1.0)
+            + coalesce(cong, lit(0.0)) + coalesce(airport, lit(0.0)))
+            .as("total_amount"),
+          cong.as("congestion_surcharge"),
+          airport.as("Airport_fee"))
+        .repartition(96)
+        .write.mode("overwrite").parquet(rawDir + "/data")
     }
-
-    if (args.nonEmpty && args(0) == "stream-cost") {
-      // Where do the ~9-12 s per availableNow stream actually go?
-      // (VERDICT r11 #4 groundwork): run one windowed-count stream,
-      // print per-micro-batch durationMs breakdown + batch count.
-      import org.apache.spark.sql.streaming.Trigger
-      val parts = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
-        else Seq(32, 32, 8, 8, 4, 4)
-      parts.zipWithIndex.foreach { case (np, run) =>
-        spark.conf.set("spark.sql.shuffle.partitions", np.toString)
-        val t0 = System.nanoTime()
-        val q = graft.streaming.StreamOps.windowedCounts(
-            graft.streaming.StreamOps.eventsStream(spark, sfDir))
-          .writeStream.format("noop")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"[profile] stream-cost parts=$np%3d run$run " +
-          f"total=$sec%8.3f s batches=${q.recentProgress.length}")
-        q.recentProgress.foreach { p =>
-          println(s"[profile]   batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durationMs=${p.durationMs}")
-        }
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "taxi-year") {
-      // Reference-scale taxi run (VERDICT r10 #3): a deterministic
-      // synthetic TLC-shaped YEAR at the reference's own operating
-      // point (~40M rows — /root/reference/.MISSING_LARGE_BLOBS
-      // lists 12 monthly files of a yellow-taxi year), then the full
-      // TaxiPipeline e2e: clean → features → cache → 7 analytics +
-      // p99 → parquet sink. Wall time prints per pass;
-      // tools/check_taxi_year.py recomputes all 7 tables in DuckDB
-      // from the same raw parquet and compares. Usage:
-      //   Profile taxi-year [rows=40000000]
-      val rows = if (args.length > 1) args(1).toLong else 40000000L
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_taxi_year"
-      val rawDir = s"$base/raw_$rows"
-      graft.sources.FixtureMemo.once(rawDir, s"taxi_year_gen_v1:$rows") {
-        // every column is a pure hash of the row id (content-
-        // deterministic, RNG-free, cluster-layout-independent — the
-        // q121 replayability discipline). u(salt) ∈ [0,1) uniform.
-        def u(salt: Int) =
-          pmod(xxhash64(col("id"), lit(salt)), lit(1000000L))
-            .cast("double") / lit(1000000.0)
-        def money(c: org.apache.spark.sql.Column) = round(c, 2)
-        val pickup = timestamp_seconds(lit(1704067200L) + // 2024-01-01 UTC
-          pmod(xxhash64(col("id"), lit(1)), lit(31536000L)))
-        // short-trip-heavy distance; ~1% exact zeros (exercises the
-        // revenue_per_mile null-guard), plus rare zero DURATIONS for
-        // the avg_speed guard and NULLs in the four null-prone TLC
-        // columns so clean() has real work (~4% of rows dropped)
-        val dist = when(u(98) < 0.01, lit(0.0))
-          .otherwise(money(u(3) * u(3) * lit(20.0) + lit(0.3)))
-        val durSec = when(u(99) < 0.005, lit(0L))
-          .otherwise((u(2) * u(2) * lit(5340.0)).cast("long") + 60L)
-        val fare = when(u(97) < 0.003, lit(0.0))
-          .otherwise(money(lit(3.0) + lit(2.5) * dist
-            + durSec.cast("double") / 60.0 * lit(0.35)
-            + u(9) * lit(2.0)))
-        val payment = when(u(8) < 0.55, 1).when(u(8) < 0.85, 2)
-          .when(u(8) < 0.90, 3).when(u(8) < 0.95, 4)
-          .otherwise(5) // 5 = "Unknown" branch of the A6 decode
-        val pu = (u(5) * u(5) * lit(265.0)).cast("int") + 1
-        val dO = (u(6) * u(6) * lit(265.0)).cast("int") + 1
-        val tip = when(payment === 1, money(fare * u(10) * lit(0.3)))
-          .otherwise(lit(0.0))
-        val tolls = when(u(11) < 0.05, lit(6.55)).otherwise(lit(0.0))
-        val extra = when(u(12) < 0.3, lit(1.0))
-          .when(u(12) < 0.5, lit(0.5)).otherwise(lit(0.0))
-        val cong = when(u(13) < 0.01, lit(null).cast("double"))
-          .when(pu < 100, lit(2.5)).otherwise(lit(0.0))
-        val airport = when(u(14) < 0.01, lit(null).cast("double"))
-          .when(pu.isin(132, 138), lit(1.75)).otherwise(lit(0.0))
-        spark.range(rows)
-          .select(
-            when(u(0) < 0.55, 1).otherwise(2).as("VendorID"),
-            pickup.as("tpep_pickup_datetime"),
-            timestamp_seconds(unix_timestamp(pickup) + durSec)
-              .as("tpep_dropoff_datetime"),
-            when(u(4) < 0.015, lit(null).cast("long"))
-              .otherwise((u(15) * lit(5.0)).cast("long") + 1)
-              .as("passenger_count"),
-            dist.as("trip_distance"),
-            when(u(7) < 0.015, lit(null).cast("long"))
-              .otherwise(when(pu.isin(132, 138), 2L).otherwise(1L))
-              .as("RatecodeID"),
-            when(u(16) < 0.01, "Y").otherwise("N")
-              .as("store_and_fwd_flag"),
-            pu.as("PULocationID"), dO.as("DOLocationID"),
-            payment.as("payment_type"),
-            fare.as("fare_amount"), extra.as("extra"),
-            lit(0.5).as("mta_tax"), tip.as("tip_amount"),
-            tolls.as("tolls_amount"),
-            lit(1.0).as("improvement_surcharge"),
-            money(fare + extra + lit(0.5) + tip + tolls + lit(1.0)
-              + coalesce(cong, lit(0.0)) + coalesce(airport, lit(0.0)))
-              .as("total_amount"),
-            cong.as("congestion_surcharge"),
-            airport.as("Airport_fee"))
-          .repartition(96)
-          .write.mode("overwrite").parquet(rawDir + "/data")
-      }
-      val rawDf = spark.read.parquet(rawDir + "/data")
-      val outDir = s"$base/out_$rows"
-      // two passes: pass 1 includes OS page-cache fill for the ~GB
-      // raw parquet; pass 2 is the steady-state number for SURVEY
-      for (pass <- 1 to 2) {
-        Caching.releaseAll(); spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        val cleaned = graft.taxi.TaxiPipeline.clean(rawDf)
-        graft.taxi.TaxiPipeline.run(cleaned,
-          new graft.sources.ParquetSink(outDir), overwrite = true)
-        println(f"[profile] taxi-year pass $pass e2e " +
-          f"${(System.nanoTime() - t0) / 1e9}%8.3f s ($rows rows)")
-      }
-      println(s"[profile] raw=${rawDf.count()} " +
-        s"clean=${graft.taxi.TaxiPipeline.clean(rawDf).count()}")
-      Seq("demand_heatmap", "tip_trends", "fare_anomalies",
-        "trip_performance", "popular_routes", "payment_analysis",
-        "distance_distribution").foreach { t =>
-        println(s"[profile]   $t rows=" +
-          spark.read.parquet(s"$outDir/$t").count())
-      }
-      println(s"[profile] raw=$rawDir/data out=$outDir")
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "q48") {
-      // q48 fragment split: pair generation vs component iteration
-      val docs = Tables.documents(spark, sfDir)
-      timed("q48 pairs only")(noop(
-        graft.dedup.Dedup.minhashNearDupPairs(docs, "doc_id", "text", 0.6)))
-      val pairsDf = graft.dedup.Dedup
-        .minhashNearDupPairs(docs, "doc_id", "text", 0.6)
-      val cached = spark.createDataFrame(
-        pairsDf.collect().toSeq.asJava, pairsDf.schema)
-      // local relation input → the timing below is ONLY the component
-      // iteration (timed() clears caches, so a persisted input would
-      // silently re-run the whole pair pipeline inside the timer)
-      timed("q48 components on local pairs")(noop(
-        graft.dedup.Dedup.nearDupComponents(cached)))
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "q54") {
-      // q54 fragment split: training vs encode vs ADC search
-      import graft.vector.{VectorOps => V}
-      val nemb = V.normalize(emb)
-      timed("q54 train (1 iter)")(noop(V.pqTrain(nemb, 16, 16, 4, 1)))
-      timed("q54 train (2 iters)")(noop(V.pqTrain(nemb, 16, 16, 4, 2)))
-      timed("q54 encode corpus (det cb)")(noop(
-        V.pqEncode(nemb, V.pqCodebookDeterministic(spark, 16, 16, 4), 16, 4)))
-      val queries = emb.filter(col("vec_id") < 10)
-      timed("q54 full (train+adc)")(noop(
-        V.pqAdcTopK(emb, queries, 3,
-          V.pqTrain(nemb, 16, 16, 4, 1), 16, 4)))
-      timed("q54 adc w/ det cb (no train)")(noop(
-        V.pqAdcTopK(emb, queries, 3,
-          V.pqCodebookDeterministic(spark, 16, 16, 4), 16, 4)))
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "media-scale") {
-      // Candidate-volume probe for the two media near-dup banding
-      // schemes (SURVEY §19.3 → q367) at synthetic tiers of n =
-      // 20,000·k images under q367's fixture mapping (incl. its
-      // exact-dup plant, so stage-1 collapse does real work: 3-of-5
-      // mass folds). The honest structural statement: on
-      // hash-uniform survivors BOTH schemes are Θ(n²) at fixed
-      // parameters — what differs is the constant. Per band a pair
-      // collides with prob Σ C(w,≤r)/2^w, so unordered candidates
-      // are ≈ n²/2·(8/2⁷+1/2⁸) ≈ n²/30 for the 9-narrow-band
-      // radius-0 scheme vs n²·4·137/2¹⁶/2 ≈ n²/239 for 4×16-bit
-      // MIH radius-2: the 512× bucket-space gain is re-multiplied
-      // by the 137-probe expansion to a net ≈8× constant. The real
-      // scale levers are (a) stage-1 exact collapse (removes the
-      // duplicate-mass bucket concentration entirely) and (b) the
-      // published MIH rule — substring width ≈ log₂ n, i.e. FEWER,
-      // WIDER bands as the corpus grows — which keeps the constant
-      // at the probe-budget floor; this probe puts measured walls
-      // next to both constants.
-      // Two generators, two regimes — both measured because they
-      // DISAGREE in an instructive way:
-      //  - "codec": the real BMP→dHash path under q367's fixture
-      //    mapping. Its hash space is LOW-ENTROPY (143 (w,h) shapes
-      //    × a mod-128 pattern): survivors saturate (measured 20k
-      //    docs → 7,375 distinct hashes, 200k → 12,822), so narrow
-      //    bands never reach their wall and MIH's fixed 548-row/item
-      //    probe emission makes it SLOWER — the fixture regime,
-      //    where stage-1 collapse is doing nearly all the work.
-      //  - "synthetic": splitmix64 hashes with the same exact-dup/
-      //    near-dup plants, survivors ≈ 0.6·n growing linearly — the
-      //    corpus regime the banding constants are about.
-      // Usage: Profile media-scale [tier ...]   (default 1 10,
-      // synthetic also runs 30 to expose the narrow-band wall)
-      import org.apache.spark.sql.DataFrame
-      import spark.implicits._
-      def mix(z0: Long): Long = {
-        var z = z0 + 0x9E3779B97F4A7C15L
-        z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-        z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-        z ^ (z >>> 31)
-      }
-      def hashesAt(k: Int, codec: Boolean): DataFrame =
-        spark.range(20000L * k).select(col("id")).as[Long]
-          .mapPartitions(_.map { id =>
-            val g = id / 5
-            val m = id % 5
-            val h =
-              if (codec) graft.multimodal.Multimodal.fixturePhash(id)
-              else {
-                val base = mix(g)
-                if (m == 4) mix(Long.MaxValue - id)
-                else if (m == 1)
-                  // ≤ 3 flipped bits (positions may coincide)
-                  base ^ (1L << (g % 64).toInt) ^
-                    (1L << ((g * 11 + 7) % 64).toInt) ^
-                    (1L << ((g * 29 + 13) % 64).toInt)
-                else base
-              }
-            (id, h)
-          }).toDF("doc_id", "phash")
-      val tiers = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
-        else Seq(1, 10)
-      for {
-        codec <- Seq(true, false)
-        // synthetic survivors scale with n — add the tier where the
-        // narrow-band scheme's volume becomes the wall
-        k <- if (codec) tiers else tiers ++ Seq(30 * tiers.max / 10)
-          .filter(_ > tiers.max)
-      } {
-        val gen = if (codec) "codec" else "synth"
-        val reps = graft.Caching.retain(hashesAt(k, codec)
-          .groupBy(col("phash"))
-          .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("sz"))
-          .persist())
-        val nReps = reps.count()
-        println(s"[profile] media $gen ${k}x docs=${20000L * k} " +
-          s"survivors=$nReps")
-        // (a) q148's 9-narrow-band scheme over the SAME survivors
-        val bandVals9 = array((0 until 9).map { i =>
-          if (i == 0)
-            shiftrightunsigned(col("phash"), 56).bitwiseAND(lit(255L))
-          else shiftrightunsigned(col("phash"), 56 - 7 * i)
-            .bitwiseAND(lit(127L))
-        }: _*)
-        val m9 = reps.select(
-          posexplode(bandVals9).as(Seq("band", "bucket")),
-          struct(col("rep"), col("phash")).as("m"))
-        val vol9 = m9.groupBy(col("band"), col("bucket"))
-          .agg(count(lit(1)).as("s"))
-          .agg(coalesce(sum(col("s") * (col("s") - 1)) / 2, lit(0))
-            .cast("long")).collect()(0).getLong(0)
-        // (b) MIH volume: Σ over (band, key) cells of probe×exact
-        val masks: Seq[Long] = (0 to 2).flatMap(r =>
-          (0 until 16).combinations(r)
-            .map(_.foldLeft(0L)((m, i) => m | (1L << i))).toSeq)
-        val bandVals4 = array((0 until 4).map(i =>
-          shiftrightunsigned(col("phash"), 48 - 16 * i)
-            .bitwiseAND(lit(0xFFFFL))): _*)
-        val keyed4 = reps.select(
-          posexplode(bandVals4).as(Seq("band", "key")))
-        val exactCnt = keyed4.groupBy(col("band"), col("key"))
-          .agg(count(lit(1)).as("e"))
-        val probeCnt = keyed4
-          .select(col("band"), col("key"),
-            explode(typedLit(masks)).as("mask"))
-          .select(col("band"),
-            col("key").bitwiseXOR(col("mask")).as("key"))
-          .groupBy(col("band"), col("key")).agg(count(lit(1)).as("p"))
-        val volMRaw = probeCnt.join(exactCnt, Seq("band", "key"))
-          .agg(coalesce(sum(col("p") * col("e")), lit(0)).cast("long"))
-          .collect()(0).getLong(0)
-        // comparable to vol9's unordered-no-self convention: the raw
-        // probe x exact product counts every cross pair in BOTH
-        // directions (mask symmetry) plus each item's 4 mask-0 self
-        // matches - remove the self term, then halve
-        val volM = (volMRaw - 4L * nReps) / 2
-        val ratio = vol9.toDouble / math.max(1L, volM)
-        println(f"[profile] media $gen ${k}x vol: 9-band=$vol9 " +
-          f"mih=$volM (raw=$volMRaw) ratio=$ratio%.1f")
-        // timed pair generation — skip a tier whose candidate volume
-        // is an analytic wall rather than a runnable measurement
-        if (vol9 <= 2000000000L)
-          timed(f"media $gen ${k}x 9-band pairs") {
-            val out = ops.Graph.cooccurPairs(m9,
-                Seq("band", "bucket"), "m")
-              .select(col("u.rep").as("a_id"), col("v.rep").as("b_id"),
-                bit_count(col("u.phash").bitwiseXOR(col("v.phash")))
-                  .cast("int").as("hamming"))
-              .filter(col("hamming") <= 8).distinct().count()
-            println(s"  out=$out")
-          }
-        else println(s"[profile] media $gen ${k}x 9-band pairs SKIPPED " +
-          s"(vol=$vol9 is the quadratic wall, not a measurement)")
-        if (volM <= 2000000000L)
-          timed(f"media $gen ${k}x mih pairs") {
-            val out = graft.dedup.Dedup.hammingNearDupPairs(reps,
-              "rep", "phash", threshold = 8, bands = 4).count()
-            println(s"  out=$out")
-          }
-        else println(s"[profile] media $gen ${k}x mih pairs SKIPPED " +
-          s"(vol=$volM)")
-        Caching.releaseAll()
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "q184-scale") {
-      // triangle-counting scale probe: replicate events k-fold with a
-      // disjoint user-id offset per replica (k x nodes/edges/wedges,
-      // component structure preserved per replica), so the timing
-      // isolates how the oriented-wedge machinery scales with graph
-      // volume. Probe consumes the operator's real output columns
-      // (sum over n_tri), per the SURVEY 13.14 lesson.
-      import org.apache.spark.sql.DataFrame
-      def tri(k: Int): DataFrame = {
-        val base = Tables.events(spark, sfDir)
-          .select(col("event_type"), date_trunc("hour", col("ts")).as("h"),
-            col("user_id"))
-        val rep = base
-          .withColumn("r", explode(sequence(lit(0), lit(k - 1))))
-          // replica-suffixed bucket key AND shifted user ids: replicas
-          // are fully disjoint subgraphs, so edges/wedges scale by k
-          // (same bucket key would instead square the pair expansion)
-          .select(concat(col("event_type"), lit("_"), col("r"))
-              .as("event_type"), col("h"),
-            (col("user_id") + col("r") * 10000000L).as("user_id"))
-          .distinct()
-        ops.Graph.triangleCounts(ops.Graph.cooccurEdges(rep,
-          Seq("event_type", "h"), "user_id", minSupport = 3))
-      }
-      def consume(df: DataFrame): Unit =
-        println("  tri total = " +
-          df.agg(coalesce(sum(col("n_tri")), lit(0L)))
-            .collect()(0).getLong(0))
-      // replica counts from the CLI (default the 1x/10x pair); the
-      // 100x tier is run the same way with `q184-scale 1 100`
-      val ks = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
-        else Seq(1, 10)
-      ks.foreach(k => timed(s"q184 ${k}x")(consume(tri(k))))
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "q186-scale") {
-      // k-means scale probe: replicate embeddings k-fold (shifted
-      // vec_ids; init still the first 8 ids so every tier runs the
-      // same k and iteration count) and time the full 3-iteration
-      // Lloyd plan. Per iteration the broadcast-assign is linear in N
-      // and the centroid update is a skinny integer shuffle, so the
-      // tier should scale ~linearly. Consumes the real output (sum
-      // over cluster ids + distances), per the SURVEY 13.14 lesson.
-      import org.apache.spark.sql.DataFrame
-      def km(k: Int): DataFrame = {
-        val rep = Tables.embeddings(spark, sfDir)
-          .withColumn("r", explode(sequence(lit(0), lit(k - 1))))
-          .select((col("vec_id") + col("r") * 10000000L).as("vec_id"),
-            col("embedding"))
-        // pid+sfDir-suffixed like the q82/q181 roundtrip rows, so
-        // concurrent JVMs / different fixture roots never share it
-        val dir = s"${System.getProperty("java.io.tmpdir")}/graft_p186_" +
-          s"${k}_${Integer.toHexString(sfDir.hashCode)}_" +
-          ProcessHandle.current().pid()
-        rep.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-        SparkEntry.queries("q186_kmeans_assign")(spark, dir)
-      }
-      def consume(df: DataFrame): Unit =
-        println("  sum = " + df.agg(sum(col("cluster") + col("dist")))
-          .collect()(0).get(0))
-      val ks = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
-        else Seq(1, 10)
-      ks.foreach(k => timed(s"q186 ${k}x")(consume(km(k))))
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "q248-scale") {
-      // bootstrap scale probe: replicate events k-fold with shifted
-      // event_ids (disjoint hash streams per replica, so the
-      // weight-hash work scales with rows and never collides) and
-      // time the full 200-replicate bootstrap. The expansion is
-      // computed in the scan projection and collapsed by partial
-      // aggregation before the (type, rb) shuffle, so the tier
-      // should scale ~linearly in rows — THE property that makes a
-      // multiplier bootstrap feasible at 100 TB. Consumes the real
-      // output (sum over CI bounds), per the SURVEY 13.14 lesson.
-      import org.apache.spark.sql.DataFrame
-      def boot(k: Int): DataFrame = {
-        val rep = Tables.events(spark, sfDir)
-          .withColumn("r", explode(sequence(lit(0), lit(k - 1))))
-          .select((col("event_id") + col("r") * 10000000L)
-            .as("event_id"), col("ts"), col("user_id"),
-            col("event_type"), col("value"), col("props"))
-        val dir = s"${System.getProperty("java.io.tmpdir")}/graft_p248_" +
-          s"${k}_${Integer.toHexString(sfDir.hashCode)}_" +
-          ProcessHandle.current().pid()
-        rep.write.mode("overwrite").parquet(s"$dir/events.parquet")
-        SparkEntry.queries("q248_bootstrap_ci")(spark, dir)
-      }
-      def consume(df: DataFrame): Unit =
-        println("  sum = " + df.agg(sum(col("ci_lo") + col("ci_hi")))
-          .collect()(0).get(0))
-      val ks = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
-        else Seq(1, 10)
-      ks.foreach(k => timed(s"q248 ${k}x")(consume(boot(k))))
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "q237-scale") {
-      // expand-dedupe scale probe: replicate events k-fold with
-      // DISJOINT user ids (each replica contributes its own users,
-      // so distinct counts scale by k and the dedupe hash space
-      // grows with volume — the honest stress for the
-      // explode→distinct→count identity behind q237/q271). The
-      // explode is row-local; both dedupes shuffle on bounded
-      // (user, hour)-shaped keys, so the tier should scale
-      // ~linearly. Consumes real output columns.
-      import org.apache.spark.sql.DataFrame
-      def dau(k: Int): DataFrame = {
-        val rep = Tables.events(spark, sfDir)
-          .withColumn("r", explode(sequence(lit(0), lit(k - 1))))
-          .select(col("event_id"), col("ts"),
-            (col("user_id") + col("r") * 10000000L).as("user_id"),
-            col("event_type"), col("value"), col("props"))
-        val dir = s"${System.getProperty("java.io.tmpdir")}/graft_p237_" +
-          s"${k}_${Integer.toHexString(sfDir.hashCode)}_" +
-          ProcessHandle.current().pid()
-        rep.write.mode("overwrite").parquet(s"$dir/events.parquet")
-        SparkEntry.queries("q237_trailing_dau")(spark, dir)
-      }
-      def consume(df: DataFrame): Unit =
-        println("  sum = " + df.agg(sum(col("hour") + col("dau24")))
-          .collect()(0).get(0))
-      val ks = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
-        else Seq(1, 10)
-      ks.foreach(k => timed(s"q237 ${k}x")(consume(dau(k))))
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "q207-scale") {
-      // bucketed-join amortization probe: k-fold replicated
-      // orders+lineitem (orderkey-strided, fully disjoint), then
-      // (a) the plain parquet SMJ — pays the orderkey shuffle of
-      //     BOTH sides every query,
-      // (b) the one-time bucketBy write (the amortized cost), and
-      // (c) the bucketed zero-exchange join — what every subsequent
-      //     query pays.
-      // The q207 claim is (c) << (a) with (b) paid once; at 100 TB
-      // (a) re-shuffles the fact per query while (c) never does.
-      import org.apache.spark.sql.DataFrame
-      val k = if (args.length > 1) args(1).toInt else 10
-      // data-derived stride (the q184-probe lesson, ADVICE r8): a
-      // fixed 1e7 overlaps TPC-H orderkeys from sf~1.7 up, silently
-      // inflating cross-replica matches
-      val stride = Tables.orders(spark, sfDir)
-        .agg(max(col("o_orderkey"))).collect()(0).getLong(0) + 1
-      def rep(df: DataFrame, key: String): DataFrame =
-        df.withColumn("r", explode(sequence(lit(0), lit(k - 1))))
-          .withColumn(key, col(key) + col("r") * stride)
-          .drop("r")
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_p_q207_" +
-        s"${k}_${Integer.toHexString(sfDir.hashCode)}_" +
-        ProcessHandle.current().pid()
-      rep(Tables.orders(spark, sfDir), "o_orderkey")
-        .write.mode("overwrite").parquet(s"$base/orders_plain")
-      rep(Tables.lineitem(spark, sfDir), "l_orderkey")
-        .write.mode("overwrite").parquet(s"$base/lineitem_plain")
-      val op = spark.read.parquet(s"$base/orders_plain")
-      val lp = spark.read.parquet(s"$base/lineitem_plain")
-      def revenueAgg(o: DataFrame, l: DataFrame): DataFrame =
-        o.hint("merge").join(l, col("o_orderkey") === col("l_orderkey"))
-          .groupBy(col("o_orderpriority"))
-          .agg(count(lit(1)).cast("long").as("n_items"))
-      def consume(df: DataFrame): Unit =
-        println("  sum = " + df.agg(sum(col("n_items")))
-          .collect()(0).get(0))
-      timed(s"q207 plain SMJ ${k}x")(consume(revenueAgg(op, lp)))
-      val buckets = 32
-      timed(s"q207 bucket write ${k}x") {
-        op.write.mode("overwrite").option("path", s"$base/ob")
-          .bucketBy(buckets, "o_orderkey").sortBy("o_orderkey")
-          .saveAsTable(s"graft_p207_o_$k")
-        lp.write.mode("overwrite").option("path", s"$base/lb")
-          .bucketBy(buckets, "l_orderkey").sortBy("l_orderkey")
-          .saveAsTable(s"graft_p207_l_$k")
-      }
-      timed(s"q207 bucketed join ${k}x")(consume(revenueAgg(
-        spark.table(s"graft_p207_o_$k"), spark.table(s"graft_p207_l_$k"))))
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "r9-scale") {
-      // round-9 scale probe: q196 (2-hop reach) and q198 (interval
-      // coverage) on k-fold replicated events. Replicas are fully
-      // disjoint (replica-suffixed bucket key AND 1e7-strided user
-      // ids), so edges/wedges/coverage scale by exactly k and the
-      // timing isolates each operator's volume scaling. Probes
-      // consume the operators' real output columns (SURVEY 13.14).
-      import org.apache.spark.sql.DataFrame
-      def repDir(k: Int): String = {
-        val rep = Tables.events(spark, sfDir)
-          .withColumn("r", explode(sequence(lit(0), lit(k - 1))))
-          .select(
-            (col("event_id") + col("r") * 1000000000L).as("event_id"),
-            col("ts"),
-            (col("user_id") + col("r") * 10000000L).as("user_id"),
-            concat(col("event_type"), lit("_"), col("r"))
-              .as("event_type"),
-            col("value"), col("props"))
-        val dir = s"${System.getProperty("java.io.tmpdir")}/graft_p_r9_" +
-          s"${k}_${Integer.toHexString(sfDir.hashCode)}_" +
-          ProcessHandle.current().pid()
-        rep.write.mode("overwrite").parquet(s"$dir/events.parquet")
-        dir
-      }
-      def consume(df: DataFrame, cols: Seq[String]): Unit =
-        println("  sum = " + df.agg(sum(cols.map(col).reduce(_ + _)))
-          .collect()(0).get(0))
-      // optional op filter ("q196"/"q198") before the k list, so the
-      // cheap sub-linear op can probe 100x without paying the heavy
-      // one's linear wedge cost in the same run
-      val rest = args.drop(1)
-      val opFilter = rest.headOption.filter(_.startsWith("q"))
-      val ks0 = rest.dropWhile(_.startsWith("q")).map(_.toInt).toSeq
-      val ks = if (ks0.nonEmpty) ks0 else Seq(1, 10)
-      def wants(op: String) = opFilter.forall(_ == op)
-      ks.foreach { k =>
-        val dir = repDir(k)
-        if (wants("q196")) {
-          // the real-cluster setting (§13.4 lesson): q196's wedge
-          // relation scales by k, so task inputs only stay
-          // fixture-sized if the shuffle width scales with the data —
-          // at a fixed 32, the 10x distinct leaves ~10M wedge rows
-          // per task and the hash aggregate spills
-          spark.conf.set("spark.sql.shuffle.partitions",
-            math.max(cpus.toInt, cpus.toInt * k).toString)
-          timed(s"q196 ${k}x")(consume(
-            SparkEntry.queries("q196_khop_reach")(spark, dir),
-            Seq("n_direct", "n_reach2")))
-          spark.conf.set("spark.sql.shuffle.partitions", cpus)
-        }
-        if (wants("q198"))
-          timed(s"q198 ${k}x")(consume(
-            SparkEntry.queries("q198_interval_coverage")(spark, dir),
-            Seq("n_intervals", "covered_us")))
-        if (wants("q233"))
-          // global exact rank via withGlobalOffsets: the range
-          // shuffle + rank-keyed join are both ~linear in N; the
-          // probe pins that (a super-linear reading would mean the
-          // range partitioner or the gidx join skewed)
-          timed(s"q233 ${k}x")(consume(
-            SparkEntry.queries("q233_quantile_normalize")(spark, dir),
-            Seq("n", "mean_abs_shift")))
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "cooccur-hot") {
-      // hot-bucket probe (VERDICT r9 #1 done-criterion): plant ONE
-      // (event_type, h) bucket with `hot` extra distinct members on
-      // top of the sf events projection, then time the pair-count
-      // relation under (a) the shipped chunked expansion and (b) a
-      // chunk big enough to disable chunking — the naive one-task
-      // shape. The pair OUTPUT is identical (printed, as is the
-      // max-task wall time via a stage listener): the chunked plan
-      // must not leave the hot bucket's k²/2 pairs in one task.
-      import org.apache.spark.sql.DataFrame
-      val hot = if (args.length > 1) args(1).toInt else 10000
-      val base = Tables.events(spark, sfDir)
-        .select(col("event_type"), date_trunc("hour", col("ts")).as("h"),
-          col("user_id"))
-      val planted = base.unionByName(
-        spark.range(hot).select(lit("hotbkt").as("event_type"),
-          to_timestamp(lit("2024-01-01 00:00:00")).as("h"),
-          (col("id") + 900000000L).as("user_id")))
-        .distinct()
-      def pairs(chunk: Int): DataFrame = ops.Graph.cooccurPairCounts(
-        planted, Seq("event_type", "h"), "user_id", chunk)
-      // shuffle parallelism scales with the data, as on a real
-      // cluster (the §13.4 q196 / bandsweep precedent): the hot
-      // bucket emits ~hot²/2 pairs, and per-task aggregate state
-      // only stays fixture-sized if the partition count grows with
-      // it (~2M pairs/task). At a fixed 32, the 30k tier builds
-      // 14M-entry partial-agg maps in 32 concurrent tasks and
-      // GC/spill-thrashes (measured 33.8 GB spill, 280 s max task).
-      spark.conf.set("spark.sql.shuffle.partitions",
-        math.min(512L, math.max(32L,
-          hot.toLong * hot / 2 / 2000000L)).toString)
-      val maxTask = new java.util.concurrent.atomic.AtomicLong(0)
-      val stageMax = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-      val stageInfo = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            maxTask.accumulateAndGet(t.taskInfo.duration, math.max)
-            stageMax.merge(t.stageId, t.taskInfo.duration,
-              (a, b) => math.max(a, b))
-          }
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler.SparkListenerStageCompleted)
-              : Unit = {
-            val m = s.stageInfo.taskMetrics
-            stageInfo.put(s.stageInfo.stageId,
-              s"tasks=${s.stageInfo.numTasks} " +
-                s"sr=${m.shuffleReadMetrics.recordsRead} " +
-                s"sw=${m.shuffleWriteMetrics.recordsWritten} " +
-                s"spill=${m.memoryBytesSpilled / (1 << 20)}MB")
-          }
-        })
-      val variants = if (args.length > 2 && args(2) == "chunkonly")
-        Seq(("chunked (1024)", 1024))
-      else Seq(("chunked (1024)", 1024),
-        ("naive (chunk=MaxValue)", Int.MaxValue))
-      for ((label, chunk) <- variants) {
-        maxTask.set(0); stageMax.clear()
-        val t0 = System.nanoTime()
-        val n = pairs(chunk).count()
-        println(f"[profile] cooccur hot=$hot $label%-24s pairs=$n%12d " +
-          f"${(System.nanoTime() - t0) / 1e9}%8.3f s " +
-          f"max_task=${maxTask.get / 1e3}%8.3f s")
-        import scala.jdk.CollectionConverters._
-        stageMax.asScala.toSeq.sortBy(-_._2).take(5).foreach {
-          case (sid, ms) => println(
-            f"[profile]   stage $sid%4d max_task=${ms / 1e3}%8.3f s " +
-              stageInfo.getOrDefault(sid, ""))
-        }
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "cooccur-pairs") {
-      // pairs-only timing at the fixture (regression attribution for
-      // the chunked rewrite): the bare pair-count relation, no
-      // downstream graph work
-      val p = Tables.events(spark, sfDir)
-        .select(col("event_type"), date_trunc("hour", col("ts")).as("h"),
-          col("user_id"))
-        .distinct()
-      timed("cooccur pairs only")(noop(ops.Graph.cooccurPairCounts(
-        p, Seq("event_type", "h"), "user_id")))
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "q267-frag") {
-      // q267 fragment split: pair gen vs persist-materialize vs the
-      // eager peel rounds
-      val p = Tables.events(spark, sfDir)
-        .select(col("event_type"), date_trunc("hour", col("ts")).as("h"),
-          col("user_id"))
-        .distinct()
-      def pc0 = ops.Graph.cooccurPairCounts(p, Seq("event_type", "h"),
-        "user_id")
-      timed("q267 pc noop")(noop(pc0))
-      timed("q267 pc persist+count") {
-        val pc = pc0.persist(); pc.count(); pc.unpersist(blocking = false)
-      }
-      timed("q267 peel on local edges") {
-        val pc = pc0.persist()
-        val thr = pc.agg((lit(2.0)
-          * (sum(col("w")).cast("double") / count(lit(1)))).as("t"))
-        val e = pc.crossJoin(broadcast(thr))
-          .filter(col("w").cast("double") >= col("t"))
-          .select(col("u"), col("v"))
-        val local = spark.createDataFrame(
-          e.collect().toSeq.asJava, e.schema)
-        pc.unpersist(blocking = false)
-        val t0 = System.nanoTime()
-        noop(ops.Graph.kCoreProfile(local, 3, 3))
-        println(f"[profile]   (kCoreProfile on local input: ${
-          (System.nanoTime() - t0) / 1e9}%.3f s)")
-      }
-      locally {
-        // unrolled eager peel with per-action timing
-        val pc = pc0.persist()
-        val thr = pc.agg((lit(2.0)
-          * (sum(col("w")).cast("double") / count(lit(1)))).as("t"))
-        val e0 = pc.crossJoin(broadcast(thr))
-          .filter(col("w").cast("double") >= col("t"))
-          .select(col("u"), col("v"))
-        val local = spark.createDataFrame(
-          e0.collect().toSeq.asJava, e0.schema)
-        pc.unpersist(blocking = false)
-        def t[A](label: String)(f: => A): A = {
-          val t0 = System.nanoTime()
-          val a = f
-          println(f"[profile]   peel step $label%-28s ${
-            (System.nanoTime() - t0) / 1e9}%8.3f s")
-          a
-        }
-        def stats(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-          val r = df.select(col("u").as("n"))
-            .unionByName(df.select(col("v").as("n")))
-            .agg(count_distinct(col("n")), count(lit(1))).collect()(0)
-          (r.getLong(0), r.getLong(1) / 2)
-        }
-        for (mode <- Seq("held", "aqe-off", "checkpoint")) {
-          if (mode == "aqe-off")
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-          val held = scala.collection.mutable.ArrayBuffer
-            .empty[org.apache.spark.sql.DataFrame]
-          var e = local.select(col("u"), col("v")).persist()
-          held += e
-          t(s"[$mode] stats(e0)")(stats(e))
-          for (r <- 1 to 3) {
-            val deg = e.select(col("u").as("n"))
-              .unionByName(e.select(col("v").as("n")))
-              .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-            val keep = deg.filter(col("deg") >= 3).select(col("n"))
-            var next = e
-              .join(keep.select(col("n").as("ku")),
-                col("u") === col("ku"), "left_semi")
-              .join(keep.select(col("n").as("kv")),
-                col("v") === col("kv"), "left_semi")
-            if (mode == "checkpoint")
-              next = t(s"[$mode] ckpt(round $r)")(
-                next.localCheckpoint(eager = true))
-            else { next = next.persist(); held += next }
-            t(s"[$mode] stats(round $r)")(stats(next))
-            e = next
-          }
-          held.foreach(_.unpersist(blocking = false))
-          if (mode == "aqe-off")
-            spark.conf.set("spark.sql.adaptive.enabled", "true")
-        }
-      }
-      timed("q267 full (pc persist + peel)") {
-        val pc = pc0.persist()
-        val thr = pc.agg((lit(2.0)
-          * (sum(col("w")).cast("double") / count(lit(1)))).as("t"))
-        val e = pc.crossJoin(broadcast(thr))
-          .filter(col("w").cast("double") >= col("t"))
-          .select(col("u"), col("v"))
-        noop(ops.Graph.kCoreProfile(e, 3, 3))
-        pc.unpersist(blocking = false)
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "explain") {
-      // dump .explain("formatted") for catalog queries to files —
-      // the optimization-round before/after plan evidence
-      // (plans/rNN/<query>_{before,after}.txt). Usage:
-      //   Profile explain <outDir> <suffix> <query> [query ...]
-      if (args.length < 4) {
-        println("[profile] usage: explain <outDir> <suffix> <query>..." +
-          " (NOTE: composition EXECUTES eager catalog queries — " +
-          "iterative collect loops, fixture staging — so a dump on a " +
-          "large sf dir can run multi-second jobs; not a hang)")
-        spark.stop(); return
-      }
-      args.drop(3).filterNot(SparkEntry.queries.contains) match {
-        case bad if bad.nonEmpty =>
-          println(s"[profile] unknown queries: ${bad.mkString(", ")}")
-          spark.stop(); return
-        case _ =>
-      }
-      val outDir = args(1)
-      val suffix = args(2)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-      args.drop(3).foreach { name =>
-        Caching.releaseAll()
-        spark.catalog.clearCache()
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
-          txt.getBytes("UTF-8"))
-        println(s"[profile] explained $name -> $outDir/${name}_$suffix.txt")
-      }
-      Caching.releaseAll()
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "anf-vol") {
-      // Volume facts for the ANF tier at the configured sfDir: edge
-      // rows, node count, sketch byte sizes — sizes the union-CPU
-      // opportunity before touching SketchExpressions.
-      import graft.functions.SketchFunctions._
-      graft.functions.GraftFunctions.register(spark)
-      val p = Tables.events(spark, sfDir)
-        .select(col("event_type"), date_trunc("hour", col("ts")).as("h"),
-          col("user_id")).distinct()
-      val e = ops.Graph.cooccurEdges(p, Seq("event_type", "h"),
-        "user_id", minSupport = 3)
-      val ee = e.select(col("u"), col("v"))
-        .unionByName(e.select(col("v").as("u"), col("u").as("v")))
-      println(s"[profile] anf-vol edges_directed=${ee.count()} " +
-        s"nodes=${ee.select(col("u")).distinct().count()}")
-      val s1 = ee.groupBy(col("u"))
-        .agg(hll4Agg(col("v")).as("sk"), count(lit(1)).as("d"))
-      val r = s1.select(length(col("sk")).as("len"), col("d"))
-        .agg(avg("len"), max("len"), avg("d"), max("d")).collect()(0)
-      println(s"[profile] anf-vol sk1len_avg=${r.get(0)} max=${r.get(1)} " +
-        s"deg_avg=${r.get(2)} deg_max=${r.get(3)}")
-      // round-2 sketch sizes (dense regime)
-      val s2 = ee.join(s1.select(col("u").as("v"), col("sk")), "v")
-        .repartition(col("u"))
-        .groupBy(col("u")).agg(hll4UnionAgg(col("sk")).as("sk2"))
-      val r2 = s2.select(length(col("sk2")).as("len"))
-        .agg(avg("len"), max("len")).collect()(0)
-      println(s"[profile] anf-vol sk2len_avg=${r2.get(0)} max=${r2.get(1)}")
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "hll-cost") {
-      // Per-operation cost of the HLL_4 union hot path (VERDICT r15
-      // #1 groundwork): one ANF round = per-edge Union.update(wrapped
-      // compact HLL_4) + per-node getResult/toCompactByteArray. Times
-      // each piece at fixture-cardinality (~2k distincts: HLL mode)
-      // and coupon-mode (~100 distincts) sketch sizes.
-      import org.apache.datasketches.hll.{HllSketch, TgtHllType, Union}
-      import org.apache.datasketches.memory.Memory
-      def mkCompact(n: Int): Array[Byte] = {
-        val sk = new HllSketch(12, TgtHllType.HLL_4)
-        (1 to n).foreach(i => sk.update(i.toLong * 2654435761L))
-        sk.toCompactByteArray
-      }
-      Seq(100 -> "coupon", 2000 -> "hll-dense", 60000 -> "hll-full")
-        .foreach { case (card, label) =>
-        val img = mkCompact(card)
-        val n = 20000
-        // warm
-        (1 to 2000).foreach { _ =>
-          val u = new Union(12)
-          u.update(HllSketch.wrap(Memory.wrap(img)))
-        }
-        var t0 = System.nanoTime()
-        (1 to n).foreach(_ => HllSketch.wrap(Memory.wrap(img)))
-        val wrapNs = (System.nanoTime() - t0) / n
-        t0 = System.nanoTime()
-        val u = new Union(12)
-        (1 to n).foreach(_ => u.update(HllSketch.wrap(Memory.wrap(img))))
-        val updNs = (System.nanoTime() - t0) / n
-        t0 = System.nanoTime()
-        val m = 2000
-        (1 to m).foreach(_ => u.getResult(TgtHllType.HLL_4).toCompactByteArray)
-        val resNs = (System.nanoTime() - t0) / m
-        // fresh-union-per-group + k updates + result, k=avg degree 40
-        t0 = System.nanoTime()
-        val g = 2000
-        (1 to g).foreach { _ =>
-          val uu = new Union(12)
-          (1 to 40).foreach(_ => uu.update(HllSketch.wrap(Memory.wrap(img))))
-          uu.getResult(TgtHllType.HLL_4).toCompactByteArray
-        }
-        val grpNs = (System.nanoTime() - t0) / g
-        println(f"[profile] hll-cost $label%-10s bytes=${img.length}%6d " +
-          f"wrap=${wrapNs}%7d ns upd=${updNs}%8d ns " +
-          f"result=${resNs}%8d ns group40=${grpNs}%9d ns")
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "read-cost") {
-      // What does ONE `spark.read.parquet` cost at composition time
-      // (schema-inference footer read + file listing + DataFrame
-      // analysis), repeated the way the 370-query catalog repeats it?
-      // Grounds the shared-relation memo decision (VERDICT r15 #4).
-      val n = if (args.length > 1) args(1).toInt else 50
-      Seq("events", "lineitem", "documents").foreach { t =>
-        // warm once (classloading, fs init)
-        spark.read.parquet(s"$sfDir/$t.parquet").schema
-        val t0 = System.nanoTime()
-        (1 to n).foreach { _ =>
-          spark.read.parquet(s"$sfDir/$t.parquet").schema
-        }
-        val per = (System.nanoTime() - t0) / 1e6 / n
-        println(f"[profile] read.parquet($t) x$n: $per%8.3f ms/call")
-      }
-      // and the memoized comparison: same DataFrame reused
-      val t1 = System.nanoTime()
-      val df = spark.read.parquet(s"$sfDir/events.parquet")
-      (1 to n).foreach(_ => df.schema)
-      println(f"[profile] reuse events df x$n: " +
-        f"${(System.nanoTime() - t1) / 1e6 / n}%8.3f ms/call")
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "qstage") {
-      // Per-stage attribution for arbitrary catalog queries: run each
-      // named query twice cache-cold (run 2 is JVM-warm — the number
-      // that matters) and print, for the warm run, every stage's
-      // task-time total / max task / task count / shuffle volume plus
-      // a job-count + driver-gap summary, so "where do the seconds
-      // go" is answerable per operator instead of per query. Dev
-      // diagnostic only (same status as graph-zipf / q).
-      case class St(var name: String = "", var tasks: Int = 0,
-        var taskMs: Long = 0, var maxMs: Long = 0,
-        var srMB: Long = 0, var swMB: Long = 0, var rows: Long = 0)
-      val stages = new java.util.concurrent.ConcurrentHashMap[Int, St]()
-      val jobSpans = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-      val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val s = stages.computeIfAbsent(t.stageId, _ => St())
-            s.synchronized {
-              s.tasks += 1
-              s.taskMs += t.taskInfo.duration
-              s.maxMs = math.max(s.maxMs, t.taskInfo.duration)
-              if (t.taskMetrics != null) {
-                s.srMB += t.taskMetrics.shuffleReadMetrics.totalBytesRead
-                s.swMB += t.taskMetrics.shuffleWriteMetrics.bytesWritten
-                s.rows += t.taskMetrics.outputMetrics.recordsWritten
-              }
-            }
-          }
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-              : Unit = {
-            val s = stages.computeIfAbsent(sc.stageInfo.stageId, _ => St())
-            // RDD scope names (the SQL operator tree feeding this
-            // stage) — AQE submits stages from a thread pool, so the
-            // callsite is useless; scopes carry the operator names
-            s.name = sc.stageInfo.rddInfos
-              .flatMap(_.scope.map(_.name)).distinct.mkString("|").take(110)
-          }
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            jobStart.put(j.jobId, j.time)
-          override def onJobEnd(
-              j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val t0 = jobStart.getOrDefault(j.jobId, j.time)
-            jobSpans.add((t0, j.time))
-          }
-        })
-      args.drop(1).foreach { name =>
-        (1 to 2).foreach { i =>
-          Caching.releaseAll()
-          spark.catalog.clearCache()
-          stages.clear(); jobSpans.clear(); jobStart.clear()
-          val t0 = System.nanoTime()
-          noop(SparkEntry.queries(name)(spark, sfDir))
-          val sec = (System.nanoTime() - t0) / 1e9
-          if (i == 2) {
-            import scala.jdk.CollectionConverters._
-            // wall not covered by any running job ≈ driver-side work
-            // (planning, codegen, collect gaps between jobs)
-            val spans = jobSpans.asScala.toSeq.sortBy(_._1)
-            var covered = 0L; var hi = 0L
-            spans.foreach { case (s, e) =>
-              val s2 = math.max(s, hi)
-              if (e > s2) { covered += e - s2; hi = e }
-              else hi = math.max(hi, e)
-            }
-            val wallMs = (sec * 1000).toLong
-            println(f"[profile] $name%-34s $sec%8.3f s " +
-              f"jobs=${spans.size}%3d job_wall=${covered / 1e3}%7.3f s " +
-              f"driver_gap=${(wallMs - covered) / 1e3}%7.3f s")
-            stages.asScala.toSeq.sortBy(-_._2.taskMs).take(14).foreach {
-              case (sid, s) => println(
-                f"[profile]   stage $sid%4d task_ms=${s.taskMs}%7d " +
-                  f"n=${s.tasks}%4d max=${s.maxMs}%6d " +
-                  f"sr=${s.srMB / (1 << 20)}%5dMB sw=${s.swMB / (1 << 20)}%5dMB " +
-                  s"${s.name}")
-            }
-          } else println(f"[profile] $name%-34s run1 $sec%8.3f s")
-        }
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "q") {
-      // time individual catalog queries by name, cache-cold min-of-2
-      // (same measurement discipline as Bench, without the full
-      // sweep), with max-task attribution so single-task-straggler
-      // shares are visible per run
-      val maxTask = new java.util.concurrent.atomic.AtomicLong(0)
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            maxTask.accumulateAndGet(t.taskInfo.duration, math.max)
-        })
-      args.drop(1).foreach { name =>
-        (1 to 2).foreach { i =>
-          Caching.releaseAll()
-          spark.catalog.clearCache()
-          maxTask.set(0)
-          val t0 = System.nanoTime()
-          noop(SparkEntry.queries(name)(spark, sfDir))
-          val sec = (System.nanoTime() - t0) / 1e9
-          println(f"[profile] $name%-40s run$i $sec%8.3f s " +
-            f"max_task=${maxTask.get / 1e3}%7.3f s")
-        }
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "scale-r4") {
-      // round-4 scale addendum (VERDICT r3 #8): the post-slimming IVF
-      // and the attribution/keep-best tier against the 10× corpus.
-      // Pass the corpus dir (tools/make_scale_data.py output, or a
-      // harness sf dir — both carry the same table names).
-      val dir = args(1)
-      val bigEmb = spark.read.parquet(s"$dir/embeddings.parquet")
-      val nBig = bigEmb.count().toInt
-      val q10 = bigEmb.filter(col("vec_id") < 10)
-      def timeCount(name: String)(df: => org.apache.spark.sql.DataFrame)
-          : Unit = {
-        val runs = (1 to 2).map { _ =>
-          Caching.releaseAll()
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          val n = df.count()
-          (n, (System.nanoTime() - t0) / 1e9)
-        }
-        println(f"[scale] $name%-42s rows=${runs.head._1}%9d " +
-          f"${runs.map(_._2).min}%8.2f s")
-      }
-      import graft.vector.{VectorOps => V}
-      timeCount("ivf topk k=3 (q40 shape)")(V.ivfTopK(bigEmb, q10, 3))
-      // candidate volume via a plain count over the probe join — a
-      // k=n heap would be O(candidates²) time / O(n) buffer per query
-      val candTotal = V.ivfCandidateCounts(bigEmb, q10)
-        .agg(sum(col("candidates"))).head().getLong(0)
-      println(f"[scale] ivf probed candidates (count agg)   " +
-        f"total=$candTotal%9d fraction=${
-          candTotal.toDouble / (10.0 * (nBig - 1))}%.3f")
-      timeCount("brute topk k=3 (q32 exact baseline)")(
-        V.bruteForceTopK(bigEmb, q10, 3))
-      // catalog rows over the scaled events/documents in `dir`;
-      // output rows double as the pair/survivor counts on record
-      for (name <- Seq("q110_attribution", "q111_dedup_keep_best"))
-        timeCount(name)(SparkEntry.queries(name)(spark, dir))
-      Caching.releaseAll()
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "scale-r5") {
-      // round-5 scale addendum: the new text/vector tier against the
-      // 10× corpus (documents 50k / embeddings 20k). Catalog fns run
-      // unchanged — the scaled dir carries the same table names.
-      val dir = args(1)
-      def timeCount(name: String)(df: => org.apache.spark.sql.DataFrame)
-          : Unit = {
-        val runs = (1 to 2).map { _ =>
-          Caching.releaseAll()
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          val n = df.count()
-          (n, (System.nanoTime() - t0) / 1e9)
-        }
-        println(f"[scale] $name%-42s rows=${runs.head._1}%9d " +
-          f"${runs.map(_._2).min}%8.2f s")
-      }
-      for (name <- Seq("q125_bpe_pair_counts", "q126_winsorize_embeddings",
-          "q127_length_batching", "q128_jsonl_roundtrip",
-          "q130_pq_search_amortized", "q134_pq_index_incremental",
-          "q136_semantic_contamination", "q137_dataset_interleave"))
-        timeCount(name)(SparkEntry.queries(name)(spark, dir))
-      Caching.releaseAll()
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "scale-r8") {
-      // 100× probe (VERDICT r7 #9): text dedup at 500k docs (100
-      // token-renamed shards of sf0.1) — timing + the structural
-      // exactness check (zero cross-shard pairs, uniform per-shard
-      // recovery). ANN numbers for the same corpus come from
-      // `bandsweep /tmp/sf10` (recall + candidate ratio + time).
-      val dir = args(1)
-      val bigDocs = spark.read.parquet(s"$dir/documents.parquet")
-      val nDocs = bigDocs.count()
-      spark.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-          math.max(32L, nDocs / 1500L).toString))
-      def timeCount(name: String)(df: => org.apache.spark.sql.DataFrame)
-          : Unit = {
-        val runs = (1 to 2).map { _ =>
-          Caching.releaseAll()
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          val n = df.count()
-          (n, (System.nanoTime() - t0) / 1e9)
-        }
-        println(f"[scale] $name%-42s rows=${runs.head._1}%9d " +
-          f"${runs.map(_._2).min}%8.2f s")
-      }
-      if (args.length > 2 && args(2) == "ann") {
-        // clean min-of-2 per-operator timings at n=200k (the
-        // bandsweep's `sec` is a compound of count+pairs+collect)
-        import graft.vector.{VectorOps => V}
-        val bigEmb = spark.read.parquet(s"$dir/embeddings.parquet")
-        timeCount(s"neardup_lsh auto (k=3 L=640) n=${bigEmb.count()}")(
-          V.nearDupPairsLshAuto(bigEmb, 0.45))
-        timeCount("neardup_exact broadcast baseline")(
-          V.nearDupPairs(bigEmb, 0.45))
-      }
-      val boilerOnly = args.length > 2 && args(2) == "boiler"
-      if (!boilerOnly)
-      timeCount(s"minhash_neardup docs n=$nDocs")(
-        graft.dedup.Dedup.minhashNearDupPairs(bigDocs, "doc_id", "text",
-          0.6))
-      // exact prefix-filter join at the same threshold: the corpus
-      // size where broadcast all-pairs is computationally impossible
-      // (n²/2 ≈ 1.25e11 evals at 500k) and this is the only exact
-      // plan that finishes — pair count must match minhash's (its
-      // banding recall is 1 on this corpus, so exact == approx here)
-      if (!boilerOnly)
-      timeCount(s"prefix_filter_exact docs n=$nDocs")(
-        graft.dedup.Dedup.prefixFilterJaccardPairs(bigDocs, "doc_id",
-          "text", 0.6))
-      // corpus boilerplate removal (q171's operator): one chunk
-      // groupBy with constant-width state + one reassembly groupBy —
-      // the 100× row is the evidence that per-chunk aggregate state
-      // (not occurrence lists) is what holds when a footer repeats
-      // five-million-fold. NOT timeCount: under count() Catalyst
-      // ELIMINATES the reassembly outer join outright (the right side
-      // is an aggregate with provably-unique keys and count references
-      // no column from it — measured 0.18 s, i.e. nothing ran), so
-      // force the pipeline through a sum over the rebuilt text.
-      locally {
-        val runs = (1 to 2).map { _ =>
-          Caching.releaseAll()
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          val r = graft.text.Boilerplate
-            .removeDuplicatedChunks(bigDocs, "doc_id", "text", 8, 2)
-            .agg(sum(col("kept_chunks")), sum(length(col("rebuilt"))))
-            .collect()(0)
-          (r.getLong(0), (System.nanoTime() - t0) / 1e9)
-        }
-        println(f"[scale] boilerplate_removal docs n=$nDocs%-20s " +
-          f"kept=${runs.head._1}%11d ${runs.map(_._2).min}%8.2f s")
-      }
-      if (!boilerOnly) {
-        val blocks = graft.dedup.Dedup
-          .minhashNearDupPairs(bigDocs, "doc_id", "text", 0.6)
-          .groupBy(floor(col("a_id") / lit(1000000))
-            .cast("long").as("a_shard"),
-            floor(col("b_id") / lit(1000000)).cast("long").as("b_shard"))
-          .count().collect()
-        val cross = blocks.filter(r => r.getLong(0) != r.getLong(1))
-        val per = blocks.filter(r => r.getLong(0) == r.getLong(1))
-          .map(_.getLong(2)).toSeq
-        println(s"[scale] shards=${per.size} cross_shard_pairs=" +
-          s"${cross.map(_.getLong(2)).sum} per_shard_min=${per.min} " +
-          s"per_shard_max=${per.max}")
-      }
-      Caching.releaseAll()
-      spark.stop()
-      return
-    }
-
-    if (args.nonEmpty && args(0) == "bandsweep") {
-      // auto-banding tuning (VERDICT r7 #8): for each (k, L, probes)
-      // config, measure recall vs the exact pair set and the
-      // candidate ratio on the given corpus — the two quantities the
-      // AnnRecallSpec auto-banding gate asserts. Usage:
-      //   bandsweep <dir> k:L:probes [k:L:probes ...]
-      val dir = args(1)
-      val bigEmb = spark.read.parquet(s"$dir/embeddings.parquet")
-      val n = bigEmb.count()
-      // shuffle parallelism scales with the corpus, as on a real
-      // cluster: the fixture default (32) leaves ~35M exploded key
-      // rows per task at n=200k — GC-bound. ~1k rows/partition of
-      // corpus keeps task inputs fixture-sized at any n.
-      spark.conf.set("spark.sql.shuffle.partitions",
-        math.max(32L, n / 1000L).toString)
-      val allPairs = n.toDouble * (n - 1) / 2.0
-      import graft.vector.{VectorOps => V}
-      val exact = V.nearDupPairs(bigEmb, 0.45)
-        .select("a_id", "b_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val rawDf = spark.read.parquet(rawDir + "/data")
+    val outDir = s"$base/out_$rows"
+    // two passes: pass 1 includes OS page-cache fill for the ~GB
+    // raw parquet; pass 2 is the steady-state number for SURVEY
+    for (pass <- 1 to 2) {
       Caching.releaseAll(); spark.catalog.clearCache()
-      println(s"[sweep] n=$n exact pairs=${exact.size}")
-      for (cfg <- args.drop(2)) {
-        val Array(k, l, p) = cfg.split(":").map(_.toInt)
-        val t0 = System.nanoTime()
-        val cand = V.cpCandidatePairs(bigEmb, k, l, p).count()
-        val got = V.nearDupPairsLsh(bigEmb, 0.45, k, l, p)
-          .select("a_id", "b_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        val sec = (System.nanoTime() - t0) / 1e9
-        Caching.releaseAll(); spark.catalog.clearCache()
-        println(f"[sweep] k=$k L=$l probes=$p recall=${
-          (got & exact).size.toDouble / exact.size}%.3f ratio=${
-          cand / allPairs}%.4f cand=$cand%d sec=$sec%.1f")
-      }
-      spark.stop()
-      return
+      val t0 = System.nanoTime()
+      val cleaned = graft.taxi.TaxiPipeline.clean(rawDf)
+      graft.taxi.TaxiPipeline.run(cleaned,
+        new graft.sources.ParquetSink(outDir), overwrite = true)
+      println(f"[profile] taxi-year pass $pass e2e " +
+        f"${(System.nanoTime() - t0) / 1e9}%8.3f s ($rows rows)")
     }
-
-    if (args.nonEmpty && args(0) == "scale") {
-      // scale-evidence mode (tools/make_scale_data.py generates the
-      // 10x corpus): times each operator twice cache-cold, prints
-      // row counts so candidate volume and recall are on record
-      val dir = args(1)
-      val bigEmb = spark.read.parquet(s"$dir/embeddings.parquet")
-      val bigDocs = spark.read.parquet(s"$dir/documents.parquet")
-      def timeCount(name: String)(df: => org.apache.spark.sql.DataFrame)
-          : Unit = {
-        val runs = (1 to 2).map { _ =>
-          Caching.releaseAll()
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          val n = df.count()
-          (n, (System.nanoTime() - t0) / 1e9)
-        }
-        println(f"[scale] $name%-42s rows=${runs.head._1}%9d " +
-          f"${runs.map(_._2).min}%8.2f s")
-      }
-      import graft.vector.{VectorOps => V}
-      timeCount("cp_candidates k=2 L=128")(V.cpCandidatePairs(bigEmb))
-      timeCount("neardup_lsh k=2 L=128 (q38 default)")(
-        V.nearDupPairsLsh(bigEmb, 0.45))
-      timeCount("cp_candidates k=3 L=384 (scaled)")(
-        V.cpCandidatePairs(bigEmb, 3, 384, 2))
-      timeCount("neardup_lsh k=3 L=384 (scaled)")(
-        V.nearDupPairsLsh(bigEmb, 0.45, 3, 384, 2))
-      timeCount("neardup_exact baseline (q34 shape)")(
-        V.nearDupPairs(bigEmb, 0.45))
-      timeCount("minhash_neardup docs (q30 shape)")(
-        graft.dedup.Dedup.minhashNearDupPairs(bigDocs, "doc_id", "text",
-          0.6))
-      // blowup-validity check: the sharded corpus must produce zero
-      // cross-shard pairs (token renaming destroys cross-shard
-      // similarity) and a uniform per-shard count
-      import org.apache.spark.sql.functions.{col, lit, floor => ffloor}
-      graft.dedup.Dedup.minhashNearDupPairs(bigDocs, "doc_id", "text", 0.6)
-        .groupBy(ffloor(col("a_id") / lit(1000000))
-          .cast("long").as("a_shard"),
-          ffloor(col("b_id") / lit(1000000)).cast("long").as("b_shard"))
-        .count().orderBy(col("a_shard"), col("b_shard"))
-        .collect().foreach(r => println(
-          s"[scale] shard pair block ${r.getLong(0)}x${r.getLong(1)}: " +
-            r.getLong(2)))
-      // PQ at 10×: compressed-domain ADC search vs the broadcast-exact
-      // baseline, same corpus, same queries — records the time AND the
-      // measured recall@3 so the compression/recall trade is on file
-      val q10 = bigEmb.filter(col("vec_id") < 10)
-      def topkPairs(df: => org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
-        val s = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        Caching.releaseAll(); spark.catalog.clearCache(); s
-      }
-      timeCount("pq adc topk k=3 rerank=16 (q54 shape)")(
-        V.pqAdcTopK(bigEmb, q10, 3,
-          V.pqTrain(V.normalize(bigEmb), 16, 16, 4, 1), 16, 4))
-      timeCount("brute topk k=3 (q32 exact baseline)")(
-        V.bruteForceTopK(bigEmb, q10, 3))
-      // deployed regime: codes prebuilt once (the persisted index),
-      // searches amortize it — time search-only against the same cb
-      val cbOnce = V.pqTrain(V.normalize(bigEmb), 16, 16, 4, 1)
-        .persist()
-      cbOnce.count()
-      val codesOnce = V.pqCodes(bigEmb, cbOnce, 16, 4).persist()
-      codesOnce.count()
-      val searchRuns = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        val n = V.pqAdcTopKFromCodes(codesOnce, bigEmb, q10, 3, cbOnce,
-          16, 4).count()
-        (n, (System.nanoTime() - t0) / 1e9)
-      }
-      println(f"[scale] pq adc search-only (prebuilt codes)     " +
-        f"rows=${searchRuns.head._1}%9d ${searchRuns.map(_._2).min}%8.2f s")
-      cbOnce.unpersist(); codesOnce.unpersist()
-      val exactTk = topkPairs(V.bruteForceTopK(bigEmb, q10, 3))
-      val adcTk = topkPairs(V.pqAdcTopK(bigEmb, q10, 3,
-        V.pqTrain(V.normalize(bigEmb), 16, 16, 4, 1), 16, 4))
-      println(f"[scale] pq adc recall@3 at n=20k: " +
-        f"${(exactTk & adcTk).size.toDouble / exactTk.size}%.3f " +
-        f"(${(exactTk & adcTk).size}/${exactTk.size})")
-      Caching.releaseAll()
-      spark.stop()
-      return
+    println(s"[profile] raw=${rawDf.count()} " +
+      s"clean=${graft.taxi.TaxiPipeline.clean(rawDf).count()}")
+    Seq("demand_heatmap", "tip_trends", "fare_anomalies",
+      "trip_performance", "popular_routes", "payment_analysis",
+      "distance_distribution").foreach { t =>
+      println(s"[profile]   $t rows=" +
+        spark.read.parquet(s"$outDir/$t").count())
     }
-
-    // q38 fragments
-    timed("q38 candidates only")(
-      noop(VectorOps.cpCandidatePairs(emb)))
-    timed("q38 full")(noop(VectorOps.nearDupPairsLsh(emb, 0.45)))
-    timed("q38 cp keys (base, 1 eval)")(
-      noop(emb.repartition(32).select(col("vec_id"),
-        explode(graft.functions.GraftFunctions.cpKeys(
-          VectorOps.toDouble(col("embedding")), 2, 128, 1)).as("key"))))
-    timed("q38 cp keys (probe, 1 eval)")(
-      noop(emb.repartition(32).select(col("vec_id"),
-        explode(graft.functions.GraftFunctions.cpKeys(
-          VectorOps.toDouble(col("embedding")), 2, 128, 2)).as("key"))))
-
-    // q40 fragments
-    val queries = emb.filter(col("vec_id") < 10)
-    timed("q40 full")(noop(VectorOps.ivfTopK(emb, queries, 3)))
-    timed("q33 full")(noop(VectorOps.lshTopK(emb, queries, 3)))
-    timed("q32 brute full")(noop(VectorOps.bruteForceTopK(emb, queries, 5)))
-    spark.stop()
+    println(s"[profile] raw=$rawDir/data out=$outDir")
   }
 }

@@ -544,7 +544,7 @@ object Dedup {
     * unordered candidates where 4×16-bit radius-2 MIH generates
     * ≈ n²·4·137/2¹⁶/2 ≈ n²/239 — the 512× bucket-space gain
     * re-multiplied by the 137-probe expansion nets ≈ 8×
-    * (`Profile media-scale` measures both). The real scale levers
+    * (SURVEY §20.3 has both measured). The real scale levers
     * are (a) exact collapse FIRST (the caller contract below — it
     * removes duplicate-mass bucket concentration entirely) and
     * (b) the paper's design rule: substring width ≈ log₂ n, i.e.
@@ -581,7 +581,7 @@ object Dedup {
     // estimate for Generate is ~the child's, i.e. ~|masks|× too low,
     // so an unhinted plan statically picks the PROBE side as a
     // broadcast build and OOMs once n·bands·|masks| is real (measured:
-    // `Profile media-scale` synth 10× died in
+    // the synthetic 10× tier of SURVEY §20.3 died in
     // notEnoughMemoryToBuildAndBroadcastTable; AQE cannot demote a
     // statically-planned broadcast because no shuffle stage precedes
     // it). The hint pins a shuffled hash join BUILT ON THE EXACT

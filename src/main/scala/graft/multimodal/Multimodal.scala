@@ -394,10 +394,10 @@ object Multimodal {
       bits
     }
 
-  /** The media-scale fixture mapping shared by q367/q368/q370, the
-    * `media-scale` probe's codec generator, and their specs — ONE
-    * definition so a mapping tweak cannot silently desynchronize a
-    * query from its oracle (q370's eff fold already forked it once):
+  /** The media-scale fixture mapping shared by q367/q368/q370 and
+    * their specs — ONE definition so a mapping tweak cannot silently
+    * desynchronize a query from its oracle (q370's eff fold already
+    * forked it once):
     * per 5-doc group g, ids {5g, 5g+2, 5g+3} render the SAME image
     * (exact-dup cluster), 5g+1 the row-0-inverted near-dup, 5g+4 a
     * unique image. With `effFold` (q370), id 40j+24 renders

@@ -26,16 +26,19 @@ object Bucketing {
   }
 
   /** Write orders + lineitem bucketed by order key (8 buckets) as
-    * external tables under tmpdir, once per session+fixture. */
+    * external tables under tmpdir, once per session+fixture; q158
+    * and q207 both read them. The directory is per-JVM and deleted
+    * at JVM exit (the oracle reads the raw parquet, never these). */
   def ensureBucketed(s: SparkSession, d: String): (String, String) = {
     val (ot, lt) = bucketedNames(s, d)
     // gate on BOTH tables: a first attempt that died between the two
     // writes must not leave the session half-initialized (overwrite
     // mode makes the re-write of the surviving table safe)
     if (!s.catalog.tableExists(ot) || !s.catalog.tableExists(lt)) {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_q207_" +
-        Integer.toHexString(d.hashCode) + "_" +
-        ProcessHandle.current().pid()
+      val base = graft.sources.ScratchDirs.register(
+        s"${System.getProperty("java.io.tmpdir")}/graft_q207_" +
+          Integer.toHexString(d.hashCode) + "_" +
+          ProcessHandle.current().pid())
       Tables.orders(s, d).write.mode("overwrite")
         .option("path", s"$base/orders")
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(ot)

@@ -934,7 +934,7 @@ object Pipeline {
     * groupBy + in-bucket pair explosion, never an all-pairs join;
     * the 8-byte hash rides along the shuffle so verification needs
     * no join-back. The ≤2⁸-buckets-per-band ceiling saturates beyond
-    * ~10⁵ SURVIVING hashes (`Profile media-scale` measures the
+    * ~10⁵ SURVIVING hashes (SURVEY §20.3 has the measured
     * wall); q367 is the corpus-scale companion — exact collapse
     * first, then wide-band multi-index probes. The fixture plants a near-dup per 5-doc group
     * (same image with pixel row 0 inverted → ≤ 8 flipped bits);
@@ -1040,7 +1040,7 @@ object Pipeline {
     * preserves RECALL 1 — the brute-force oracle stays valid — while
     * each band has 2¹⁶ buckets instead of ≤ 2⁸. The honest
     * arithmetic (see [[Dedup.hammingNearDupPairs]], measured by
-    * `Profile media-scale`): candidate volume drops from ≈ n²/30 to
+    * SURVEY §20.3): candidate volume drops from ≈ n²/30 to
     * ≈ n²/239 — the 512× bucket-space gain re-multiplied by the
     * 137-probe expansion nets ≈ 8× at fixed parameters, and the
     * durable scale levers are stage-1 collapse plus the paper's
@@ -3383,7 +3383,7 @@ object Pipeline {
     * yesterday/today, a modulo rewrite plays an edit) reconciled by
     * a full-outer join on the key and classified added / removed /
     * changed / unchanged. ONE co-partitioned shuffle per side; with
-    * bucketed snapshots (sources.Bucketing) the exchange disappears
+    * bucketed snapshots (queries.Bucketing) the exchange disappears
     * entirely — that is the nightly 100 TB reconciliation shape. */
   val snapshotDiff: QueryDef = QueryDef.sql(
     """WITH a AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0),

@@ -908,15 +908,15 @@ object Relational {
 
   /** Bucketed co-located join under the oracle — the storage-level
     * answer to "this join shuffles 100 TB every night": both fact
-    * tables are written ONCE as bucketed, per-bucket-sorted managed
-    * tables on the join key, and the revenue rollup then plans its
-    * SortMergeJoin with NO Exchange on either side (the shuffle was
-    * paid at write; PlanAuditSpec asserts it). The only remaining
-    * exchange is the 5-group rollup's. Write-then-read inside the
-    * query is the same roundtrip pattern as q70/q82/q128 — the
-    * oracle computes the identical aggregate from the raw tables,
-    * so a bucketing bug that drops or duplicates rows breaks the
-    * hash compare. */
+    * tables are bucketed and per-bucket sorted on the join key, and
+    * the revenue rollup then plans its SortMergeJoin with NO Exchange
+    * on either side (the shuffle was paid at write; PlanAuditSpec
+    * asserts it). The only remaining exchange is the 5-group
+    * rollup's. The bucketed tables are the ones q207 reads, written
+    * once per session and fixture by [[Bucketing.ensureBucketed]];
+    * the oracle computes the identical aggregate from the raw
+    * tables, so a bucketing bug that drops or duplicates rows
+    * breaks the hash compare. */
   val bucketedJoin: QueryDef = QueryDef.sql(
     """SELECT o_orderpriority,
          CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
@@ -924,19 +924,9 @@ object Relational {
          count(*) AS n_items
        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
        GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    graft.sources.Bucketing.writeBucketed(
-      Tables.lineitem(s, d)
-        .select(col("l_orderkey"), col("l_extendedprice"),
-          col("l_discount")),
-      "graft_q158_lineitem", "l_orderkey", 8)
-    graft.sources.Bucketing.writeBucketed(
-      Tables.orders(s, d)
-        .select(col("o_orderkey"), col("o_orderpriority")),
-      "graft_q158_orders", "o_orderkey", 8)
-    graft.sources.Bucketing.readTable(s, "graft_q158_lineitem")
-      .hint("merge")
-      .join(graft.sources.Bucketing.readTable(s, "graft_q158_orders"),
-        col("l_orderkey") === col("o_orderkey"))
+    val (ot, lt) = Bucketing.ensureBucketed(s, d)
+    s.table(lt).hint("merge")
+      .join(s.table(ot), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_orderpriority"))
       .agg(round(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
           .cast("decimal(30,10)")), 6).cast("double").as("revenue"),

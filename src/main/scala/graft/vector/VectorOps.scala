@@ -420,23 +420,6 @@ object VectorOps {
         (col("__i") + 1).cast("int").as("rank"))
   }
 
-  /** Candidate volume of the IVF probe join, one row per query:
-    * (q_id, candidates). Diagnostic companion to [[ivfTopK]] — a
-    * plain count aggregate over the probe join, NOT a k=n heap
-    * (TopK's insert is an O(k) arraycopy per row and its buffer
-    * crosses the shuffle encoder, so k=n measurement is O(n²) time
-    * and O(n) memory per query — it would dominate or OOM the very
-    * profiling run it supports). */
-  def ivfCandidateCounts(corpus: DataFrame, queries: DataFrame,
-      nlist: Int = 0, nprobe: Int = 0,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val (assigned, probes, _) =
-      ivfAssignAndProbes(corpus, queries, nlist, nprobe, idCol, vecCol)
-    assigned.join(broadcast(probes),
-        assigned("cell") === probes("cell") && col("q_id") =!= col("n_id"))
-      .groupBy(col("q_id")).agg(count(lit(1)).as("candidates"))
-  }
-
   /** Shared IVF front half (ivfTopK + ivfPqTopK): builds the cell
     * structure and returns (assigned, probes, centroids) — `assigned`
     * is the persisted normed corpus plus its `cell` id, `probes` is
@@ -665,7 +648,7 @@ object VectorOps {
     * band key to LENGTHEN as the corpus grows — each extra hash
     * multiplies the bulk collision rate by the per-hash rate while
     * extra bands buy the lost recall back linearly. Tiers are
-    * measured, not derived (`Profile bandsweep`, iid-gaussian corpora
+    * measured, not derived (SURVEY §13.3, iid-gaussian corpora
     * at d=64, tau=0.45): n≤10k keeps the q38 default (recall 0.97,
     * ratio 0.077 at n=2k); above it the band key flips k=2→3 with
     * bands scaled 128→640, measured at BOTH n=20k (recall 0.936,

@@ -196,7 +196,7 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(plan.contains("band"), "candidate join lost its band key")
     // the probe side is a generator output whose sizeInBytes estimate
     // is ~137× too low — an unhinted plan statically broadcasts it
-    // and OOMs at scale (measured in Profile media-scale synth 10×).
+    // and OOMs at scale (the synthetic 10× tier, SURVEY §20.3).
     // The helper pins a shuffled hash join built on the sound-stats
     // exact side; a regression to broadcast fails here.
     assert(plan.contains("ShuffledHashJoin"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for every suite (session startup is the
   * dominant test cost; suites run sequentially in the forked JVM).
   * Built via GraftSession so tests exercise the same config +
-  * native-function registration as Verify/Bench/Explain. */
+  * native-function registration as Verify/Bench/Profile. */
 object TestSpark {
   lazy val spark: SparkSession = {
     CodegenErrorWatch.install()
