@@ -154,9 +154,13 @@ object Pipeline {
                 AS total_value
        FROM s GROUP BY user_id, session_idx
        ORDER BY 1, 2""") { (s, d) =>
-    import org.apache.spark.sql.streaming.Trigger
-    val sink = "graft_q155_stream_sink"
-    graft.streaming.StreamOps.drainSized(s, d) {
+    // complete is the only mode Spark allows for an unwatermarked
+    // session-window streaming aggregation (update is rejected with
+    // STREAMING_OUTPUT_MODE.UNSUPPORTED_OPERATION; append requires
+    // a watermark and emits only closed sessions, reintroducing the
+    // tail-flush clause q151 needed). The charge is state re-emission
+    // per batch — the engine's contract for this operator.
+    graft.streaming.StreamOps.drain(s, d, "complete") {
       graft.streaming.StreamOps.eventsStream(s, d)
         .groupBy(col("user_id"),
           session_window(col("ts"), "30 minutes").as("sw"))
@@ -165,18 +169,7 @@ object Pipeline {
         .select(col("user_id"),
           unix_micros(col("sw.start")).as("session_start_us"),
           col("n_events"), col("total_value"))
-        .writeStream.format("memory").queryName(sink)
-        // complete is the only mode Spark allows for an unwatermarked
-        // session-window streaming aggregation (update is rejected with
-        // STREAMING_OUTPUT_MODE.UNSUPPORTED_OPERATION; append requires
-        // a watermark and emits only closed sessions, reintroducing the
-        // tail-flush clause q151 needed). The charge is state re-emission
-        // per batch — the engine's contract for this operator.
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
     }
-    graft.streaming.StreamOps.sinkTable(s, d, sink)
       .select(col("user_id"), col("session_start_us"), col("n_events"),
         col("total_value"))
       .orderBy(col("user_id"), col("session_start_us"))
@@ -1751,27 +1744,21 @@ object Pipeline {
   /** The streaming path under the driver's correctness signal
     * (VERDICT r2 missing #2): StreamOps.windowedCounts runs as a real
     * Structured Streaming query (file source → watermarked windowed
-    * agg → memory sink) with an availableNow trigger, which processes
-    * the fixture to completion and terminates. Complete output mode
-    * makes the final sink state exactly the batch q24 semantics —
-    * deterministic and oracle-expressible. The memory sink is the
-    * harness adapter; production writes go through streamToSink
-    * (StreamingSpec covers parquet). */
+    * agg → memory sink) through [[graft.streaming.StreamOps.drain]],
+    * whose availableNow trigger processes the fixture to completion
+    * and terminates. Complete output mode makes the final sink state
+    * exactly the batch q24 semantics — deterministic and
+    * oracle-expressible. The memory sink is the harness adapter;
+    * production writes go through streamToSink (StreamingSpec covers
+    * parquet). */
   val streamTumbling: QueryDef = QueryDef.sql(
     """SELECT date_trunc('hour', ts) AS window_start, event_type,
        count(*) AS n, floor((sum(value)) * 1000000 + 0.5) / 1000000 AS total_value
        FROM events GROUP BY 1, 2 ORDER BY 1, 2""") { (s, d) =>
-    import org.apache.spark.sql.streaming.Trigger
-    val sink = "graft_q47_stream_sink"
-    graft.streaming.StreamOps.drainSized(s, d) {
+    graft.streaming.StreamOps.drain(s, d, "complete") {
       graft.streaming.StreamOps.windowedCounts(
           graft.streaming.StreamOps.eventsStream(s, d))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
     }
-    graft.streaming.StreamOps.sinkTable(s, d, sink)
       .select(col("window_start"), col("event_type"), col("n"),
         r6(col("total_value")).as("total_value"))
       .orderBy(col("window_start"), col("event_type"))
@@ -1792,17 +1779,10 @@ object Pipeline {
     """SELECT event_type, count(*) AS n,
        floor((sum(value)) * 1000000 + 0.5) / 1000000 AS total_value
        FROM events GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    import org.apache.spark.sql.streaming.Trigger
-    val sink = "graft_q183_stream_sink"
-    graft.streaming.StreamOps.drainSized(s, d) {
+    graft.streaming.StreamOps.drain(s, d, "complete") {
       graft.streaming.StreamOps.dedupedCounts(
           graft.streaming.StreamOps.eventsStream(s, d))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
     }
-    graft.streaming.StreamOps.sinkTable(s, d, sink)
       .select(col("event_type"), col("n"),
         r6(col("total_value")).as("total_value"))
       .orderBy(col("event_type"))
@@ -1814,7 +1794,7 @@ object Pipeline {
     * oracle. Emission semantics are deterministic for a bounded
     * replay: every session closed INLINE by a later event emits
     * exactly the batch q25 row (µs-exact state —
-    * [[graft.streaming.StreamOps.sessionizeStreamExact]]); each
+    * [[graft.streaming.StreamOps.sessionizeStream]]); each
     * user's final open session emits iff the terminal watermark
     * (max event time − 2 h, ms-truncated) passes its 30-min gap
     * timeout — the oracle encodes that rule verbatim in the WHERE
@@ -1853,17 +1833,10 @@ object Pipeline {
        WHERE a.session_idx < l.last_idx
           OR (a.last_us + 1800000000) // 1000 < mx // 1000 - 7200000
        ORDER BY 1, 2""") { (s, d) =>
-    import org.apache.spark.sql.streaming.Trigger
-    val sink = "graft_q151_stream_sink"
-    graft.streaming.StreamOps.drainSized(s, d) {
-      graft.streaming.StreamOps.sessionizeStreamExact(
+    graft.streaming.StreamOps.drain(s, d, "append") {
+      graft.streaming.StreamOps.sessionizeStream(
           graft.streaming.StreamOps.eventsStream(s, d))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
     }
-    graft.streaming.StreamOps.sinkTable(s, d, sink)
       .select(col("user_id"), col("session_start_us"), col("n_events"),
         r6(col("duration_min")).as("duration_min"))
       .orderBy(col("user_id"), col("session_start_us"))
@@ -1890,15 +1863,13 @@ object Pipeline {
        SELECT fingerprint, min(doc_id) AS keep_id FROM d2
        WHERE fingerprint NOT IN (SELECT fingerprint FROM d1)
        GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    import org.apache.spark.sql.streaming.Trigger
     val docs = Tables.documents(s, d)
     val mid = docs.agg((max(col("doc_id")) / 2).cast("long"))
       .collect()(0).getLong(0)
     val index = docs.filter(col("doc_id") < mid)
       .select(TextOps.fingerprint(col("text")).as("fingerprint"))
       .distinct()
-    val sink = "graft_q120_stream_sink"
-    graft.streaming.StreamOps.drainSized(s, d) {
+    graft.streaming.StreamOps.drain(s, d, "complete") {
       graft.streaming.StreamOps.documentsStream(s, d)
         .filter(col("doc_id") >= mid)
         .select(col("doc_id"), TextOps.fingerprint(col("text"))
@@ -1906,12 +1877,7 @@ object Pipeline {
         .join(index, Seq("fingerprint"), "left_anti")
         .groupBy(col("fingerprint"))
         .agg(min(col("doc_id")).as("keep_id"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
     }
-    graft.streaming.StreamOps.sinkTable(s, d, sink)
       .select(col("fingerprint"), col("keep_id"))
       .orderBy(col("fingerprint"))
   }
@@ -1941,15 +1907,13 @@ object Pipeline {
        SELECT g.doc_id, count(*) AS n_shared FROM g JOIN bench USING (g)
        WHERE g.doc_id % 20 <> 0
        GROUP BY 1 HAVING count(*) >= 10 ORDER BY 1""") { (s, d) =>
-    import org.apache.spark.sql.streaming.Trigger
     val bench = Tables.documents(s, d)
       .filter(col("doc_id") % 20 === 0)
       .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(explode(TextOps.shingles(col("toks"), 3)).as("g"))
       .distinct()
-    val sink = "graft_q144_stream_sink"
-    graft.streaming.StreamOps.drainSized(s, d) {
+    graft.streaming.StreamOps.drain(s, d, "complete") {
       graft.streaming.StreamOps.documentsStream(s, d)
         .filter(col("doc_id") % 20 =!= 0)
         .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
@@ -1959,12 +1923,7 @@ object Pipeline {
         .join(broadcast(bench), "g")
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_shared"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
     }
-    graft.streaming.StreamOps.sinkTable(s, d, sink)
       .filter(col("n_shared") >= 10)
       .select(col("doc_id"), col("n_shared"))
       .orderBy(col("doc_id"))
@@ -1990,18 +1949,11 @@ object Pipeline {
         AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 5 MINUTE
         AND l.event_id <> r.event_id
        ORDER BY 1, 2, 3""") { (s, d) =>
-    import org.apache.spark.sql.streaming.Trigger
-    val sink = "graft_q153_stream_sink"
-    graft.streaming.StreamOps.drainSized(s, d, floor = 8) {
+    graft.streaming.StreamOps.drain(s, d, "append", floor = 8) {
       graft.streaming.StreamOps.intervalJoin(
           graft.streaming.StreamOps.eventsStream(s, d),
           graft.streaming.StreamOps.eventsStream(s, d), withinMinutes = 5)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
     }
-    graft.streaming.StreamOps.sinkTable(s, d, sink)
       .select(col("user_id"), col("l_id"), col("r_id"),
         expr("(unix_micros(r_ts) - unix_micros(l_ts)) div 1000000")
           .as("gap_s"))
@@ -2042,18 +1994,12 @@ object Pipeline {
        SELECT user_id, l_id, r_id, gap_s FROM p
        UNION ALL SELECT user_id, l_id, r_id, gap_s FROM u
        ORDER BY user_id, l_id, r_id NULLS FIRST""") { (s, d) =>
-    import org.apache.spark.sql.streaming.Trigger
-    val sink = "graft_q347_stream_sink"
-    graft.streaming.StreamOps.drainSized(s, d, floor = 8) {
-      graft.streaming.StreamOps.intervalJoinLeftOuter(
+    graft.streaming.StreamOps.drain(s, d, "append", floor = 8) {
+      graft.streaming.StreamOps.intervalJoin(
           graft.streaming.StreamOps.eventsStream(s, d),
-          graft.streaming.StreamOps.eventsStream(s, d), withinMinutes = 5)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
+          graft.streaming.StreamOps.eventsStream(s, d), withinMinutes = 5,
+          joinType = "leftOuter")
     }
-    graft.streaming.StreamOps.sinkTable(s, d, sink)
       .select(col("user_id"), col("l_id"), col("r_id"),
         expr("(unix_micros(r_ts) - unix_micros(l_ts)) div 1000000")
           .as("gap_s"))
@@ -2064,7 +2010,7 @@ object Pipeline {
     * join mode of the family (q153 inner, q347 left outer). Both
     * sides' unmatched rows emit with nulls once PROVABLE, and the
     * two provability horizons are asymmetric (see
-    * [[graft.streaming.StreamOps.intervalJoinFullOuter]]): a left's
+    * [[graft.streaming.StreamOps.intervalJoin]]): a left's
     * null needs the watermark past l.ts + 5 min; a right's only
     * past r.ts (no earlier-or-equal left can still arrive). The
     * oracle is the batch full range join restricted by BOTH
@@ -2097,18 +2043,12 @@ object Pipeline {
        UNION ALL SELECT user_id, l_id, r_id, gap_s FROM ul
        UNION ALL SELECT user_id, l_id, r_id, gap_s FROM ur
        ORDER BY user_id, l_id NULLS FIRST, r_id NULLS FIRST""") { (s, d) =>
-    import org.apache.spark.sql.streaming.Trigger
-    val sink = "graft_q355_stream_sink"
-    graft.streaming.StreamOps.drainSized(s, d, floor = 8) {
-      graft.streaming.StreamOps.intervalJoinFullOuter(
+    graft.streaming.StreamOps.drain(s, d, "append", floor = 8) {
+      graft.streaming.StreamOps.intervalJoin(
           graft.streaming.StreamOps.eventsStream(s, d),
-          graft.streaming.StreamOps.eventsStream(s, d), withinMinutes = 5)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
+          graft.streaming.StreamOps.eventsStream(s, d), withinMinutes = 5,
+          joinType = "fullOuter")
     }
-    graft.streaming.StreamOps.sinkTable(s, d, sink)
       .select(col("user_id"), col("l_id"), col("r_id"),
         expr("(unix_micros(r_ts) - unix_micros(l_ts)) div 1000000")
           .as("gap_s"))
@@ -5402,20 +5342,13 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
        SELECT user_id, event_id AS last_event_id,
          floor(value*1000000+0.5)/1000000 AS last_value
        FROM latest WHERE rk=1 ORDER BY user_id""") { (s, d) =>
-    import org.apache.spark.sql.streaming.Trigger
-    graft.streaming.StreamOps.drainSized(s, d) {
-      graft.streaming.StreamOps.lwwUpsert(
-          graft.streaming.StreamOps.eventsStream(s, d)
-            .filter(col("event_type")
-              .isin("purchase", "signup", "click")))
-        .writeStream.format("memory").queryName("graft_q256_sink")
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts_us").desc, col("last_event_id").desc)
-    s.table("graft_q256_sink")
+    graft.streaming.StreamOps.drain(s, d, "update") {
+      graft.streaming.StreamOps.lwwUpsert(
+        graft.streaming.StreamOps.eventsStream(s, d)
+          .filter(col("event_type").isin("purchase", "signup", "click")))
+    }
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") === 1)
       .select(col("user_id"), col("last_event_id"),
@@ -5430,41 +5363,25 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * answer is independent of micro-batch split and per-batch row
     * order; the final latest-per-user selection (max running count
     * wins, the q256 canonicalization) makes the update-mode sink
-    * deterministic under ANY batching. Requires — and here pins —
-    * the RocksDB state-store provider path (prior provider restored
-    * after). Oracle: per-user count + exact quantized sum. */
+    * deterministic under ANY batching. Requires — and here pins,
+    * for this drain only — the RocksDB state-store provider path.
+    * Oracle: per-user count + exact quantized sum. */
   val streamTws: QueryDef = QueryDef.sql(
     """SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
          CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT)) AS BIGINT)
            AS total_micro
        FROM events GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    import org.apache.spark.sql.streaming.Trigger
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      graft.streaming.StreamOps.drainSized(s, d) {
-        graft.streaming.StreamOps.runningTotalsTws(
-            graft.streaming.StreamOps.eventsStream(s, d))
-          .writeStream.format("memory").queryName("graft_q341_sink")
-          .outputMode("update")
-          .trigger(Trigger.AvailableNow())
-          .start()
-      }
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("n_events").desc)
-      s.table("graft_q341_sink")
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("user_id"), col("n_events"), col("total_micro"))
-        .orderBy(col("user_id"))
-    } finally {
-      prev match {
-        case Some(p) => s.conf.set(key, p)
-        case None => s.conf.unset(key)
-      }
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("n_events").desc)
+    graft.streaming.StreamOps.drain(s, d, "update",
+        provider = Some(graft.streaming.StreamOps.RocksDbProvider)) {
+      graft.streaming.StreamOps.runningTotalsTws(
+        graft.streaming.StreamOps.eventsStream(s, d))
     }
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") === 1)
+      .select(col("user_id"), col("n_events"), col("total_micro"))
+      .orderBy(col("user_id"))
   }
 
   /** XML roundtrip — Spark 4's built-in XML source exercised as the

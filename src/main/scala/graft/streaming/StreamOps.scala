@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface of the engine: the same windowed
@@ -127,12 +127,12 @@ object StreamOps {
     * arbitrary-state API (StatefulProcessor over typed state
     * handles; the successor to mapGroupsWithState, and the one that
     * composes multiple state variables, timers and TTL). Requires
-    * the RocksDB state-store provider — the caller sets it (the
-    * q341 query and the spec both do, restoring the prior provider
-    * after). Values are micro-quantized to LONGS before they reach
-    * state, so the running total is exact and independent of
-    * per-batch row order — a double accumulator here would make the
-    * output depend on shuffle arrival order. */
+    * the RocksDB state-store provider — the caller sets it (q341
+    * passes [[RocksDbProvider]] to [[drain]]). Values are
+    * micro-quantized to LONGS before they reach state, so the
+    * running total is exact and independent of per-batch row order
+    * — a double accumulator here would make the output depend on
+    * shuffle arrival order. */
   def runningTotalsTws(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
@@ -183,83 +183,28 @@ object StreamOps {
     * per COMPLETED session: the streaming form of the batch q25
     * sessionize. flatMap (not map) because a timeout may flush a
     * session while new events open the next one — zero or one output
-    * rows per invocation. */
-  def sessionizeStream(events: DataFrame, gapMinutes: Int = 30,
-      watermark: String = "2 hours"): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val gapMs = gapMinutes * 60 * 1000L
-    // keep `ts` as the raw timestamp column: a cast would mint a new
-    // column without the event-time/watermark tag the timeout needs
-    events.withWatermark("ts", watermark)
-      .select(col("user_id").as[Long], col("ts").as[java.sql.Timestamp])
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, Long), (Long, Long, Long, Double)](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        // state: (sessionStartMs, lastEventMs, nEvents)
-        (user: Long, rows: Iterator[(Long, java.sql.Timestamp)],
-         state: GroupState[(Long, Long, Long)]) =>
-          if (state.hasTimedOut) {
-            val (start, last, n) = state.get
-            state.remove()
-            Iterator((user, n, start, (last - start) / 60000.0))
-          } else {
-            val sorted = rows.map(_._2.getTime).toSeq.sorted
-            var closed = List.empty[(Long, Long, Long, Double)]
-            var cur = state.getOption
-            sorted.foreach { t =>
-              cur match {
-                // rows sort only WITHIN a batch; a later batch can
-                // deliver an event older than the session's last (or
-                // even start). Fold such a late row into the open
-                // session with min/max bounds — never move `last`
-                // backward, which would emit negative durations and
-                // (worse) set a timeout behind the watermark, an
-                // IllegalArgumentException that kills the query.
-                case Some((start, last, n)) if t - last <= gapMs =>
-                  cur = Some((math.min(start, t), math.max(last, t), n + 1))
-                case Some((start, last, n)) =>
-                  closed ::= ((user, n, start, (last - start) / 60000.0))
-                  cur = Some((t, t, 1L))
-                case None =>
-                  cur = Some((t, t, 1L))
-              }
-            }
-            cur.foreach { c =>
-              state.update(c)
-              // timeout must never be at/behind the current watermark
-              // (Spark rejects it); a session whose gap already
-              // elapsed in event time flushes on the next tick instead
-              state.setTimeoutTimestamp(math.max(c._2 + gapMs,
-                state.getCurrentWatermarkMs() + 1))
-            }
-            closed.reverseIterator
-          }
-      }
-      .toDF("user_id", "n_events", "session_start_ms", "duration_min")
-  }
-
-  /** [[sessionizeStream]] with MICROSECOND-exact state — the
-    * variant that can sit under a hash-compared oracle. The fixture's
-    * event times carry sub-millisecond digits, so the ms-truncating
-    * `Timestamp.getTime` arithmetic above is off by up to 999 µs per
-    * gap/duration; here state tracks epoch-micros rebuilt from
-    * (getTime, getNanos), durations divide in µs, and only the
+    * rows per invocation.
+    *
+    * State is MICROSECOND-exact, so the output can sit under a
+    * hash-compared oracle: the fixture's event times carry
+    * sub-millisecond digits, so state tracks epoch-micros rebuilt
+    * from (getTime, getNanos), durations divide in µs, and only the
     * TIMEOUT registration truncates to ms (the engine's native
     * timeout resolution — truncation there can only make a timeout
     * fire marginally earlier, it never corrupts an emitted value).
-    * Emits one row per completed session: inline-closed sessions
-    * always; each user's final open session iff the terminal
-    * watermark passes its gap timeout (the oracle encodes the same
-    * rule). Output carries session_start_us so the row set totally
-    * orders. */
-  def sessionizeStreamExact(events: DataFrame, gapMinutes: Int = 30,
+    * Inline-closed sessions always emit; each user's final open
+    * session emits iff the terminal watermark passes its gap timeout
+    * (the q151 oracle encodes the same rule). Output carries
+    * session_start_us so the row set totally orders. */
+  def sessionizeStream(events: DataFrame, gapMinutes: Int = 30,
       watermark: String = "2 hours"): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
     val gapUs = gapMinutes * 60000000L
     def micros(t: java.sql.Timestamp): Long =
       (t.getTime / 1000) * 1000000L + t.getNanos / 1000
+    // keep `ts` as the raw timestamp column: a cast would mint a new
+    // column without the event-time/watermark tag the timeout needs
     events.withWatermark("ts", watermark)
       .select(col("user_id").as[Long], col("ts").as[java.sql.Timestamp])
       .groupByKey(_._1)
@@ -278,6 +223,13 @@ object StreamOps {
             var cur = state.getOption
             sorted.foreach { t =>
               cur match {
+                // rows sort only WITHIN a batch; a later batch can
+                // deliver an event older than the session's last (or
+                // even start). Fold such a late row into the open
+                // session with min/max bounds — never move `last`
+                // backward, which would emit negative durations and
+                // (worse) set a timeout behind the watermark, an
+                // IllegalArgumentException that kills the query.
                 case Some((start, last, n)) if t - last <= gapUs =>
                   cur = Some((math.min(start, t), math.max(last, t), n + 1))
                 case Some((start, last, n)) =>
@@ -289,6 +241,9 @@ object StreamOps {
             }
             cur.foreach { c =>
               state.update(c)
+              // timeout must never be at/behind the current watermark
+              // (Spark rejects it); a session whose gap already
+              // elapsed in event time flushes on the next tick instead
               state.setTimeoutTimestamp(math.max((c._2 + gapUs) / 1000,
                 state.getCurrentWatermarkMs() + 1))
             }
@@ -339,63 +294,27 @@ object StreamOps {
     * evict state: buffered rows age out once the watermark passes
     * their join window (unbounded-state joins are rejected in
     * append mode). The micro-batch incremental form of the batch
-    * range join (q23). */
-  def intervalJoin(left: DataFrame, right: DataFrame,
-      withinMinutes: Int = 5, watermark: String = "2 hours"): DataFrame = {
-    val l = left.withWatermark("ts", watermark)
-      .select(col("user_id").as("l_user"), col("event_id").as("l_id"),
-        col("ts").as("l_ts"))
-    val r = right.withWatermark("ts", watermark)
-      .select(col("user_id").as("r_user"), col("event_id").as("r_id"),
-        col("ts").as("r_ts"))
-    l.join(r,
-      col("l_user") === col("r_user") &&
-        col("r_ts") >= col("l_ts") &&
-        col("r_ts") <= col("l_ts") + expr(s"INTERVAL $withinMinutes MINUTES") &&
-        col("l_id") =!= col("r_id"))
-      .select(col("l_user").as("user_id"), col("l_id"), col("r_id"),
-        col("l_ts"), col("r_ts"))
-  }
-
-  /** Stream-stream LEFT OUTER interval join — the join mode
-    * [[intervalJoin]]'s inner form doesn't cover: every left event
-    * emits, matched rows immediately, and an UNMATCHED left emits
-    * once (null right columns) when the watermark passes the end of
-    * its join window and the engine can prove no match can still
-    * arrive. That proof is the whole mechanism: outer results are
-    * never emitted speculatively, so there are no retractions in
-    * append mode, and state stays watermark-bounded exactly as in
-    * the inner join. Lefts younger than (watermark delay + window)
-    * at end-of-input remain unemitted — not wrong, just not yet
-    * provable; the q347 oracle encodes that horizon explicitly. */
-  def intervalJoinLeftOuter(left: DataFrame, right: DataFrame,
-      withinMinutes: Int = 5, watermark: String = "2 hours"): DataFrame = {
-    val l = left.withWatermark("ts", watermark)
-      .select(col("user_id").as("l_user"), col("event_id").as("l_id"),
-        col("ts").as("l_ts"))
-    val r = right.withWatermark("ts", watermark)
-      .select(col("user_id").as("r_user"), col("event_id").as("r_id"),
-        col("ts").as("r_ts"))
-    l.join(r,
-      col("l_user") === col("r_user") &&
-        col("r_ts") >= col("l_ts") &&
-        col("r_ts") <= col("l_ts") + expr(s"INTERVAL $withinMinutes MINUTES") &&
-        col("l_id") =!= col("r_id"),
-      "leftOuter")
-      .select(col("l_user").as("user_id"), col("l_id"), col("r_id"),
-        col("l_ts"), col("r_ts"))
-  }
-
-  /** Stream-stream FULL OUTER interval join — completes the join-
-    * mode family (q153 inner, q347 left outer): both sides emit
-    * watermark-proven unmatched rows with nulls on the other side.
+    * range join (q23).
+    *
+    * `joinType` picks the family member: "inner" (q153),
+    * "leftOuter" (q347) or "fullOuter" (q355). An outer side's
+    * UNMATCHED row emits once, with nulls on the other side, when
+    * the watermark passes the point where the engine can prove no
+    * match can still arrive. Outer results are never emitted
+    * speculatively, so there are no retractions in append mode, and
+    * state stays watermark-bounded exactly as in the inner join.
     * The two null horizons differ because the time-range condition
     * is asymmetric: a LEFT row can match rights up to l.ts+window,
     * so its null emission waits for the watermark to pass that
     * window end; a RIGHT row only matches lefts with l.ts ≤ r.ts,
-    * so its null emits once the watermark passes r.ts itself. */
-  def intervalJoinFullOuter(left: DataFrame, right: DataFrame,
-      withinMinutes: Int = 5, watermark: String = "2 hours"): DataFrame = {
+    * so its null emits once the watermark passes r.ts itself. Rows
+    * younger than their horizon at end-of-input remain unemitted —
+    * not wrong, just not yet provable; the q347/q355 oracles encode
+    * those horizons explicitly. `user_id` is the left user, or the
+    * right user on a full-outer right-null row. */
+  def intervalJoin(left: DataFrame, right: DataFrame,
+      withinMinutes: Int = 5, watermark: String = "2 hours",
+      joinType: String = "inner"): DataFrame = {
     val l = left.withWatermark("ts", watermark)
       .select(col("user_id").as("l_user"), col("event_id").as("l_id"),
         col("ts").as("l_ts"))
@@ -407,7 +326,7 @@ object StreamOps {
         col("r_ts") >= col("l_ts") &&
         col("r_ts") <= col("l_ts") + expr(s"INTERVAL $withinMinutes MINUTES") &&
         col("l_id") =!= col("r_id"),
-      "fullOuter")
+      joinType)
       .select(coalesce(col("l_user"), col("r_user")).as("user_id"),
         col("l_id"), col("r_id"), col("l_ts"), col("r_ts"))
   }
@@ -479,78 +398,81 @@ object StreamOps {
     * state, but at the 100 TB design point a stream-stream join's
     * buffered rows (two watermark windows of a hot key's traffic)
     * want RocksDB's off-heap + disk-spill tier. Results are
-    * provider-independent (StreamingSpec pins this); flip via
-    * `graft.streaming.stateStoreProvider=rocksdb` (session conf) or
-    * `GRAFT_STATE_PROVIDER=rocksdb` (env) when deploying against
-    * backlogs whose per-partition state exceeds executor heap —
-    * the provider trades per-batch commit latency (RocksDB
-    * checkpoint/compaction) for bounded memory. */
+    * provider-independent (StreamingSpec pins this). A query passes
+    * it to [[drain]] when its operator needs it (q341's
+    * transformWithState); a deployment whose per-partition state
+    * exceeds executor heap sets Spark's own
+    * `spark.sql.streaming.stateStore.providerClass` on the session,
+    * which every drain inherits — the provider trades per-batch
+    * commit latency (RocksDB checkpoint/compaction) for bounded
+    * memory. */
   val RocksDbProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  private def resolveProvider(spark: SparkSession): Option[String] =
-    spark.conf.getOption("graft.streaming.stateStoreProvider")
-      .orElse(sys.env.get("GRAFT_STATE_PROVIDER"))
-      .flatMap {
-        case "rocksdb" => Some(RocksDbProvider)
-        case "hdfs" | "default" | "" => None
-        case cls => Some(cls) // any custom StateStoreProvider class
-      }
+  private val drainIds = new java.util.concurrent.atomic.AtomicLong
 
-  /** Read a drained memory sink with scan parallelism bounded to the
-    * replay's own size (r16): sink rows are driver-local, and a bare
-    * `spark.table(name)` parallelizes them to the session default —
-    * so EVERY downstream pass over the tiny result (the declared
-    * orderBy's range-sample pass plus its shuffle write) launches
-    * that many tasks over KBs of data. Measured on q355 at sf0.1:
-    * the two passes burned 10 s of task time across 64 tasks for a
-    * ~180k-row sink; per-task cost was fixed, not data. The coalesce
-    * reuses [[statePartitionsFor]]'s input-volume sizing (bytes/32MB,
-    * floor 4, session cap), so a deployment-scale backlog keeps full
-    * parallelism — the bound only ever SHRINKS a fixture replay's
-    * task count, exactly like the state-store knob above. */
-  def sinkTable(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.table(name).coalesce(statePartitionsFor(spark, dir))
-
-  /** Start an availableNow stream with [[statePartitionsFor]]-sized
-    * state partitioning and drain it to completion, restoring the
-    * session's shuffle-partition setting afterwards (batch queries
-    * sharing the session keep their parallelism). The conf is set
-    * BEFORE start() because the stateful plan reads it at
-    * first-micro-batch planning, which races awaitTermination. */
-  def drainSized(spark: SparkSession, dir: String, floor: Int = 4)(
-      start: => StreamingQuery): StreamingQuery = {
+  /** Run `stream` as an availableNow query into a memory sink, wait
+    * for it to drain all available input, and return the sink's rows
+    * — the one entry point of every bounded stream query.
+    *
+    * The state-partition count ([[statePartitionsFor]] at `floor`)
+    * and `provider`, when given, are frozen into the checkpoint at
+    * first-batch planning, so they are set on the session before
+    * start() and restored as soon as it returns: the stream runs on
+    * its own clone of the session, taken when it is constructed, so
+    * batch queries sharing the session keep their settings. The
+    * stream stays on the caller's session (not a `newSession()`
+    * child) so the caller's listeners see it and stream-static joins
+    * share one session with their static sides.
+    *
+    * The sink name is unique per call and its temp view is dropped
+    * before returning: the result is already analyzed and holds the
+    * sink's plan, so the session keeps neither name nor rows. Sink
+    * rows are driver-local and a bare `spark.table` spreads them over
+    * the session default, so every later pass over KBs of data
+    * (measured on q355 at sf0.1: 10 s of task time across 64 tasks)
+    * pays per-task fixed cost; the read is coalesced to the floor-4
+    * [[statePartitionsFor]] count instead, which a real backlog
+    * still sizes up to full parallelism.
+    *
+    * A terminated drain leaves its state-store providers loaded, and
+    * the 60 s maintenance tick then compacts every dead store forever
+    * after (measured: q153 bimodal 3.6 s vs 10-15 s in full-catalog
+    * runs), so the drain unloads them — in local mode only (ADVICE
+    * r13), where this JVM is the executor; on a cluster the call
+    * would miss executor providers and hit co-resident live queries.
+    * The unload is JVM-wide, so drains are SEQUENTIAL by contract.
+    *
+    * @param mode the sink's output mode: "append", "update" or
+    *   "complete"
+    * @param floor minimum state-partition count: 4 for single-store
+    *   operators, 8 for stream-stream joins */
+  def drain(spark: SparkSession, dir: String, mode: String, floor: Int = 4,
+      provider: Option[String] = None)(stream: => DataFrame): DataFrame = {
+    val name = s"graft_drain_${drainIds.incrementAndGet()}"
     val key = "spark.sql.shuffle.partitions"
     val pKey = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.get(key)
-    val prevP = spark.conf.getOption(pKey)
+    // explicitly-set value only: getOption would surface the default
+    val prevP = spark.conf.getAll.get(pKey)
     spark.conf.set(key, statePartitionsFor(spark, dir, floor).toString)
-    // provider, like partition count, is frozen into the checkpoint
-    // at first-batch planning — set it BEFORE start()
-    resolveProvider(spark).foreach(spark.conf.set(pKey, _))
-    try { val q = start; q.awaitTermination(); q }
-    finally {
-      spark.conf.set(key, prev)
-      prevP match {
-        case Some(p) => spark.conf.set(pKey, p)
-        case None => spark.conf.unset(pKey)
+    provider.foreach(spark.conf.set(pKey, _))
+    val q =
+      try {
+        stream.writeStream.format("memory").queryName(name)
+          .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+      } finally {
+        spark.conf.set(key, prev)
+        if (provider.isDefined) prevP match {
+          case Some(p) => spark.conf.set(pKey, p)
+          case None => spark.conf.unset(pKey)
+        }
       }
-      // Unload the drained query's state-store providers: an
-      // availableNow drain TERMINATES its query, but the executor
-      // keeps every loaded provider registered, and the 60 s
-      // maintenance tick then snapshots/compacts ALL of them — dead
-      // stores included — forever after. Across a many-stream run
-      // the tick's work grows with every drain, and whichever query
-      // it lands inside absorbs it (measured: q153 bimodal 3.6 s vs
-      // 10-15 s in full-catalog runs; the isolated cost is 4 s).
-      // Sequential drains are this entry point's contract; a
-      // CONCURRENT live stream on the same executor would pay one
-      // checkpoint reload after this — use the streaming runtime's
-      // own lifecycle for that shape, not drainSized.
-      // Local-mode only (ADVICE r13): unloadAll() acts on THIS JVM,
-      // which in local mode IS the executor. On a cluster the
-      // driver-side call would be a no-op for executor providers
-      // (and a hazard for co-resident live queries), so gate it.
+    try {
+      q.awaitTermination()
+      spark.table(name).coalesce(statePartitionsFor(spark, dir))
+    } finally {
+      spark.catalog.dropTempView(name)
       if (spark.sparkContext.isLocal)
         org.apache.spark.sql.graftbridge.StateStoreHygiene.unloadAll()
     }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.streaming.state.StateStore
   * those dead stores forever after — across a many-stream run the
   * tick's work grows with every drain (graft measured q153 bimodal
   * 3.6 s vs 10-15 s in full-catalog runs from exactly this).
-  * graft.streaming.StreamOps.drainSized calls this after each
+  * graft.streaming.StreamOps.drain calls this after each
   * sequential drain — GUARDED to local mode, where this JVM is the
   * executor and holds the providers; on a cluster a driver-side
   * call would be a no-op for executor-held providers and would

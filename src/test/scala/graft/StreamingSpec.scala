@@ -135,9 +135,10 @@ class StreamingSpec extends AnyFunSuite {
   test("intervalJoinLeftOuter: matches equal the inner join; null rows " +
       "are exactly the unmatched lefts past the watermark horizon") {
     val q = StreamOps.runToMemory(
-      StreamOps.intervalJoinLeftOuter(
+      StreamOps.intervalJoin(
         StreamOps.eventsStream(spark, dir),
-        StreamOps.eventsStream(spark, dir), withinMinutes = 5),
+        StreamOps.eventsStream(spark, dir), withinMinutes = 5,
+        joinType = "leftOuter"),
       "ijl", OutputMode.Append())
     try {
       val rows = spark.table("ijl").collect()
@@ -179,9 +180,10 @@ class StreamingSpec extends AnyFunSuite {
       "the left-outer join's; right nulls are the unmatched rights " +
       "past the (asymmetric) right horizon") {
     val q = StreamOps.runToMemory(
-      StreamOps.intervalJoinFullOuter(
+      StreamOps.intervalJoin(
         StreamOps.eventsStream(spark, dir),
-        StreamOps.eventsStream(spark, dir), withinMinutes = 5),
+        StreamOps.eventsStream(spark, dir), withinMinutes = 5,
+        joinType = "fullOuter"),
       "ijf", OutputMode.Append())
     try {
       val rows = spark.table("ijf").collect()
@@ -504,30 +506,78 @@ class StreamingSpec extends AnyFunSuite {
       s"interval join diverged across providers: ${jH.size} vs ${jR.size}")
   }
 
-  test("drainSized resolves graft.streaming.stateStoreProvider and " +
-      "restores the session conf afterwards") {
-    import org.apache.spark.sql.streaming.Trigger
-    val pKey = "spark.sql.streaming.stateStore.providerClass"
-    // getOption surfaces the conf's DEFAULT (the HDFS-backed
-    // provider), so restoration is checked by value, not emptiness
-    val before = spark.conf.get(pKey)
-    assert(!before.contains("RocksDB"))
-    spark.conf.set("graft.streaming.stateStoreProvider", "rocksdb")
+  private val partsKey = "spark.sql.shuffle.partitions"
+  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
+  // explicitly-set values: getOption would surface the provider default
+  private def sessionConfs = (spark.conf.get(partsKey),
+    spark.conf.getAll.get(providerKey))
+  private def tempViews(prefix: String) = spark.catalog.listTables()
+    .collect().filter(t => t.isTemporary && t.name.startsWith(prefix))
+    .map(_.name).toSeq
+
+  test("drain: floor and provider reach the stream, not the session") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import scala.jdk.CollectionConverters._
+    val before = sessionConfs
+    assert(before._1 == "4", "TestSpark runs 4 shuffle partitions")
+    // (state partitions, state metric names, session confs seen meanwhile)
+    val seen =
+      new ConcurrentLinkedQueue[(Long, Set[String], (String, Option[String]))]()
+    val terminated = new CountDownLatch(1)
+    // only the drain's own query: earlier specs' stopped queries may
+    // still have events on the bus
+    val drains = java.util.concurrent.ConcurrentHashMap
+      .newKeySet[java.util.UUID]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        if (e.name.startsWith("graft_drain_")) drains.add(e.id)
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (drains.contains(e.progress.id))
+          e.progress.stateOperators.headOption.foreach { op =>
+            seen.add((op.numShufflePartitions,
+              op.customMetrics.keySet.asScala.toSet, sessionConfs))
+          }
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (drains.contains(e.id)) terminated.countDown()
+    }
+    spark.streams.addListener(listener)
     try {
-      val q = StreamOps.drainSized(spark, dir) {
+      val out = StreamOps.drain(spark, dir, "complete", floor = 8,
+          provider = Some(StreamOps.RocksDbProvider)) {
         StreamOps.windowedCounts(StreamOps.eventsStream(spark, dir))
-          .writeStream.outputMode(OutputMode.Complete())
-          .format("memory").queryName("pm_drain")
-          .trigger(Trigger.AvailableNow()).start()
       }
-      val keys = q.lastProgress.stateOperators.head.customMetrics.keySet()
-      assert(keys.stream().anyMatch(_.startsWith("rocksdb")),
-        s"drainSized did not flip the provider; metrics: $keys")
-      q.stop()
-      // session default restored: later streams on this session are
-      // NOT silently pinned to RocksDB
-      assert(spark.conf.get(pKey) == before,
-        "providerClass leaked past drainSized")
-    } finally spark.conf.unset("graft.streaming.stateStoreProvider")
+      assert(terminated.await(60, TimeUnit.SECONDS),
+        "the caller's listener never saw the drain terminate")
+      // the dropped sink view does not lose the rows, and the read
+      // keeps the floor-4 sink coalesce
+      assert(out.agg(sum("n")).collect()(0).getLong(0) ==
+        Tables.events(spark, dir).count())
+      assert(out.rdd.getNumPartitions == 4)
+      val progress = seen.asScala.toSeq
+      assert(progress.nonEmpty, "no progress reached the caller's listener")
+      progress.foreach { case (parts, metrics, confs) =>
+        assert(parts == 8, s"state partitions $parts, want floor 8")
+        assert(metrics.exists(_.startsWith("rocksdb")),
+          s"RocksDB provider not engaged; metrics: $metrics")
+        assert(confs == before,
+          s"session conf $confs changed while the stream ran")
+      }
+      assert(sessionConfs == before, "drain leaked a conf")
+      assert(tempViews("graft_drain_").isEmpty, "drain left its sink view")
+    } finally spark.streams.removeListener(listener)
+  }
+
+  test("drained catalog streams leave no graft_* view or conf change") {
+    // views other catalog queries registered earlier in this session
+    tempViews("graft_").foreach(spark.catalog.dropTempView)
+    val before = sessionConfs
+    for (q <- Seq("q47_stream_tumbling", "q256_stream_upsert",
+        "q341_stream_tws"))
+      assert(SparkEntry.queries(q)(spark, dir).collect().nonEmpty, q)
+    assert(tempViews("graft_").isEmpty,
+      s"temp views left behind: ${tempViews("graft_")}")
+    assert(sessionConfs == before, "a stream query leaked a conf")
   }
 }
