@@ -210,21 +210,16 @@ object Bench {
     // slower box can't turn the defense into a third full lane.
     val histPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY",
       "/root/repo/.bench_history.json")
-    val prevAll: Map[String, Double] = try {
-      val src = scala.io.Source.fromFile(histPath)
-      val txt = try src.mkString finally src.close()
-      """"([^"]+)":([-0-9.Ee+]+)""".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case _: Throwable => Map.empty }
     // hist3x compares SAME-core-count runs only (VERDICT r15 #5): the
     // driver also benches at a lower core count, and a history file
     // written by that run would make every fixed-cost-bound query
-    // look "3× slower" here. "__cpus" is written alongside the map
-    // below; a history missing it (legacy) or from a different core
-    // count disables the rule for one run rather than mis-firing it.
-    val prev: Map[String, Double] =
-      if (prevAll.get("__cpus").contains(cpus.toDouble)) prevAll
-      else Map.empty
+    // look "3× slower" here. A history without a core count (legacy)
+    // or from a different one disables the rule for one run rather
+    // than mis-firing it.
+    val prev: Map[String, Double] = BenchHistory.read(histPath) match {
+      case (Some(n), secs) if n == cpus.toInt => secs
+      case _ => Map.empty
+    }
     val batch = res.toSeq.filterNot(r => streamingLane(r._1))
     val top5 = batch.sortBy(-_._2._1).take(5).map(_._1)
     // hist3x covers BOTH lanes since r13: a streaming entry that
@@ -332,12 +327,51 @@ object Bench {
     // re-time rule — full runs only (a subset would erase the
     // catalog-wide baseline)
     if (only.isEmpty) try {
-      val w = new java.io.PrintWriter(histPath)
-      try w.write((s""""__cpus":$cpus""" +: results.map {
-          case (k, v) => "\"" + k + "\":" + v._1 })
-        .mkString("{", ",", "}"))
-      finally w.close()
+      BenchHistory.write(histPath, cpus.toInt,
+        results.map { case (k, v) => k -> v._1 })
     } catch { case _: Throwable => () }
     spark.stop()
   }
+}
+
+/** The per-query seconds a full [[Bench]] run leaves for the next
+  * run's hist3x re-time rule, with the core count they were measured
+  * at as a field of its own:
+  * `{"cpus":N,"queries":{"<query>":<sec>,...}}`. */
+object BenchHistory {
+  import org.json4s._
+  import org.json4s.jackson.JsonMethods.{compact, parse, render}
+
+  def write(path: String, cpus: Int, secs: Seq[(String, Double)]): Unit = {
+    val json = JObject("cpus" -> JInt(cpus),
+      "queries" -> JObject(secs.map { case (k, v) => k -> JDouble(v) }: _*))
+    val w = new java.io.PrintWriter(path)
+    try w.write(compact(render(json))) finally w.close()
+  }
+
+  /** The core count (None when the file has none) and the per-query
+    * seconds. Also reads the legacy flat map, whose core count is a
+    * `"__cpus"` entry among the queries (older files have none). A
+    * missing or unreadable file reads as no history. */
+  def read(path: String): (Option[Int], Map[String, Double]) = try {
+    val src = scala.io.Source.fromFile(path)
+    val txt = try src.mkString finally src.close()
+    def num(v: JValue): Option[Double] = v match {
+      case JDouble(d) => Some(d)
+      case JInt(i) => Some(i.toDouble)
+      case _ => None
+    }
+    def secs(fields: List[JField]): Map[String, Double] =
+      fields.flatMap { case (k, v) => num(v).map(k -> _) }.toMap
+    parse(txt) match {
+      case JObject(fields) =>
+        val top = fields.toMap
+        def cpus(key: String) = top.get(key).flatMap(num).map(_.toInt)
+        top.get("queries") match {
+          case Some(JObject(qs)) => (cpus("cpus"), secs(qs))
+          case _ => (cpus("__cpus"), secs(fields.filterNot(_._1 == "__cpus")))
+        }
+      case _ => (None, Map.empty)
+    }
+  } catch { case _: Exception => (None, Map.empty) }
 }

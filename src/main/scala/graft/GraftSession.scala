@@ -53,8 +53,7 @@ object GraftSession {
       // banding sweep of SURVEY §13.3 died in GCLocker retries).
       // 512 rows keeps batch build ≤ ~100 MB even at the widest key
       // config while costing nothing measurable on fixture-width rows.
-      .config("spark.sql.inMemoryColumnarStorage.batchSize",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_BATCH", "512"))
+      .config("spark.sql.inMemoryColumnarStorage.batchSize", "512")
       // BloomFilterAggregate silently min()s both its items and
       // numBits arguments against these confs (Spark's injected-
       // runtime-filter defaults: 4M items / 8 MB bits). The graft

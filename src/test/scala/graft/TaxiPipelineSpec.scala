@@ -183,6 +183,68 @@ class TaxiPipelineSpec extends AnyFunSuite {
     Caching.releaseAll()
   }
 
+  test("run: caches only the nine consumed columns, same answers as " +
+      "uncached features") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    def ts(s: String) = Timestamp.valueOf(s)
+    // zones, hours, days, payment types, distance buckets and fares all
+    // vary, so every table has several groups and the p99 tail is one
+    // row; doubles are compared to 9 decimals, as the two plans may
+    // add a group's ratios in a different order
+    val raw = df((0 until 60).map { i =>
+      val pickup = ts(f"2024-01-${13 + i % 4}%02d ${6 + i % 5}%02d:00:00")
+      Trip(
+        VendorID = 1 + i % 2,
+        tpep_pickup_datetime = pickup,
+        tpep_dropoff_datetime = new Timestamp(
+          pickup.getTime + (i % 7) * 5 * 60000L),
+        PULocationID = 100 + i % 3,
+        DOLocationID = 200 + i % 2,
+        payment_type = 1L + i % 5,
+        fare_amount = if (i == 59) 500.0 else (i % 6) * 2.5,
+        tip_amount = (i % 4) * 0.5,
+        trip_distance = Seq(0.0, 0.5, 2.0, 4.0, 7.5, 12.0)(i % 6))
+    } ++ Seq.fill(12)(Trip()): _*)
+    val builders = Seq[(String, DataFrame => DataFrame)](
+      "demand_heatmap" -> TaxiPipeline.demandHeatmap,
+      "tip_trends" -> TaxiPipeline.tipTrends,
+      "fare_anomalies" -> (d => TaxiPipeline.fareAnomalies(d)),
+      "trip_performance" -> TaxiPipeline.tripPerformance,
+      "popular_routes" -> (d => TaxiPipeline.popularRoutes(d)),
+      "payment_analysis" -> TaxiPipeline.paymentAnalysis,
+      "distance_distribution" -> TaxiPipeline.distanceDistribution)
+    def rows(d: DataFrame) = d.collect().toSeq.map(_.toSeq.map {
+      case x: Double => BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP)
+      case x => x
+    }).sortBy(_.mkString("|"))
+    // the reference answers are taken before run caches anything
+    val uncached = TaxiPipeline.features(TaxiPipeline.clean(raw))
+    val expected = builders.map { case (t, b) => t -> rows(b(uncached)) }
+
+    val writes = mutable.Map[String, DataFrame]()
+    val recorder = new Sink {
+      override def write(d: DataFrame, t: String, m: SaveMode): Unit =
+        writes.synchronized { writes(t) = d }
+    }
+    val tables = TaxiPipeline.run(TaxiPipeline.clean(raw), recorder,
+      overwrite = false)
+    val cached = tables.flatMap(_._2.queryExecution.withCachedData
+      .collect { case r: InMemoryRelation => r }).distinct
+    assert(cached.size == 1)
+    assert(cached.head.output.map(_.name) == Seq("VendorID",
+      "tpep_pickup_datetime", "tpep_dropoff_datetime", "PULocationID",
+      "DOLocationID", "payment_type", "fare_amount", "tip_amount",
+      "trip_distance"))
+    val written = writes.synchronized(writes.toMap)
+    assert(written.keySet == sevenTables.toSet)
+    expected.foreach { case (t, want) =>
+      val got = rows(written(t))
+      assert(got.nonEmpty, t)
+      assert(got == want, t)
+    }
+    Caching.releaseAll()
+  }
+
   test("e2e: nightly re-run through UpsertParquetSink — re-computed " +
       "zone rows replace, new zones insert") {
     // the production shape of the reference's nightly persistence:
