@@ -37,7 +37,7 @@ package graft
   * once more and the artifact reports min(lane, re-run). A genuine
   * regression survives the re-time; a co-tenancy spike does not.
   * Each timed query also records its MAX TASK duration from a
-  * SparkListener (VERDICT r10 #6) — `max_task_ms` in the per-query
+  * [[QueryTrace]] (VERDICT r10 #6) — `max_task_ms` in the per-query
   * lines and a top-5 map on the total lines — so a slow entry is
   * attributable at a glance: one straggler task ⇒ skew; uniformly
   * slow tasks ⇒ plan cost or a busy box.
@@ -135,12 +135,10 @@ object Bench {
       emit(s"""{"warm":"pretouch+sweep","mb":${bytes / (1 << 20)},""" +
         s""""sec":${(System.nanoTime() - w0) / 1e9}}""")
     }
-    // max-task attribution: reset before each pass, read after — the
-    // listener bus is async, so a late task-end can slip into the
-    // next query's window; best-effort by design (the number answers
-    // "was this entry one straggler or a uniformly busy box", not a
-    // ledger). duration is in ms.
-    val maxTask = new java.util.concurrent.atomic.AtomicLong(0)
+    // max-task attribution: one QueryTrace, reset before each pass's
+    // timer and flushed after it, so every task the pass ran is in its
+    // reading (the flush waits for the listener bus). duration is in ms.
+    //
     // run-level load indicators (VERDICT r12 #4): total executor task
     // time and JVM GC time over the whole timed region. task_ms/wall
     // ≈ the mean active-core count; a co-tenant box inflates wall
@@ -151,16 +149,9 @@ object Bench {
     // old ~10-11 "clean" reference was for cold runs doing redundant
     // executor work. Per-query agreement with isolated re-times is
     // the primary honesty signal since r14; the ratio is the
-    // secondary I/O-wall tripwire.
-    val taskMsTotal = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          maxTask.accumulateAndGet(t.taskInfo.duration, math.max)
-          taskMsTotal.addAndGet(t.taskInfo.duration)
-        }
-      })
+    // secondary I/O-wall tripwire. It sums the passes' task ms.
+    val trace = QueryTrace.start(spark.sparkContext)
+    var taskMsTotal = 0L
     def gcMs: Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -175,10 +166,14 @@ object Bench {
       // and the min becomes a warm-cache number (VERDICT r2 #2)
       Caching.releaseAll()
       spark.catalog.clearCache()
-      maxTask.set(0)
+      trace.reset()
       val t0 = System.nanoTime()
       runNoop(name)
-      ((System.nanoTime() - t0) / 1e9, maxTask.get)
+      val sec = (System.nanoTime() - t0) / 1e9
+      trace.flush()
+      val w = trace.window
+      taskMsTotal += w.taskMs
+      (sec, w.maxTaskMs)
     }
     val res = scala.collection.mutable.LinkedHashMap(names.map { name =>
       // min of two timed passes, BOTH lanes — one pass is dominated
@@ -206,29 +201,18 @@ object Bench {
     // sustained burst). Every full run persists its per-query map to
     // a history file; the next run ALSO re-times any batch entry
     // reading > 3× its previous value (and > 1 s — sub-second jitter
-    // is not a spike), capped at 12 extra passes so a genuinely
-    // slower box can't turn the defense into a third full lane.
+    // is not a spike; the factor grows with the history's core
+    // ratio), capped at 12 extra passes (`BenchHistory.hist3x`).
     val histPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY",
       "/root/repo/.bench_history.json")
-    // hist3x compares SAME-core-count runs only (VERDICT r15 #5): the
-    // driver also benches at a lower core count, and a history file
-    // written by that run would make every fixed-cost-bound query
-    // look "3× slower" here. A history without a core count (legacy)
-    // or from a different one disables the rule for one run rather
-    // than mis-firing it.
-    val prev: Map[String, Double] = BenchHistory.read(histPath) match {
-      case (Some(n), secs) if n == cpus.toInt => secs
-      case _ => Map.empty
-    }
     val batch = res.toSeq.filterNot(r => streamingLane(r._1))
     val top5 = batch.sortBy(-_._2._1).take(5).map(_._1)
     // hist3x covers BOTH lanes since r13: a streaming entry that
     // reads >3× its previous full-run value is a burst that survived
     // min-of-2 and earns a third pass (VERDICT r12 #1)
-    val spiked = res.toSeq.filterNot(r => top5.contains(r._1))
-      .filter { case (n, (sec, _)) =>
-        sec > 1.0 && prev.get(n).exists(p => sec > 3 * p) }
-      .sortBy(-_._2._1).take(12).map(_._1)
+    val spiked = BenchHistory.hist3x(
+      res.toSeq.filterNot(r => top5.contains(r._1)).map(r => r._1 -> r._2._1),
+      cpus.toInt, BenchHistory.read(histPath))
     (top5 ++ spiked).foreach { name =>
       val r = timedPass(name)
       val why = if (top5.contains(name)) "top5" else "hist3x"
@@ -259,9 +243,9 @@ object Bench {
       .mkString("{", ",", "}")
     val wallMs = (System.nanoTime() - wall0) / 1000000L
     val loadHint =
-      s"""{"task_ms":${taskMsTotal.get},"wall_ms":$wallMs,""" +
+      s"""{"task_ms":$taskMsTotal,"wall_ms":$wallMs,""" +
       s""""task_wall_ratio":${"%.2f".formatLocal(java.util.Locale.ROOT,
-        taskMsTotal.get.toDouble / math.max(1L, wallMs))},""" +
+        taskMsTotal.toDouble / math.max(1L, wallMs))},""" +
       s""""gc_ms":${gcMs - gc0}}"""
     emit(s"""{"metric":"total_detail","value":$total,"unit":"sec","queries":$qsFull,"max_task_ms":$mtFull,"load_hint":$loadHint,"sf":"$sfDir","batch_total":$batchTotal,"streaming_total":$streamingTotal$onlyField}""")
     // official contract line LAST and SHORT: the round artifact keeps
@@ -374,4 +358,23 @@ object BenchHistory {
       case _ => (None, Map.empty)
     }
   } catch { case _: Exception => (None, Map.empty) }
+
+  /** The hist3x re-time rule: entries reading > 1 s and more than
+    * `3 × max(1, histCpus / cpus)` times their value in the previous
+    * full run, slowest first, at most 12 (a genuinely slower box must
+    * not turn the defense into a third full lane). The bench also
+    * runs at a lower core count (VERDICT r15 #5), where every
+    * fixed-cost-bound query reads slower than in a history written
+    * at more cores; scaling the threshold by the core ratio keeps
+    * that from firing the rule, and a history from fewer cores keeps
+    * the plain 3×. A history without a core count re-times nothing. */
+  def hist3x(secs: Seq[(String, Double)], cpus: Int,
+      history: (Option[Int], Map[String, Double])): Seq[String] =
+    history match {
+      case (Some(histCpus), prev) =>
+        val k = 3 * math.max(1.0, histCpus.toDouble / cpus)
+        secs.filter { case (n, sec) => sec > 1.0 && prev.get(n).exists(sec > k * _) }
+          .sortBy(-_._2).take(12).map(_._1)
+      case _ => Nil
+    }
 }

@@ -16,18 +16,23 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q01_demand_heatmap")(spark, "/root/testdata/sf0.001")
 
-  private def catalog: Map[String, QueryDef] =
-    graft.queries.Parity.defs ++ graft.queries.Relational.defs ++
-      graft.queries.Pipeline.defs ++ graft.queries.Cached.defs ++
-      graft.queries.Advanced.defs ++ graft.queries.TpchShapes.defs ++
-      graft.queries.Stats.defs ++ graft.queries.Bucketing.defs ++
-      graft.queries.Warehouse.defs ++ graft.queries.Corpus.defs
+  /** Each module's defs. `++` keeps the last of two equal keys, so a
+    * query name defined in two modules would silently lose one;
+    * CatalogSpec checks that no two share a key. */
+  private[graft] val modules: Seq[Map[String, QueryDef]] = Seq(
+    graft.queries.Parity.defs, graft.queries.Relational.defs,
+    graft.queries.Pipeline.defs, graft.queries.Cached.defs,
+    graft.queries.Advanced.defs, graft.queries.TpchShapes.defs,
+    graft.queries.Stats.defs, graft.queries.Bucketing.defs,
+    graft.queries.Warehouse.defs, graft.queries.Corpus.defs)
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  private val catalog: Map[String, QueryDef] = modules.reduce(_ ++ _)
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
     catalog.map { case (k, v) => k -> v.fn }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
+  val oracleSql: Map[String, String] =
     catalog.collect { case (k, QueryDef(_, Some(sql))) => k -> sql }
 }

@@ -2378,9 +2378,7 @@ object Advanced {
          CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
            AS BIGINT) v_micro
        FROM events GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_q292_" +
-      Integer.toHexString(d.hashCode) + "_" +
-      ProcessHandle.current().pid()
+    val dir = graft.sources.ScratchDirs.perProcess("q292", d)
     val ev = Tables.events(s, d)
     ev.filter(col("event_id") % 2 === 0)
       .write.mode("overwrite").parquet(dir)

@@ -35,10 +35,7 @@ object Bucketing {
     // writes must not leave the session half-initialized (overwrite
     // mode makes the re-write of the surviving table safe)
     if (!s.catalog.tableExists(ot) || !s.catalog.tableExists(lt)) {
-      val base = graft.sources.ScratchDirs.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft_q207_" +
-          Integer.toHexString(d.hashCode) + "_" +
-          ProcessHandle.current().pid())
+      val base = graft.sources.ScratchDirs.perProcess("q207", d)
       Tables.orders(s, d).write.mode("overwrite")
         .option("path", s"$base/orders")
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(ot)

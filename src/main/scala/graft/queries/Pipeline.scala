@@ -886,9 +886,7 @@ object Pipeline {
     import s.implicits._
     // pid-suffixed like q82/q128: rewritten every call, not shared
     // across concurrent JVMs on the same sfDir
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_q181_" +
-      Integer.toHexString(d.hashCode) + "_" +
-      ProcessHandle.current().pid()
+    val dir = graft.sources.ScratchDirs.perProcess("q181", d)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     Tables.documents(s, d).select(col("doc_id")).as[Long]
       .filter((id: Long) => id % 10 == 0)
@@ -1666,9 +1664,7 @@ object Pipeline {
     if (!s.catalog.tableExists(tbl)) {
       val idx = hashes.filter(col("doc_id") % 4 =!= 0)
         .groupBy(col("phash")).agg(min(col("doc_id")).as("i_id"))
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_q370_" +
-        Integer.toHexString(d.hashCode) + "_" +
-        ProcessHandle.current().pid()
+      val base = graft.sources.ScratchDirs.perProcess("q370", d)
       graft.dedup.Dedup.mihKeys(idx, "phash", 4)
         // one file per bucket so the scan's sort order survives and
         // the merge join needs no index-side sort either
@@ -3671,9 +3667,7 @@ object Pipeline {
        GROUP BY 1 ORDER BY 1""") { (s, d) =>
     // pid-suffixed like q128: the layout is rewritten every call, so
     // concurrent JVMs on the same sfDir must not share the dir
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_q82_" +
-      Integer.toHexString(d.hashCode) + "_" +
-      ProcessHandle.current().pid()
+    val dir = graft.sources.ScratchDirs.perProcess("q82", d)
     Tables.events(s, d)
       .select(col("event_id"), col("event_type"), col("value"))
       .write.mode("overwrite").orc(dir)
@@ -3700,9 +3694,7 @@ object Pipeline {
          floor((sum(value)) * 1000000 + 0.5) / 1000000 AS total_value
        FROM events WHERE event_type = 'click'
        GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_q187_" +
-      Integer.toHexString(d.hashCode) + "_" +
-      ProcessHandle.current().pid()
+    val dir = graft.sources.ScratchDirs.perProcess("q187", d)
     new graft.sources.PartitionedParquetSink(dir, Seq("event_type"))
       .write(Tables.events(s, d)
           .select(col("event_id"), col("ts"), col("event_type"),
@@ -3739,9 +3731,7 @@ object Pipeline {
        FROM events e JOIN hot
          ON CAST(CAST(e.ts AS DATE) AS VARCHAR) = hot.d
        GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_q236_" +
-      Integer.toHexString(d.hashCode) + "_" +
-      ProcessHandle.current().pid()
+    val dir = graft.sources.ScratchDirs.perProcess("q236", d)
     new graft.sources.PartitionedParquetSink(dir, Seq("d"))
       .write(Tables.events(s, d)
           .select(col("event_id"), col("event_type"), col("value"),
@@ -3779,9 +3769,7 @@ object Pipeline {
          CAST(len(string_split(trim(text), ' ')) AS INTEGER) AS n_toks,
          CAST(length(text) AS INTEGER) AS n_chars
        FROM documents ORDER BY doc_id""") { (s, d) =>
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_q182_" +
-      Integer.toHexString(d.hashCode) + "_" +
-      ProcessHandle.current().pid()
+    val dir = graft.sources.ScratchDirs.perProcess("q182", d)
     Tables.documents(s, d)
       .select(concat(col("doc_id").cast("string"), lit("\t"), col("text"))
         .as("value"))
@@ -4272,9 +4260,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     // not share a dir — one's overwrite would race the other's
     // read-back (the FixtureMemo-style lock is wrong here: nothing
     // is memoized)
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_q128_" +
-      Integer.toHexString(d.hashCode) + "_" +
-      ProcessHandle.current().pid()
+    val dir = graft.sources.ScratchDirs.perProcess("q128", d)
     Tables.documents(s, d).write.mode("overwrite").json(dir)
     s.read
       .schema("doc_id BIGINT, text STRING, lang STRING, source STRING," +
@@ -4342,9 +4328,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
               AS BIGINT) AS text_hashsum
        FROM documents GROUP BY 1 ORDER BY 1""") { (s, d) =>
     // pid-suffixed for the same overwrite-race reason as q128
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_q172_" +
-      Integer.toHexString(d.hashCode) + "_" +
-      ProcessHandle.current().pid()
+    val dir = graft.sources.ScratchDirs.perProcess("q172", d)
     Tables.documents(s, d).write.mode("overwrite")
       .option("header", "true").csv(dir)
     s.read
@@ -4380,9 +4364,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
          CAST(sum(CASE WHEN doc_id % 7 <> 0 THEN n_chars ELSE 0 END)
               AS BIGINT) AS good_chars
        FROM documents GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_q191_" +
-      Integer.toHexString(d.hashCode) + "_" +
-      ProcessHandle.current().pid()
+    val dir = graft.sources.ScratchDirs.perProcess("q191", d)
     Tables.documents(s, d)
       .select(concat_ws(",", col("doc_id"), col("lang"),
         when(col("doc_id") % 7 === 0, lit("xx"))
@@ -4420,9 +4402,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
          CAST(sum(CASE WHEN doc_id % 2 = 1 THEN n_chars * 2 ELSE 0 END)
               AS BIGINT) AS quality_sum
        FROM documents GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_q192_" +
-      Integer.toHexString(d.hashCode) + "_" +
-      ProcessHandle.current().pid()
+    val dir = graft.sources.ScratchDirs.perProcess("q192", d)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("n_chars"))
     docs.filter(col("doc_id") % 2 === 0)
@@ -4480,9 +4460,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
              THEN -value ELSE value END) * 1000000 + 0.5) AS BIGINT))
            AS BIGINT) AS qsum
        FROM events GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_q200_" +
-      Integer.toHexString(d.hashCode) + "_" +
-      ProcessHandle.current().pid()
+    val dir = graft.sources.ScratchDirs.perProcess("q200", d)
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("event_type"), col("value"))
     ev.write.partitionBy("event_type").mode("overwrite").parquet(dir)
@@ -4533,10 +4511,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     // pid-keyed (each process writes its own table versions) →
     // registered for shutdown-hook deletion, or repeated runs across
     // processes would accumulate snapshot files in tmp without bound
-    val dir = graft.sources.ScratchDirs.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_q327_" +
-        Integer.toHexString(d.hashCode) + "_" +
-        ProcessHandle.current().pid())
+    val dir = graft.sources.ScratchDirs.perProcess("q327", d)
     val base = Tables.orders(s, d).select(col("o_orderkey"),
       floor(col("o_totalprice") * 1000000 + lit(0.5)).cast("long")
         .as("pm"))
@@ -4583,9 +4558,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
            AS BIGINT) AS n_after,
          CAST(0 AS BIGINT) AS n_residue
        FROM events GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_q201_" +
-      Integer.toHexString(d.hashCode) + "_" +
-      ProcessHandle.current().pid()
+    val dir = graft.sources.ScratchDirs.perProcess("q201", d)
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("event_type"))
     val forget = ev.select(col("user_id")).distinct()
@@ -5398,9 +5371,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
          CAST(sum(CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT))
               AS BIGINT) AS text_hashsum
        FROM documents GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_q257_" +
-      Integer.toHexString(d.hashCode) + "_" +
-      ProcessHandle.current().pid()
+    val dir = graft.sources.ScratchDirs.perProcess("q257", d)
     Tables.documents(s, d).write.mode("overwrite")
       .option("rowTag", "doc").format("xml").save(dir)
     s.read

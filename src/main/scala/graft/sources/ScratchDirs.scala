@@ -34,6 +34,20 @@ object ScratchDirs {
     dir
   }
 
+  /** `java.io.tmpdir/graft_<name>_<hex(sfDir.hashCode)>_<pid>`,
+    * registered: one JVM's scratch dir for a query over `sfDir`. The
+    * hash keeps fixtures apart, the pid keeps concurrent JVMs on the
+    * same fixture from overwriting each other's files. */
+  def perProcess(name: String, sfDir: String): String =
+    register(s"${System.getProperty("java.io.tmpdir")}/graft_${name}_" +
+      Integer.toHexString(sfDir.hashCode) + "_" + ProcessHandle.current().pid())
+
+  /** The dirs registered so far. */
+  def registeredDirs: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    registered.asScala.toSet
+  }
+
   private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       try Files.walk(p).sorted(Comparator.reverseOrder[Path]())

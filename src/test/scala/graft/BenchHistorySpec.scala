@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** The hist3x history file: the core count is metadata, never a
-  * query entry, and files written before it was are still read. */
+  * query entry, and files written before it was are still read. The
+  * hist3x rule scales its threshold by the history's core ratio. */
 class BenchHistorySpec extends AnyFunSuite {
 
   private def tmp(content: Option[String]): String = {
@@ -39,5 +40,32 @@ class BenchHistorySpec extends AnyFunSuite {
       (None, Map("q01_demand_heatmap" -> 2.0)))
     assert(BenchHistory.read(tmp(None)) == (None, Map.empty))
     assert(BenchHistory.read(tmp(Some("{\"q01"))) == (None, Map.empty))
+  }
+
+  private val secs = Seq("a" -> 3.5, "b" -> 5.0, "c" -> 13.0, "d" -> 0.9, "e" -> 2.0)
+  private val prev = Map("a" -> 1.0, "b" -> 1.0, "c" -> 1.0, "d" -> 0.1, "e" -> 1.0)
+
+  test("hist3x at the same core count: > 3x and > 1 s, slowest first") {
+    assert(BenchHistory.hist3x(secs, 8, (Some(8), prev)) == Seq("c", "b", "a"))
+  }
+
+  test("hist3x on a history from 4x the cores: threshold 12x") {
+    assert(BenchHistory.hist3x(secs, 8, (Some(32), prev)) == Seq("c"))
+  }
+
+  test("hist3x on a history from fewer cores keeps 3x") {
+    assert(BenchHistory.hist3x(secs, 32, (Some(8), prev)) == Seq("c", "b", "a"))
+  }
+
+  test("hist3x on a legacy history without a core count re-times nothing") {
+    assert(BenchHistory.hist3x(secs, 8, (None, prev)).isEmpty)
+  }
+
+  test("hist3x re-times at most 12, and only entries with a history") {
+    val many = (1 to 20).map(i => s"q$i" -> (10.0 + i))
+    val hist = (1 to 20).map(i => s"q$i" -> 1.0).toMap
+    assert(BenchHistory.hist3x(many, 4, (Some(4), hist)) ==
+      (20 to 9 by -1).map(i => s"q$i"))
+    assert(BenchHistory.hist3x(Seq("new" -> 50.0), 4, (Some(4), hist)).isEmpty)
   }
 }

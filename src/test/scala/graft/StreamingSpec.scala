@@ -292,8 +292,7 @@ class StreamingSpec extends AnyFunSuite {
       "checkpoint — the resumed run processes ONLY the new file " +
       "and still yields the batch answer") {
     import org.apache.spark.sql.streaming.Trigger
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_ckpt_" +
-      ProcessHandle.current().pid()
+    val base = graft.sources.ScratchDirs.perProcess("ckpt", dir)
     val inDir = s"$base/in"
     val ckpt = s"$base/ckpt"
     val ev = Tables.events(spark, dir)
@@ -425,8 +424,7 @@ class StreamingSpec extends AnyFunSuite {
     // the loaded map. An accidental re-init per batch (provider
     // reconstruction, checkpoint re-read) shows up as misses
     // scaling with batch count and fails here.
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_sinit_" +
-      ProcessHandle.current().pid()
+    val base = graft.sources.ScratchDirs.perProcess("sinit", dir)
     val ev = Tables.events(spark, dir)
     for (i <- 0 until 3)
       ev.filter(col("event_id") % 3 === i).write.mode("overwrite")
