@@ -43,6 +43,12 @@ package graft
   * slow tasks ⇒ plan cost or a busy box.
   */
 object Bench {
+  /** The streaming lane: every catalog query named `*_stream_*`, which
+    * are exactly the queries that drain a stream through
+    * `StreamOps.drain` (CatalogSpec checks the two sets agree). */
+  val streamingLane: Set[String] =
+    SparkEntry.queries.keySet.filter(_.contains("_stream_"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -74,11 +80,6 @@ object Bench {
       // family's first-run codegen landing in its timed pass)
     )
     warmups.filter(w => only.isEmpty || only(w)).foreach(runNoop)
-    val streamingLane = Set("q47_stream_tumbling", "q120_stream_static_dedup",
-      "q144_stream_contamination", "q151_stream_sessionize",
-      "q153_stream_interval_join", "q155_stream_session_window",
-      "q183_stream_dropdup", "q341_stream_tws",
-      "q347_stream_interval_left", "q355_stream_interval_full")
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.isEmpty || only(n))
     // streaming-lane warmup (untimed): the lane's first query
@@ -259,16 +260,10 @@ object Bench {
     def r3(d: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
     // 1 decimal in the per-query map (100 ms resolution — the detail
-    // line above keeps ns): at 137 queries the 3-decimal form crossed
-    // the 1800-char guard and dropped the map entirely, and at 151
-    // queries the 2-decimal form (1761 chars at 144) crosses it too.
-    // A complete coarse map beats a dropped one — regressions that
-    // matter at this SF are multi-hundred-ms
+    // line above keeps ns): regressions that matter at this SF are
+    // multi-hundred-ms
     def r1(d: Double): String =
       String.format(java.util.Locale.ROOT, "%.1f", Double.box(d))
-    val qsShort = results.map { case (k, v) =>
-        "\"" + k.takeWhile(_ != '_') + "\":" + r1(v._1) }
-      .mkString("{", ",", "}")
     // compact top-5 max-task map (~100 chars) on every contract tier:
     // the one field that tells a straggler from a busy box when only
     // the short line survives the artifact window
@@ -277,33 +272,19 @@ object Bench {
       .mkString("{", ",", "}")
     def contract(qs: String, extra: String = ""): String =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"max_task_ms":$mtShort,"sf":"$sfDir","batch_total":${r3(batchTotal)},"streaming_total":${r3(streamingTotal)}$extra$onlyField}"""
-    // graduated fallback: "qNN" keys → bare-number keys (saves one
-    // char per query — at 159 queries the full form sits at 1784 of
-    // the 1800 guard) → bare keys with integer seconds (saves two
-    // more per query) → TOP-20-SLOWEST map. The last tier is the
-    // r9 lesson (VERDICT r9 #1): at 326 queries even the bare-int
-    // complete map (~2,300 chars) overflows the guard and the line
-    // shipped `"queries":{}` — the per-query regression tripwire
-    // that caught q45/q62/q74 was structurally gone from the round
-    // artifact. A bounded top-K map (~300 chars) always fits, and
-    // the tail is where regressions live; `"queries_top":K` marks
-    // the map as partial so a parser never mistakes it for the
-    // whole catalog. The full-fidelity detail line above still
-    // carries every query at ns precision for anyone reading the
-    // complete log.
-    val qsBare = results.map { case (k, v) =>
-        "\"" + k.takeWhile(_ != '_').drop(1) + "\":" + r1(v._1) }
-      .mkString("{", ",", "}")
-    val qsBareInt = results.map { case (k, v) =>
-        "\"" + k.takeWhile(_ != '_').drop(1) + "\":" + math.round(v._1) }
-      .mkString("{", ",", "}")
+    // the TOP-20-SLOWEST map (VERDICT r9 #1): a complete map of the
+    // catalog (~3,000 chars even with bare integer keys at 370
+    // queries) overflows the guard, while a bounded top-K map (~300
+    // chars) always fits, and the tail is where regressions live;
+    // `"queries_top":K` marks the map as partial so a parser never
+    // mistakes it for the whole catalog. The full-fidelity detail
+    // line above still carries every query at ns precision for anyone
+    // reading the complete log.
     val topK = results.sortBy(-_._2._1).take(20)
     val qsTop = topK.map { case (k, v) =>
         "\"" + k.takeWhile(_ != '_') + "\":" + r1(v._1) }
       .mkString("{", ",", "}")
-    val line = Seq(contract(qsShort), contract(qsBare),
-        contract(qsBareInt),
-        contract(qsTop, s""","queries_top":${topK.size}"""),
+    val line = Seq(contract(qsTop, s""","queries_top":${topK.size}"""),
         contract("{}"))
       .find(_.length <= 1800).get
     emit(line)

@@ -22,4 +22,22 @@ object QueryDef {
     QueryDef(fn, Some(oracle))
   def rowsOnly(fn: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(fn, None)
+
+  private val viewIds = new java.util.concurrent.atomic.AtomicLong
+
+  /** `s.sql(text(view))` over `df` registered as a temp view whose name
+    * (`<prefix>_<n>`) is unique per call and which is dropped once
+    * `s.sql` returns: the result is already analyzed and holds the
+    * view's plan, so the session keeps no view and a caller's own
+    * views (one called `orders`, say) are left alone. The drop goes
+    * through the session catalog, which, unlike
+    * `Catalog.dropTempView`, does not uncache a caller's cache of the
+    * same relation. */
+  def sqlOver(s: SparkSession, df: DataFrame, prefix: String)(
+      text: String => String): DataFrame = {
+    val view = s"${prefix}_${viewIds.incrementAndGet()}"
+    df.createTempView(view)
+    try s.sql(text(view))
+    finally s.sessionState.catalog.dropTempView(view)
+  }
 }

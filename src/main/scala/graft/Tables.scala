@@ -24,8 +24,10 @@ object Tables {
     * cached, so the bench's cache-cold-data discipline is untouched.
     * The path's mtime keys the entry so a rewritten fixture (specs
     * regenerate tables under tmp dirs) re-lists instead of reading a
-    * stale file index; sessions are weakly keyed so short-lived spec
-    * sessions don't accumulate. */
+    * stale file index. The weak session keys do NOT free short-lived
+    * sessions: every memoised DataFrame references its own session,
+    * so a session that ever read a table stays in the map for the
+    * JVM's lifetime (an open leak, ROADMAP direction 4). */
   private val relationMemo =
     new java.util.WeakHashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[(String, Long), DataFrame]]()

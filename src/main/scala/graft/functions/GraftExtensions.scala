@@ -1,111 +1,21 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions injection point for graft's native
   * expressions: sessions built with
   * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
-  * (or `--conf` on spark-submit) get every `graft_*` function at
-  * session construction — including from pure SQL — with no
-  * library call required. `GraftFunctions.register` remains the
-  * programmatic path for sessions graft builds itself
-  * (GraftSession) and for DataFrames handed in from foreign
-  * sessions; both routes bind the same expression constructors.
-  */
+  * (or `--conf` on spark-submit) get every [[GraftFunctions.table]]
+  * entry at session construction — including from pure SQL — with
+  * no library call required. `GraftFunctions.register` binds the
+  * same table on sessions that were built without this class. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
-      "", "", "", "hash_funcs", "", "", "built-in")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     // optimizer rules ride the same injection point (idempotent, so
     // double registration via the GraftSession programmatic path is
     // harmless)
     ext.injectOptimizerRule(_ => graft.plans.TokenContainsPrefilter)
-    def inject(name: String, usage: String,
-        builder: Seq[Expression] => Expression): Unit =
-      ext.injectFunction((FunctionIdentifier(name), info(name, usage),
-        builder))
-    inject(GraftFunctions.DOT,
-      "_FUNC_(a, b) - codegen dot product of two array<double>",
-      exprs => DotProduct(exprs(0), exprs(1)))
-    inject(GraftFunctions.MINHASH,
-      "_FUNC_(hashes, k) - k-permutation MinHash signature",
-      exprs => MinHashSignature(exprs(0), exprs(1)))
-    inject(GraftFunctions.MINHASH_BUCKETS,
-      "_FUNC_(hashes, k, bands) - fused MinHash + LSH band buckets",
-      exprs => MinHashBuckets(exprs(0), exprs(1), exprs(2)))
-    inject(GraftFunctions.SIMHASH,
-      "_FUNC_(hashes) - 64-bit SimHash majority signature",
-      exprs => SimHash64(exprs(0)))
-    inject(GraftFunctions.HYPERPLANE,
-      "_FUNC_(vec, bits) - random-hyperplane sign bits",
-      exprs => HyperplaneBits(exprs(0), exprs(1)))
-    inject(GraftFunctions.CP_KEYS,
-      "_FUNC_(vec, k, bands, probes) - cross-polytope LSH band keys",
-      exprs => CrossPolytopeKeys(exprs(0), exprs(1), exprs(2), exprs(3)))
-    inject(GraftFunctions.HYPERPLANE_BANDS,
-      "_FUNC_(vec, bits, bands) - fused hyperplane LSH band buckets",
-      exprs => HyperplaneBands(exprs(0), exprs(1), exprs(2)))
-    inject(GraftFunctions.SHINGLE_HASHES,
-      "_FUNC_(tokens, n) - sorted distinct hashed n-gram shingles",
-      exprs => ShingleHashes(exprs(0), exprs(1)))
-    inject(GraftFunctions.GRAM_HASHES,
-      "_FUNC_(tokens, n) - positional hashed n-grams",
-      exprs => GramHashes(exprs(0), exprs(1)))
-    inject(GraftFunctions.RANDOM_PROJECTION,
-      "_FUNC_(vec, k) - Rademacher random projection to k dims",
-      exprs => RandomProjection(exprs(0), exprs(1)))
-    inject(GraftFunctions.JACCARD,
-      "_FUNC_(a, b) - Jaccard of two sorted array<bigint>",
-      exprs => JaccardHashes(exprs(0), exprs(1)))
-    inject(GraftFunctions.WINNOW,
-      "_FUNC_(tokens, n, window) - winnowing document fingerprints",
-      exprs => WinnowFingerprints(exprs(0), exprs(1), exprs(2)))
-    inject(GraftFunctions.HLL4_AGG,
-      "_FUNC_(col) - compact HLL_4 distinct sketch (binary)",
-      exprs => Hll4SketchAgg(exprs(0)))
-    inject(GraftFunctions.HLL4_UNION_AGG,
-      "_FUNC_(sketch) - union of compact HLL_4 sketches (binary)",
-      exprs => Hll4UnionAgg(exprs(0)))
-    inject(GraftFunctions.HLL4_UNION,
-      "_FUNC_(a, b) - pairwise compact HLL_4 union (binary)",
-      exprs => Hll4Union(exprs(0), exprs(1)))
-    inject(GraftFunctions.HLL4_ESTIMATE,
-      "_FUNC_(sketch) - rounded distinct estimate of an HLL_4 sketch",
-      exprs => Hll4Estimate(exprs(0)))
-    inject(GraftFunctions.BITMAP64_AGG,
-      "_FUNC_(col) - exact distinct set as a Roaring64 bitmap (binary)",
-      exprs => Bitmap64Agg(exprs(0)))
-    inject(GraftFunctions.BITMAP64_OR_AGG,
-      "_FUNC_(bm) - OR of Roaring64 bitmaps (binary)",
-      exprs => Bitmap64OrAgg(exprs(0)))
-    inject(GraftFunctions.BITMAP64_UNION_CARD,
-      "_FUNC_(a, b) - exact |a UNION b| of two Roaring64 bitmaps",
-      exprs => Bitmap64UnionCard(exprs(0), exprs(1)))
-    inject(GraftFunctions.BITMAP64_CARD,
-      "_FUNC_(bm) - exact cardinality of a Roaring64 bitmap",
-      exprs => Bitmap64Card(exprs(0)))
-    inject(GraftFunctions.BITMAP64_EXPLODE,
-      "_FUNC_(bm) - one bigint row per set bit of a Roaring64 bitmap",
-      exprs => Bitmap64Explode(exprs(0)))
-    inject(GraftFunctions.BITMAP64_UNION,
-      "_FUNC_(a, b) - serialized union of two Roaring64 bitmaps",
-      exprs => Bitmap64Union(exprs(0), exprs(1)))
-    // the bloom pair injects under BloomJoin's names and RAW
-    // (pre-hashed, explicit-bits) semantics — one builder per name
-    // engine-wide, same binding as the programmatic registry path
-    inject(graft.ops.BloomJoin.BLOOM_AGG,
-      "_FUNC_(xxhash64(col), items, bits) - bloom filter (binary)",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs(0), exprs(1), exprs(2)))
-    inject(graft.ops.BloomJoin.MIGHT_CONTAIN,
-      "_FUNC_(bloom, xxhash64(v)) - bloom probe; false = definitely absent",
-      exprs =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs(0), exprs(1)))
+    GraftFunctions.table.foreach(ext.injectFunction)
   }
 }

@@ -1,8 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -636,74 +638,6 @@ case class HyperplaneBits(left: Expression, right: Expression)
       newRight: Expression): HyperplaneBits = copy(newLeft, newRight)
 }
 
-/** Fused random-hyperplane signature + banding: element b of the
-  * output is the b-th `bits/bands`-wide slice of the sign-bit
-  * signature, for `posexplode` into (band, bucket) rows. Fused for
-  * the same reason as [[MinHashBuckets]]: a projected signature
-  * column gets inlined into a per-band lambda and recomputed once
-  * per band. */
-case class HyperplaneBands(first: Expression, second: Expression,
-    third: Expression) extends Expression {
-
-  override def children: Seq[Expression] = Seq(first, second, third)
-  override def nullable: Boolean = first.nullable
-  override def foldable: Boolean = children.forall(_.foldable)
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(DoubleType, _), IntegerType, IntegerType)
-          if second.foldable && third.foldable =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        "hyperplane bands needs (array<double>, foldable int bits, " +
-          s"foldable int bands), got ${children.map(_.dataType.simpleString)}")
-    }
-
-  @transient private lazy val bits: Int = second.eval().asInstanceOf[Int]
-  @transient private lazy val bands: Int = third.eval().asInstanceOf[Int]
-  @transient private lazy val bandBits: Int = bits / bands
-  @transient private lazy val mask: Long =
-    if (bandBits == 64) -1L else (1L << bandBits) - 1
-
-  def compute(vec: ArrayData): ArrayData = {
-    val sig = HyperplaneBits.signature(vec, bits)
-    val out = new Array[Long](bands)
-    var b = 0
-    while (b < bands) {
-      out(b) = (sig >>> (b * bandBits)) & mask
-      b += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = first.eval(input)
-    if (v == null) null else compute(v.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("hyperplaneBandsExpr", this,
-      classOf[HyperplaneBands].getName)
-    val v = first.genCode(ctx)
-    val code = code"""
-      |${v.code}
-      |boolean ${ev.isNull} = ${v.isNull};
-      |${CodeGenerator.javaType(dataType)} ${ev.value} = null;
-      |if (!${ev.isNull}) {
-      |  ${ev.value} = $self.compute(${v.value});
-      |}
-      |""".stripMargin
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): HyperplaneBands =
-    copy(newChildren(0), newChildren(1), newChildren(2))
-}
-
 /** Cross-polytope LSH band keys (Andoni/Indyk/Laarhoven/Razenshteyn/
   * Schmidt, NIPS'15): per hash, the vector is pseudo-rotated by a
   * deterministic Rademacher matrix (±1 entries from splitmix64 — the
@@ -927,7 +861,7 @@ object CrossPolytopeKeys {
 }
 
 object HyperplaneBits {
-  /** Shared sign-bit loop for HyperplaneBits / HyperplaneBands. */
+  /** The sign-bit loop behind [[HyperplaneBits]]. */
   def signature(vec: ArrayData, bits: Int): Long = {
     val n = vec.numElements()
     var sig = 0L
@@ -1107,7 +1041,6 @@ object GraftFunctions {
   val WINNOW = "graft_winnow"
   val SIMHASH = "graft_simhash"
   val HYPERPLANE = "graft_hyperplane_bits"
-  val HYPERPLANE_BANDS = "graft_hyperplane_bands"
   val CP_KEYS = "graft_cp_keys"
   val LANG_PREDICT = "graft_lang_predict"
   val HLL4_AGG = "graft_hll4_agg"
@@ -1121,75 +1054,97 @@ object GraftFunctions {
   val BITMAP64_EXPLODE = "graft_bitmap64_explode"
   val BITMAP64_UNION = "graft_bitmap64_union"
 
-  /** Idempotently register graft's native expressions on a session
-    * (temp functions — session-scoped, executor-safe via codegen).
-    * GraftSession.create and every VectorOps/Dedup entry point call
-    * this, so any session that can build the plans can run them. */
+  type FunctionDescription = SparkSessionExtensions#FunctionDescription
+
+  private def fn(name: String, usage: String)(
+      builder: Seq[Expression] => Expression): FunctionDescription =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
+        "", "", "", "hash_funcs", "", "", "built-in"),
+      builder)
+
+  /** Every graft SQL function, bound by both routes: the
+    * `spark.sql.extensions` class [[GraftExtensions]] injects each
+    * entry at session construction, and [[register]] binds the ones
+    * a session lacks. The bloom pair is bound under
+    * [[graft.ops.BloomJoin]]'s names with its raw (pre-hashed
+    * xxhash64, explicit numBits) semantics, the same convention as
+    * Spark's injected runtime filter. */
+  val table: Seq[FunctionDescription] = Seq(
+    fn(DOT, "_FUNC_(a, b) - codegen dot product of two array<double>")(
+      e => DotProduct(e(0), e(1))),
+    fn(MINHASH, "_FUNC_(hashes, k) - k-permutation MinHash signature")(
+      e => MinHashSignature(e(0), e(1))),
+    fn(MINHASH_BUCKETS,
+      "_FUNC_(hashes, k, bands) - fused MinHash + LSH band buckets")(
+      e => MinHashBuckets(e(0), e(1), e(2))),
+    fn(SIMHASH, "_FUNC_(hashes) - 64-bit SimHash majority signature")(
+      e => SimHash64(e(0))),
+    fn(HYPERPLANE, "_FUNC_(vec, bits) - random-hyperplane sign bits")(
+      e => HyperplaneBits(e(0), e(1))),
+    fn(CP_KEYS,
+      "_FUNC_(vec, k, bands, probes) - cross-polytope LSH band keys")(
+      e => CrossPolytopeKeys(e(0), e(1), e(2), e(3))),
+    fn(SHINGLE_HASHES,
+      "_FUNC_(tokens, n) - sorted distinct hashed n-gram shingles")(
+      e => ShingleHashes(e(0), e(1))),
+    fn(GRAM_HASHES, "_FUNC_(tokens, n) - positional hashed n-grams")(
+      e => GramHashes(e(0), e(1))),
+    fn(RANDOM_PROJECTION,
+      "_FUNC_(vec, k) - Rademacher random projection to k dims")(
+      e => RandomProjection(e(0), e(1))),
+    fn(JACCARD, "_FUNC_(a, b) - Jaccard of two sorted array<bigint>")(
+      e => JaccardHashes(e(0), e(1))),
+    fn(WINNOW,
+      "_FUNC_(tokens, n, window) - winnowing document fingerprints")(
+      e => WinnowFingerprints(e(0), e(1), e(2))),
+    fn(LANG_PREDICT,
+      "_FUNC_(text, profiles) - best-scoring language of text, or und")(
+      e => LangPredict(e(0), e(1))),
+    fn(HLL4_AGG, "_FUNC_(col) - compact HLL_4 distinct sketch (binary)")(
+      e => Hll4SketchAgg(e(0))),
+    fn(HLL4_UNION_AGG,
+      "_FUNC_(sketch) - union of compact HLL_4 sketches (binary)")(
+      e => Hll4UnionAgg(e(0))),
+    fn(HLL4_UNION, "_FUNC_(a, b) - pairwise compact HLL_4 union (binary)")(
+      e => Hll4Union(e(0), e(1))),
+    fn(HLL4_ESTIMATE,
+      "_FUNC_(sketch) - rounded distinct estimate of an HLL_4 sketch")(
+      e => Hll4Estimate(e(0))),
+    fn(BITMAP64_AGG,
+      "_FUNC_(col) - exact distinct set as a Roaring64 bitmap (binary)")(
+      e => Bitmap64Agg(e(0))),
+    fn(BITMAP64_OR_AGG, "_FUNC_(bm) - OR of Roaring64 bitmaps (binary)")(
+      e => Bitmap64OrAgg(e(0))),
+    fn(BITMAP64_UNION_CARD,
+      "_FUNC_(a, b) - exact |a UNION b| of two Roaring64 bitmaps")(
+      e => Bitmap64UnionCard(e(0), e(1))),
+    fn(BITMAP64_CARD,
+      "_FUNC_(bm) - exact cardinality of a Roaring64 bitmap")(
+      e => Bitmap64Card(e(0))),
+    fn(BITMAP64_EXPLODE,
+      "_FUNC_(bm) - one bigint row per set bit of a Roaring64 bitmap")(
+      e => Bitmap64Explode(e(0))),
+    fn(BITMAP64_UNION,
+      "_FUNC_(a, b) - serialized union of two Roaring64 bitmaps")(
+      e => Bitmap64Union(e(0), e(1))),
+    fn(graft.ops.BloomJoin.BLOOM_AGG,
+      "_FUNC_(xxhash64(col), items, bits) - bloom filter (binary)")(
+      e => new BloomFilterAggregate(e(0), e(1), e(2))),
+    fn(graft.ops.BloomJoin.MIGHT_CONTAIN,
+      "_FUNC_(bloom, xxhash64(v)) - bloom probe; false = definitely absent")(
+      e => BloomFilterMightContain(e(0), e(1))))
+
+  /** Bind every [[table]] entry the session lacks (session-scoped,
+    * executor-safe via codegen). A session built with
+    * [[GraftExtensions]] already has them all, so this binds nothing
+    * there; GraftSession.create and every operator entry point call
+    * it, so any session that can build the plans can run them. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      DOT, exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      MINHASH, exprs => MinHashSignature(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      MINHASH_BUCKETS,
-      exprs => MinHashBuckets(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction(
-      SHINGLE_HASHES, exprs => ShingleHashes(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      GRAM_HASHES, exprs => GramHashes(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      RANDOM_PROJECTION,
-      exprs => RandomProjection(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      JACCARD, exprs => JaccardHashes(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      WINNOW,
-      exprs => WinnowFingerprints(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction(
-      SIMHASH, exprs => SimHash64(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      HYPERPLANE, exprs => HyperplaneBits(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      HYPERPLANE_BANDS,
-      exprs => HyperplaneBands(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction(
-      CP_KEYS,
-      exprs => CrossPolytopeKeys(exprs(0), exprs(1), exprs(2), exprs(3)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      LANG_PREDICT, exprs => LangPredict(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      HLL4_AGG, exprs => Hll4SketchAgg(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      HLL4_UNION_AGG, exprs => Hll4UnionAgg(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      HLL4_UNION, exprs => Hll4Union(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      HLL4_ESTIMATE, exprs => Hll4Estimate(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      BITMAP64_AGG, exprs => Bitmap64Agg(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      BITMAP64_OR_AGG, exprs => Bitmap64OrAgg(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      BITMAP64_UNION_CARD,
-      exprs => Bitmap64UnionCard(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      BITMAP64_CARD, exprs => Bitmap64Card(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      BITMAP64_EXPLODE, exprs => Bitmap64Explode(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      BITMAP64_UNION,
-      exprs => Bitmap64Union(exprs(0), exprs(1)), "built-in")
-    // bloom pair: ONE owner — graft.ops.BloomJoin registers the raw
-    // (pre-hashed xxhash64, explicit numBits) forms under its names;
-    // re-registering them here under the same registry keeps every
-    // GraftFunctions-registered session SQL-complete without two
-    // subtly-different builders racing for one name (a first draft of
-    // r13 registered a self-hashing 2-arg variant under the SAME
-    // name — last-registration-wins made the binding call-site-order
-    // dependent).
-    graft.ops.BloomJoin.registerOn(reg)
+    table.foreach { case (id, info, builder) =>
+      if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
+    }
   }
 
   /** Codegen'd dot product (register(spark) must have run). */
@@ -1219,9 +1174,6 @@ object GraftFunctions {
 
   def hyperplaneBits(vec: Column, bits: Int): Column =
     call_function(HYPERPLANE, vec, lit(bits))
-
-  def hyperplaneBands(vec: Column, bits: Int, bands: Int): Column =
-    call_function(HYPERPLANE_BANDS, vec, lit(bits), lit(bands))
 
   def cpKeys(vec: Column, kHashes: Int, bands: Int, probes: Int): Column =
     call_function(CP_KEYS, vec, lit(kHashes), lit(bands), lit(probes))

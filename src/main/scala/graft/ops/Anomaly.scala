@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Quantile-threshold anomaly detection.
@@ -23,14 +23,5 @@ object Anomaly {
   def percentileFilter(df: DataFrame, valueCol: String, p: Double): DataFrame = {
     val thr = df.agg(percentile(col(valueCol), lit(p)).as("__thr"))
     df.join(broadcast(thr)).where(col(valueCol) >= col("__thr")).drop("__thr")
-  }
-
-  /** Bench variant: Greenwald-Khanna sketch threshold, like the
-    * reference's approxQuantile (rel. err 0.01). Driver-side action —
-    * kept for throughput comparison, not declared to the oracle. */
-  def approxPercentileFilter(df: DataFrame, valueCol: String, p: Double,
-      relErr: Double = 0.01): DataFrame = {
-    val t = df.stat.approxQuantile(valueCol, Array(p), relErr)(0)
-    df.where(col(valueCol) >= lit(t))
   }
 }

@@ -1,8 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 
 /** Bloom-pruned join — the runtime-filter pattern for the regime
@@ -29,31 +27,16 @@ import org.apache.spark.sql.functions._
   * contract as the injected runtime filter). */
 object BloomJoin {
 
+  /** SQL names of the raw bloom pair, bound by
+    * [[graft.functions.GraftFunctions.table]]. */
   val BLOOM_AGG = "graft_bloom_agg"
   val MIGHT_CONTAIN = "graft_might_contain"
-
-  /** Idempotently expose the two internal bloom expressions as
-    * session functions (same registry pattern as GraftFunctions).
-    * This module OWNS the names: GraftFunctions.register delegates
-    * here, so there is exactly one builder per name engine-wide. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    registerOn(spark.sessionState.functionRegistry)
-
-  private[graft] def registerOn(
-      reg: org.apache.spark.sql.catalyst.analysis.FunctionRegistry)
-      : Unit = {
-    reg.createOrReplaceTempFunction(BLOOM_AGG,
-      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    reg.createOrReplaceTempFunction(MIGHT_CONTAIN,
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
-  }
 
   /** The bloom fingerprint of `keys`'s `keyCol` column. One
     * partial-aggregated pass; a few MB for millions of keys. */
   def buildFilter(keys: DataFrame, keyCol: String,
       estItems: Long = 1000000L, numBits: Long = 8388608L): Array[Byte] = {
-    register(keys.sparkSession)
+    graft.functions.GraftFunctions.register(keys.sparkSession)
     keys.agg(call_function(BLOOM_AGG, xxhash64(col(keyCol)),
         lit(estItems), lit(numBits)).as("bf"))
       .head().getAs[Array[Byte]](0)

@@ -323,21 +323,7 @@ object Graph {
   def kCoreProfile(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
-    // release exactly the blocks THIS function checkpointed — the id
-    // of each localCheckpoint's backing RDD is read off its
-    // LogicalRDD leaf (a before/after diff of the GLOBAL persistent-
-    // RDD registry would silently unpersist anything a concurrent
-    // thread cached during the call; ADVICE r10)
-    val ckptIds = scala.collection.mutable.ArrayBuffer[Int]()
-    def ckpt(df: DataFrame): DataFrame = {
-      val out = df.localCheckpoint()
-      out.queryExecution.analyzed.collectFirst {
-        case r: org.apache.spark.sql.execution.LogicalRDD =>
-          ckptIds += r.rdd.id
-      }
-      out
-    }
+    val ckpt = new graft.LocalCheckpoints
     // ONE degree aggregation per round serves BOTH the peel and the
     // profile row (r16; guide §1.2 "don't compute things twice"):
     // the old shape ran a separate count_distinct-over-union stats
@@ -371,8 +357,7 @@ object Graph {
       deg = degOf(e)
       out += ((r.toLong, statsOf(deg)))
     }
-    val reg = sc.getPersistentRDDs
-    ckptIds.foreach(id => reg.get(id).foreach(_.unpersist(blocking = false)))
+    ckpt.release()
     out.toSeq.map { case (r, (n, m)) => (r, n, m) }
       .toDF("round", "n_nodes", "n_edges")
       .orderBy(col("round"))

@@ -2646,16 +2646,16 @@ object Advanced {
             .orderBy(col("ts"), col("event_id"))).as("dst"))
       .filter(col("dst").isNotNull && col("dst") =!= col("src"))
       .select(col("src"), col("dst")).distinct()
-    edges.createOrReplaceTempView("graft_q339_edges")
-    s.sql(
-      """WITH RECURSIVE st AS (SELECT min(src) s FROM graft_q339_edges),
+    QueryDef.sqlOver(s, edges, "graft_q339_edges") { e =>
+      s"""WITH RECURSIVE st AS (SELECT min(src) s FROM $e),
          r(n, d) AS (
            SELECT s, 0 FROM st
            UNION ALL
            SELECT e.dst, d + 1 FROM r
-             JOIN graft_q339_edges e ON e.src = r.n WHERE d < 3)
+             JOIN $e e ON e.src = r.n WHERE d < 3)
          SELECT n AS event_type, CAST(min(d) AS BIGINT) AS min_depth
-         FROM r GROUP BY 1 ORDER BY 1""")
+         FROM r GROUP BY 1 ORDER BY 1"""
+    }
   }
 
   val defs: Map[String, QueryDef] = Map(

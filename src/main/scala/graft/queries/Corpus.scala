@@ -1077,17 +1077,7 @@ object Corpus {
          $rounds
          SELECT * FROM ($stats) WHERE n_pos > 0
          ORDER BY win_len""") { (s, d) =>
-      import org.apache.spark.sql.DataFrame
-      val sc = s.sparkContext
-      val ckptIds = scala.collection.mutable.ArrayBuffer[Int]()
-      def ckpt(df: DataFrame): DataFrame = {
-        val out = df.localCheckpoint()
-        out.queryExecution.analyzed.collectFirst {
-          case r: org.apache.spark.sql.execution.LogicalRDD =>
-            ckptIds += r.rdd.id
-        }
-        out
-      }
+      val ckpt = new graft.LocalCheckpoints
       // Per-round plan shape (r15 optimization — measured 9.2 s →
       // see OPTIMIZATION_r15.md): positions are DENSE 1..k per doc
       // at every round (round t keeps exactly the prefix that fits a
@@ -1143,9 +1133,7 @@ object Corpus {
           win *= 2
         }
       }
-      val reg = sc.getPersistentRDDs
-      ckptIds.foreach(id =>
-        reg.get(id).foreach(_.unpersist(blocking = false)))
+      ckpt.release()
       import s.implicits._
       rows.toSeq.toDF("win_len", "n_pos", "n_dup_pos", "n_docs")
         .orderBy(col("win_len"))

@@ -2079,18 +2079,18 @@ object Pipeline {
        FROM s a JOIN s b ON b.doc_id = a.doc_id + 1
        ORDER BY 1""") { (s, d) =>
     graft.functions.GraftFunctions.register(s)
-    Tables.documents(s, d).createOrReplaceTempView("graft_q159_docs")
-    s.sql(
-      """WITH h AS (
+    QueryDef.sqlOver(s, Tables.documents(s, d), "graft_q159_docs") { docs =>
+      s"""WITH h AS (
            SELECT doc_id,
                   graft_shingle_hashes(split(trim(text), ' '), 3) AS hs
-           FROM graft_q159_docs
+           FROM $docs
            WHERE size(split(trim(text), ' ')) >= 3)
          SELECT a.doc_id AS a_id, b.doc_id AS b_id,
                 floor(graft_jaccard(a.hs, b.hs) * 1000000 + 0.5)
                   / 1000000 AS jaccard
          FROM h a JOIN h b ON b.doc_id = a.doc_id + 1
-         ORDER BY a_id""")
+         ORDER BY a_id"""
+    }
   }
 
   /** Near-dup cluster collapse: MinHash pairs → connected components
@@ -4759,7 +4759,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
       .select(col("g")).distinct()
     val bf = graft.ops.BloomJoin.buildFilter(bench, "g",
       estItems = 100000L, numBits = 1L << 20)
-    graft.ops.BloomJoin.register(s)
+    graft.functions.GraftFunctions.register(s)
     val screened = grams.filter(col("doc_id") % 20 =!= 0)
       .filter(call_function(graft.ops.BloomJoin.MIGHT_CONTAIN, lit(bf),
         xxhash64(col("g"))))

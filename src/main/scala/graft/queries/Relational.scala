@@ -314,18 +314,17 @@ object Relational {
     * Catalyst decorrelates the per-row subquery into an aggregate +
     * join (RewriteCorrelatedScalarSubquery) — the plan has ONE
     * aggregation over orders and one join, not a subquery per row;
-    * DuckDB runs the identical text. */
+    * DuckDB runs the same text over its `orders` view. */
   val correlatedSubquery: QueryDef = {
-    val sql =
-      """SELECT o_orderkey, o_custkey, o_totalprice
-         FROM orders o
+    def sql(orders: String) =
+      s"""SELECT o_orderkey, o_custkey, o_totalprice
+         FROM $orders o
          WHERE o_totalprice > (SELECT 2 * avg(o2.o_totalprice)
-                               FROM orders o2
+                               FROM $orders o2
                                WHERE o2.o_custkey = o.o_custkey)
          ORDER BY o_orderkey"""
-    QueryDef.sql(sql) { (s, d) =>
-      Tables.orders(s, d).createOrReplaceTempView("orders")
-      s.sql(sql)
+    QueryDef.sql(sql("orders")) { (s, d) =>
+      QueryDef.sqlOver(s, Tables.orders(s, d), "graft_q42_orders")(sql)
     }
   }
 

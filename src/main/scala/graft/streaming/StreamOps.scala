@@ -411,6 +411,9 @@ object StreamOps {
 
   private val drainIds = new java.util.concurrent.atomic.AtomicLong
 
+  /** How many [[drain]] calls this JVM has started. */
+  def drainCount: Long = drainIds.get()
+
   /** Run `stream` as an availableNow query into a memory sink, wait
     * for it to drain all available input, and return the sink's rows
     * — the one entry point of every bounded stream query.
