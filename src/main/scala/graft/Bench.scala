@@ -7,9 +7,9 @@ package graft
   * sink — unlike `count()`, which lets Catalyst drop the final sort
   * and prune projected columns, so the measurement covers what the
   * query actually promises. Failures propagate: a broken query must
-  * fail the bench loudly, not record a fast "success". A warmup run
-  * of the flagship shape absorbs JVM/session/codegen startup so the
-  * first timed query isn't charged for it.
+  * fail the bench loudly, not record a fast "success". An untimed
+  * pre-warm sweep of the batch lane absorbs JVM/session/codegen
+  * startup so no timed query is charged for it.
   *
   * Output is CRASH-PROOF (VERDICT r3 #1): one `{"query":…,"sec":…}`
   * JSON line is printed and flushed the moment each query's timing
@@ -63,23 +63,6 @@ object Bench {
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
     def emit(line: String): Unit = { println(line); System.out.flush() }
-    // warmup (untimed): one query per native-expression family, so
-    // the first TIMED query of each family measures the steady-state
-    // plan rather than absorbing that family's C2/codegen compilation
-    // (measured: q33 reads 1.8 s when it is the first cross-polytope
-    // plan of the JVM, 0.7 s steady-state). Caches are still cleared
-    // before every timed pass — warmup only warms code, not data.
-    val warmups = Seq(
-      "q01_demand_heatmap",   // relational/codegen baseline
-      "q30_dedup_minhash",    // shingle + minhash + jaccard exprs
-      "q31_dedup_simhash",    // simhash expr
-      "q33_ann_lsh",          // cross-polytope + dot exprs
-      "q79_dup_spans",        // positional gram-hash expr
-      "q111_dedup_keep_best"  // cluster-collapse + argmax family
-      // (VERDICT r3 #6: 7.9 s at sf0.01 vs 2.7 s at sf0.1 was this
-      // family's first-run codegen landing in its timed pass)
-    )
-    warmups.filter(w => only.isEmpty || only(w)).foreach(runNoop)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.isEmpty || only(n))
     // streaming-lane warmup (untimed): the lane's first query

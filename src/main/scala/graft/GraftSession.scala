@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.GraftFunctions
+import graft.functions.{GraftExtensions, GraftFunctions}
 import org.apache.spark.sql.SparkSession
 
 /** One place to build a graft session: common config + native
@@ -77,11 +77,14 @@ object GraftSession {
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     GraftFunctions.register(s)
-    // programmatic twin of the GraftExtensions injection, for
-    // sessions joining a pre-existing context where the static
-    // spark.sql.extensions conf did not apply; the rule is
-    // idempotent so double registration is harmless
-    if (!s.experimental.extraOptimizations
+    // programmatic twin of the GraftExtensions rule injection, only for
+    // sessions joining a pre-existing context whose static
+    // spark.sql.extensions conf lacks the class — where it is present
+    // the injected rule already runs in the operator-optimization
+    // batches, and a second copy would add a third batch
+    val injected = s.sparkContext.getConf.get("spark.sql.extensions", "")
+      .split(",").map(_.trim).contains(classOf[GraftExtensions].getName)
+    if (!injected && !s.experimental.extraOptimizations
         .contains(graft.plans.TokenContainsPrefilter))
       s.experimental.extraOptimizations =
         s.experimental.extraOptimizations :+

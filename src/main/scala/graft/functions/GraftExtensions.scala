@@ -12,9 +12,8 @@ import org.apache.spark.sql.SparkSessionExtensions
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // optimizer rules ride the same injection point (idempotent, so
-    // double registration via the GraftSession programmatic path is
-    // harmless)
+    // optimizer rules ride the same injection point (GraftSession adds
+    // the rule programmatically only to sessions without this class)
     ext.injectOptimizerRule(_ => graft.plans.TokenContainsPrefilter)
     GraftFunctions.table.foreach(ext.injectFunction)
   }

@@ -520,19 +520,6 @@ object Pipeline {
       .orderBy(col("q_id"), col("rank"))
   }
 
-  /** LSH-bucketed ANN (cross-polytope, 32 bands × 1 hash, 2-probe —
-    * the VectorOps.lshTopK defaults) under the planted-duplicate
-    * containment audit (the q31/q41 pattern, VERDICT r9 #4): the
-    * corpus is doubled with offset ids, and an IDENTICAL vector
-    * hashes to identical band keys under any deterministic LSH
-    * family, so each query's planted duplicate is a GUARANTEED
-    * candidate and must surface in its top-3 at exact cosine 1 —
-    * key computation, bucket join, candidate distinct, exact
-    * re-rank and the k-cut are all on the hash-checked path now
-    * (a dropped band, a broken probe expansion, or a mis-ranked
-    * heap fails the driver compare). Family-dependent recall on
-    * NON-identical neighbors stays measured in AnnRecallSpec
-    * (recall floor + candidate-ratio ceiling). */
   /** Graph-ANN top-5 over the per-partition NSW index
     * ([[VectorOps.nswTopK]] — HNSW-lite: greedy-beam navigable-
     * small-world graphs built in mapPartitions, broadcast query
@@ -548,7 +535,25 @@ object Pipeline {
       .orderBy(col("q_id"), col("rank"))
   }
 
-  val annLsh: QueryDef = QueryDef.sql(
+  /** The planted-duplicate containment audit shared by the ANN rows
+    * (q33, q40, q357; the q31/q41 pattern, VERDICT r9 #4): the corpus
+    * is doubled with ids offset by 100000, so each query's IDENTICAL
+    * vector is in the corpus under another id. Identical vectors get
+    * identical band keys (LSH) and the same nearest cell under the
+    * same tie-breaks (IVF, per shard too, as the duplicate carries the
+    * query's label), so that duplicate is a GUARANTEED candidate and
+    * must surface in the top-3 at exact cosine 1 — key or cell
+    * computation, the candidate join, exact re-rank and the k-cut are
+    * all on the hash-checked path. Tie-proof (ADVICE r10/r11): if the
+    * fixture held OTHER vectors identical to a query, 3+ cos-1.0 ties
+    * could push the planted id out of the k-cut by the smaller-id
+    * tie-break, so `ok` also accepts a FULL list of k cos-1.0 ties; an
+    * all-ties list SHORTER than k means the planted candidate was
+    * dropped, not evicted, and fails. Recall on NON-identical
+    * neighbors stays measured in AnnRecallSpec. `search(corpus,
+    * queries)` returns (q_id, n_id, cos, rank) top-3 rows. */
+  private def plantedDupAudit(
+      search: (DataFrame, DataFrame) => DataFrame): QueryDef = QueryDef.sql(
     """SELECT vec_id AS q_id, TRUE AS ok FROM embeddings
        WHERE vec_id < 10 ORDER BY 1""") { (s, d) =>
     val emb = Tables.embeddings(s, d)
@@ -556,16 +561,8 @@ object Pipeline {
       (col("vec_id") + 100000L).as("vec_id"), col("embedding"),
       col("label")))
     val queries = emb.filter(col("vec_id") < 10)
-    val top = VectorOps.lshTopK(doubled, queries, 3)
-    // tie-proof audit (ADVICE r10): if the fixture ever held OTHER
-    // vectors identical to a query, 3+ cos-1.0 ties could push the
-    // planted id out of the k-cut by the smaller-id tie-break — the
-    // ONLY way it can be evicted is by a FULL list of k cos-1.0
-    // ties, so `ok` accepts that case only when the k-cut is
-    // actually full (ADVICE r11: an all-ties list SHORTER than k
-    // would mean the planted candidate was dropped, not evicted)
     queries.select(col("vec_id").as("q_id"))
-      .join(top.groupBy(col("q_id")).agg(
+      .join(search(doubled, queries).groupBy(col("q_id")).agg(
           (bool_or(col("n_id") === col("q_id") + 100000L
              && col("cos") === 1.0)
            || (every(col("cos") === 1.0)
@@ -575,6 +572,12 @@ object Pipeline {
         coalesce(col("__hit"), lit(false)).as("ok"))
       .orderBy(col("q_id"))
   }
+
+  /** LSH-bucketed ANN (cross-polytope, 32 bands × 1 hash, 2-probe —
+    * the VectorOps.lshTopK defaults) under the planted-duplicate
+    * audit. Family-dependent recall stays measured in AnnRecallSpec
+    * (recall floor + candidate-ratio ceiling). */
+  val annLsh: QueryDef = plantedDupAudit(VectorOps.lshTopK(_, _, 3))
 
   /** Exact embedding near-dup pairs at cosine >= 0.45 (brute-force
     * baseline for the LSH path). */
@@ -628,73 +631,21 @@ object Pipeline {
 
   /** IVF-cell ANN top-3 — the inverted-file scale path (nlist =
     * sqrt(n) cells, probe the 40% nearest — see the measured recall
-    * curve in VectorOps.ivfTopK's scaladoc) under the
-    * planted-duplicate containment audit (the q33/q38 pattern,
-    * VERDICT r9 #4): an IDENTICAL vector is assigned the query's
-    * own nearest-centroid cell, and the probe set always contains
-    * the query's own cell (nearest = its assignment argmax), so the
-    * planted duplicate is a GUARANTEED candidate that must surface
-    * in the top-3 at exact cosine 1 — seeding, cell assignment, the
-    * probe join and the heap re-rank are all on the hash-checked
-    * path. Cell-structure-dependent recall on non-identical
-    * neighbors stays measured in AnnRecallSpec. */
-  val annIvf: QueryDef = QueryDef.sql(
-    """SELECT vec_id AS q_id, TRUE AS ok FROM embeddings
-       WHERE vec_id < 10 ORDER BY 1""") { (s, d) =>
-    val emb = Tables.embeddings(s, d)
-    val doubled = emb.unionByName(emb.select(
-      (col("vec_id") + 100000L).as("vec_id"), col("embedding"),
-      col("label")))
-    val queries = emb.filter(col("vec_id") < 10)
-    val top = VectorOps.ivfTopK(doubled, queries, 3)
-    // tie-proof audit — same reasoning as q33 annLsh: eviction of
-    // the planted id from the k-cut is only possible by a FULL list
-    // of k cos-1.0 ties, which proves the same guaranteed-candidate
-    // property; a shorter all-ties list means a dropped candidate
-    // and fails (ADVICE r10/r11)
-    queries.select(col("vec_id").as("q_id"))
-      .join(top.groupBy(col("q_id")).agg(
-          (bool_or(col("n_id") === col("q_id") + 100000L
-             && col("cos") === 1.0)
-           || (every(col("cos") === 1.0)
-               && count(lit(1)) === 3)).as("__hit")),
-        Seq("q_id"), "left")
-      .select(col("q_id"),
-        coalesce(col("__hit"), lit(false)).as("ok"))
-      .orderBy(col("q_id"))
-  }
+    * curve in VectorOps.ivfTopK's scaladoc) under the planted-duplicate
+    * audit: the probe set always contains the query's own cell
+    * (nearest = its assignment argmax), which holds its duplicate, so
+    * seeding, cell assignment, the probe join and the heap re-rank are
+    * hash-checked. */
+  val annIvf: QueryDef = plantedDupAudit(VectorOps.ivfTopK(_, _, 3))
 
-  /** Sharded (per-label) IVF ANN under the planted-duplicate
-    * containment audit — the language/domain-partitioned index
-    * layout real corpora deploy (VERDICT r11 #7): every label gets
-    * its own independent IVF index and each query is routed ONLY to
-    * its own label's shard. The planted duplicate carries the
-    * query's label, so it lands in the same shard, assigns to the
-    * query's own nearest cell under identical tie-breaks, and is a
-    * GUARANTEED candidate at exact cosine 1 — seeding, per-group
-    * refinement, the (group, cell) probe join and the k-cut are all
-    * on the hash-checked path. Same full-k tie acceptance as
-    * q33/q40 (ADVICE r10/r11). */
-  val annIvfPerGroup: QueryDef = QueryDef.sql(
-    """SELECT vec_id AS q_id, TRUE AS ok FROM embeddings
-       WHERE vec_id < 10 ORDER BY 1""") { (s, d) =>
-    val emb = Tables.embeddings(s, d)
-    val doubled = emb.unionByName(emb.select(
-      (col("vec_id") + 100000L).as("vec_id"), col("embedding"),
-      col("label")))
-    val queries = emb.filter(col("vec_id") < 10)
-    val top = VectorOps.ivfTopKPerGroup(doubled, queries, 3, "label")
-    queries.select(col("vec_id").as("q_id"))
-      .join(top.groupBy(col("q_id")).agg(
-          (bool_or(col("n_id") === col("q_id") + 100000L
-             && col("cos") === 1.0)
-           || (every(col("cos") === 1.0)
-               && count(lit(1)) === 3)).as("__hit")),
-        Seq("q_id"), "left")
-      .select(col("q_id"),
-        coalesce(col("__hit"), lit(false)).as("ok"))
-      .orderBy(col("q_id"))
-  }
+  /** Sharded (per-label) IVF ANN under the planted-duplicate audit —
+    * the language/domain-partitioned index layout real corpora deploy
+    * (VERDICT r11 #7): every label gets its own independent IVF index
+    * and each query is routed ONLY to its own label's shard, where its
+    * duplicate lands too — seeding, per-shard refinement, the probe
+    * join and the k-cut are hash-checked. */
+  val annIvfPerGroup: QueryDef =
+    plantedDupAudit(VectorOps.ivfTopKPerGroup(_, _, 3, "label"))
 
   /** Exact all-pairs n-gram Jaccard at 0.5 — the dedup-family
     * exactness baseline, oracle-checked against DuckDB's
@@ -2461,7 +2412,10 @@ object Pipeline {
     * gates), but deterministic given codebook + centroids — both are
     * frozen to parquet and the oracle recomputes assignment, probes,
     * ADC and re-rank over the same doubles
-    * ([[PqOracle.ivfPqTopKSql]], VERDICT r10 #1). */
+    * ([[PqOracle.ivfPqTopKSql]], VERDICT r10 #1). The search assigns
+    * and probes with the centroids READ BACK from the freeze, so plan
+    * and oracle agree even when the frozen partition predates this
+    * build. */
   val annIvfPq: QueryDef = QueryDef.sql(
       PqOracle.ivfPqTopKSql("q116_codebook", "q116_centroids")) { (s, d) =>
     val emb = Tables.embeddings(s, d)
@@ -2471,7 +2425,7 @@ object Pipeline {
       VectorOps.pqTrain(VectorOps.normalize(emb), 16, 16, 4, iters = 1),
       "q116_codebook", tag)
     VectorOps.ivfPqTopK(emb, queries, 3, cb, 16, 4,
-        centroidsSink = c =>
+        centroidsHook = c =>
           graft.sources.OracleAux.freezeAndRead(s, c, "q116_centroids", tag))
       .orderBy(col("q_id"), col("rank"))
   }

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * Two tiers, per the engine brief:
   *  - brute-force cosine top-k: broadcast the (small) query set,
   *    score map-side against the corpus — zero shuffle of the corpus
-  *    except the final per-query top-k window on `numQueries`
-  *    partitions. The exact baseline.
+  *    except the final per-query top-k heap aggregate (k rows per
+  *    query and task). The exact baseline.
   *  - LSH-bucketed ANN (cross-polytope family): band keys are
   *    row-local; candidate generation is a bucket equi-join, so the
   *    corpus is never all-paired. The 100 TB path.
@@ -54,45 +54,57 @@ object VectorOps {
   /** See [[graft.ops.Spread]] — shared session-parallelism guard. */
   private def spread(df: DataFrame): DataFrame = graft.ops.Spread(df)
 
-  /** id + double vector + precomputed norm, under prefixed names —
-    * the projection both join sides share so per-pair work is one
-    * dot product (norms are per-row, computed once before the join). */
+  /** id + double vector (+ `extra` columns) + precomputed norm, under
+    * prefixed names — the projection both join sides share so per-pair
+    * work is one dot product (norms are per-row, computed once before
+    * the join). */
   private def withNorm(df: DataFrame, idCol: String, vecCol: String,
-      prefix: String): DataFrame =
-    df.select(col(idCol).as(s"${prefix}_id"),
-        toDouble(col(vecCol)).as(s"${prefix}_v"))
+      prefix: String, extra: Column*): DataFrame =
+    df.select(Seq(col(idCol).as(s"${prefix}_id"),
+        toDouble(col(vecCol)).as(s"${prefix}_v")) ++ extra: _*)
       .withColumn(s"${prefix}_norm", norm(col(s"${prefix}_v")))
 
-  /** Exact top-k cosine neighbors for each query vector.
-    * Queries are broadcast (small side); scores are computed in the
-    * corpus scan stage; ranking is on graft.Rounding.r6(cos) with an
-    * id tie-break so results are stable across engines and runs.
-    * Ranking runs through the bounded-heap TopK aggregate — identical
-    * ordering to `row_number() OVER (ORDER BY cos DESC, id)` (gated
-    * by TopKSpec) but only k rows per (query × task) cross the
-    * shuffle, where the window form shuffles and sorts ALL q×n scored
-    * rows (measured 6.3 s → expected ~linear at the 20k corpus). */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
-    val c = withNorm(spread(corpus), idCol, vecCol, "n")
-    val q = withNorm(queries, idCol, vecCol, "q")
+  /** graft.Rounding.r6 cosine between two [[withNorm]] projections
+    * (`a`/`b` are their prefixes): one dot product and one divide per
+    * pair. A zero norm yields NULL (try_divide — Spark 4's ANSI mode
+    * would THROW on x/0), and NULL scores drop out of every ranking. */
+  private def cosR6(a: String, b: String): Column =
+    graft.Rounding.r6(try_divide(dot(col(s"${a}_v"), col(s"${b}_v")),
+      col(s"${a}_norm") * col(s"${b}_norm")))
+
+  /** The ranking tail every search shares: scored (q_id, n_id, cos)
+    * rows → (q_id, n_id, cos, rank), the k best per query by (cos
+    * desc, n_id asc). Ranking runs through the bounded-heap TopK
+    * AGGREGATE — identical ordering to `row_number() OVER (PARTITION
+    * BY q_id ORDER BY cos DESC, n_id)` (gated by TopKSpec), but each
+    * task folds its rows into a k-entry buffer map-side, so only k
+    * rows per (query × task) cross the shuffle, where the window form
+    * shuffles and sorts ALL scored rows. NULL scores (a zero-norm
+    * vector) are dropped first: the heap's encoder requires a non-null
+    * primitive ord. */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
     val topk = graft.ops.TopK.topk(k)
-    c.join(broadcast(q), col("q_id") =!= col("n_id"))
-      .select(col("q_id"),
-        graft.Rounding.r6(try_divide(dot(col("q_v"), col("n_v")),
-          col("q_norm") * col("n_norm"))).as("cos"),
-        col("n_id"))
-      // a zero-norm vector makes cos NULL (x/0 → NULL); the window
-      // form sorted NULLs last and dropped them, but the TopK
-      // aggregate's encoder requires a non-null primitive ord
-      .filter(col("cos").isNotNull)
+    scored.filter(col("cos").isNotNull)
       .groupBy(col("q_id"))
       .agg(topk(col("cos"), col("n_id")).as("__top"))
       .select(col("q_id"), posexplode(col("__top")).as(Seq("__i", "__s")))
       .select(col("q_id"), col("__s").getField("id").as("n_id"),
         col("__s").getField("ord").as("cos"),
         (col("__i") + 1).cast("int").as("rank"))
+  }
+
+  /** Exact top-k cosine neighbors for each query vector.
+    * Queries are broadcast (small side); scores are computed in the
+    * corpus scan stage and ranked through [[rankTopK]] on
+    * graft.Rounding.r6(cos) with an id tie-break, so results are
+    * stable across engines and runs. */
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    GraftFunctions.register(corpus.sparkSession)
+    val c = withNorm(spread(corpus), idCol, vecCol, "n")
+    val q = withNorm(queries, idCol, vecCol, "q")
+    rankTopK(c.join(broadcast(q), col("q_id") =!= col("n_id"))
+      .select(col("q_id"), cosR6("q", "n").as("cos"), col("n_id")), k)
   }
 
   /** FILTERED exact top-k: neighbors restricted to the query's own
@@ -102,31 +114,17 @@ object VectorOps {
     * same-label pairs, so a balanced L-label corpus does 1/L the
     * dot products of [[bruteForceTopK]] + post-filter, and at scale
     * the label can also become the partition key. Queries broadcast;
-    * ranking through the same bounded-heap TopK aggregate. */
+    * ranking through [[rankTopK]]. */
   def labelFilteredTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       labelCol: String = "label"): DataFrame = {
     GraftFunctions.register(corpus.sparkSession)
-    val c = spread(corpus).select(col(idCol).as("n_id"),
-        toDouble(col(vecCol)).as("n_v"), col(labelCol).as("n_label"))
-      .withColumn("n_norm", norm(col("n_v")))
-    val q = queries.select(col(idCol).as("q_id"),
-        toDouble(col(vecCol)).as("q_v"), col(labelCol).as("q_label"))
-      .withColumn("q_norm", norm(col("q_v")))
-    val topk = graft.ops.TopK.topk(k)
-    c.join(broadcast(q), col("q_label") === col("n_label")
+    val c = withNorm(spread(corpus), idCol, vecCol, "n",
+      col(labelCol).as("n_label"))
+    val q = withNorm(queries, idCol, vecCol, "q", col(labelCol).as("q_label"))
+    rankTopK(c.join(broadcast(q), col("q_label") === col("n_label")
         && col("q_id") =!= col("n_id"))
-      .select(col("q_id"),
-        graft.Rounding.r6(try_divide(dot(col("q_v"), col("n_v")),
-          col("q_norm") * col("n_norm"))).as("cos"),
-        col("n_id"))
-      .filter(col("cos").isNotNull)
-      .groupBy(col("q_id"))
-      .agg(topk(col("cos"), col("n_id")).as("__top"))
-      .select(col("q_id"), posexplode(col("__top")).as(Seq("__i", "__s")))
-      .select(col("q_id"), col("__s").getField("id").as("n_id"),
-        col("__s").getField("ord").as("cos"),
-        (col("__i") + 1).cast("int").as("rank"))
+      .select(col("q_id"), cosR6("q", "n").as("cos"), col("n_id")), k)
   }
 
   /** Random-hyperplane LSH signature: `bits` sign bits packed into a
@@ -184,19 +182,8 @@ object VectorOps {
     val cand = cKeys.join(broadcast(qKeys), "key")
       .filter(col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id")).distinct()
-    val topk = graft.ops.TopK.topk(k)
-    cand.join(c, "n_id").join(broadcast(q), "q_id")
-      .select(col("q_id"),
-        graft.Rounding.r6(try_divide(dot(col("q_v"), col("n_v")),
-          col("q_norm") * col("n_norm"))).as("cos"),
-        col("n_id"))
-      .filter(col("cos").isNotNull) // zero-norm vector → NULL cos
-      .groupBy(col("q_id"))
-      .agg(topk(col("cos"), col("n_id")).as("__top"))
-      .select(col("q_id"), posexplode(col("__top")).as(Seq("__i", "__s")))
-      .select(col("q_id"), col("__s").getField("id").as("n_id"),
-        col("__s").getField("ord").as("cos"),
-        (col("__i") + 1).cast("int").as("rank"))
+    rankTopK(cand.join(c, "n_id").join(broadcast(q), "q_id")
+      .select(col("q_id"), cosR6("q", "n").as("cos"), col("n_id")), k)
   }
 
   /** Candidate pairs from cross-polytope band keys: (a_id, b_id),
@@ -265,194 +252,125 @@ object VectorOps {
     * of all of it. Complements [[lshTopK]] (hash buckets) with the
     * inverted-file structure real vector stores use; recall is
     * data-dependent → rows-only in the catalog, gated by
-    * AnnRecallSpec against [[bruteForceTopK]]. */
-  /** Pass nlist/nprobe <= 0 to derive them from the corpus size:
-    * nlist = ceil(sqrt(n)) (the standard IVF sizing — cell occupancy
-    * ~sqrt(n)), nprobe = ceil(0.4·nlist). The probe fraction is
-    * data-measured, not the textbook nlist/8: on the harness's
-    * near-isotropic embeddings (true neighbors at cos 0.29-0.39,
-    * statistically barely separable from the bulk) the recall curve
-    * is recall@3 {25%: 0.70, 32%: 0.77, 40%: 0.83, 50%: 0.87}
-    * (tools/lsh_tune.py, medians over 10 seed draws) — nlist/8 would
-    * measure ~0.4 and fail the 0.7 gate. Clustered real-world
+    * AnnRecallSpec against [[bruteForceTopK]].
+    *
+    * Pass nlist/nprobe <= 0 to derive them from the corpus size:
+    * nlist = max(8, ceil(sqrt(n))) (the standard IVF sizing — cell
+    * occupancy ~sqrt(n)), nprobe = max(2, ceil(0.4·nlist)). The probe
+    * fraction is data-measured, not the textbook nlist/8: on the
+    * harness's near-isotropic embeddings (true neighbors at cos
+    * 0.29-0.39, statistically barely separable from the bulk) the
+    * recall curve is recall@3 {25%: 0.70, 32%: 0.77, 40%: 0.83, 50%:
+    * 0.87} (tools/lsh_tune.py, medians over 10 seed draws) — nlist/8
+    * would measure ~0.4 and fail the 0.7 gate. Clustered real-world
     * embeddings sit far above this curve; the 0.4 default is the
     * honest floor for the hardest data.
     *
-    * Plan shape (VERDICT r2 #3): cell assignment is a
-    * groupBy(id).max_by partial aggregation — one map-side-combined
-    * shuffle of n rows, replacing the former per-row-id window that
-    * sorted n×nlist rows twice. */
+    * The probed candidates are exact-scored and ranked through
+    * [[rankTopK]] — the shortlist-then-exact-re-rank shape (VERDICT
+    * r3 #3), with the re-rank fused into the heap because the exact
+    * cosine is already computed per candidate. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       nlist: Int = 0, nprobe: Int = 0,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val (assigned, probes, _) =
-      ivfAssignAndProbes(corpus, queries, nlist, nprobe, idCol, vecCol)
-    // per-query top-k through the bounded-heap TopK AGGREGATE, not a
-    // window: the window formulation shuffles and SORTS every probed
-    // candidate (nprobe/nlist of the corpus per query) to keep k
-    // rows; the aggregate folds each task's candidates into a
-    // k-entry buffer map-side, so only k rows per (query × task)
-    // cross the shuffle — the shortlist-then-exact-re-rank shape
-    // (VERDICT r3 #3), with the re-rank fused into the heap because
-    // the exact cosine is already computed per candidate. Ordering
-    // (cos desc, id asc) matches the window formulation bit-for-bit
-    // (TopKSpec gates the equivalence).
-    val topk = graft.ops.TopK.topk(k)
-    assigned.join(broadcast(probes),
-        assigned("cell") === probes("cell") && col("q_id") =!= col("n_id"))
-      .withColumn("cos", graft.Rounding.r6(try_divide(
-        dot(col("q_v"), col("n_v")),
-        col("q_norm") * col("n_norm"))))
-      .filter(col("cos").isNotNull) // zero-norm vector → NULL cos
-      .groupBy(col("q_id"))
-      .agg(topk(col("cos"), col("n_id")).as("__top"))
-      .select(col("q_id"), posexplode(col("__top")).as(Seq("__i", "__s")))
-      .select(col("q_id"), col("__s").getField("id").as("n_id"),
-        col("__s").getField("ord").as("cos"),
-        (col("__i") + 1).cast("int").as("rank"))
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    ivfSearch(corpus, queries, k, None, nlist, nprobe, idCol, vecCol)
 
   /** Sharded ANN: an independent IVF index PER GROUP — the
     * language/domain-partitioned layout real corpora deploy (one
     * index per shard key, each query routed to its own shard's
-    * index, never across). Same seed → one-Lloyd-refine → assign →
-    * probe pipeline as [[ivfTopK]] with the group key riding every
-    * relation: seeding is a per-group smallest-hash bounded heap
-    * ([[graft.ops.TopK]] — no per-group sort), centroid refinement
-    * aggregates on (group, cell), and the probe join equi-joins on
-    * (group, cell). At 100 TB the shard key makes the index build
-    * embarrassingly parallel across groups and the probe join
-    * co-partitioned by (group, cell); nlist is per-shard (sized from
-    * the mean shard population when defaulted), so the centroid
-    * broadcast is `groups × nlist` skinny rows — still KB-scale.
-    * Determinism matches ivfTopK: hash-ordered seeds with id
-    * tie-breaks, max_by cell assignment with the −c_id tie-break,
-    * r6-rounded cosines into the heap's (cos desc, id asc) order. */
+    * index, never across). The same build and search as [[ivfTopK]]
+    * (which is the one-shard case), with the group key riding the
+    * seed pick, the centroid refinement and the cell/probe joins; nlist
+    * is per-shard (sized from the mean shard population when
+    * defaulted), so the centroid broadcast is `groups × nlist` skinny
+    * rows — still KB-scale. */
   def ivfTopKPerGroup(corpus: DataFrame, queries: DataFrame, k: Int,
       groupCol: String, nlist: Int = 0, nprobe: Int = 0,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
-    val c = graft.Caching.retain(
-      corpus.select(col(idCol).as("n_id"),
-          toDouble(col(vecCol)).as("n_v"), col(groupCol).as("__g"))
-        .withColumn("n_norm", norm(col("n_v")))
-        .persist())
-    val stats = corpus.agg(count(lit(1)),
-      count_distinct(col(groupCol))).collect()(0)
-    val (n, gcnt) = (stats.getLong(0), stats.getLong(1))
-    val nl = if (nlist > 0) nlist
-      else math.max(4,
-        math.ceil(math.sqrt(n.toDouble / math.max(1L, gcnt))).toInt)
-    val np = if (nprobe > 0) nprobe
-      else math.max(2, math.ceil(nl * 0.4).toInt)
-    // per-group deterministic seed ids: smallest xxhash64(id) per
-    // group through the bounded heap (ord = −hash as double; the
-    // 2⁻¹¹ rounding of a 64-bit hash only creates ties, which the
-    // heap breaks by id — still total and deterministic), vectors
-    // re-attached by id so no heap buffer ever carries a vector
-    val seedTop = graft.ops.TopK.topk(nl)
-    val seedIds = c.groupBy(col("__g"))
-      .agg(seedTop((-abs(xxhash64(col("n_id")))).cast("double"),
-        col("n_id")).as("__top"))
-      .select(col("__g"), explode(transform(col("__top"),
-        s => s.getField("id"))).as("n_id"))
-    val seeds = seedIds.join(c.select(col("n_id"), col("n_v"),
-        col("n_norm")), "n_id")
-      .select(col("__g"), col("n_id").as("c_id"), col("n_v").as("c_v"),
-        col("n_norm").as("c_norm"))
-    def assignCellsG(df: DataFrame, cents: DataFrame,
-        prefix: String): DataFrame = {
-      val cells = df
-        .join(broadcast(cents.withColumnRenamed("__g", "__cg")),
-          col("__g") === col("__cg"))
-        .select(col(s"${prefix}_id"),
-          try_divide(dot(col(s"${prefix}_v"), col("c_v")),
-            col(s"${prefix}_norm") * col("c_norm")).as("__ccos"),
-          col("c_id"))
-        .groupBy(col(s"${prefix}_id"))
-        .agg(max_by(col("c_id"),
-          struct(col("__ccos"), (-col("c_id")).as("__tb"))).as("cell"))
-      df.join(cells, s"${prefix}_id")
-    }
-    val centroids = graft.Caching.retain(assignCellsG(c, seeds, "n")
-      .select(col("__g"), col("cell"),
-        posexplode(col("n_v")).as(Seq("pos", "x")))
-      .groupBy(col("__g"), col("cell"), col("pos"))
-      .agg(avg(col("x")).as("x"))
-      .groupBy(col("__g"), col("cell"))
-      .agg(transform(sort_array(collect_list(struct(col("pos"), col("x")))),
-        s => s.getField("x")).as("c_v"))
-      .select(col("__g"), col("cell").as("c_id"), col("c_v"),
-        norm(col("c_v")).as("c_norm"))
-      .persist())
-    centroids.count()
-    val assigned = assignCellsG(c, centroids, "n")
-    val probes = queries
-      .select(col(idCol).as("q_id"), toDouble(col(vecCol)).as("q_v"),
-        col(groupCol).as("__qg"))
-      .withColumn("q_norm", norm(col("q_v")))
-      .join(broadcast(centroids.withColumnRenamed("__g", "__cg")),
-        col("__qg") === col("__cg"))
-      .withColumn("__ccos", try_divide(dot(col("q_v"), col("c_v")),
-        col("q_norm") * col("c_norm")))
-      .groupBy(col("q_id"), col("__qg"))
-      .agg(first(col("q_v")).as("q_v"), first(col("q_norm")).as("q_norm"),
-        slice(sort_array(collect_list(
-          struct((-col("__ccos")).as("__nc"), col("c_id")))), 1, np)
-          .as("__cells"))
-      .select(col("q_id"), col("__qg"), col("q_v"), col("q_norm"),
-        explode(transform(col("__cells"), s => s.getField("c_id")))
-          .as("cell"))
-    val topk = graft.ops.TopK.topk(k)
-    assigned.join(broadcast(probes),
-        assigned("__g") === probes("__qg")
-          && assigned("cell") === probes("cell")
-          && col("q_id") =!= col("n_id"))
-      .withColumn("cos", graft.Rounding.r6(try_divide(
-        dot(col("q_v"), col("n_v")),
-        col("q_norm") * col("n_norm"))))
-      .filter(col("cos").isNotNull)
-      .groupBy(col("q_id"))
-      .agg(topk(col("cos"), col("n_id")).as("__top"))
-      .select(col("q_id"), posexplode(col("__top")).as(Seq("__i", "__s")))
-      .select(col("q_id"), col("__s").getField("id").as("n_id"),
-        col("__s").getField("ord").as("cos"),
-        (col("__i") + 1).cast("int").as("rank"))
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    ivfSearch(corpus, queries, k, Some(groupCol), nlist, nprobe, idCol,
+      vecCol)
+
+  /** IVF search: exact cosine over every (query, member of a probed
+    * cell) pair, ranked by [[rankTopK]]. Cell ids are the seed vector
+    * ids, unique across shards, so the cell equi-join alone keeps a
+    * query inside its own shard. */
+  private def ivfSearch(corpus: DataFrame, queries: DataFrame, k: Int,
+      groupCol: Option[String], nlist: Int, nprobe: Int,
+      idCol: String, vecCol: String): DataFrame = {
+    val (assigned, probes) = ivfAssignAndProbes(corpus, queries, nlist,
+      nprobe, idCol, vecCol, groupCol)
+    rankTopK(assigned.join(broadcast(probes),
+        assigned("cell") === probes("cell") && col("q_id") =!= col("n_id"))
+      .select(col("q_id"), cosR6("q", "n").as("cos"), col("n_id")), k)
   }
 
-  /** Shared IVF front half (ivfTopK + ivfPqTopK): builds the cell
-    * structure and returns (assigned, probes, centroids) — `assigned`
-    * is the persisted normed corpus plus its `cell` id, `probes` is
-    * one row per (query, probed cell) carrying the query vector+norm,
-    * and `centroids` is the persisted (c_id, c_v, c_norm) relation
-    * (exposed so ivfPqTopK can freeze it for its oracle). */
+  /** The IVF index build (ivfTopK, ivfTopKPerGroup, ivfPqTopK): returns
+    * (assigned, probes) — `assigned` is the persisted normed corpus
+    * plus its `cell` id, `probes` is one row per (query, probed cell)
+    * carrying the query vector+norm. With `groupCol` every shard gets
+    * its own cells and a query probes only its own shard's; without
+    * it the corpus is one shard. `centroidsHook` receives the
+    * persisted (c_id, c_v, c_norm) centroid relation and returns the
+    * one that assignment and probes consume (ivfPqTopK freezes it for
+    * its oracle, so plan and oracle read the same centroids). */
   private def ivfAssignAndProbes(corpus: DataFrame, queries: DataFrame,
-      nlist: Int, nprobe: Int,
-      idCol: String, vecCol: String): (DataFrame, DataFrame, DataFrame) = {
+      nlist: Int, nprobe: Int, idCol: String, vecCol: String,
+      groupCol: Option[String] = None,
+      centroidsHook: DataFrame => DataFrame = identity)
+      : (DataFrame, DataFrame) = {
     GraftFunctions.register(corpus.sparkSession)
+    // the shard key rides every relation as `__g`; the one-shard case
+    // carries no key, and its joins with the centroids are crossJoins
+    val shardKey = groupCol.map(g => col(g).as("__g")).toSeq
+    val g = groupCol.map(_ => col("__g")).toSeq
+    def shardJoin(df: DataFrame, cents: DataFrame): DataFrame =
+      if (groupCol.isEmpty) df.crossJoin(broadcast(cents))
+      else df.join(broadcast(cents), "__g")
     // no spread(): per-row work here is nlist dot products, light
     // enough that forcing a repartition shuffle costs more than the
     // parallelism buys at any corpus size where it would matter
     val c = graft.Caching.retain(
-      withNorm(corpus, idCol, vecCol, "n").persist())
-    // sizing count runs on the RAW corpus, not the normed projection:
-    // over a parquet scan it folds to a metadata-only count (no
-    // vector decode, no cache fill — measured ~0.3 s cheaper than
-    // counting through the persist at sf0.1). The persist of `c`
+      withNorm(corpus, idCol, vecCol, "n", shardKey: _*).persist())
+    // sizing counts run on the RAW corpus, not the normed projection:
+    // over a parquet scan the one-shard count folds to a metadata-only
+    // count (no vector decode, no cache fill — measured ~0.3 s cheaper
+    // than counting through the persist at sf0.1). The persist of `c`
     // materializes lazily under its first consumer (`seeds`, next
     // job) — every later consumer is strictly after that job, so
     // nothing computes twice.
-    val n = corpus.count()
+    val (n, shards) = groupCol match {
+      case None => (corpus.count(), 1L)
+      case Some(gc) =>
+        val r = corpus.agg(count(lit(1)), count_distinct(col(gc))).collect()(0)
+        (r.getLong(0), r.getLong(1))
+    }
     val nl = if (nlist > 0) nlist
-      else math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
+      else math.max(8, math.ceil(math.sqrt(
+        n.toDouble / math.max(1L, shards))).toInt)
     val np = if (nprobe > 0) nprobe
       else math.max(2, math.ceil(nl * 0.4).toInt)
-    // deterministic seed sample: smallest xxhash64(id) — plans
-    // TakeOrderedAndProject (per-partition heaps), no full sort
-    val seeds = c
-      .select(col("n_id").as("c_id"), col("n_v").as("c_v"),
-        col("n_norm").as("c_norm"), xxhash64(col("n_id")).as("__h"))
-      .orderBy(col("__h")).limit(nl).drop("__h")
+    // deterministic seed sample: the nl smallest xxhash64(id) of each
+    // shard. One shard plans TakeOrderedAndProject (per-partition
+    // heaps, no full sort, no job of its own). Several shards pick in
+    // ONE scan through the bounded-heap TopK aggregate keyed by shard
+    // (ord = −hash, so the smallest hash wins; the 53-bit rounding only
+    // creates ties, broken by id) and re-attach the vectors by id — a
+    // TakeOrderedAndProject per shard would scan the cached corpus once
+    // per shard (q357 at sf0.1 on local[4], one Profile run each: 5.8 s
+    // that way, 4.9 s this way)
+    val hashed = c.select(g ++ Seq(col("n_id").as("c_id"),
+        col("n_v").as("c_v"), col("n_norm").as("c_norm"),
+        xxhash64(col("n_id")).as("__h")): _*)
+    val seeds = if (groupCol.isEmpty)
+        hashed.orderBy(col("__h")).limit(nl).drop("__h")
+      else {
+        val top = graft.ops.TopK.topk(nl)
+        hashed.join(hashed.groupBy(col("__g"))
+            .agg(top(-col("__h").cast("double"), col("c_id")).as("__top"))
+            .select(explode(transform(col("__top"), s => s.getField("id")))
+              .as("c_id")), "c_id")
+          .drop("__h")
+      }
     // nearest cell per row: max_by over the nlist-way crossJoin —
     // partial aggregation folds each row's nlist scores map-side, so
     // the shuffle carries one row per id and nothing is sorted. The
@@ -463,20 +381,16 @@ object VectorOps {
     // (O(n^1.5) comparison rows × O(d) payload). The vector instead
     // rejoins by id afterwards (id→cell is n skinny rows; AQE picks
     // broadcast at fixture scale, co-partitioned hash at 100 TB).
-    def assignCells(df: DataFrame, cents: DataFrame,
-        prefix: String): DataFrame = {
-      val cells = df
-        .select(col(s"${prefix}_id"), col(s"${prefix}_v"),
-          col(s"${prefix}_norm"))
-        .crossJoin(broadcast(cents))
-        .select(col(s"${prefix}_id"),
-          try_divide(dot(col(s"${prefix}_v"), col("c_v")),
-            col(s"${prefix}_norm") * col("c_norm")).as("__ccos"),
-          col("c_id"))
-        .groupBy(col(s"${prefix}_id"))
+    def assignCells(df: DataFrame, cents: DataFrame): DataFrame = {
+      val cells = shardJoin(
+          df.select(g ++ Seq(col("n_id"), col("n_v"), col("n_norm")): _*),
+          cents)
+        .select(col("n_id"), try_divide(dot(col("n_v"), col("c_v")),
+          col("n_norm") * col("c_norm")).as("__ccos"), col("c_id"))
+        .groupBy(col("n_id"))
         .agg(max_by(col("c_id"),
           struct(col("__ccos"), (-col("c_id")).as("__tb"))).as("cell"))
-      df.join(cells, s"${prefix}_id")
+      df.join(cells, "n_id")
     }
     // one Lloyd refinement: replace sampled seeds with their cells'
     // mean vectors (element-wise avg via posexplode — deterministic,
@@ -487,21 +401,24 @@ object VectorOps {
     // fed by a corpus-wide crossJoin+agg chain — unpersisted, the
     // whole index build ran twice (measured ~2× of q40's cost; nl
     // rows of d doubles is a trivial cache footprint at any scale)
-    val centroids = graft.Caching.retain(assignCells(c, seeds, "n")
-      .select(col("cell"), posexplode(col("n_v")).as(Seq("pos", "x")))
-      .groupBy(col("cell"), col("pos")).agg(avg(col("x")).as("x"))
-      .groupBy(col("cell"))
+    val refined = graft.Caching.retain(assignCells(c, seeds)
+      .select(g ++ Seq(col("cell"),
+        posexplode(col("n_v")).as(Seq("pos", "x"))): _*)
+      .groupBy(g ++ Seq(col("cell"), col("pos")): _*)
+      .agg(avg(col("x")).as("x"))
+      .groupBy(g :+ col("cell"): _*)
       .agg(transform(sort_array(collect_list(struct(col("pos"), col("x")))),
         s => s.getField("x")).as("c_v"))
-      .select(col("cell").as("c_id"), col("c_v"),
-        norm(col("c_v")).as("c_norm"))
+      .select(g ++ Seq(col("cell").as("c_id"), col("c_v"),
+        norm(col("c_v")).as("c_norm")): _*)
       .persist())
-    centroids.count() // materialize before the two consumers fork
-    val assigned = assignCells(c, centroids, "n")
+    refined.count() // materialize before the two consumers fork
+    val centroids = centroidsHook(refined)
+    val assigned = assignCells(c, centroids)
     // queries probe their np nearest cells: a collect_list + sorted
     // slice per query id (tiny groups — one per query), no window
-    val probes = withNorm(queries, idCol, vecCol, "q")
-      .crossJoin(broadcast(centroids))
+    val probes = shardJoin(
+        withNorm(queries, idCol, vecCol, "q", shardKey: _*), centroids)
       .withColumn("__ccos", try_divide(dot(col("q_v"), col("c_v")),
         col("q_norm") * col("c_norm")))
       .groupBy(col("q_id"))
@@ -512,7 +429,7 @@ object VectorOps {
       .select(col("q_id"), col("q_v"), col("q_norm"),
         explode(transform(col("__cells"), s => s.getField("c_id")))
           .as("cell"))
-    (assigned, probes, centroids)
+    (assigned, probes)
   }
 
   /** IVF-PQ: the FAISS-style composition of the two scale structures.
@@ -528,20 +445,21 @@ object VectorOps {
     * scanned (cells) and bytes per row (codes). Approximate on two
     * axes (cell recall × ADC shortlist recall) → rows-only in the
     * catalog; AnnRecallSpec gates measured recall against
-    * [[bruteForceTopK]]. */
+    * [[bruteForceTopK]].
+    *
+    * `centroidsHook` maps the built centroid table (c_id, c_v, c_norm)
+    * to the one that cell assignment and probes use (identity by
+    * default); q116 freezes it for its oracle
+    * (graft.sources.OracleAux) and searches with what it read back. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       codebook: DataFrame, m: Int, dsub: Int,
       nlist: Int = 0, nprobe: Int = 0, rerank: Int = 16,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      centroidsSink: DataFrame => Unit = _ => ()): DataFrame = {
+      centroidsHook: DataFrame => DataFrame = identity): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val (assigned, probes, centroids) =
-      ivfAssignAndProbes(corpus, queries, nlist, nprobe, idCol, vecCol)
-    // oracle-freeze hook (graft.sources.OracleAux): receives the
-    // PERSISTED centroid relation, so what the sink writes is
-    // bit-identical to what assignment/probes consumed
-    centroidsSink(centroids)
+    val (assigned, probes) = ivfAssignAndProbes(corpus, queries, nlist,
+      nprobe, idCol, vecCol, centroidsHook = centroidsHook)
     // candidate code rows: (q_id, n_id, codes) for members of probed
     // cells — the cell mapping rides `assigned` (skinny join), the
     // probe list is broadcast, and only then do codes attach, so the
@@ -552,37 +470,18 @@ object VectorOps {
       .filter(col("q_id") =!= col("n_id"))
       .join(codes.withColumnRenamed("pq_id", "n_id"), "n_id")
       .select(col("q_id"), col("n_id"), col("codes"))
-    // ADC scoring: per-query LUTs (|Q|·m·k inner products) collected
-    // once and shipped in the task closure, same as the full-scan ADC
-    val cb = collectCodebook(codebook, m)
-    val qRows = normalize(queries, idCol, vecCol)
-      .select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Seq[Double])].collect()
-    val luts = qRows.map { case (qid, qv) =>
-      val q = qv.toArray
-      qid -> Array.tabulate(m) { sub =>
-        cb(sub).map { cv =>
-          var ip = 0.0; var i = 0
-          while (i < dsub) { ip += q(sub * dsub + i) * cv(i); i += 1 }
-          ip
-        }
-      }
-    }.toMap
+    // luts come from normalize(queries), which DROPS zero-norm
+    // queries; the probe relation (withNorm) still carries them, so
+    // the lookup must be total — a missing LUT means "query fell out
+    // of the rankings", not NoSuchElementException
+    val luts = adcLuts(queries, collectCodebook(codebook, m), m, dsub,
+      idCol, vecCol).toMap
     val scored = cand
       .select(col("q_id").cast("long"), col("n_id").cast("long"),
         col("codes"))
       .as[(Long, Long, Seq[Int])]
-      // luts come from normalize(queries), which DROPS zero-norm
-      // queries; the probe relation (withNorm) still carries them, so
-      // the lookup must be total — a missing LUT means "query fell
-      // out of the rankings", not NoSuchElementException
       .mapPartitions(_.flatMap { case (qid, nid, cs) =>
-        luts.get(qid).map { lut =>
-          val c = cs.toArray
-          var adc = 0.0; var s = 0
-          while (s < m) { adc += lut(s)(c(s)); s += 1 }
-          (qid, nid, adc)
-        }
+        luts.get(qid).map(lut => (qid, nid, adc(lut, cs.toArray)))
       })
       .toDF("q_id", "n_id", "adc")
     adcShortlistRerank(scored, corpus, queries, k, rerank, idCol, vecCol)
@@ -631,9 +530,7 @@ object VectorOps {
       .join(sides, "a_id")
       .join(sides.select(col("a_id").as("b_id"), col("a_v").as("b_v"),
         col("a_norm").as("b_norm")), "b_id")
-      .withColumn("cos", graft.Rounding.r6(try_divide(
-        dot(col("a_v"), col("b_v")),
-        col("a_norm") * col("b_norm"))))
+      .withColumn("cos", cosR6("a", "b"))
       .filter(col("cos") >= tau)
       .select(col("a_id"), col("b_id"), col("cos"))
       .distinct()
@@ -706,6 +603,19 @@ object VectorOps {
     GraftFunctions.register(corpus.sparkSession)
     val c = withNorm(spread(corpus), idCol, vecCol, "a")
     val b = withNorm(bench, idCol, vecCol, "b")
+    contaminationCands(c, b, cpHashes, bands, probes)
+      .join(c, "a_id")
+      .join(broadcast(b), "b_id")
+      .withColumn("cos", cosR6("a", "b"))
+      .filter(col("cos") >= tau)
+      .select(col("a_id").as("vec_id"), col("b_id"), col("cos"))
+  }
+
+  /** The candidate stage of [[contaminationPairsLsh]]: distinct
+    * (a_id, b_id) pairs whose corpus base band key equals one of the
+    * broadcast benchmark's probe keys. */
+  private def contaminationCands(c: DataFrame, b: DataFrame, cpHashes: Int,
+      bands: Int, probes: Int): DataFrame = {
     val cKeys = c.select(col("a_id"),
       explode(GraftFunctions.cpKeys(col("a_v"), cpHashes, bands, 1))
         .as("key"))
@@ -714,29 +624,18 @@ object VectorOps {
         .as("key"))
     cKeys.join(broadcast(bKeys), "key")
       .select(col("a_id"), col("b_id")).distinct()
-      .join(c, "a_id")
-      .join(broadcast(b), "b_id")
-      .withColumn("cos", graft.Rounding.r6(try_divide(
-        dot(col("a_v"), col("b_v")), col("a_norm") * col("b_norm"))))
-      .filter(col("cos") >= tau)
-      .select(col("a_id").as("vec_id"), col("b_id"), col("cos"))
   }
 
   /** Distinct candidate-pair count of [[contaminationPairsLsh]]'s
-    * prefilter — public so AnnRecallSpec/tuning can gate the
-    * candidate RATIO (the sub-quadratic property) alongside recall. */
+    * prefilter (the same candidate stage) — public so
+    * AnnRecallSpec/tuning can gate the candidate RATIO (the
+    * sub-quadratic property) alongside recall. */
   def contaminationCandidates(corpus: DataFrame, bench: DataFrame,
       cpHashes: Int = 2, bands: Int = 256, probes: Int = 2,
       idCol: String = "vec_id", vecCol: String = "embedding"): Long = {
     GraftFunctions.register(corpus.sparkSession)
-    val cKeys = corpus.select(col(idCol).as("a_id"),
-      explode(GraftFunctions.cpKeys(toDouble(col(vecCol)), cpHashes, bands,
-        1)).as("key"))
-    val bKeys = bench.select(col(idCol).as("b_id"),
-      explode(GraftFunctions.cpKeys(toDouble(col(vecCol)), cpHashes, bands,
-        probes)).as("key"))
-    cKeys.join(broadcast(bKeys), "key")
-      .select(col("a_id"), col("b_id")).distinct().count()
+    contaminationCands(withNorm(spread(corpus), idCol, vecCol, "a"),
+      withNorm(bench, idCol, vecCol, "b"), cpHashes, bands, probes).count()
   }
 
   /** Per-vector symmetric int8 scalar quantization: scale =
@@ -1037,6 +936,38 @@ object VectorOps {
     }
   }
 
+  /** Per-query ADC lookup tables, lut(sub)(code) = ⟨q_sub, c_v⟩, over
+    * the normalized queries: |Q|·m·k inner products, independent of
+    * n — collected once and shipped in the task closure, like a
+    * broadcast build. [[normalize]] drops a zero-norm query, so it
+    * has no table and falls out of the rankings. */
+  private def adcLuts(queries: DataFrame, cb: Array[Array[Array[Double]]],
+      m: Int, dsub: Int, idCol: String,
+      vecCol: String): Array[(Long, Array[Array[Double]])] = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    normalize(queries, idCol, vecCol)
+      .select(col(idCol).cast("long"), col(vecCol))
+      .as[(Long, Seq[Double])].collect()
+      .map { case (qid, qv) =>
+        val q = qv.toArray
+        qid -> Array.tabulate(m) { sub =>
+          cb(sub).map { cv =>
+            var ip = 0.0; var i = 0
+            while (i < dsub) { ip += q(sub * dsub + i) * cv(i); i += 1 }
+            ip
+          }
+        }
+      }
+  }
+
+  /** ADC score of one code row: the sum of its m table entries. */
+  private def adc(lut: Array[Array[Double]], codes: Array[Int]): Double = {
+    var a = 0.0; var s = 0
+    while (s < lut.length) { a += lut(s)(codes(s)); s += 1 }
+    a
+  }
+
   /** ADC (asymmetric distance) top-k with exact re-ranking: corpus
     * vectors are pre-normalized and PQ-coded ONCE; each query builds
     * an m×k inner-product lookup table against the codebook (m·k
@@ -1066,21 +997,7 @@ object VectorOps {
       while (i < cv.length) { acc += cv(i) * cv(i); i += 1 }
       acc
     })
-    val qRows = normalize(queries, idCol, vecCol)
-      .select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Seq[Double])].collect()
-    // lut(q)(sub)(code) = <q_sub, c_v>
-    val qIds = qRows.map(_._1)
-    val luts = qRows.map { case (_, qv) =>
-      val q = qv.toArray
-      Array.tabulate(m) { sub =>
-        cb(sub).map { cv =>
-          var ip = 0.0; var i = 0
-          while (i < dsub) { ip += q(sub * dsub + i) * cv(i); i += 1 }
-          ip
-        }
-      }
-    }
+    val luts = adcLuts(queries, cb, m, dsub, idCol, vecCol)
     val scored = normalize(corpus, idCol, vecCol)
       .select(col(idCol).cast("long").as("id"), col(vecCol))
       .as[(Long, Seq[Double])]
@@ -1106,12 +1023,8 @@ object VectorOps {
             codeBuf(sub) = bestCode
             sub += 1
           }
-          qIds.indices.iterator.collect {
-            case qi if qIds(qi) != id =>
-              val lut = luts(qi)
-              var adc = 0.0; var s = 0
-              while (s < m) { adc += lut(s)(codeBuf(s)); s += 1 }
-              (qIds(qi), id, adc)
+          luts.iterator.collect {
+            case (qid, lut) if qid != id => (qid, id, adc(lut, codeBuf))
           }
         }
       }
@@ -1129,31 +1042,14 @@ object VectorOps {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val cb = collectCodebook(codebook, m)
-    val qRows = normalize(queries, idCol, vecCol)
-      .select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Seq[Double])].collect()
-    val qIds = qRows.map(_._1)
-    val luts = qRows.map { case (_, qv) =>
-      val q = qv.toArray
-      Array.tabulate(m) { sub =>
-        cb(sub).map { cv =>
-          var ip = 0.0; var i = 0
-          while (i < dsub) { ip += q(sub * dsub + i) * cv(i); i += 1 }
-          ip
-        }
-      }
-    }
+    val luts = adcLuts(queries, collectCodebook(codebook, m), m, dsub,
+      idCol, vecCol)
     val scored = codes.select(col("pq_id").cast("long"), col("codes"))
       .as[(Long, Seq[Int])]
       .mapPartitions(_.flatMap { case (id, cs) =>
         val c = cs.toArray
-        qIds.indices.iterator.collect {
-          case qi if qIds(qi) != id =>
-            val lut = luts(qi)
-            var adc = 0.0; var s = 0
-            while (s < m) { adc += lut(s)(c(s)); s += 1 }
-            (qIds(qi), id, adc)
+        luts.iterator.collect {
+          case (qid, lut) if qid != id => (qid, id, adc(lut, c))
         }
       })
       .toDF("q_id", "n_id", "adc")
@@ -1188,20 +1084,9 @@ object VectorOps {
         explode(transform(col("__sl"), s => s.getField("id"))).as("n_id"))
     val cwn = withNorm(corpus, idCol, vecCol, "b")
     val qwn = withNorm(queries, idCol, vecCol, "q")
-    val topk = graft.ops.TopK.topk(k)
-    cwn.join(broadcast(shortlist), col("b_id") === col("n_id"))
+    rankTopK(cwn.join(broadcast(shortlist), col("b_id") === col("n_id"))
       .join(broadcast(qwn), "q_id")
-      .select(col("q_id"),
-        graft.Rounding.r6(try_divide(dot(col("q_v"), col("b_v")),
-          col("q_norm") * col("b_norm"))).as("cos"),
-        col("n_id"))
-      .filter(col("cos").isNotNull) // zero-norm vector → NULL cos
-      .groupBy(col("q_id"))
-      .agg(topk(col("cos"), col("n_id")).as("__top"))
-      .select(col("q_id"), posexplode(col("__top")).as(Seq("__i", "__s")))
-      .select(col("q_id"), col("__s").getField("id").as("n_id"),
-        col("__s").getField("ord").as("cos"),
-        (col("__i") + 1).cast("int").as("rank"))
+      .select(col("q_id"), cosR6("q", "b").as("cos"), col("n_id")), k)
   }
 
   /** Exact embedding near-dup pairs: all pairs with cosine >= tau.
@@ -1218,9 +1103,7 @@ object VectorOps {
     val a = withNorm(spread(df), idCol, vecCol, "a")
     val b = withNorm(df, idCol, vecCol, "b")
     a.join(broadcast(b), col("a_id") < col("b_id"))
-      .withColumn("cos", graft.Rounding.r6(try_divide(
-        dot(col("a_v"), col("b_v")),
-        col("a_norm") * col("b_norm"))))
+      .withColumn("cos", cosR6("a", "b"))
       .filter(col("cos") >= tau)
       .select(col("a_id"), col("b_id"), col("cos"))
   }
@@ -1343,12 +1226,6 @@ object VectorOps {
       .toDF("q_id", "n_id", "cos")
     // cross-partition merge: exact top-k over ≤ queries·k·partitions
     // candidate rows — one tiny shuffle
-    val topk = graft.ops.TopK.topk(k)
-    cand.groupBy(col("q_id"))
-      .agg(topk(col("cos"), col("n_id")).as("__top"))
-      .select(col("q_id"), posexplode(col("__top")).as(Seq("__i", "__s")))
-      .select(col("q_id"), col("__s").getField("id").as("n_id"),
-        col("__s").getField("ord").as("cos"),
-        (col("__i") + 1).cast("int").as("rank"))
+    rankTopK(cand, k)
   }
 }

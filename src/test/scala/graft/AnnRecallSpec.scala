@@ -158,6 +158,53 @@ class AnnRecallSpec extends AnyFunSuite {
     Caching.releaseAll()
   }
 
+  test("ivfTopKPerGroup recall@3 vs labelFilteredTopK >= 0.7 on sf0.001") {
+    // the per-label IVF index against its exact per-label reference
+    val emb = Tables.embeddings(spark, dir)
+    val queries = emb.filter(col("vec_id") < 10)
+    val exact = pairs(VectorOps.labelFilteredTopK(emb, queries, 3))
+    val ivf = pairs(VectorOps.ivfTopKPerGroup(emb, queries, 3, "label"))
+    val recall = (exact & ivf).size.toDouble / exact.size
+    info(f"per-group IVF recall@3 = $recall%.3f " +
+      f"(${(exact & ivf).size}/${exact.size})")
+    assert(recall >= 0.7, f"per-group IVF recall@3 $recall%.3f below 0.7")
+    Caching.releaseAll()
+  }
+
+  test("ivfTopKPerGroup over a constant group column equals ivfTopK") {
+    // the ungrouped IVF is the one-shard case of the same build
+    val emb = Tables.embeddings(spark, dir)
+    val queries = emb.filter(col("vec_id") < 10)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(col("q_id"), col("rank")).collect().toSeq
+    val plain = rows(VectorOps.ivfTopK(emb, queries, 3))
+    Caching.releaseAll()
+    val one = rows(VectorOps.ivfTopKPerGroup(emb.withColumn("g", lit(7)),
+      queries.withColumn("g", lit(7)), 3, "g"))
+    assert(plain.nonEmpty)
+    assert(one == plain)
+    Caching.releaseAll()
+  }
+
+  test("ivfPqTopK assigns and probes with the centroids its hook returns") {
+    // with a single centroid every row shares one cell and every
+    // query probes it, so the search is the full-scan ADC search; the
+    // built ~sqrt(n)-cell table gives a different answer
+    val emb = Tables.embeddings(spark, dir)
+    val queries = emb.filter(col("vec_id") < 10)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(col("q_id"), col("rank")).collect().toSeq
+    val cb = VectorOps.pqTrain(VectorOps.normalize(emb), 16, 16, 4, 1)
+    val fullScan = rows(VectorOps.pqAdcTopK(emb, queries, 3, cb, 16, 4))
+    val built = rows(VectorOps.ivfPqTopK(emb, queries, 3, cb, 16, 4))
+    Caching.releaseAll()
+    val oneCell = rows(VectorOps.ivfPqTopK(emb, queries, 3, cb, 16, 4,
+      centroidsHook = _.orderBy(col("c_id")).limit(1)))
+    assert(built != fullScan, "fixture too easy: cells changed nothing")
+    assert(oneCell == fullScan)
+    Caching.releaseAll()
+  }
+
   test("ivfPqTopK recall@3 vs bruteForceTopK >= 0.6 on sf0.001") {
     // two stacked approximations (cell probing ~0.83 × ADC shortlist
     // ~0.9 on this near-isotropic fixture) — the gate sits under the

@@ -35,9 +35,18 @@ class RuleSpec extends AnyFunSuite {
       .filter(_.getString(1).trim.split(" ").contains("spark"))
       .map(_.getLong(0)).sorted.toSeq
     assert(withRule == replay)
-    // and the programmatic registration path is active
-    assert(spark.experimental.extraOptimizations
+  }
+
+  test("GraftSession adds no programmatic copy of the injected rule") {
+    // the session's context carries GraftExtensions, which already
+    // injects the rule into the operator-optimization batches
+    assert(!spark.experimental.extraOptimizations
       .contains(graft.plans.TokenContainsPrefilter))
+    val withRule = spark.sessionState.optimizer.batches
+      .filter(_.rules.contains(graft.plans.TokenContainsPrefilter))
+      .map(_.name)
+    assert(withRule.size == 2 && !withRule.contains("User Provided Optimizers"),
+      s"rule runs in: ${withRule.mkString(", ")}")
   }
 
   test("idempotent: one implied conjunct, not one per optimizer pass") {
