@@ -221,38 +221,6 @@ object Graph {
     intra.unionByName(inter)
   }
 
-  /** k-core decomposition PROFILE under a fixed peeling budget:
-    * starting from the undirected edge set, each round removes
-    * every node of degree < k and the edges touching it, emitting
-    * (round, n_nodes, n_edges) for round 0 and after each of
-    * `rounds` peels — the shrinking-core audit (how fast the graph
-    * collapses under peeling measures its cohesion; a graph whose
-    * profile flatlines early HAS a k-core). Each round is one
-    * degree aggregate + two semi-joins on the node key.
-    *
-    * EAGER by design, with per-round `localCheckpoint` lineage
-    * truncation: each round's profile row is a 1-row aggregate
-    * (the bounded-driver-scalar class, q120 pattern) collected as
-    * the round completes, and each round's edge residue is
-    * checkpointed so the NEXT round plans against a flat LogicalRDD
-    * instead of the full join tree. The truncation is what makes
-    * the peel linear in rounds: every alternative was measured at
-    * sf0.1 and grows — the round-r logical plan references round
-    * r-1 three times (two semi-join probes + the degree build), so
-    * an un-truncated tree grows 3^r and each action pays Catalyst
-    * analysis on it regardless of caching (persist-per-round:
-    * 0.9/2.5/3.8/10.6 s per round, AQE on or off; checkpoint:
-    * ~0.9 s flat). The checkpoint blocks (tiny, shrinking edge
-    * subsets) are explicitly released before returning via a
-    * before/after diff of the context's persistent-RDD registry
-    * (safe: the result is a LOCAL relation of `rounds+1` rows, so
-    * nothing can ever recompute through the destroyed lineage; the
-    * diff is op-scoped and this library runs queries sequentially
-    * per session). At web scale the same truncation is what a
-    * 1000-round peel needs anyway — the driver never holds a plan
-    * deeper than one round.
-    *
-    * @param edges undirected (u, v) with u < v, no parallel edges */
   /** Iterated HLL-sketch neighborhood propagation — the ANF /
     * HyperBall loop (Palmer et al. KDD'02; Boldi-Vigna WWW'11) as a
     * reusable operator: round 1 sketches each node's direct
@@ -290,12 +258,11 @@ object Graph {
     *        (`PlanAuditSpec` reads the composed round plan, which
     *        checkpointing would otherwise execute away) */
   def anfSketches(ee: DataFrame, hops: Int, deltaFrom: Int = 4,
-      partitions: Int = 0, checkpointRounds: Boolean = true): DataFrame = {
+      checkpointRounds: Boolean = true): DataFrame = {
     val spark = ee.sparkSession
     graft.functions.GraftFunctions.register(spark)
     import graft.functions.SketchFunctions.{hll4Agg, hll4Union, hll4UnionAgg}
-    val np = if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
+    val np = spark.sessionState.conf.numShufflePartitions
     var cur = ee.groupBy(col("u")).agg(hll4Agg(col("v")).as("sk"))
       .withColumn("skp", lit(null).cast("binary"))
     var h = 2
@@ -320,6 +287,37 @@ object Graph {
     cur.select(col("u"), col("sk"))
   }
 
+  /** k-core decomposition PROFILE under a fixed peeling budget:
+    * starting from the undirected edge set, each round removes
+    * every node of degree < k and the edges touching it, emitting
+    * (round, n_nodes, n_edges) for round 0 and after each of
+    * `rounds` peels — the shrinking-core audit (how fast the graph
+    * collapses under peeling measures its cohesion; a graph whose
+    * profile flatlines early HAS a k-core). Each round is one
+    * degree aggregate + two semi-joins on the node key.
+    *
+    * EAGER by design, with per-round `localCheckpoint` lineage
+    * truncation: each round's profile row is a 1-row aggregate
+    * (the bounded-driver-scalar class, q120 pattern) collected as
+    * the round completes, and each round's edge residue is
+    * checkpointed so the NEXT round plans against a flat LogicalRDD
+    * instead of the full join tree. The truncation is what makes
+    * the peel linear in rounds: every alternative was measured at
+    * sf0.1 and grows — the round-r logical plan references round
+    * r-1 three times (two semi-join probes + the degree build), so
+    * an un-truncated tree grows 3^r and each action pays Catalyst
+    * analysis on it regardless of caching (persist-per-round:
+    * 0.9/2.5/3.8/10.6 s per round, AQE on or off; checkpoint:
+    * ~0.9 s flat). The checkpoint blocks (tiny, shrinking edge
+    * subsets) are explicitly released before returning through a
+    * [[graft.LocalCheckpoints]], which unpersists exactly the RDDs
+    * this call checkpointed (safe: the result is a LOCAL relation of
+    * `rounds+1` rows, so nothing can ever recompute through the
+    * released lineage). At web scale the same truncation is what a
+    * 1000-round peel needs anyway — the driver never holds a plan
+    * deeper than one round.
+    *
+    * @param edges undirected (u, v) with u < v, no parallel edges */
   def kCoreProfile(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._

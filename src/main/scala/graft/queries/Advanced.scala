@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.text.TextOps
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -759,6 +759,175 @@ object Advanced {
       .orderBy(col("user_id"))
   }
 
+  // ---- The co-event graph family (q184, q196, q243, q267, q333,
+  // q346, q356, q365) reads ONE co-occurrence graph: users are nodes,
+  // and two users are neighbours when they share distinct
+  // (event_type, hour) activity buckets. Each relation the family
+  // shares is derived by one helper below, next to the one oracle
+  // CTE that derives the same relation in DuckDB.
+
+  /** The graph's bucketed projection: distinct (event_type, h,
+    * user_id) activity buckets. */
+  private def coEvents(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .select(col("event_type"), date_trunc("hour", col("ts")).as("h"),
+        col("user_id"))
+      .distinct()
+  // MATERIALIZED: every family member reads p twice (the pair
+  // self-join), and DuckDB inlines an unhinted CTE per reference
+  private val coEventsCte =
+    """p AS MATERIALIZED (SELECT DISTINCT event_type,
+         date_trunc('hour', ts) AS h, user_id FROM events)"""
+  // (u, v, c): every user pair u < v with its shared-bucket count
+  private val pairCountsCte =
+    """pc AS MATERIALIZED (SELECT a.user_id u, b.user_id v,
+           CAST(count(*) AS BIGINT) c
+         FROM p a JOIN p b ON a.event_type = b.event_type
+           AND a.h = b.h AND a.user_id < b.user_id GROUP BY 1, 2)"""
+
+  /** Undirected edges (u < v) between users sharing >= 3 buckets,
+    * through the chunked pair machinery of
+    * [[graft.ops.Graph.cooccurEdges]]. */
+  private def support3Edges(p: DataFrame): DataFrame =
+    graft.ops.Graph.cooccurEdges(p, Seq("event_type", "h"), "user_id",
+      minSupport = 3)
+  private val support3Cte =
+    s"""$pairCountsCte,
+       e AS (SELECT u, v FROM pc WHERE c >= 3)"""
+
+  /** SCALE-INVARIANT undirected edges (u < v): pairs whose
+    * shared-bucket count is >= 2× the mean over all pairs (a fixed
+    * absolute support saturates to one giant component as SF grows,
+    * the TESTDATA.md drift lesson). Eagerly `localCheckpoint`ed: the
+    * threshold's and the filter's scans of the pair counts dedup via
+    * exchange reuse inside this ONE materialization, so the pair
+    * expansion runs once, and every consumer (q243's label-prop
+    * rounds, q267's peel, q333's degree aggregate) plans against a
+    * flat LogicalRDD instead of re-analyzing the pair-expansion tree
+    * (measured for q243: 8.6 s → ~4 s at sf0.1). The blocks are
+    * reclaimed by the ContextCleaner once the result is consumed. */
+  private def meanCutEdges(p: DataFrame): DataFrame = {
+    val pc = graft.ops.Graph.cooccurPairCounts(p,
+      Seq("event_type", "h"), "user_id")
+    val thr = pc.agg((lit(2.0)
+      * (sum(col("w")).cast("double") / count(lit(1)))).as("t"))
+    pc.crossJoin(broadcast(thr))
+      .filter(col("w").cast("double") >= col("t"))
+      .select(col("u"), col("v"))
+      .localCheckpoint()
+  }
+  private val meanCutCte =
+    s"""$pairCountsCte,
+       thr AS (SELECT 2.0*avg(c) t FROM pc),
+       e AS MATERIALIZED (SELECT u, v FROM pc, thr WHERE c >= t)"""
+
+  /** Both directions of an undirected edge list, eagerly
+    * `localCheckpoint`ed. The symmetric relation sits under ~10
+    * consumer subtrees (sketch rounds, bitmap builds, audit chains):
+    * AQE exchange reuse dedups their EXECUTION, but Catalyst and AQE
+    * still plan the full replicated pair-expansion tree under each
+    * (measured 2.1 s of driver gap on a 7.9 s q346), and an eager
+    * consumer re-derives it per job. The checkpoint stores plain rows
+    * and cuts the PLAN to a flat LogicalRDD (isolated min-of-2: q346
+    * 7.9 → 6.1 s, q356 7.7 → 6.6 s, q365 9.7 → 7.9 s), where a
+    * persist() adds a columnar materialization barrier and still
+    * carries the full logical subtree through the optimizer (q346:
+    * 9.5 vs 6.3 s). MEMORY_AND_DISK blocks, freed by the
+    * ContextCleaner with the plan. */
+  private def symmetricCheckpointed(e: DataFrame): DataFrame =
+    e.select(col("u"), col("v"))
+      .unionByName(e.select(col("v").as("u"), col("u").as("v")))
+      .localCheckpoint(true)
+  private val symmetricCte =
+    "ee AS (SELECT u, v FROM e UNION ALL SELECT v, u FROM e)"
+
+  /** Scale-aware sampling modulus of the exact audit tiers (the
+    * corpus-adaptive-banding discipline): 1-in-`small` sources at
+    * small fixtures, 1-in-5·`small` once the graph has >= 1000 nodes
+    * and its reach relations saturate. A bounded driver scalar,
+    * recomputed identically by [[auditModulusCte]]. */
+  private def auditModulus(p: DataFrame, small: Int): Int =
+    if (p.select(col("user_id")).distinct().count() >= 1000) 5 * small
+    else small
+  private def auditModulusCte(small: Int): String =
+    s"""m0 AS (SELECT CASE WHEN count(DISTINCT user_id) >= 1000
+                THEN ${5 * small} ELSE $small END AS m FROM p)"""
+
+  /** Exact reach of the SAMPLED sources (u % mod = 0) of the
+    * symmetric edge list `ee`, for hops 2..`hops`: one
+    * (src, bm, n_reach) relation per hop, where n_reach counts the
+    * nodes other than src within that many hops.
+    *
+    * The sample filter applies BEFORE any expansion, so the wedge
+    * join only fans out of the ~1/mod sampled rows (sampled-side ×
+    * deg work, never a hub's full deg²). Reach sets are per-source
+    * Roaring64 bitmaps: hop 2 aggregates the sampled one- and
+    * two-hop rows; each later hop explodes the sources' bitmaps back
+    * to (src, d) rows (|sample|·reach rows), attaches each d's
+    * neighbour bitmap, and ORs per source. The row form shuffled
+    * every expansion row through a distinct keyed by the MIDDLE node
+    * (no map-side collapse: ~22 s of task time across q365's three
+    * rounds at sf0.1); here the multiplicity collapses inside the OR.
+    * src enters the bitmap at hop 3 (src ∈ B(d) for every neighbour d
+    * of src, and a sampled source has one) and STAYS — expanding
+    * through src only re-adds B(src) ⊆ reach₂ — so n_reach is the
+    * cardinality from hop 3 on minus that one member; the hop-2
+    * bitmap never holds src.
+    *
+    * Each hop's relation that a later round reads is checkpointed
+    * (the 3^round plan-replication lesson: un-truncated q365 rounds
+    * read 8.5-9.0 s vs 7.9-8.4 s); the last hop's is not, since only
+    * the caller's one plan reads it. The neighbour bitmaps are
+    * checkpointed when more than one round reads them. They are built
+    * behind an explicit repartition by node: with map-side partial
+    * bitmaps the final merge deserializes and ORs one bitmap per
+    * (node, map partition), and AQE coalesces that KB-sized exchange
+    * to ONE task (measured: a 1.7 s single-task straggler on a 6 s
+    * q356); raw 16-byte edge rows shuffle cheaper. */
+  private[graft] def sampledReach(ee: DataFrame, mod: Int,
+      hops: Int): Seq[DataFrame] = {
+    import graft.functions.BitmapFunctions.{bitmap64Agg, bitmap64Card, bitmap64OrAgg, bitmap64Union, bitmap64Explode}
+    val eeS = ee.filter(col("u") % mod === 0)
+    val two = eeS.as("a").join(ee.as("b"), col("a.v") === col("b.u")
+        && col("a.u") =!= col("b.v"))
+      .select(col("a.u").as("src"), col("b.v").as("dst"))
+    val nb = ee
+      .repartition(ee.sparkSession.sessionState.conf.numShufflePartitions,
+        col("u"))
+      .groupBy(col("u").as("d"))
+      .agg(bitmap64Agg(col("v")).as("nb"))
+    val nbB = if (hops > 3) nb.localCheckpoint(true) else nb
+    def counted(bm: DataFrame, hop: Int) = bm.select(col("src"), col("bm"),
+      (bitmap64Card(col("bm")) - lit(if (hop >= 3) 1L else 0L))
+        .cast("long").as("n_reach"))
+    var cur = eeS.select(col("u").as("src"), col("v").as("dst"))
+      .unionByName(two)
+      .groupBy(col("src")).agg(bitmap64Agg(col("dst")).as("bm"))
+    val out = Seq.newBuilder[DataFrame]
+    for (hop <- 3 to hops) {
+      cur = cur.localCheckpoint(true)
+      out += counted(cur, hop - 1)
+      val nbs = cur.select(col("src"), bitmap64Explode(col("bm")).as("d"))
+        .join(nbB.hint("shuffle_hash"), "d")
+        .groupBy(col("src")).agg(bitmap64OrAgg(col("nb")).as("nbs"))
+      cur = cur.join(nbs, "src")
+        .select(col("src"), bitmap64Union(col("bm"), col("nbs")).as("bm"))
+    }
+    (out += counted(cur, hops)).result()
+  }
+  // the same reach relations in row form: r<h> holds (src, dst) for
+  // every dst ≠ src within h hops of a sampled src
+  private def sampledReachCte(hops: Int): String =
+    ("""ees AS (SELECT u, v FROM ee, m0 WHERE u % m0.m = 0),
+       r2 AS (SELECT a.u AS src, b.v AS dst
+              FROM ees a JOIN ee b ON a.v = b.u WHERE a.u <> b.v
+              UNION SELECT u, v FROM ees)""" +: (3 to hops).map { h =>
+      val r = s"r${h - 1}"
+      s"""r$h AS (SELECT $r.src, ee.v AS dst
+              FROM $r JOIN ee ON $r.dst = ee.u WHERE ee.v <> $r.src
+              UNION SELECT src, dst FROM $r)"""
+    }).mkString(",\n       ")
+
   /** Per-user triangle counts over the co-occurrence graph (edge:
     * two users sharing >= 3 distinct (event_type, hour) activity
     * buckets) — the third graph family member next to PageRank
@@ -774,12 +943,8 @@ object Advanced {
     * DuckDB at fixture scale, and both derivations count each
     * triangle exactly once. */
   val triangleCooccur: QueryDef = QueryDef.sql(
-    """WITH p AS (SELECT DISTINCT event_type, date_trunc('hour', ts) AS h,
-                    user_id FROM events),
-       e AS (SELECT a.user_id AS u, b.user_id AS v
-             FROM p a JOIN p b ON a.event_type = b.event_type
-               AND a.h = b.h AND a.user_id < b.user_id
-             GROUP BY 1, 2 HAVING count(*) >= 3),
+    s"""WITH $coEventsCte,
+       $support3Cte,
        tri AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
                FROM e e1 JOIN e e2 ON e2.u = e1.v
                     JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v),
@@ -788,18 +953,11 @@ object Advanced {
              UNION ALL SELECT c FROM tri)
        SELECT user_id, CAST(count(*) AS BIGINT) AS n_tri
        FROM m GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    val p = Tables.events(s, d)
-      .select(col("event_type"), date_trunc("hour", col("ts")).as("h"),
-        col("user_id"))
-      .distinct()
-    // edge derivation shared with the scale probe
-    // ([[graft.ops.Graph.cooccurEdges]]); NOT persisted — the two
-    // consumers of the edge relation share its aggregate exchange
+    // the edges are NOT checkpointed: triangleCounts' two consumers
+    // of the edge relation share its aggregate exchange
     // (ReusedExchange), same reasoning as pageRank's uncached edge
-    // subplan above.
-    val edges = graft.ops.Graph.cooccurEdges(p,
-      Seq("event_type", "h"), "user_id", minSupport = 3)
-    graft.ops.Graph.triangleCounts(edges)
+    // subplan below
+    graft.ops.Graph.triangleCounts(support3Edges(coEvents(s, d)))
       .orderBy(col("user_id"))
   }
 
@@ -1583,6 +1741,22 @@ object Advanced {
       .orderBy(col("price"), col("p_partkey"))
   }
 
+  // exact 2-hop reach of every node in row form, shared by the q196
+  // and q346 oracles: two = wedge endpoints, reach = 1- or 2-hop
+  // pairs, dg/rc = per-node degree and reach count
+  private val exactReach2Cte =
+    s"""$coEventsCte,
+       $support3Cte,
+       $symmetricCte,
+       two AS (SELECT a.u AS src, b.v AS dst
+               FROM ee a JOIN ee b ON a.v = b.u WHERE a.u <> b.v),
+       reach AS (SELECT u AS src, v AS dst FROM ee
+                 UNION SELECT src, dst FROM two),
+       dg AS (SELECT u AS src, CAST(count(*) AS BIGINT) AS n_direct
+              FROM ee GROUP BY 1),
+       rc AS (SELECT src, CAST(count(*) AS BIGINT) AS n_reach2
+              FROM reach GROUP BY 1)"""
+
   /** 2-hop reachability counts over the co-occurrence graph (same
     * edge derivation as q184 via [[graft.ops.Graph.cooccurEdges]]):
     * per user, the distinct-neighbor degree and the distinct nodes
@@ -1599,40 +1773,10 @@ object Advanced {
     * counts (an approximate variant would take a degree cap or the
     * q184 orientation trick, at the cost of the oracle). */
   val kHopReach: QueryDef = QueryDef.sql(
-    """WITH p AS (SELECT DISTINCT event_type,
-                    date_trunc('hour', ts) AS h, user_id FROM events),
-       e AS (SELECT a.user_id AS u, b.user_id AS v
-             FROM p a JOIN p b ON a.event_type = b.event_type
-               AND a.h = b.h AND a.user_id < b.user_id
-             GROUP BY 1, 2 HAVING count(*) >= 3),
-       ee AS (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
-       two AS (SELECT a.u AS src, b.v AS dst
-               FROM ee a JOIN ee b ON a.v = b.u WHERE a.u <> b.v),
-       reach AS (SELECT u AS src, v AS dst FROM ee
-                 UNION SELECT src, dst FROM two),
-       dg AS (SELECT u AS src, CAST(count(*) AS BIGINT) AS n_direct
-              FROM ee GROUP BY 1),
-       rc AS (SELECT src, CAST(count(*) AS BIGINT) AS n_reach2
-              FROM reach GROUP BY 1)
+    s"""WITH $exactReach2Cte
        SELECT rc.src AS user_id, n_direct, n_reach2
        FROM rc JOIN dg ON dg.src = rc.src ORDER BY 1""") { (s, d) =>
-    val p = Tables.events(s, d)
-      .select(col("event_type"), date_trunc("hour", col("ts")).as("h"),
-        col("user_id"))
-      .distinct()
-    // Checkpointed since r16 (the q346/q356/q365 plan-truncation
-    // pattern). The r12-r15 reason NOT to (a LogicalRDD hid size
-    // estimates and the wedge machinery lost its broadcast — 2.7×
-    // slower) died with the wedge machinery below: the bitmap shape
-    // has no broadcast candidates, and with the checkpoint the edge
-    // pipeline runs exactly once and the composed plan drops from
-    // ~1,700 lines to ~140 (measured equal-or-better at sf0.1:
-    // 3.0-3.8 s vs 3.3 s un-checkpointed, within box noise).
-    val e = graft.ops.Graph.cooccurEdges(p,
-      Seq("event_type", "h"), "user_id", minSupport = 3)
-    val ee = e.select(col("u"), col("v"))
-      .unionByName(e.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint(true)
+    val ee = symmetricCheckpointed(support3Edges(coEvents(s, d)))
     // Exact 2-hop reach via per-node neighbor BITMAPS (r16, guide
     // §2.3/§8 — decide with small payloads): the previous shape
     // materialized the Σdeg² wedge pair stream through the chunked
@@ -1695,44 +1839,10 @@ object Advanced {
     * distincts, far above fixture reach sizes — GraphSpec measures
     * the actual error at two SFs, expected 0). */
   val kHopReachHll: QueryDef = QueryDef.sql(
-    """WITH p AS (SELECT DISTINCT event_type,
-                    date_trunc('hour', ts) AS h, user_id FROM events),
-       e AS (SELECT a.user_id AS u, b.user_id AS v
-             FROM p a JOIN p b ON a.event_type = b.event_type
-               AND a.h = b.h AND a.user_id < b.user_id
-             GROUP BY 1, 2 HAVING count(*) >= 3),
-       ee AS (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
-       two AS (SELECT a.u AS src, b.v AS dst
-               FROM ee a JOIN ee b ON a.v = b.u WHERE a.u <> b.v),
-       reach AS (SELECT u AS src, v AS dst FROM ee
-                 UNION SELECT src, dst FROM two),
-       dg AS (SELECT u AS src, CAST(count(*) AS BIGINT) AS n_direct
-              FROM ee GROUP BY 1),
-       rc AS (SELECT src, CAST(count(*) AS BIGINT) AS n_reach2
-              FROM reach GROUP BY 1)
+    s"""WITH $exactReach2Cte
        SELECT rc.src AS user_id, n_direct, n_reach2, TRUE AS ok
        FROM rc JOIN dg ON dg.src = rc.src ORDER BY 1""") { (s, d) =>
-    val p = Tables.events(s, d)
-      .select(col("event_type"), date_trunc("hour", col("ts")).as("h"),
-        col("user_id"))
-      .distinct()
-    val e = graft.ops.Graph.cooccurEdges(p,
-      Seq("event_type", "h"), "user_id", minSupport = 3)
-    // CHECKPOINTED (r16; replaces the r15 "leave lazy" decision with
-    // a different mechanism than the rejected persist()): the edge
-    // relation is replicated under ~10 consumer subtrees, and while
-    // AQE exchange reuse dedups the EXECUTION, Catalyst/AQE still
-    // plan the full replicated tree — measured 2.1 s of driver gap on
-    // a 7.9 s query. An eager localCheckpoint truncates every
-    // consumer to a flat LogicalRDD (isolated min-of-2: 7.9 → 6.1 s).
-    // Unlike the r15 persist() experiment (9.5 vs 6.3 s — an
-    // InMemoryRelation adds a columnar materialization barrier and
-    // still carries the full logical subtree through the optimizer),
-    // the checkpoint stores plain rows and cuts the PLAN. Blocks are
-    // MEMORY_AND_DISK and freed by the ContextCleaner with the plan.
-    val ee = e.select(col("u"), col("v"))
-      .unionByName(e.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint(true)
+    val ee = symmetricCheckpointed(support3Edges(coEvents(s, d)))
     // sketch tier — the 100 TB path: one sketch per node, one sketch
     // ship per edge, one union per node. Sketches are graft's compact
     // HLL_4 encoding (VERDICT r12 #5): same lgK/estimator as the
@@ -1811,22 +1921,11 @@ object Advanced {
     * hop 3 adds ~nothing there; sf0.001/0.01 grow 41 %/14 % at
     * hop 3 and exercise the iteration for real. */
   val anfReach3: QueryDef = QueryDef.sql(
-    """WITH p AS (SELECT DISTINCT event_type,
-                    date_trunc('hour', ts) AS h, user_id FROM events),
-       m0 AS (SELECT CASE WHEN count(DISTINCT user_id) >= 1000
-                THEN 25 ELSE 5 END AS m FROM p),
-       e AS (SELECT a.user_id AS u, b.user_id AS v
-             FROM p a JOIN p b ON a.event_type = b.event_type
-               AND a.h = b.h AND a.user_id < b.user_id
-             GROUP BY 1, 2 HAVING count(*) >= 3),
-       ee AS (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
-       ees AS (SELECT u, v FROM ee, m0 WHERE u % m0.m = 0),
-       r2 AS (SELECT a.u AS src, b.v AS dst
-              FROM ees a JOIN ee b ON a.v = b.u WHERE a.u <> b.v
-              UNION SELECT u, v FROM ees),
-       r3 AS (SELECT r2.src, ee.v AS dst
-              FROM r2 JOIN ee ON r2.dst = ee.u WHERE ee.v <> r2.src
-              UNION SELECT src, dst FROM r2),
+    s"""WITH $coEventsCte,
+       ${auditModulusCte(5)},
+       $support3Cte,
+       $symmetricCte,
+       ${sampledReachCte(3)},
        d1 AS (SELECT u AS src, CAST(count(*) AS BIGINT) AS n_reach1
               FROM ees GROUP BY 1),
        d2 AS (SELECT src, CAST(count(*) AS BIGINT) AS n_reach2
@@ -1837,26 +1936,9 @@ object Advanced {
               TRUE AS ok1, TRUE AS ok2, TRUE AS ok3
        FROM d1 JOIN d2 ON d1.src = d2.src JOIN d3 ON d1.src = d3.src
        ORDER BY 1""") { (s, d) =>
-    val p = Tables.events(s, d)
-      .select(col("event_type"), date_trunc("hour", col("ts")).as("h"),
-        col("user_id"))
-      .distinct()
-    // scale-aware audit modulus (the corpus-adaptive-banding
-    // discipline): 1-in-5 sources at small fixtures, 1-in-25 once
-    // the graph is dense enough that reach relations saturate —
-    // bounded driver scalar, recomputed identically by the oracle
-    val mod = if (p.select(col("user_id")).distinct().count() >= 1000)
-      25 else 5
-    val e = graft.ops.Graph.cooccurEdges(p,
-      Seq("event_type", "h"), "user_id", minSupport = 3)
-    // eager localCheckpoint — same plan-truncation rationale and
-    // measurement discipline as q346 above (isolated min-of-2:
-    // 7.7 → 6.6 s; the driver was re-planning the replicated
-    // co-occurrence pipeline under every sketch-round and audit-tier
-    // consumer)
-    val ee = e.select(col("u"), col("v"))
-      .unionByName(e.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint(true)
+    val p = coEvents(s, d)
+    val mod = auditModulus(p, 5)
+    val ee = symmetricCheckpointed(support3Edges(p))
     // ---- sketch tier (the scale path): S1 = sketch(N(v)); Sh =
     // S(h-1) ∪ neighbors' S(h-1). Each round is one edge join +
     // repartition-by-node + union agg (the q346 hub-safety shape).
@@ -1878,16 +1960,16 @@ object Advanced {
     // conf-sizing requirement: see the q346 note (ADVICE r12 #3) —
     // partitions must scale with nodes·sketchBytes at deployment
     val np356 = s.sessionState.conf.numShufflePartitions
-    def propagate(prev: org.apache.spark.sql.DataFrame,
+    def propagate(edges: DataFrame, prev: DataFrame,
         skCol: String, outCol: String) =
-      ee.join(prev.select(col("u").as("v"), col(skCol))
+      edges.join(prev.select(col("u").as("v"), col(skCol))
           .hint("shuffle_hash"), "v")
         .repartition(np356, col("u"))
         .groupBy(col("u")).agg(hll4UnionAgg(col(skCol)).as("__nb"))
         .join(prev.hint("shuffle_hash"), "u")
         .withColumn(outCol, hll4Union(col(skCol), col("__nb")))
         .drop("__nb")
-    val s2 = propagate(s1, "sk1", "sk2")
+    val s2 = propagate(ee, s1, "sk1", "sk2")
     // round 3 ships DENSE sk2 sketches (KB each once reach
     // saturates), so it restricts to the sampled output nodes — the
     // only rows this query emits; the all-nodes form is the same
@@ -1902,63 +1984,21 @@ object Advanced {
     // overhead (measured: q356 7.9 → 11.5 s isolated; zipf probe
     // ≤4 hops: +10% shuffle bytes, identical output). Delta lives
     // where it pays — the saturating-depth iteration
-    // (ops/Graph.anfSketches, q365, and the 5-hop probe rows). */
-    val s3 = ee.filter(col("u") % mod === 0)
-      .join(s2.select(col("u").as("v"), col("sk2"))
-        .hint("shuffle_hash"), "v")
-      .repartition(np356, col("u"))
-      .groupBy(col("u")).agg(hll4UnionAgg(col("sk2")).as("__nb"))
-      .join(s2.hint("shuffle_hash"), "u")
-      .withColumn("sk3", hll4Union(col("sk2"), col("__nb")))
+    // (ops/Graph.anfSketches, q365, and the 5-hop probe rows).
+    val s3 = propagate(ee.filter(col("u") % mod === 0), s2, "sk2", "sk3")
     val est = s3.select(col("u").as("src"),
       hll4Estimate(col("sk1")).as("e1"),
       (hll4Estimate(col("sk2")) - 1L).as("e2"),
       (hll4Estimate(col("sk3")) - 1L).as("e3"),
       col("d1"))
-    // ---- exact audit tier, SAMPLED sources filtered BEFORE any
-    // expansion: the wedge join only ever fans out of the ~1/mod
-    // sampled rows (sampled-side × deg work, never a full hub deg²
-    // — the full-graph exact shape lives in q196/q346), and hop 3
-    // is one more edge join over the sampled reach-2 rows
-    // Hop-2 sets become per-source BITMAPS (r16 — the q365 audit
-    // chain, one round shorter): the row-form r3 shuffled every
-    // expansion row through a distinct keyed by the MIDDLE node (no
-    // map-side collapse), here hop 3 explodes each source's reach-2
-    // bitmap, attaches the target's neighbor bitmap, and ORs —
-    // identical sets, multiplicity collapses in the OR. src enters
-    // bm3 via its neighbors' bitmaps (deg ≥ 1 always here), so
-    // n_reach3 = card − 1; bm2 never contains src by construction.
-    import graft.functions.BitmapFunctions.{bitmap64Agg, bitmap64Card, bitmap64OrAgg, bitmap64Union, bitmap64Explode}
-    val eeS = ee.filter(col("u") % mod === 0)
-    val two = eeS.as("a").join(ee.as("b"), col("a.v") === col("b.u")
-        && col("a.u") =!= col("b.v"))
-      .select(col("a.u").as("src"), col("b.v").as("dst"))
-    val bm2 = eeS.select(col("u").as("src"), col("v").as("dst"))
-      .unionByName(two)
-      .groupBy(col("src")).agg(bitmap64Agg(col("dst")).as("bm"))
-      .localCheckpoint(true) // two consumers (n2/n3), eager jobs
-    // explicit repartition-by-node BEFORE the bitmap build: with
-    // map-side partials, the final merge deserializes+ORs one
-    // serialized bitmap per (node, map partition) and AQE coalesces
-    // the KB-sized exchange to ONE task (measured: a 1.7 s single-
-    // task straggler on a 6 s query). Raw 16-byte edge rows shuffle
-    // cheaper than partial bitmaps merge.
-    val nbB = ee.repartition(np356, col("u"))
-      .groupBy(col("u").as("d"))
-      .agg(bitmap64Agg(col("v")).as("nb"))
-    val bm3 = bm2.select(col("src"), bitmap64Explode(col("bm")).as("d"))
-      .join(nbB.hint("shuffle_hash"), "d")
-      .groupBy(col("src")).agg(bitmap64OrAgg(col("nb")).as("nbs"))
-      .join(bm2, "src")
-      .select(col("src"), bitmap64Union(col("bm"), col("nbs")).as("bm"))
-    val n2 = bm2.select(col("src"),
-      bitmap64Card(col("bm")).cast("long").as("n_reach2"))
-    val n3 = bm3.select(col("src"),
-      (bitmap64Card(col("bm")) - lit(1L)).cast("long").as("n_reach3"))
-    val tol = (exact: org.apache.spark.sql.Column) =>
+    // ---- exact audit tier: the sampled bitmap chain, hops 2 and 3
+    // (the full-graph exact shape lives in q196/q346)
+    val Seq(r2, r3) = sampledReach(ee, mod, 3)
+    val tol = (exact: Column) =>
       greatest(lit(1L), (lit(0.05) * exact).cast("long"))
     est.filter(col("src") % mod === 0)
-      .join(n2, "src").join(n3, "src")
+      .join(r2.select(col("src"), col("n_reach").as("n_reach2")), "src")
+      .join(r3.select(col("src"), col("n_reach").as("n_reach3")), "src")
       .select(col("src").as("user_id"),
         col("d1").as("n_reach1"), col("n_reach2"), col("n_reach3"),
         (abs(col("e1") - col("d1")) <= tol(col("d1"))).as("ok1"),
@@ -1985,112 +2025,31 @@ object Advanced {
     * coarser sample keeps its cost comparable), every estimate
     * asserted in-plan within max(1, 5%) of exact. */
   val anfSaturating: QueryDef = QueryDef.sql(
-    """WITH p AS (SELECT DISTINCT event_type,
-                    date_trunc('hour', ts) AS h, user_id FROM events),
-       m0 AS (SELECT CASE WHEN count(DISTINCT user_id) >= 1000
-                THEN 125 ELSE 25 END AS m FROM p),
-       e AS (SELECT a.user_id AS u, b.user_id AS v
-             FROM p a JOIN p b ON a.event_type = b.event_type
-               AND a.h = b.h AND a.user_id < b.user_id
-             GROUP BY 1, 2 HAVING count(*) >= 3),
-       ee AS (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
-       ees AS (SELECT u, v FROM ee, m0 WHERE u % m0.m = 0),
-       r2 AS (SELECT a.u AS src, b.v AS dst
-              FROM ees a JOIN ee b ON a.v = b.u WHERE a.u <> b.v
-              UNION SELECT u, v FROM ees),
-       r3 AS (SELECT r2.src, ee.v AS dst
-              FROM r2 JOIN ee ON r2.dst = ee.u WHERE ee.v <> r2.src
-              UNION SELECT src, dst FROM r2),
-       r4 AS (SELECT r3.src, ee.v AS dst
-              FROM r3 JOIN ee ON r3.dst = ee.u WHERE ee.v <> r3.src
-              UNION SELECT src, dst FROM r3),
-       r5 AS (SELECT r4.src, ee.v AS dst
-              FROM r4 JOIN ee ON r4.dst = ee.u WHERE ee.v <> r4.src
-              UNION SELECT src, dst FROM r4),
+    s"""WITH $coEventsCte,
+       ${auditModulusCte(25)},
+       $support3Cte,
+       $symmetricCte,
+       ${sampledReachCte(5)},
        d5 AS (SELECT src, CAST(count(*) AS BIGINT) AS n_reach5
               FROM r5 GROUP BY 1)
        SELECT src AS user_id, n_reach5, TRUE AS ok5
        FROM d5 ORDER BY 1""") { (s, d) =>
-    val p = Tables.events(s, d)
-      .select(col("event_type"), date_trunc("hour", col("ts")).as("h"),
-        col("user_id"))
-      .distinct()
-    val mod = if (p.select(col("user_id")).distinct().count() >= 1000)
-      125 else 25
-    val e = graft.ops.Graph.cooccurEdges(p,
-      Seq("event_type", "h"), "user_id", minSupport = 3)
-    // MATERIALIZED once — this query's consumers are EAGER
-    // (anfSketches runs hops−1 localCheckpoint round jobs and the
-    // exact-audit loop three more; exchange reuse never spans jobs,
-    // so an un-materialized ee would be re-derived ~8 times).
-    // r15 shipped persist(); r16 switches to an eager localCheckpoint
-    // for the same reason as q346/q356: the persist kept the full
-    // logical subtree in every consumer's plan (driver re-planning),
-    // while the checkpoint truncates it to a flat LogicalRDD
-    // (isolated min-of-2: 9.7 → 7.9 s on the same box).
-    val ee = e.select(col("u"), col("v"))
-      .unionByName(e.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint(true)
+    val p = coEvents(s, d)
+    val mod = auditModulus(p, 25)
+    // materialized once: this query's consumers are EAGER
+    // (anfSketches runs hops−1 checkpointed round jobs and the audit
+    // chain more), and exchange reuse never spans jobs, so an
+    // un-materialized ee would be re-derived ~8 times
+    val ee = symmetricCheckpointed(support3Edges(p))
     import graft.functions.SketchFunctions.hll4Estimate
     // the scale path: GLOBAL 5-round propagation, delta from round 4
     val est = graft.ops.Graph.anfSketches(ee, 5, deltaFrom = 4)
       .filter(col("u") % mod === 0)
       .select(col("u").as("src"),
         (hll4Estimate(col("sk")) - 1L).as("e5"))
-    // exact audit, sampled sources filtered BEFORE any expansion —
-    // BITMAP-CHAINED since r16 (guide §2.3/§8, the q196/q346 bitmap
-    // form iterated): the row-relation rounds shuffled every
-    // expansion row (reach(r) ⋈ ee is keyed by the MIDDLE node, so
-    // duplicate (src,dst) pairs land in different tasks and the
-    // per-round distinct received the full ~3M-row stream at sf0.1,
-    // ~22 s of task time across the three rounds). Here each round
-    // explodes the sampled sources' reach bitmaps back to (src, d)
-    // rows (|S| · reach rows — KBs), attaches each d's neighbor
-    // bitmap, and ORs per source: identical sets, the multiplicity
-    // collapses inside the OR, and the per-round distinct+checkpoint
-    // disappears. Equivalence of the src-exclusion: the SQL rounds
-    // filter v ≠ src, here src enters the bitmap at round 3 (src ∈
-    // B(d) for every neighbor d) and STAYS — harmless, because
-    // expanding through src only re-adds B(src) ⊆ reach₂, so
-    // bm(r) = reach(r) ∪ {src} for every r ≥ 3 and the final count
-    // subtracts the one extra member. Each round's 12-row bitmap
-    // relation is still checkpointed (the 3^round replication lesson
-    // held when re-measured this round: un-truncated audit rounds
-    // read 8.5-9.0 s vs 7.9-8.4 s), but the checkpoint now holds
-    // |sample| bitmap rows, not the exploded reach relation.
-    import graft.functions.BitmapFunctions.{bitmap64Agg, bitmap64Card, bitmap64OrAgg, bitmap64Union, bitmap64Explode}
-    // explicit repartition-by-node before the bitmap build (same
-    // rationale as q356: map-side partial bitmaps turn the final
-    // merge into an AQE-coalesced single task deserializing one
-    // bitmap per (node, map partition); raw edge rows shuffle
-    // cheaper than partials merge)
-    val nbB = ee
-      .repartition(s.sessionState.conf.numShufflePartitions, col("u"))
-      .groupBy(col("u").as("d"))
-      .agg(bitmap64Agg(col("v")).as("nb"))
-      .localCheckpoint(true) // one bitmap per node, reused by 3 rounds
-    val eeS = ee.filter(col("u") % mod === 0)
-    val two = eeS.as("a").join(ee.as("b"), col("a.v") === col("b.u")
-        && col("a.u") =!= col("b.v"))
-      .select(col("a.u").as("src"), col("b.v").as("dst"))
-    var reachBm = eeS.select(col("u").as("src"), col("v").as("dst"))
-      .unionByName(two)
-      .groupBy(col("src")).agg(bitmap64Agg(col("dst")).as("bm"))
-      .localCheckpoint(true)
-    (3 to 5).foreach { _ =>
-      val exp = reachBm
-        .select(col("src"), bitmap64Explode(col("bm")).as("d"))
-        .join(nbB.hint("shuffle_hash"), "d")
-        .groupBy(col("src")).agg(bitmap64OrAgg(col("nb")).as("nbs"))
-      reachBm = reachBm.join(exp, Seq("src"))
-        .select(col("src"),
-          bitmap64Union(col("bm"), col("nbs")).as("bm"))
-        .localCheckpoint(true)
-    }
-    // src ∈ bm from round 3 on (deg ≥ 1 for every sampled source),
-    // so the declared reach count is cardinality − 1
-    val n5 = reachBm.select(col("src"),
-      (bitmap64Card(col("bm")) - lit(1L)).cast("long").as("n_reach5"))
+    // exact audit: the sampled bitmap chain, hops 2..5
+    val n5 = sampledReach(ee, mod, 5).last
+      .select(col("src"), col("n_reach").as("n_reach5"))
     est.join(n5, "src")
       .select(col("src").as("user_id"), col("n_reach5"),
         (abs(col("e5") - col("n_reach5"))
@@ -2247,48 +2206,21 @@ object Advanced {
       s"""l$k AS (
          SELECT c.node, least(c.lbl, coalesce(m.minl, c.lbl)) AS lbl
          FROM l${k - 1} c LEFT JOIN (
-           SELECT ed.u AS node, min(p.lbl) AS minl
-           FROM ed JOIN l${k - 1} p ON p.node = ed.v
+           SELECT ee.u AS node, min(p.lbl) AS minl
+           FROM ee JOIN l${k - 1} p ON p.node = ee.v
            GROUP BY 1) m ON m.node = c.node)"""
     QueryDef.sql(
-      s"""WITH p AS (SELECT DISTINCT event_type,
-             date_trunc('hour', ts) AS h, user_id FROM events),
-         pc AS (SELECT a.user_id u, b.user_id v,
-                 CAST(count(*) AS BIGINT) c
-               FROM p a JOIN p b ON a.event_type = b.event_type
-                 AND a.h = b.h AND a.user_id < b.user_id
-               GROUP BY 1, 2),
-         thr AS (SELECT 2.0*avg(c) t FROM pc),
-         e AS (SELECT u, v FROM pc, thr WHERE c >= t),
-         ed AS (SELECT u, v FROM e UNION ALL SELECT v, u FROM e),
-         n AS (SELECT DISTINCT u AS node FROM ed),
+      s"""WITH $coEventsCte,
+         $meanCutCte,
+         $symmetricCte,
+         n AS (SELECT DISTINCT u AS node FROM ee),
          l0 AS (SELECT node, node AS lbl FROM n),
          ${lpIter(1)}, ${lpIter(2)}, ${lpIter(3)},
          cs AS (SELECT lbl, CAST(count(*) AS BIGINT) csize
                 FROM l3 GROUP BY 1)
          SELECT csize, CAST(count(*) AS BIGINT) n_comms
          FROM cs GROUP BY 1 ORDER BY 1""") { (s, d) =>
-      val p = Tables.events(s, d)
-        .select(col("event_type"),
-          date_trunc("hour", col("ts")).as("h"), col("user_id"))
-        .distinct()
-      val pc = graft.ops.Graph.cooccurPairCounts(p,
-        Seq("event_type", "h"), "user_id")
-      val thr = pc.agg((lit(2.0)
-        * (sum(col("w")).cast("double") / count(lit(1)))).as("t"))
-      // checkpoint the thresholded edge residue (tiny after the
-      // 2×mean cut): inside this ONE materialization thr's and the
-      // filter's scans of pc dedup via exchange reuse, and the three
-      // label-prop iterations below then plan against a flat
-      // LogicalRDD instead of re-analyzing the pair-expansion tree
-      // per iteration (measured 8.6 s → ~4 s at sf0.1 after the
-      // chunked pair rewrite made that tree heavier). The block is
-      // reclaimed by the ContextCleaner once the result is consumed.
-      val e = pc.crossJoin(broadcast(thr))
-        .filter(col("w").cast("double") >= col("t"))
-        .select(col("u"), col("v"))
-        .localCheckpoint()
-      graft.ops.Graph.labelPropagation(e, 3)
+      graft.ops.Graph.labelPropagation(meanCutEdges(coEvents(s, d)), 3)
         .groupBy(col("lbl"))
         .agg(count(lit(1)).cast("long").as("csize"))
         .groupBy(col("csize"))
@@ -2305,13 +2237,15 @@ object Advanced {
     * PROFILE rather than the surviving node list keeps the result
     * non-degenerate at every SF (the sf0.001 graph has no 3-core —
     * that collapse IS the answer). [[graft.ops.Graph.kCoreProfile]]
-    * persists each round's tiny edge residue so the count union
+    * checkpoints each round's tiny edge residue so the count union
     * never re-derives the pair expansion. Oracle: MATERIALIZED CTE
     * peel rounds (without the hint DuckDB inlines the pair join
     * into every round — quadratic re-evaluation). */
   val kCoreProfileQ: QueryDef = {
+    // round 0's edge set is the mean-cut CTE's own `e`
+    def en(i: Int): String = if (i == 0) "e" else s"e$i"
     def peelSql(i: Int): String = {
-      val p = s"e${i - 1}"
+      val p = en(i - 1)
       s"""d$i AS MATERIALIZED (SELECT n, CAST(count(*) AS BIGINT) deg
             FROM (SELECT u AS n FROM $p UNION ALL SELECT v FROM $p)
             GROUP BY 1),
@@ -2322,45 +2256,17 @@ object Advanced {
     def countSql(i: Int): String =
       s"""SELECT CAST($i AS BIGINT) round,
           (SELECT CAST(count(DISTINCT n) AS BIGINT)
-           FROM (SELECT u AS n FROM e$i UNION ALL SELECT v FROM e$i))
-            n_nodes,
-          (SELECT CAST(count(*) AS BIGINT) FROM e$i) n_edges"""
+           FROM (SELECT u AS n FROM ${en(i)} UNION ALL
+                 SELECT v FROM ${en(i)})) n_nodes,
+          (SELECT CAST(count(*) AS BIGINT) FROM ${en(i)}) n_edges"""
     QueryDef.sql(
-      s"""WITH p AS MATERIALIZED (SELECT DISTINCT event_type,
-             date_trunc('hour', ts) AS h, user_id FROM events),
-         pc AS MATERIALIZED (SELECT a.user_id u, b.user_id v,
-             CAST(count(*) AS BIGINT) c
-           FROM p a JOIN p b ON a.event_type = b.event_type
-             AND a.h = b.h AND a.user_id < b.user_id GROUP BY 1, 2),
-         thr AS (SELECT 2.0*avg(c) t FROM pc),
-         e0 AS MATERIALIZED (SELECT u, v FROM pc, thr WHERE c >= t),
+      s"""WITH $coEventsCte,
+         $meanCutCte,
          ${peelSql(1)}, ${peelSql(2)}, ${peelSql(3)}
          ${Seq(0, 1, 2, 3).map(countSql).mkString(
            "SELECT * FROM (", " UNION ALL ", ")")}
          ORDER BY round""") { (s, d) =>
-      val p = Tables.events(s, d)
-        .select(col("event_type"),
-          date_trunc("hour", col("ts")).as("h"), col("user_id"))
-        .distinct()
-      // q243 leaves pc uncached (exchange reuse dedupes it inside
-      // ONE plan); here kCoreProfile's own persist() of the edge set
-      // puts a cache boundary between thr's scan of pc and e0's, so
-      // exchange reuse cannot fire across it — cache pc explicitly
-      // or the pair expansion (the q184 cost class) runs twice
-      // (measured 18.7 s → 7.8 s at sf0.1).
-      val pc = graft.ops.Graph.cooccurPairCounts(p,
-        Seq("event_type", "h"), "user_id").persist()
-      val thr = pc.agg((lit(2.0)
-        * (sum(col("w")).cast("double") / count(lit(1)))).as("t"))
-      val e = pc.crossJoin(broadcast(thr))
-        .filter(col("w").cast("double") >= col("t"))
-        .select(col("u"), col("v"))
-      // kCoreProfile is eager (returns a local relation), so pc's
-      // lifetime ends here — release it in-op instead of leaking
-      // the handle to the session
-      val out = graft.ops.Graph.kCoreProfile(e, 3, 3)
-      pc.unpersist(blocking = false)
-      out
+      graft.ops.Graph.kCoreProfile(meanCutEdges(coEvents(s, d)), 3, 3)
     }
   }
 
@@ -2574,14 +2480,8 @@ object Advanced {
     * plans against a flat LogicalRDD instead of re-deriving the
     * pair expansion. */
   val degreeHistogram: QueryDef = QueryDef.sql(
-    """WITH p AS (SELECT DISTINCT event_type,
-           date_trunc('hour', ts) AS h, user_id FROM events),
-       pc AS (SELECT a.user_id u, b.user_id v,
-           CAST(count(*) AS BIGINT) c
-         FROM p a JOIN p b ON a.event_type = b.event_type
-           AND a.h = b.h AND a.user_id < b.user_id GROUP BY 1, 2),
-       thr AS (SELECT 2.0*avg(c) t FROM pc),
-       e AS (SELECT u, v FROM pc, thr WHERE c >= t),
+    s"""WITH $coEventsCte,
+       $meanCutCte,
        d AS (SELECT n, CAST(count(*) AS BIGINT) deg FROM
              (SELECT u AS n FROM e UNION ALL SELECT v FROM e)
              GROUP BY 1)
@@ -2590,18 +2490,7 @@ object Advanced {
          CAST(min(deg) AS BIGINT) AS min_deg,
          CAST(max(deg) AS BIGINT) AS max_deg
        FROM d GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    val p = Tables.events(s, d)
-      .select(col("event_type"),
-        date_trunc("hour", col("ts")).as("h"), col("user_id"))
-      .distinct()
-    val pc = graft.ops.Graph.cooccurPairCounts(p,
-      Seq("event_type", "h"), "user_id")
-    val thr = pc.agg((lit(2.0)
-      * (sum(col("w")).cast("double") / count(lit(1)))).as("t"))
-    val e = pc.crossJoin(broadcast(thr))
-      .filter(col("w").cast("double") >= col("t"))
-      .select(col("u"), col("v"))
-      .localCheckpoint()
+    val e = meanCutEdges(coEvents(s, d))
     e.select(col("u").as("n"))
       .unionByName(e.select(col("v").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).cast("long").as("deg"))

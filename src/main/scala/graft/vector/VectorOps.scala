@@ -891,36 +891,60 @@ object VectorOps {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val cb = collectCodebook(codebook, m)
-    val c2 = cb.map(_.map { cv =>
+    val enc = new PqEncoder(collectCodebook(codebook, m), dsub)
+    df.select(col(idCol).cast("long").as("id"),
+        toDouble(col(vecCol)).as("v"))
+      .as[(Long, Seq[Double])]
+      .mapPartitions { it =>
+        val codes = new Array[Int](m); val err2 = new Array[Double](m)
+        it.flatMap { case (id, vseq) =>
+          enc.encode(vseq.toArray, codes, err2)
+          (0 until m).iterator.map(sub => (id, sub, codes(sub), err2(sub)))
+        }
+      }
+      .toDF("pq_id", "sub", "code", "err2")
+  }
+
+  /** The one PQ encoder behind [[pqEncodeLocal]] and [[pqAdcTopK]]'s
+    * fused scan: per sub-vector, the code minimizing the expanded
+    * form ‖v‖² + ‖c‖² − 2⟨v, c⟩ (‖c‖² tabled once per codebook).
+    * Ties and non-finite distances resolve as [[pqEncode]]'s
+    * min(struct(d2, code)) does — the lowest code among the smallest
+    * distances, NaN ordered above every number — so a sub-vector
+    * with no finite distance gets code 0 and never an invalid one. */
+  private final class PqEncoder(cb: Array[Array[Array[Double]]],
+      dsub: Int) extends Serializable {
+    private val c2 = cb.map(_.map { cv =>
       var acc = 0.0; var i = 0
       while (i < cv.length) { acc += cv(i) * cv(i); i += 1 }
       acc
     })
-    df.select(col(idCol).cast("long").as("id"),
-        toDouble(col(vecCol)).as("v"))
-      .as[(Long, Seq[Double])]
-      .mapPartitions(_.flatMap { case (id, vseq) =>
-        val v = vseq.toArray
-        (0 until m).iterator.map { sub =>
-          var sv2 = 0.0
-          var i = 0
-          while (i < dsub) { val x = v(sub * dsub + i); sv2 += x * x; i += 1 }
-          var bestCode = -1; var bestD2 = Double.MaxValue
-          val codes = cb(sub)
-          var j = 0
-          while (j < codes.length) {
-            val cv = codes(j)
-            var ip = 0.0; i = 0
-            while (i < dsub) { ip += v(sub * dsub + i) * cv(i); i += 1 }
-            val d2 = sv2 + c2(sub)(j) - 2.0 * ip
-            if (d2 < bestD2) { bestD2 = d2; bestCode = j }
-            j += 1
+
+    /** Encode every sub-vector of `v` into `codes`, with its squared
+      * distance in `err2`. */
+    def encode(v: Array[Double], codes: Array[Int],
+        err2: Array[Double]): Unit = {
+      var sub = 0
+      while (sub < cb.length) {
+        val off = sub * dsub
+        var sv2 = 0.0; var i = 0
+        while (i < dsub) { val x = v(off + i); sv2 += x * x; i += 1 }
+        var bestCode = 0; var bestD2 = Double.NaN
+        val cs = cb(sub); var j = 0
+        while (j < cs.length) {
+          val cv = cs(j)
+          var ip = 0.0; i = 0
+          while (i < dsub) { ip += v(off + i) * cv(i); i += 1 }
+          val d2 = sv2 + c2(sub)(j) - 2.0 * ip
+          if (j == 0 || d2 < bestD2 || (bestD2.isNaN && !d2.isNaN)) {
+            bestD2 = d2; bestCode = j
           }
-          (id, sub, bestCode, bestD2)
+          j += 1
         }
-      })
-      .toDF("pq_id", "sub", "code", "err2")
+        codes(sub) = bestCode; err2(sub) = bestD2
+        sub += 1
+      }
+    }
   }
 
   /** Collect a (sub, code, c_v) codebook into cb(sub)(code) arrays —
@@ -992,37 +1016,15 @@ object VectorOps {
     // query, emitting |Q| scored rows per corpus row. No encode join,
     // no nested-array lambdas, no intermediate relations.
     val cb = collectCodebook(codebook, m)
-    val c2 = cb.map(_.map { cv =>
-      var acc = 0.0; var i = 0
-      while (i < cv.length) { acc += cv(i) * cv(i); i += 1 }
-      acc
-    })
+    val enc = new PqEncoder(cb, dsub)
     val luts = adcLuts(queries, cb, m, dsub, idCol, vecCol)
     val scored = normalize(corpus, idCol, vecCol)
       .select(col(idCol).cast("long").as("id"), col(vecCol))
       .as[(Long, Seq[Double])]
       .mapPartitions { it =>
-        val codeBuf = new Array[Int](m)
+        val codeBuf = new Array[Int](m); val errBuf = new Array[Double](m)
         it.flatMap { case (id, vseq) =>
-          val v = vseq.toArray
-          var sub = 0
-          while (sub < m) {
-            var sv2 = 0.0; var i = 0
-            while (i < dsub) { val x = v(sub * dsub + i); sv2 += x * x
-              i += 1 }
-            var bestCode = 0; var bestD2 = Double.MaxValue
-            val codes = cb(sub); var j = 0
-            while (j < codes.length) {
-              val cv = codes(j)
-              var ip = 0.0; i = 0
-              while (i < dsub) { ip += v(sub * dsub + i) * cv(i); i += 1 }
-              val d2 = sv2 + c2(sub)(j) - 2.0 * ip
-              if (d2 < bestD2) { bestD2 = d2; bestCode = j }
-              j += 1
-            }
-            codeBuf(sub) = bestCode
-            sub += 1
-          }
+          enc.encode(vseq.toArray, codeBuf, errBuf)
           luts.iterator.collect {
             case (qid, lut) if qid != id => (qid, id, adc(lut, codeBuf))
           }

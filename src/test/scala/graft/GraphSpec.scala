@@ -129,6 +129,12 @@ class GraphSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(2))).toMap
       val got = rows.map(r => (r.getLong(0), r.getLong(2))).toMap
       assert(got == exact, s"q346's exact tier diverged from q196 at $sf")
+      // q356's sampled audit chain reaches the same 2-hop sets
+      val sampled = SparkEntry.queries("q356_anf_reach3")(spark, sf)
+        .collect().map(r => (r.getLong(0), r.getLong(2))).toMap
+      assert(sampled.nonEmpty)
+      assert(sampled == exact.view.filterKeys(sampled.contains).toMap,
+        s"q356's sampled n_reach2 diverged from q196 at $sf")
       Caching.releaseAll()
     }
   }
@@ -178,5 +184,44 @@ class GraphSpec extends AnyFunSuite {
     // path component: every node reaches the other 5; triangle: 2
     (1L to 6L).foreach(u => assert(est(u) == 5L, s"path node $u"))
     Seq(10L, 11L, 12L).foreach(u => assert(est(u) == 2L, s"tri $u"))
+  }
+
+  test("sampledReach: the exact bitmap reach chain at hops 2..5 " +
+      "equals a driver-side BFS") {
+    // the same path (diameter 5) plus triangle graph as the
+    // anfSketches case: path reach keeps growing through hop 5 while
+    // the triangle saturates at hop 1
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
+      (10L, 11L), (11L, 12L), (10L, 12L))
+    val e = spark.createDataFrame(edges).toDF("u", "v")
+    val ee = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
+    val adj = (edges ++ edges.map(_.swap)).groupBy(_._1)
+      .view.mapValues(_.map(_._2).toSet).toMap
+    def bfs(src: Long, hops: Int): Set[Long] = {
+      var seen = Set(src); var frontier = Set(src)
+      for (_ <- 1 to hops) {
+        frontier = frontier.flatMap(adj) -- seen; seen ++= frontier
+      }
+      seen - src
+    }
+    import graft.functions.BitmapFunctions.bitmap64Explode
+    for (mod <- Seq(1, 2)) {
+      val chain = graft.queries.Advanced.sampledReach(ee, mod, 5)
+      assert(chain.size == 4, s"mod=$mod")
+      for ((rel, hop) <- chain.zip(2 to 5)) {
+        val expect = adj.keys.filter(_ % mod == 0)
+          .map(u => u -> bfs(u, hop)).toMap
+        val sets = rel
+          .select(col("src"), bitmap64Explode(col("bm")).as("d"))
+          .filter(col("d") =!= col("src")).collect()
+          .groupBy(_.getLong(0))
+          .map { case (u, rs) => u -> rs.map(_.getLong(1)).toSet }
+        assert(sets == expect, s"reach sets at hop $hop, mod=$mod")
+        val counts = rel.select(col("src"), col("n_reach")).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(counts == expect.view.mapValues(_.size.toLong).toMap,
+          s"n_reach at hop $hop, mod=$mod")
+      }
+    }
   }
 }

@@ -40,6 +40,21 @@ class PqSpec extends AnyFunSuite {
     assert(local == decl)
   }
 
+  test("a sub-vector with no finite distance to any code encodes as " +
+      "code 0, as the declarative pqEncode's min(struct) picks") {
+    import spark.implicits._
+    // two sub-vectors of width 2: the first finite, the second NaN —
+    // every distance of the NaN sub-vector is NaN
+    val df = Seq((7L, Seq(0.1f, 0.2f, Float.NaN, 0.5f)))
+      .toDF("vec_id", "embedding")
+    val cb = VectorOps.pqCodebookDeterministic(spark, 2, 4, 2)
+    def codes(enc: org.apache.spark.sql.DataFrame) =
+      enc.collect().map(r => r.getInt(1) -> r.getInt(2)).toMap
+    val local = codes(VectorOps.pqEncodeLocal(df, cb, 2, 2))
+    assert(local(1) == 0, s"NaN sub-vector encoded as ${local(1)}")
+    assert(local == codes(VectorOps.pqEncode(df, cb, 2, 2)))
+  }
+
   test("pqAdcTopKFromCodes (prebuilt index) equals the fused search") {
     val emb = Tables.embeddings(spark, dir)
     val queries = emb.filter(col("vec_id") < 10)
