@@ -38,21 +38,6 @@ object Dedup {
       .groupBy(col("fingerprint"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
-  /** Row-local MinHash signature over pre-hashed shingles
-    * (array<long>): element k = min over shingles of the k-th
-    * arithmetic permutation. Codegen'd tight loop. */
-  def minhashSignature(shingleHashes: Column, numHashes: Int): Column =
-    GraftFunctions.minhash(shingleHashes, numHashes)
-
-  /** LSH banding: split a signature into `bands` equal slices and
-    * hash each; rows sharing any (band index, band hash) cell are
-    * candidate pairs. */
-  def lshBands(sigCol: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => struct(b.as("band"),
-        hash(slice(sigCol, b * lit(rowsPerBand) + lit(1),
-          lit(rowsPerBand))).as("bucket")))
-
   /** Distinct ordered candidate pairs (u < v) from a bucketed
     * (bucketCols, member) projection — every banded/inverted-index
     * candidate generator in this family routes here, which routes to

@@ -466,7 +466,7 @@ case class JaccardHashes(left: Expression, right: Expression)
   * band-bucket values directly (element b = mixed hash of the b-th
   * signature slice), for `posexplode` into (band, bucket) rows.
   *
-  * Why fused rather than `minhashSignature` + a per-band `transform`
+  * Why fused rather than `graft_minhash` + a per-band `transform`
   * lambda: CollapseProject inlines a projected signature column into
   * the banding lambda body, and the signature is then re-evaluated
   * once PER BAND — measured 64× redundant CPU (56 s of CPU on a 3 s
@@ -1171,9 +1171,6 @@ object GraftFunctions {
     call_function(WINNOW, tokens, lit(n), lit(window))
 
   def simhash(hashes: Column): Column = call_function(SIMHASH, hashes)
-
-  def hyperplaneBits(vec: Column, bits: Int): Column =
-    call_function(HYPERPLANE, vec, lit(bits))
 
   def cpKeys(vec: Column, kHashes: Int, bands: Int, probes: Int): Column =
     call_function(CP_KEYS, vec, lit(kHashes), lit(bands), lit(probes))

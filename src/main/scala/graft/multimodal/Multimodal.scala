@@ -363,17 +363,14 @@ object Multimodal {
       new java.io.ByteArrayInputStream(payload)))
     catch { case scala.util.control.NonFatal(_) => None }
 
-  /** [[dHashBmp]] over ANY ImageIO-decodable payload: identical
-    * 9×8 nearest-neighbor sampling math (sx = x·w/9, sy = y·h/8,
-    * blue channel), so on the lossless PNG of a pattern the hash is
-    * bit-identical to the BMP path's — the property that lets the
-    * compressed-image tier reuse q148's analytic oracle unchanged. */
-  def dHashImage(payload: Array[Byte]): Option[Long] =
-    decodeImage(payload).map(dHashDecoded)
-
-  /** [[dHashImage]] over an ALREADY-decoded image — callers that
-    * need both the dimensions and the hash decode once and reuse
-    * the BufferedImage instead of paying the pixel decode twice. */
+  /** [[dHashBmp]] over an image [[decodeImage]] decoded from ANY
+    * ImageIO-decodable payload: identical 9×8 nearest-neighbor
+    * sampling math (sx = x·w/9, sy = y·h/8, blue channel), so on the
+    * lossless PNG of a pattern the hash is bit-identical to the BMP
+    * path's — the property that lets the compressed-image tier reuse
+    * q148's analytic oracle unchanged. Callers that need both the
+    * dimensions and the hash decode once and reuse the
+    * BufferedImage instead of paying the pixel decode twice. */
   def dHashDecoded(img: java.awt.image.BufferedImage): Long = {
       val (w, h) = (img.getWidth, img.getHeight)
       var bits = 0L
@@ -548,12 +545,6 @@ object Multimodal {
       height = 16 + ((payload.lastOption.getOrElse(0: Byte) & 0xFF) % 64),
       histogram = byteHistogram(payload))
 
-  /** Attach an opaque binary payload column (here synthesized from
-    * text — in production this is the raw media bytes column). */
-  def attachPayload(df: DataFrame, idCol: String, srcCol: String): DataFrame =
-    df.select(col(idCol).cast("long").as("doc_id"),
-      encode(col(srcCol), "UTF-8").as("payload"))
-
   /** Batch decode via mapPartitions: one decoder per partition (the
     * pattern that matters with real codecs — init cost amortized,
     * bytes never collected to the driver). */
@@ -565,18 +556,6 @@ object Multimodal {
         // real pipeline: init codec context here, once per partition
         it.map { case (id, bytes) => realDecode(id, bytes) }
       }
-  }
-
-  /** Batch resize stage: every BMP payload resized to (w, h) via
-    * mapPartitions — composes with decodeFeatures downstream. */
-  def resizeStage(payloads: DataFrame, w: Int, h: Int): DataFrame = {
-    val spark = payloads.sparkSession
-    import spark.implicits._
-    payloads.select(col("doc_id").as[Long], col("payload").as[Array[Byte]])
-      .mapPartitions(_.map { case (id, bytes) =>
-        (id, resizeBmp(bytes, w, h))
-      })
-      .toDF("doc_id", "payload")
   }
 
   /** Batch audio feature stage: RMS windows per WAV payload via

@@ -342,7 +342,13 @@ object Graph {
         coalesce(sum(col("deg")), lit(0L))).collect()(0)
       (r.getLong(0), r.getLong(1) / 2)
     }
-    var e = ckpt(edges.select(col("u"), col("v")))
+    // edges that arrive checkpointed (q267's mean-cut edges) are
+    // already a flat, stored relation: a second copy is one more job
+    var e = edges.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD
+          if r.rdd.isCheckpointed => edges.select(col("u"), col("v"))
+      case _ => ckpt(edges.select(col("u"), col("v")))
+    }
     var deg = degOf(e)
     val out = scala.collection.mutable.ArrayBuffer((0L, statsOf(deg)))
     for (r <- 1 to rounds) {

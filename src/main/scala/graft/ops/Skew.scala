@@ -1,33 +1,18 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skew mitigation for hot group keys: two-phase salted aggregation.
+/** Skew mitigation for hot join keys.
   *
-  * A plain `groupBy(key)` sends every row of a hot key to one
-  * reducer; at 100 TB a single skewed key (the null user, the
-  * default zone) stalls the stage. Salting splits each key into
-  * `salts` sub-groups for the partial aggregate — the wide shuffle
-  * carries (key, salt) groups of bounded size — and a second, tiny
-  * aggregate over the per-salt partials restores exact totals.
-  * Works for any algebraic aggregate (sum/count/min/max, and avg as
-  * sum+count); AQE's skew-join handling covers the JOIN side of the
-  * same problem (enabled by default in GraftSession sessions).
+  * A plain equi-join sends every row of a hot key to one reducer; at
+  * 100 TB a single skewed key (the null user, the default zone)
+  * stalls the stage. AQE's skew-join handling (enabled by default in
+  * GraftSession sessions) splits such partitions at runtime;
+  * [[saltedJoin]] fixes the split in the plan when the skew is known
+  * ahead.
   */
 object Skew {
-
-  /** Exact count + sum per key via salted two-phase aggregation. */
-  def saltedCountSum(df: DataFrame, keyCols: Seq[String], valueCol: String,
-      salts: Int = 16): DataFrame = {
-    val keys: Seq[Column] = keyCols.map(col)
-    df.withColumn("__salt", pmod(spark_partition_id()
-        + monotonically_increasing_id(), lit(salts)))
-      .groupBy(keys :+ col("__salt"): _*)
-      .agg(count(lit(1)).as("__n"), sum(col(valueCol)).as("__s"))
-      .groupBy(keys: _*)
-      .agg(sum(col("__n")).as("n"), sum(col("__s")).as("total"))
-  }
 
   /** Exact skew-safe equi-join: the big side salts each row into one
     * of `salts` sub-keys (deterministically, from a unique row id

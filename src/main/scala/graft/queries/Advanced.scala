@@ -798,23 +798,30 @@ object Advanced {
   /** SCALE-INVARIANT undirected edges (u < v): pairs whose
     * shared-bucket count is >= 2× the mean over all pairs (a fixed
     * absolute support saturates to one giant component as SF grows,
-    * the TESTDATA.md drift lesson). Eagerly `localCheckpoint`ed: the
-    * threshold's and the filter's scans of the pair counts dedup via
-    * exchange reuse inside this ONE materialization, so the pair
-    * expansion runs once, and every consumer (q243's label-prop
-    * rounds, q267's peel, q333's degree aggregate) plans against a
-    * flat LogicalRDD instead of re-analyzing the pair-expansion tree
-    * (measured for q243: 8.6 s → ~4 s at sf0.1). The blocks are
+    * the TESTDATA.md drift lesson). Eagerly `localCheckpoint`ed, so
+    * every consumer (q243's label-prop rounds, q267's peel, q333's
+    * degree aggregate) plans against a flat LogicalRDD instead of
+    * re-analyzing the pair-expansion tree (measured for q243: 8.6 s →
+    * ~4 s at sf0.1). The pair counts under it are checkpointed
+    * LAZILY: the threshold's aggregate, the first job that reads
+    * them, stores their blocks, and the filter reads those blocks
+    * instead of aggregating the pair shuffle a second time; they are
+    * released once the edges are stored. The edge blocks are
     * reclaimed by the ContextCleaner once the result is consumed. */
   private def meanCutEdges(p: DataFrame): DataFrame = {
     val pc = graft.ops.Graph.cooccurPairCounts(p,
-      Seq("event_type", "h"), "user_id")
+      Seq("event_type", "h"), "user_id").localCheckpoint(eager = false)
     val thr = pc.agg((lit(2.0)
       * (sum(col("w")).cast("double") / count(lit(1)))).as("t"))
-    pc.crossJoin(broadcast(thr))
+    val e = pc.crossJoin(broadcast(thr))
       .filter(col("w").cast("double") >= col("t"))
       .select(col("u"), col("v"))
       .localCheckpoint()
+    pc.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+    }
+    e
   }
   private val meanCutCte =
     s"""$pairCountsCte,

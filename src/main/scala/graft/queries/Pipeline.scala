@@ -1695,9 +1695,9 @@ object Pipeline {
     * whose availableNow trigger processes the fixture to completion
     * and terminates. Complete output mode makes the final sink state
     * exactly the batch q24 semantics — deterministic and
-    * oracle-expressible. The memory sink is the harness adapter;
-    * production writes go through streamToSink (StreamingSpec covers
-    * parquet). */
+    * oracle-expressible. The memory sink is the harness adapter; a
+    * recoverable production write is a `foreachBatch` append under a
+    * checkpoint (StreamingSpec's lwwUpsert restart case). */
   val streamTumbling: QueryDef = QueryDef.sql(
     """SELECT date_trunc('hour', ts) AS window_start, event_type,
        count(*) AS n, floor((sum(value)) * 1000000 + 0.5) / 1000000 AS total_value
@@ -1790,8 +1790,7 @@ object Pipeline {
   }
 
   /** Streaming ingest dedup against a persisted index — q73's
-    * nightly-batch shape under Structured Streaming (VERDICT-visible
-    * twin of StreamOps.dedupAgainstStaticIndex): the second half of
+    * nightly-batch shape under Structured Streaming: the second half of
     * the corpus arrives as a file stream, every micro-batch is
     * anti-joined against the static fingerprint index of the first
     * half (stream-static joins buffer NO state — the index is
@@ -3268,12 +3267,12 @@ object Pipeline {
       .orderBy(col("doc_id"))
   }
 
-  /** CDC snapshot diff: two corpus snapshots (derived
+  /** CDC snapshot diff: two corpus versions (derived
     * deterministically from `documents` — modulo filters play
     * yesterday/today, a modulo rewrite plays an edit) reconciled by
     * a full-outer join on the key and classified added / removed /
     * changed / unchanged. ONE co-partitioned shuffle per side; with
-    * bucketed snapshots (queries.Bucketing) the exchange disappears
+    * bucketed versions (queries.Bucketing) the exchange disappears
     * entirely — that is the nightly 100 TB reconciliation shape. */
   val snapshotDiff: QueryDef = QueryDef.sql(
     """WITH a AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0),
@@ -3608,7 +3607,7 @@ object Pipeline {
   }
 
   /** ORC source/sink round-trip: the third columnar format next to
-    * parquet (everywhere) and JSONL/CSV (TextSources) — ORC rides
+    * parquet (everywhere) and JSONL/CSV (q128, q172) — ORC rides
     * Spark's native vectorized reader with the same pushdown/pruning
     * machinery, so format choice is an org-standard question, not an
     * engine one. Layout never changes content → oracle is the same
@@ -4859,7 +4858,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
       .orderBy(col("q_id"), col("rank"))
   }
 
-  /** Embedding distribution drift between corpus snapshots — the
+  /** Embedding distribution drift between corpus versions — the
     * vector-tier twin of q91's scalar KS drift: split the corpus
     * into an old/new half (deterministic id boundary), compare
     * per-dimension means and spreads, and flag dimensions whose
@@ -5256,7 +5255,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * keeps ONE (ts, event_id, value) triple per user in the state
     * store, replaced whenever a later (ts, event_id) arrives —
     * bounded state = one row per live key at any scale). The memory
-    * sink collects per-batch snapshots in update mode, so a final
+    * sink collects every batch's updated rows in update mode, so a final
     * batch-side latest-per-user selection canonicalizes the output
     * under ANY micro-batch split (AvailableNow may deliver the file
     * in one batch today and several after a lake re-chunk). */

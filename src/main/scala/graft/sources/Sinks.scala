@@ -90,21 +90,6 @@ object UpsertParquetSink {
     val dir = new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim
     spark.read.parquet(s"$baseDir/$table/$dir")
   }
-
-  /** All retained snapshots, oldest first (snapshot names embed their
-    * write-time millis, so lexicographic ≈ chronological). Every
-    * write keeps the previous snapshot intact — that is what makes
-    * the pointer swap crash-safe — so until a retention sweep deletes
-    * them, history is time-travel-readable for free. */
-  def snapshots(baseDir: String, table: String): Seq[String] =
-    Option(new java.io.File(s"$baseDir/$table").listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("snap_"))
-      .map(_.getName).sorted
-
-  /** Time-travel: read a specific historical snapshot by name. */
-  def readSnapshot(spark: org.apache.spark.sql.SparkSession,
-      baseDir: String, table: String, snapshot: String): DataFrame =
-    spark.read.parquet(s"$baseDir/$table/$snapshot")
 }
 
 /** Hive-layout partitioned parquet sink: rows land in

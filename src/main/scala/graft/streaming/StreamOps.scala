@@ -2,13 +2,13 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 /** Structured Streaming surface of the engine: the same windowed
   * aggregation shapes as the batch catalog (q24_tumbling_window),
-  * run incrementally with watermarked event-time state, plus a
-  * mapGroupsWithState running-count operator.
+  * run incrementally with watermarked event-time state, plus the
+  * arbitrary-state operators (last-write-wins upsert, sessionization,
+  * transformWithState running totals) and one bounded run, [[drain]].
   *
   * The reference is batch-only (SURVEY.md §2.7 — no streaming
   * anywhere in its 373 lines); this module is the extension the
@@ -71,21 +71,6 @@ object StreamOps {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("total_value"))
 
-  /** Sliding-window counts (streaming form of q92): each event
-    * contributes to window/slide overlapping windows; Spark expands
-    * the rows map-side before the keyed aggregation, and the
-    * watermark still bounds state — closed slides evict exactly like
-    * tumbling windows. */
-  def slidingCounts(events: DataFrame, window_ : String = "10 minutes",
-      slide: String = "5 minutes",
-      watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("total_value"))
-
   /** Streaming exactly-once restoration via
     * `dropDuplicatesWithinWatermark`: upstream at-least-once delivery
     * is simulated by re-emitting every other event twice (row-local
@@ -104,24 +89,6 @@ object StreamOps {
       .dropDuplicatesWithinWatermark("event_id")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-
-  /** Arbitrary stateful op: running per-user event count via
-    * mapGroupsWithState (KeyValueGroupedDataset). */
-  def runningUserCounts(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(col("user_id").as[Long], col("value").as[Double])
-      .groupByKey(_._1)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[(Long, Double)],
-         state: GroupState[(Long, Double)]) =>
-          val (n0, v0) = state.getOption.getOrElse((0L, 0.0))
-          var n = n0; var v = v0
-          rows.foreach { r => n += 1; v += r._2 }
-          state.update((n, v))
-          (user, n, v)
-      }.toDF("user_id", "n_events", "total_value")
-  }
 
   /** Running per-user totals via `transformWithState` — Spark 4's
     * arbitrary-state API (StatefulProcessor over typed state
@@ -253,39 +220,6 @@ object StreamOps {
       .toDF("user_id", "session_start_us", "n_events", "duration_min")
   }
 
-  /** Streaming exact dedup: drop duplicate rows by `idCols` with
-    * state bounded by the watermark horizon (the streaming form of
-    * Dedup.exactGroups/keepFirstByKey — duplicates arriving further
-    * apart than the watermark are out of contract, which is what
-    * keeps state finite at 100 TB/day ingest). */
-  def dedupedEvents(events: DataFrame,
-      idCols: Seq[String] = Seq("event_id"),
-      watermark: String = "2 hours"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(idCols)
-
-  /** Stream-static incremental dedup: the streaming form of
-    * graft.dedup.Incremental — every micro-batch of new documents is
-    * anti-joined against the PERSISTED corpus fingerprint index
-    * (a static relation, re-resolved per batch, so an index merged
-    * between batches is visible to the next one), then deduped
-    * within the batch. Stream-static joins need no watermark and
-    * hold no join state: the stream side never buffers, the static
-    * side is planned per micro-batch — which is exactly the
-    * batch-vs-index shape that scales (the index streams past the
-    * day-sized batch; Spark broadcasts whichever side AQE sizes
-    * smaller, and the batch side is the small one by construction).
-    * The trailing `dropDuplicates` catches repeats WITHIN this run;
-    * its state is exactly the set of new fingerprints the run has
-    * admitted — the same set the caller merges into the index at
-    * run end, so "restart after merging" is both the state bound
-    * and the operational contract (the watermark-bounded variant is
-    * [[dedupedEvents]]). */
-  def dedupAgainstStaticIndex(docs: DataFrame, index: DataFrame,
-      idCols: Seq[String] = Seq("fingerprint")): DataFrame =
-    docs.join(index.select(idCols.map(col): _*), idCols, "left_anti")
-      .dropDuplicates(idCols)
-
   /** Stream-stream interval join: pair every left event with the
     * right-side events of the same user that occur within
     * `withinMinutes` AFTER it. Both sides carry watermarks and the
@@ -329,28 +263,6 @@ object StreamOps {
       joinType)
       .select(coalesce(col("l_user"), col("r_user")).as("user_id"),
         col("l_id"), col("r_id"), col("l_ts"), col("r_ts"))
-  }
-
-  /** Stream into any batch [[graft.sources.Sink]] via foreachBatch —
-    * micro-batches append through the same sink abstraction the
-    * batch pipeline uses (the streaming analogue of the reference's
-    * per-table JDBC persistence). */
-  def streamToSink(df: DataFrame, sink: graft.sources.Sink,
-      table: String): StreamingQuery =
-    df.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink.write(batch, table, org.apache.spark.sql.SaveMode.Append)
-      }
-      .start()
-
-  /** Drive a streaming DataFrame to a named in-memory table and wait
-    * for all available input (synchronous local smoke path). */
-  def runToMemory(df: DataFrame, name: String,
-      mode: OutputMode = OutputMode.Complete()): StreamingQuery = {
-    val q = df.writeStream.outputMode(mode)
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q
   }
 
   /** State-partition count sized to a bounded replay's input volume

@@ -194,10 +194,4 @@ object TextOps {
     }
     array_distinct(shin)
   }
-
-  /** Jaccard similarity of two pre-deduplicated string arrays. */
-  def jaccardSets(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b)).cast("double")
-    inter / (size(a) + size(b) - inter)
-  }
 }

@@ -127,21 +127,6 @@ object VectorOps {
       .select(col("q_id"), cosR6("q", "n").as("cos"), col("n_id")), k)
   }
 
-  /** Random-hyperplane LSH signature: `bits` sign bits packed into a
-    * long, computed in one tight codegen loop (graft_hyperplane_bits;
-    * planes are deterministic ±1 components from splitmix64 — no
-    * fitted model, no driver state).
-    *
-    * Regime note: hyperplane sign bits discriminate well only when
-    * near-dups are far from the bulk (per-bit collision 0.86+ at
-    * cos 0.9 vs 0.5 for the bulk). At the harness's tau=0.45 the gap
-    * is 0.65-vs-0.5 and no banding of this family prunes (measured:
-    * tools/lsh_tune.py) — which is why the ANN operators below use
-    * the cross-polytope family instead. Kept for the high-threshold
-    * regime and for SQL users (`graft_hyperplane_bits`). */
-  def lshSignature(vec: Column, bits: Int): Column =
-    GraftFunctions.hyperplaneBits(vec, bits)
-
   /** ANN via cross-polytope LSH (NIPS'15) banding: a vector's band
     * keys come from signed-argmax outcomes of `cpHashes`
     * pseudo-rotations per band (graft_cp_keys, one fused codegen
@@ -193,7 +178,7 @@ object VectorOps {
     * the measured candidate RATIO (candidates / all-pairs) — the
     * property whose silent failure made the round-2 banding an
     * all-pairs join in disguise. */
-  def cpCandidatePairs(df: DataFrame, cpHashes: Int = 2, bands: Int = 128,
+  private[graft] def cpCandidatePairs(df: DataFrame, cpHashes: Int = 2, bands: Int = 128,
       probes: Int = 2,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     GraftFunctions.register(df.sparkSession)

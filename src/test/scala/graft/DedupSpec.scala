@@ -118,29 +118,22 @@ class DedupSpec extends AnyFunSuite {
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L))
   }
 
-  test("building blocks: minhashSignature + lshBands shapes and " +
-      "determinism") {
+  test("minhash over shingle hashes: signature shape and determinism") {
     import graft.functions.GraftFunctions
-    import org.apache.spark.sql.functions.{col, transform => ctransform, xxhash64}
-    val df = docs
+    import org.apache.spark.sql.functions.col
+    val rows = docs
       .select(col("doc_id"),
         GraftFunctions.shingleHashes(
           graft.text.TextOps.tokens(col("text")), 3).as("hs"))
-      .select(col("doc_id"),
-        Dedup.minhashSignature(col("hs"), 32).as("sig"))
-      .select(col("doc_id"), col("sig"),
-        Dedup.lshBands(col("sig"), 8, 4).as("bands"))
-    val rows = df.collect()
+      .select(col("doc_id"), GraftFunctions.minhash(col("hs"), 32).as("sig"))
+      .collect()
     rows.foreach { r =>
       assert(r.getSeq[Long](1).size == 32) // numHashes signature
-      assert(r.getSeq[org.apache.spark.sql.Row](2).size == 8) // bands
     }
-    // docs 1 and 5 are identical → identical signatures and bands
-    val byId = rows.map(r => r.getLong(0) ->
-      (r.getSeq[Long](1), r.getSeq[org.apache.spark.sql.Row](2))).toMap
-    assert(byId(1L)._1 == byId(5L)._1)
-    assert(byId(1L)._2 == byId(5L)._2)
-    assert(byId(1L)._1 != byId(3L)._1) // unrelated docs differ
+    // docs 1 and 5 are identical → identical signatures
+    val byId = rows.map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(byId(1L) == byId(5L))
+    assert(byId(1L) != byId(3L)) // unrelated docs differ
   }
 
   test("keepFirstByKey: lowest order key survives per group") {

@@ -3,7 +3,6 @@ package graft
 import graft.streaming.StreamOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -82,13 +81,10 @@ class EventsEncodingSpec extends AnyFunSuite {
         s"$name: batch loader must normalize ts to TimestampType")
       assert(rowsOf(batchDf) == expected, s"$name: batch rows differ")
 
-      val q = StreamOps.runToMemory(
-        StreamOps.eventsStream(spark, tmp), s"enc_${name.hashCode.abs}",
-        OutputMode.Append())
-      try {
-        val streamed = rowsOf(spark.table(s"enc_${name.hashCode.abs}"))
-        assert(streamed == expected, s"$name: streamed rows differ")
-      } finally q.stop()
+      val streamed = rowsOf(StreamOps.drain(spark, tmp, "append") {
+        StreamOps.eventsStream(spark, tmp)
+      })
+      assert(streamed == expected, s"$name: streamed rows differ")
     }
   }
 

@@ -113,6 +113,28 @@ class GraphSpec extends AnyFunSuite {
       "kCoreProfile leaked persistent RDD blocks")
   }
 
+  test("kCoreProfile stores edges that arrive checkpointed only once") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (1L, 4L),
+      (2L, 4L), (4L, 5L)).toDF("u", "v")
+    val trace = QueryTrace.start(spark.sparkContext)
+    def profile(e: org.apache.spark.sql.DataFrame) = {
+      trace.reset()
+      val rows = Graph.kCoreProfile(e, 3, 2).collect().toSeq
+      trace.flush()
+      (rows, trace.window.jobs)
+    }
+    try {
+      val (lazyRows, lazyJobs) = profile(edges)
+      val (storedRows, storedJobs) = profile(edges.localCheckpoint())
+      assert(storedRows == lazyRows)
+      // the lazy input is copied into a checkpoint (one job); the
+      // checkpointed one is read where it is
+      assert(storedJobs == lazyJobs - 1,
+        s"checkpointed input ran $storedJobs jobs, lazy input $lazyJobs")
+    } finally trace.close()
+  }
+
   test("q346 HLL 2-hop reach: measured relative error vs exact q196 " +
       "at sf0.001 and sf0.01") {
     // the catalog row's in-plan `ok` gate asserts err <= max(1, 5%);

@@ -1,17 +1,17 @@
 package graft
 
 import graft.multimodal.Multimodal
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, encode}
 import org.scalatest.funsuite.AnyFunSuite
 
 class MultimodalSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private lazy val payloads = Multimodal.attachPayload(
+  private lazy val payloads =
     Seq((1L, "hello world of binary payloads"),
-      (2L, "another opaque media blob")).toDF("id", "txt"),
-    "id", "txt")
+      (2L, "another opaque media blob")).toDF("doc_id", "txt")
+      .select(col("doc_id"), encode(col("txt"), "UTF-8").as("payload"))
 
   test("decodeFeatures: deterministic fake decode, correct shape") {
     val f = Multimodal.decodeFeatures(payloads).collect()
@@ -69,11 +69,6 @@ class MultimodalSpec extends AnyFunSuite {
       // nearest-neighbor: dst x samples src x*2
       assert(out(54 + x * 3) == (x * 2 * 16).toByte, s"x=$x")
     }
-    // full stage: resize then decode via mapPartitions
-    val df = Seq((1L, src)).toDF("doc_id", "payload")
-    val f = Multimodal.decodeFeatures(
-      Multimodal.resizeStage(df, 4, 3)).collect()(0)
-    assert((f.width, f.height) == (4, 3))
   }
 
   test("wavRmsWindows: square wave RMS is exactly amp/32768; " +
@@ -354,13 +349,14 @@ class MultimodalSpec extends AnyFunSuite {
     // dHash through the compressed path == dHash through the BMP
     // path on the same pattern — the property the q362 oracle rides
     val bmp = Multimodal.encodeBmpPattern(w, h, seed, invertRow0 = false)
-    assert(Multimodal.dHashImage(png).get == Multimodal.dHashBmp(bmp))
+    def dHash(payload: Array[Byte]) =
+      Multimodal.decodeImage(payload).map(Multimodal.dHashDecoded).get
+    assert(dHash(png) == Multimodal.dHashBmp(bmp))
     // and the inverted-row-0 near-dup plant stays within the q148
     // hamming budget through the compressed codec too
     val pngInv = Multimodal.encodeImagePattern("png", w, h, seed,
       invertRow0 = true)
-    val d = java.lang.Long.bitCount(
-      Multimodal.dHashImage(png).get ^ Multimodal.dHashImage(pngInv).get)
+    val d = java.lang.Long.bitCount(dHash(png) ^ dHash(pngInv))
     assert(d > 0 && d <= 8, s"row-0 inversion flipped $d bits")
   }
 

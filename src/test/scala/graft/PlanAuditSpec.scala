@@ -471,6 +471,38 @@ class PlanAuditSpec extends AnyFunSuite {
         "— the vocab count must stay in-plan")
   }
 
+  test("mean-cut edges aggregate the pair counts ONCE (q333)") {
+    // q243/q267/q333's 2x-mean threshold and their filter both read
+    // the pair counts; one aggregate over the pair-expansion shuffle
+    // serves both (two showed up as two stages each reading the
+    // whole shuffle back)
+    import scala.jdk.CollectionConverters._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString.split("== Initial Plan ==")(0))
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val trace = QueryTrace.start(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries("q333_degree_histogram")(spark, dir).collect()
+      // the execution listener shares the trace's event queue, so the
+      // flush delivers every plan the query ran
+      trace.flush()
+    } finally {
+      spark.listenerManager.unregister(listener)
+      trace.close()
+    }
+    val pairCounts =
+      """HashAggregate\(keys=\[u#\d+L, v#\d+L\], functions=\[count\(1\)\]""".r
+    val n = plans.asScala.toSeq.map(pairCounts.findAllIn(_).length).sum
+    assert(n == 1, s"the pair counts are aggregated $n times")
+  }
+
   test("filter pushdown reaches the parquet scan in q03 and q09") {
     for (q <- Seq("q03_fare_anomalies", "q09_feature_matrix")) {
       val plan = executedPlan(q)

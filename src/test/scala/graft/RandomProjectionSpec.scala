@@ -54,7 +54,7 @@ class RandomProjectionSpec extends AnyFunSuite {
 
   test("signs match graft_hyperplane_bits: same matrix, quantized") {
     val rows = projected(16)
-      .withColumn("bits", GraftFunctions.hyperplaneBits(col("v"), 16))
+      .withColumn("bits", call_function(GraftFunctions.HYPERPLANE, col("v"), lit(16)))
       .select("p", "bits").limit(50).collect()
     rows.foreach { r =>
       val p = r.getSeq[Double](0)

@@ -22,12 +22,6 @@ class TextOpsSpec extends AnyFunSuite {
     assert(rows(1).sorted == Seq("x y x", "y x y")) // dedup of repeats
   }
 
-  test("jaccardSets: exact overlap arithmetic") {
-    val df = Seq((Seq("a", "b", "c"), Seq("b", "c", "d"))).toDF("x", "y")
-      .select(TextOps.jaccardSets(col("x"), col("y")).as("j"))
-    assert(df.collect()(0).getDouble(0) == 0.5) // 2 / 4
-  }
-
   test("fingerprint is engine-portable md5 of normalized text") {
     val df = Seq("  ABC  ").toDF("t")
       .select(TextOps.fingerprint(col("t")).as("f"))

@@ -153,13 +153,13 @@ class VectorExpressionsSpec extends AnyFunSuite {
   test("graft_hyperplane_bits: deterministic, in [0, 2^bits)") {
     val v = randVec(16)
     val df = Seq(Tuple1(v), Tuple1(v)).toDF("v")
-      .select(GraftFunctions.hyperplaneBits(col("v"), 16).as("sig"))
+      .select(call_function(GraftFunctions.HYPERPLANE, col("v"), lit(16)).as("sig"))
     val sigs = df.collect().map(_.getLong(0))
     assert(sigs(0) == sigs(1))
     assert(sigs(0) >= 0L && sigs(0) < (1L << 16))
     // scaling a vector keeps every sign bit (projection sign invariant)
     val scaled = Seq(Tuple1(v.map(_ * 3.0))).toDF("v")
-      .select(GraftFunctions.hyperplaneBits(col("v"), 16).as("sig"))
+      .select(call_function(GraftFunctions.HYPERPLANE, col("v"), lit(16)).as("sig"))
       .collect()(0).getLong(0)
     assert(scaled == sigs(0))
   }

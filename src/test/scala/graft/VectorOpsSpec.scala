@@ -74,15 +74,6 @@ class VectorOpsSpec extends AnyFunSuite {
     assert(got.contains(0L), "the valid query must still rank")
   }
 
-  test("lshSignature is deterministic across evaluations") {
-    val df = Seq((0L, Seq(0.5f, -0.25f, 1f)), (1L, Seq(0.5f, -0.25f, 1f)))
-      .toDF("vec_id", "embedding")
-      .select(VectorOps.lshSignature(
-        VectorOps.toDouble(col("embedding")), 16).as("sig"))
-    val sigs = df.collect().map(_.getLong(0))
-    assert(sigs(0) == sigs(1))
-  }
-
   test("quantizeInt8 round-trip: codes bounded, error <= scale/2/elem") {
     val df = Seq((0L, Seq(0.5f, -1.0f, 0.25f, 0.0f)),
       (1L, Seq(100f, -50f, 25f, 12.5f))).toDF("vec_id", "embedding")
