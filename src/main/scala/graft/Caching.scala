@@ -43,17 +43,19 @@ object Caching {
   def retainedCount: Int = synchronized(handles.size)
 }
 
-/** Eager local checkpoints owned by one query body: [[apply]]
-  * checkpoints a DataFrame and records the RDD behind it, read off
-  * the checkpoint's LogicalRDD leaf (a before/after diff of the
-  * GLOBAL persistent-RDD registry would also catch what a concurrent
-  * thread cached; ADVICE r10), and [[release]] unpersists exactly
-  * those blocks once the body has collected what it needs. */
+/** Local checkpoints owned by one query body: [[apply]]
+  * checkpoints a DataFrame (eagerly unless told otherwise; a lazy one
+  * stores its blocks in the first job that reads it) and records the
+  * RDD behind it, read off the checkpoint's LogicalRDD leaf (a
+  * before/after diff of the GLOBAL persistent-RDD registry would also
+  * catch what a concurrent thread cached; ADVICE r10), and [[release]]
+  * unpersists exactly those blocks once the body has collected what
+  * it needs. */
 final class LocalCheckpoints {
   private val rdds = ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
 
-  def apply(df: DataFrame): DataFrame = {
-    val out = df.localCheckpoint()
+  def apply(df: DataFrame, eager: Boolean = true): DataFrame = {
+    val out = df.localCheckpoint(eager)
     out.queryExecution.analyzed.collectFirst {
       case r: org.apache.spark.sql.execution.LogicalRDD => rdds += r.rdd
     }

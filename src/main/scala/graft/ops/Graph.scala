@@ -317,7 +317,9 @@ object Graph {
     * 1000-round peel needs anyway — the driver never holds a plan
     * deeper than one round.
     *
-    * @param edges undirected (u, v) with u < v, no parallel edges */
+    * @param edges undirected (u, v) with u < v, no parallel edges;
+    *   a flat, materialized relation (q267 passes its checkpointed
+    *   mean-cut edges), read in place, never copied */
   def kCoreProfile(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -342,13 +344,7 @@ object Graph {
         coalesce(sum(col("deg")), lit(0L))).collect()(0)
       (r.getLong(0), r.getLong(1) / 2)
     }
-    // edges that arrive checkpointed (q267's mean-cut edges) are
-    // already a flat, stored relation: a second copy is one more job
-    var e = edges.queryExecution.logical match {
-      case r: org.apache.spark.sql.execution.LogicalRDD
-          if r.rdd.isCheckpointed => edges.select(col("u"), col("v"))
-      case _ => ckpt(edges.select(col("u"), col("v")))
-    }
+    var e = edges.select(col("u"), col("v"))
     var deg = degOf(e)
     val out = scala.collection.mutable.ArrayBuffer((0L, statsOf(deg)))
     for (r <- 1 to rounds) {

@@ -809,18 +809,16 @@ object Advanced {
     * released once the edges are stored. The edge blocks are
     * reclaimed by the ContextCleaner once the result is consumed. */
   private def meanCutEdges(p: DataFrame): DataFrame = {
-    val pc = graft.ops.Graph.cooccurPairCounts(p,
-      Seq("event_type", "h"), "user_id").localCheckpoint(eager = false)
+    val ckpt = new graft.LocalCheckpoints
+    val pc = ckpt(graft.ops.Graph.cooccurPairCounts(p,
+      Seq("event_type", "h"), "user_id"), eager = false)
     val thr = pc.agg((lit(2.0)
       * (sum(col("w")).cast("double") / count(lit(1)))).as("t"))
     val e = pc.crossJoin(broadcast(thr))
       .filter(col("w").cast("double") >= col("t"))
       .select(col("u"), col("v"))
       .localCheckpoint()
-    pc.queryExecution.logical.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false)
-    }
+    ckpt.release()
     e
   }
   private val meanCutCte =

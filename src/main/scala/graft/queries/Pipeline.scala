@@ -3267,12 +3267,12 @@ object Pipeline {
       .orderBy(col("doc_id"))
   }
 
-  /** CDC snapshot diff: two corpus versions (derived
+  /** CDC snapshot diff: two corpus snapshots (derived
     * deterministically from `documents` — modulo filters play
     * yesterday/today, a modulo rewrite plays an edit) reconciled by
     * a full-outer join on the key and classified added / removed /
     * changed / unchanged. ONE co-partitioned shuffle per side; with
-    * bucketed versions (queries.Bucketing) the exchange disappears
+    * bucketed snapshots (queries.Bucketing) the exchange disappears
     * entirely — that is the nightly 100 TB reconciliation shape. */
   val snapshotDiff: QueryDef = QueryDef.sql(
     """WITH a AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0),
@@ -4858,7 +4858,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
       .orderBy(col("q_id"), col("rank"))
   }
 
-  /** Embedding distribution drift between corpus versions — the
+  /** Embedding distribution drift between corpus snapshots — the
     * vector-tier twin of q91's scalar KS drift: split the corpus
     * into an old/new half (deterministic id boundary), compare
     * per-dimension means and spreads, and flag dimensions whose
@@ -5255,7 +5255,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * keeps ONE (ts, event_id, value) triple per user in the state
     * store, replaced whenever a later (ts, event_id) arrives —
     * bounded state = one row per live key at any scale). The memory
-    * sink collects every batch's updated rows in update mode, so a final
+    * sink collects per-batch snapshots in update mode, so a final
     * batch-side latest-per-user selection canonicalizes the output
     * under ANY micro-batch split (AvailableNow may deliver the file
     * in one batch today and several after a lake re-chunk). */

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
 /** JVM-lifetime scratch directories (ADVICE r10): a query that
-  * writes per-PROCESS table versions (q327's merge snapshot dirs) would
+  * writes per-PROCESS table versions (q327's merge snapshots) would
   * otherwise leave one dir per pid in tmp forever. Registered paths
   * are deleted by a shutdown hook when the session's JVM exits.
   *

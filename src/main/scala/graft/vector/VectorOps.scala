@@ -174,8 +174,8 @@ object VectorOps {
   /** Candidate pairs from cross-polytope band keys: (a_id, b_id),
     * a < b, for all pairs where one side's base band key equals any
     * of the other side's probe keys. The shared candidate-generation
-    * stage of [[nearDupPairsLsh]], public so AnnRecallSpec can gate
-    * the measured candidate RATIO (candidates / all-pairs) — the
+    * stage of [[nearDupPairsLsh]], package-private so AnnRecallSpec
+    * can gate the measured candidate RATIO (candidates / all-pairs) — the
     * property whose silent failure made the round-2 banding an
     * all-pairs join in disguise. */
   private[graft] def cpCandidatePairs(df: DataFrame, cpHashes: Int = 2, bands: Int = 128,

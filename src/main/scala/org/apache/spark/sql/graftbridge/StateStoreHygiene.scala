@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.state.StateStore
   *
   * `StateStore.unloadAll()` is `private[sql]`: a terminated
   * availableNow drain leaves its providers registered on the
-  * executor, and the 60 s maintenance tick then snapshot-writes/compacts
+  * executor, and the 60 s maintenance tick then snapshots/compacts
   * those dead stores forever after — across a many-stream run the
   * tick's work grows with every drain (graft measured q153 bimodal
   * 3.6 s vs 10-15 s in full-catalog runs from exactly this).

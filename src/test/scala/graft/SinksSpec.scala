@@ -66,7 +66,7 @@ class SinksSpec extends AnyFunSuite {
     sink.write(Seq((9L, "z")).toDF("k", "v"), "t", SaveMode.Overwrite)
     assert(UpsertParquetSink.read(spark, dir, "t")
       .collect().map(_.getLong(0)).toSeq == Seq(9L))
-    // every prior snapshot stays on disk until vacuumed — pointer swap is
+    // prior snapshots remain on disk until vacuumed — pointer swap is
     // the only mutation, so a reader never sees a half-written merge
     val snaps = new java.io.File(s"$dir/t").listFiles()
       .filter(_.getName.startsWith("snap_"))

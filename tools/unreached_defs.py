@@ -15,14 +15,15 @@ Not reported:
   test hooks and reference implementations that specs measure
   remaining code against.
 
-Run from the repository root:  python3 tools/unreached_defs.py
+Run from anywhere:  python3 tools/unreached_defs.py
 """
 import os
 import re
 import sys
 from collections import Counter
 
-ROOT = os.path.join("src", "main", "scala")
+ROOT = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "src", "main", "scala")
 
 ALLOW = {
     # entry points: JVM mains and SparkEntry's external smoke entry
@@ -33,7 +34,7 @@ ALLOW = {
     # test hooks a remaining spec gate reads
     "retainedCount",            # Caching: persisted-relation release gate
     "registeredDirs",           # ScratchDirs: scratch-dir registry gate
-    "drainCount",               # StreamOps: Bench's streaming-lane gate
+    "drainCount",               # StreamOps: CatalogSpec's drain-count gate
     "fileStats", "overlapping",  # ZOrder: file min/max overlap gates
     "contaminationCandidates",  # VectorOps: q142 candidate-ratio gate
     "cpCandidatePairs",         # VectorOps: q38 candidate-ratio gate
@@ -42,7 +43,8 @@ ALLOW = {
     "languageIdComposed",       # TextOps
 }
 
-DEF = re.compile(r"^\s*((?:(?:(?:private|protected)(?:\[\w+\])?|final|"
+DEF = re.compile(r"^\s*((?:(?:@[\w.]+(?:\([^)]*\))?|"
+                 r"(?:private|protected)(?:\[\w+\])?|final|"
                  r"implicit|override|inline)\s+)*)def\s+([A-Za-z_]\w*)")
 LITERAL = re.compile(r'"""(?:.|\n)*?"""|"(?:\\.|[^"\\\n])*"'
                      r"|'(?:\\.|[^'\\\n])'")
@@ -74,6 +76,9 @@ def strip_comments(text):
 def main():
     files = sorted(os.path.join(d, f) for d, _, fs in os.walk(ROOT)
                    for f in fs if f.endswith(".scala"))
+    if not files:
+        print(f"no .scala files under {ROOT}", file=sys.stderr)
+        return 2
     words, defs = Counter(), []
     for path in files:
         with open(path, encoding="utf-8") as fh:
