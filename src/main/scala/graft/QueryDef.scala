@@ -9,9 +9,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Determinism discipline (SURVEY.md §5/§7.3): every query ends in a
   * total ORDER BY (tie-broken to a unique key prefix) in BOTH the
   * Spark plan and the oracle SQL, every floating aggregate is rounded
-  * to 6 decimals on both sides, and every computed column carries the
-  * same alias on both sides (the driver sorts columns by name before
-  * hashing).
+  * to 6 decimals on both sides — with `Rounding.r6` in the plan and
+  * `Rounding.r6sql` in the oracle, never native `round()` — every
+  * exact sum of doubles is a sum of `Rounding.micros` / `microsSql`
+  * micro-units, and every computed column carries the same alias on
+  * both sides (the driver sorts columns by name before hashing).
   */
 final case class QueryDef(
     fn: (SparkSession, String) => DataFrame,

@@ -17,6 +17,17 @@ object Features {
     * Ref: yellow_taxi_etl.py:68. */
   def hourOf(ts: Column): Column = hour(ts)
 
+  /** Whole days since 1970-01-01 of a timestamp in the session TZ
+    * (GraftSession pins UTC): a LongType column, negative before the
+    * epoch. */
+  def epochDay(ts: Column): Column =
+    call_function("div", unix_micros(date_trunc("day", ts)),
+      lit(86400000000L))
+
+  /** The identical epoch day as DuckDB SQL text. */
+  def epochDaySql(ts: String): String =
+    s"epoch_us(date_trunc('day', $ts)) // 86400000000"
+
   /** Day-of-week 1=Sunday..7=Saturday. Ref: yellow_taxi_etl.py:69. */
   def dowOf(ts: Column): Column = dayofweek(ts)
 

@@ -1,7 +1,9 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.Rounding.{micros, microsSql, r6, r6sql}
 import graft.text.TextOps
+import graft.text.TextOps.tokensSql
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -13,8 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Advanced {
 
-  private def r6(c: Column): Column = graft.Rounding.r6(c)
-
   /** Rolling 1-hour aggregate per user over event time — a RANGE
     * frame (value-based, peers share the frame), not a ROWS frame:
     * for each event, the count and value-sum of that user's events
@@ -24,11 +24,11 @@ object Advanced {
     * is keyed on exact integer microseconds so both engines bound
     * it identically. */
   val rollingHour: QueryDef = QueryDef.sql(
-    """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us, value
+    s"""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us, value
          FROM events)
        SELECT event_id, user_id,
               CAST(count(*) OVER w AS BIGINT) AS n_1h,
-              floor((sum(value) OVER w) * 1000000 + 0.5) / 1000000 AS sum_1h
+              ${r6sql("sum(value) OVER w")} AS sum_1h
        FROM e
        WINDOW w AS (PARTITION BY user_id ORDER BY us
                     RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
@@ -106,13 +106,13 @@ object Advanced {
     * Complements q76 (which ENFORCES a budget); this query PLANS
     * one. */
   val mixtureWeights: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT source, count(*) AS n_docs,
-             sum(len(string_split(trim(text), ' '))) AS toks
+    s"""WITH t AS (SELECT source, count(*) AS n_docs,
+             sum(len(${tokensSql("text")})) AS toks
            FROM documents GROUP BY 1),
        z AS (SELECT sum(sqrt(toks)) AS z FROM t)
        SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
               CAST(toks AS BIGINT) AS tokens,
-              floor((sqrt(toks) / z) * 1000000 + 0.5) / 1000000 AS weight,
+              ${r6sql("sqrt(toks) / z")} AS weight,
               CAST(floor((sqrt(toks) / z) * 100000 + 0.5) AS BIGINT) AS alloc
        FROM t, z ORDER BY source""") { (s, d) =>
     val t = Tables.documents(s, d)
@@ -136,9 +136,9 @@ object Advanced {
     * formulation, so this row proves the two agree exactly
     * (ties broken ord DESC, id ASC on both sides). */
   val groupedTopK: QueryDef = QueryDef.sql(
-    """SELECT CAST(c_nationkey AS BIGINT) AS nationkey,
+    s"""SELECT CAST(c_nationkey AS BIGINT) AS nationkey,
               CAST(rk AS BIGINT) AS rank, c_custkey AS custkey,
-              floor((c_acctbal) * 1000000 + 0.5) / 1000000 AS acctbal
+              ${r6sql("c_acctbal")} AS acctbal
        FROM (SELECT c_nationkey, c_custkey, c_acctbal,
                row_number() OVER (PARTITION BY c_nationkey
                  ORDER BY c_acctbal DESC, c_custkey) AS rk
@@ -167,7 +167,7 @@ object Advanced {
     * double casts performed identically on both engines, so even the
     * argmax tie filter (`diff = dmax`) is portable. */
   val ksDrift: QueryDef = QueryDef.sql(
-    """WITH e AS (SELECT value,
+    s"""WITH e AS (SELECT value,
              CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS ia
            FROM events WHERE event_type IN ('click', 'view')),
        g AS (SELECT value, sum(ia) AS na, sum(1 - ia) AS nb
@@ -182,7 +182,7 @@ object Advanced {
              FROM c, t),
        m AS (SELECT max(diff) AS dmax FROM d)
        SELECT CAST(ta AS BIGINT) AS n_click, CAST(tb AS BIGINT) AS n_view,
-              floor((dmax) * 1000000 + 0.5) / 1000000 AS d_stat,
+              ${r6sql("dmax")} AS d_stat,
               min(value) AS ks_at
        FROM d, m, t WHERE diff = dmax GROUP BY 1, 2, 3""") { (s, d) =>
     val e = Tables.events(s, d)
@@ -217,14 +217,14 @@ object Advanced {
     * (window, event_type); epoch-aligned starts keep the oracle a
     * pure floor-arithmetic UNION ALL. */
   val slidingWindow: QueryDef = QueryDef.sql(
-    """WITH e AS (SELECT epoch_us(ts) AS us, event_type, value FROM events),
+    s"""WITH e AS (SELECT epoch_us(ts) AS us, event_type, value FROM events),
        x AS (SELECT (us // 300000000) * 300000000 AS w, event_type, value
                FROM e
              UNION ALL
              SELECT (us // 300000000) * 300000000 - 300000000, event_type,
                value FROM e)
        SELECT w AS w_start_us, event_type, count(*) AS n,
-              floor((sum(value)) * 1000000 + 0.5) / 1000000 AS total_value
+              ${r6sql("sum(value)")} AS total_value
        FROM x GROUP BY 1, 2 ORDER BY 1, 2""") { (s, d) =>
     Tables.events(s, d)
       .groupBy(window(col("ts"), "10 minutes", "5 minutes"),
@@ -242,13 +242,13 @@ object Advanced {
     * vote count then the smaller label via one orderable-struct
     * max — no window over the corpus anywhere. */
   val knnClassify: QueryDef = QueryDef.sql(
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                   FROM embeddings),
        q AS (SELECT vec_id AS q_id, v AS q_v FROM e WHERE vec_id < 50),
        p AS (SELECT q_id, e.vec_id AS n_id,
-               floor((list_dot_product(q_v, e.v)
+               ${r6sql("""list_dot_product(q_v, e.v)
                  / (sqrt(list_dot_product(q_v, q_v))
-                    * sqrt(list_dot_product(e.v, e.v)))) * 1000000 + 0.5) / 1000000 AS cos
+                    * sqrt(list_dot_product(e.v, e.v)))""")} AS cos
              FROM q JOIN e ON e.vec_id <> q_id),
        r AS (SELECT q_id, n_id,
                row_number() OVER (PARTITION BY q_id
@@ -327,8 +327,8 @@ object Advanced {
     * doc×token shuffle); the oracle recomputes it relationally with
     * a list-ordered sum so the float fold order matches. */
   val tokenEntropyQ: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id,
-             unnest(string_split(trim(text), ' ')) AS tok
+    s"""WITH t AS (SELECT doc_id,
+             unnest(${tokensSql("text")}) AS tok
            FROM documents),
        c AS (SELECT doc_id, tok, count(*) AS c FROM t GROUP BY 1, 2),
        e AS (SELECT doc_id,
@@ -337,8 +337,8 @@ object Advanced {
                sum(c) AS n
              FROM c GROUP BY 1)
        SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
-              floor((ln(CAST(n AS DOUBLE)) - s / CAST(n AS DOUBLE))
-                * 1000000 + 0.5) / 1000000 AS entropy
+              ${r6sql("ln(CAST(n AS DOUBLE)) - s / CAST(n AS DOUBLE)")}
+                AS entropy
        FROM e ORDER BY doc_id""") { (s, d) =>
     Tables.documents(s, d)
       .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
@@ -355,7 +355,7 @@ object Advanced {
     * partial-aggregating sketch-free exact agg over bounded
     * groups). */
   val madOutliers: QueryDef = QueryDef.sql(
-    """WITH m AS (SELECT event_type, quantile_cont(value, 0.5) AS med
+    s"""WITH m AS (SELECT event_type, quantile_cont(value, 0.5) AS med
              FROM events GROUP BY 1),
        d AS (SELECT e.event_type, value, med, abs(value - med) AS dev
              FROM events e JOIN m USING (event_type)),
@@ -363,8 +363,8 @@ object Advanced {
              FROM d GROUP BY 1)
        SELECT d.event_type, count(*) AS n,
               count(*) FILTER (WHERE dev > 3 * mad) AS n_outliers,
-              floor((max(med)) * 1000000 + 0.5) / 1000000 AS median,
-              floor((max(mad)) * 1000000 + 0.5) / 1000000 AS mad
+              ${r6sql("max(med)")} AS median,
+              ${r6sql("max(mad)")} AS mad
        FROM d JOIN s USING (event_type) GROUP BY 1 ORDER BY 1""") { (s, d) =>
     val ev = Tables.events(s, d).select(col("event_type"), col("value"))
     val med = ev.groupBy(col("event_type"))
@@ -421,7 +421,7 @@ object Advanced {
     * ranks), tie-broken by the bigram text. Global top-20 plans
     * TakeOrderedAndProject, not a full sort. */
   val pmiCollocations: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents),
        w AS (SELECT unnest(toks) AS tok FROM t),
        uni AS (SELECT tok, count(*) AS c1 FROM w GROUP BY 1),
@@ -434,9 +434,9 @@ object Advanced {
               FROM x GROUP BY 1, 2),
        btot AS (SELECT CAST(sum(c2) AS DOUBLE) AS bt FROM bc),
        p AS (SELECT w1 || ' ' || w2 AS bg, c2,
-               floor((ln(CAST(c2 AS DOUBLE)) + 2.0 * ln(n) - ln(bt)
-                 - ln(CAST(a.c1 AS DOUBLE)) - ln(CAST(b.c1 AS DOUBLE)))
-                 * 1000000 + 0.5) / 1000000 AS pmi
+               ${r6sql("""ln(CAST(c2 AS DOUBLE)) + 2.0 * ln(n) - ln(bt)
+                 - ln(CAST(a.c1 AS DOUBLE)) - ln(CAST(b.c1 AS DOUBLE))""")}
+                 AS pmi
              FROM bc JOIN uni a ON bc.w1 = a.tok
                      JOIN uni b ON bc.w2 = b.tok, tot, btot
              WHERE c2 >= 5),
@@ -481,7 +481,7 @@ object Advanced {
     * exact integer marginal products cast to double identically on
     * both engines. */
   val chiSquare: QueryDef = QueryDef.sql(
-    """WITH o AS (SELECT event_type AS et, CAST(hour(ts) AS INTEGER) AS hr,
+    s"""WITH o AS (SELECT event_type AS et, CAST(hour(ts) AS INTEGER) AS hr,
              count(*) AS obs
            FROM events GROUP BY 1, 2),
        r AS (SELECT et, sum(obs) AS rt FROM o GROUP BY 1),
@@ -493,9 +493,8 @@ object Advanced {
              FROM o JOIN r USING (et) JOIN c USING (hr), n)
        SELECT CAST((SELECT n FROM n) AS BIGINT) AS n,
               CAST((SELECT (nr - 1) * (nc - 1) FROM n) AS BIGINT) AS dof,
-              floor((sum((CAST(obs AS DOUBLE) - exp)
-                * (CAST(obs AS DOUBLE) - exp) / exp)) * 1000000 + 0.5)
-                / 1000000 AS chi2
+              ${r6sql("""sum((CAST(obs AS DOUBLE) - exp)
+                * (CAST(obs AS DOUBLE) - exp) / exp)""")} AS chi2
        FROM t""") { (s, d) =>
     val o = Tables.events(s, d)
       .groupBy(col("event_type").as("et"),
@@ -522,33 +521,33 @@ object Advanced {
     * `stack` so adding a column adds zero jobs. The Deequ-style rule
     * audit (q80) asserts; this row describes. */
   val columnProfile: QueryDef = QueryDef.sql(
-    """SELECT 'l_discount' AS column_name, count(*) AS n,
+    s"""SELECT 'l_discount' AS column_name, count(*) AS n,
               count(*) - count(l_discount) AS n_null,
               count(DISTINCT l_discount) AS n_distinct,
-              floor((min(l_discount)) * 1000000 + 0.5) / 1000000 AS min_v,
-              floor((max(l_discount)) * 1000000 + 0.5) / 1000000 AS max_v,
-              floor((avg(l_discount)) * 1000000 + 0.5) / 1000000 AS avg_v
+              ${r6sql("min(l_discount)")} AS min_v,
+              ${r6sql("max(l_discount)")} AS max_v,
+              ${r6sql("avg(l_discount)")} AS avg_v
        FROM lineitem
        UNION ALL
        SELECT 'l_extendedprice', count(*), count(*) - count(l_extendedprice),
               count(DISTINCT l_extendedprice),
-              floor((min(l_extendedprice)) * 1000000 + 0.5) / 1000000,
-              floor((max(l_extendedprice)) * 1000000 + 0.5) / 1000000,
-              floor((avg(l_extendedprice)) * 1000000 + 0.5) / 1000000
+              ${r6sql("min(l_extendedprice)")},
+              ${r6sql("max(l_extendedprice)")},
+              ${r6sql("avg(l_extendedprice)")}
        FROM lineitem
        UNION ALL
        SELECT 'l_quantity', count(*), count(*) - count(l_quantity),
               count(DISTINCT l_quantity),
-              floor((min(l_quantity)) * 1000000 + 0.5) / 1000000,
-              floor((max(l_quantity)) * 1000000 + 0.5) / 1000000,
-              floor((avg(l_quantity)) * 1000000 + 0.5) / 1000000
+              ${r6sql("min(l_quantity)")},
+              ${r6sql("max(l_quantity)")},
+              ${r6sql("avg(l_quantity)")}
        FROM lineitem
        UNION ALL
        SELECT 'l_tax', count(*), count(*) - count(l_tax),
               count(DISTINCT l_tax),
-              floor((min(l_tax)) * 1000000 + 0.5) / 1000000,
-              floor((max(l_tax)) * 1000000 + 0.5) / 1000000,
-              floor((avg(l_tax)) * 1000000 + 0.5) / 1000000
+              ${r6sql("min(l_tax)")},
+              ${r6sql("max(l_tax)")},
+              ${r6sql("avg(l_tax)")}
        FROM lineitem
        ORDER BY column_name""") { (s, d) =>
     val cols = Seq("l_discount", "l_extendedprice", "l_quantity", "l_tax")
@@ -585,12 +584,12 @@ object Advanced {
     * event values here); at unbounded cardinality q64's sketch is
     * the scale path, and having BOTH rows documents the tradeoff. */
   val exactQuantiles: QueryDef = QueryDef.sql(
-    """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         floor(quantile_cont(value, 0.25) * 1000000 + 0.5) / 1000000
+    s"""SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+         ${r6sql("quantile_cont(value, 0.25)")}
            AS q25,
-         floor(quantile_cont(value, 0.50) * 1000000 + 0.5) / 1000000
+         ${r6sql("quantile_cont(value, 0.50)")}
            AS q50,
-         floor(quantile_cont(value, 0.90) * 1000000 + 0.5) / 1000000
+         ${r6sql("quantile_cont(value, 0.90)")}
            AS q90
        FROM events GROUP BY 1 ORDER BY 1""") { (s, d) =>
     Tables.events(s, d)
@@ -654,7 +653,7 @@ object Advanced {
     * accumulator, observed peak 518.51 vs the hand-fold's 333.03;
     * the list encoding reproduces the hand fold exactly.) */
   val cusumDrift: QueryDef = QueryDef.sql(
-    """WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_id, value
+    s"""WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_id, value
          FROM events),
        g AS (SELECT user_id,
                list_transform(list(struct_pack(us := us, eid := event_id,
@@ -670,8 +669,8 @@ object Advanced {
                       acc[1] + (x[1] - 55.0::DOUBLE)))]) AS st
              FROM g)
        SELECT user_id,
-         floor(st[1] * 1000000 + 0.5) / 1000000 AS cusum_end,
-         floor(st[2] * 1000000 + 0.5) / 1000000 AS cusum_peak,
+         ${r6sql("st[1]")} AS cusum_end,
+         ${r6sql("st[2]")} AS cusum_peak,
          st[2] > 500.0::DOUBLE AS alarm
        FROM f ORDER BY user_id""") { (s, d) =>
     val step: (Column, Column) => Column = (acc, x) =>
@@ -707,7 +706,7 @@ object Advanced {
     * same tree shape on both engines; list-encoded oracle state per
     * the q189 DuckDB struct-accumulator note). */
   val holtForecast: QueryDef = QueryDef.sql(
-    """WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_id, value
+    s"""WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_id, value
          FROM events),
        g AS (SELECT user_id,
                list_transform(list(struct_pack(us := us, eid := event_id,
@@ -726,9 +725,9 @@ object Advanced {
                       + 0.9::DOUBLE * acc[2]]) AS st
              FROM g WHERE len(vals) >= 3)
        SELECT user_id, CAST(n AS INTEGER) AS n_obs,
-         floor(st[1] * 1000000 + 0.5) / 1000000 AS level_end,
-         floor(st[2] * 1000000 + 0.5) / 1000000 AS trend_end,
-         floor((st[1] + st[2]) * 1000000 + 0.5) / 1000000 AS forecast_1
+         ${r6sql("st[1]")} AS level_end,
+         ${r6sql("st[2]")} AS trend_end,
+         ${r6sql("st[1] + st[2]")} AS forecast_1
        FROM f ORDER BY user_id""") { (s, d) =>
     val step: (Column, Column) => Column = (acc, x) => {
       val lNew = lit(0.3) * x +
@@ -999,7 +998,7 @@ object Advanced {
        nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nd),
        r0 AS (SELECT node, 1.0 / n AS rank FROM nd CROSS JOIN nn),
        ${(1 to 5).map(prIterCte).mkString(",\n       ")}
-       SELECT node, floor((rank) * 1000000 + 0.5) / 1000000 AS rank
+       SELECT node, ${r6sql("rank")} AS rank
        FROM r5 ORDER BY node""") { (s, d) =>
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("us"), col("event_id"))
@@ -1022,13 +1021,11 @@ object Advanced {
     * mean's fold runs in list order on both engines, so the float
     * sums agree. */
   val vectorStats: QueryDef = QueryDef.sql(
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                   FROM embeddings)
        SELECT vec_id,
-              floor((sqrt(list_dot_product(v, v))) * 1000000 + 0.5)
-                / 1000000 AS norm,
-              floor((list_sum(v) / len(v)) * 1000000 + 0.5)
-                / 1000000 AS mean_v,
+              ${r6sql("sqrt(list_dot_product(v, v))")} AS norm,
+              ${r6sql("list_sum(v) / len(v)")} AS mean_v,
               list_min(v) AS min_v, list_max(v) AS max_v,
               CAST(len(list_filter(v, x -> x > 0)) AS INTEGER) AS n_pos,
               len(list_filter(v, x -> abs(x) > 0.5)) > 0 AS has_large
@@ -1056,9 +1053,9 @@ object Advanced {
     * form every nightly rollup uses.) Oracle: the full recompute —
     * equality IS the correctness claim. */
   val incrementalAgg: QueryDef = QueryDef.sql(
-    """SELECT event_type, count(*) AS n,
-              floor((sum(value)) * 1000000 + 0.5) / 1000000 AS total,
-              floor((sum(value) / count(*)) * 1000000 + 0.5) / 1000000
+    s"""SELECT event_type, count(*) AS n,
+              ${r6sql("sum(value)")} AS total,
+              ${r6sql("sum(value) / count(*)")}
                 AS mean_value
        FROM events GROUP BY 1 ORDER BY 1""") { (s, d) =>
     val ev = Tables.events(s, d)
@@ -1314,8 +1311,8 @@ object Advanced {
     * curation runs after clustering: q48 says WHICH docs group,
     * this row says WHO survives. */
   val dedupKeepBest: QueryDef = QueryDef.sql(
-    """WITH RECURSIVE
-       t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH RECURSIVE
+       t AS (SELECT doc_id, ${tokensSql("text")} AS toks
              FROM documents),
        s AS (SELECT doc_id,
                list_distinct(list_transform(
@@ -1365,9 +1362,8 @@ object Advanced {
     * double-division and TRY_CAST semantics, so the oracle is
     * direct. The error-tolerant path every ingest pipeline needs. */
   val safeMath: QueryDef = QueryDef.sql(
-    """SELECT event_id,
-              floor((value / CAST(user_id % 3 AS DOUBLE)) * 1000000 + 0.5)
-                / 1000000 AS safe_div,
+    s"""SELECT event_id,
+              ${r6sql("value / CAST(user_id % 3 AS DOUBLE)")} AS safe_div,
               user_id % 3 = 0 AS div_was_zero,
               try_cast(substr(event_type, 1, 2) AS INTEGER) AS bad_parse,
               try_cast(CAST(user_id AS VARCHAR) AS INTEGER) AS good_parse
@@ -1451,20 +1447,20 @@ object Advanced {
     * (count DESC, token ASC — total order), so both engines regress
     * the identical point set. */
   val zipfSlope: QueryDef = QueryDef.sql(
-    """WITH w AS (SELECT unnest(string_split(trim(text), ' ')) AS tok
+    s"""WITH w AS (SELECT unnest(${tokensSql("text")}) AS tok
            FROM documents),
        f AS (SELECT tok, count(*) AS c FROM w GROUP BY 1),
        r AS (SELECT c, row_number() OVER (ORDER BY c DESC, tok) AS rk
              FROM f)
        SELECT CAST(count(*) AS BIGINT) AS n_points,
-              floor((regr_slope(ln(CAST(c AS DOUBLE)),
-                ln(CAST(rk AS DOUBLE)))) * 1000000 + 0.5) / 1000000
+              ${r6sql("""regr_slope(ln(CAST(c AS DOUBLE)),
+                ln(CAST(rk AS DOUBLE)))""")}
                 AS slope,
-              floor((regr_intercept(ln(CAST(c AS DOUBLE)),
-                ln(CAST(rk AS DOUBLE)))) * 1000000 + 0.5) / 1000000
+              ${r6sql("""regr_intercept(ln(CAST(c AS DOUBLE)),
+                ln(CAST(rk AS DOUBLE)))""")}
                 AS intercept,
-              floor((corr(ln(CAST(c AS DOUBLE)), ln(CAST(rk AS DOUBLE))))
-                * 1000000 + 0.5) / 1000000 AS correlation
+              ${r6sql("corr(ln(CAST(c AS DOUBLE)), ln(CAST(rk AS DOUBLE)))")}
+                AS correlation
        FROM r WHERE rk <= 1000""") { (s, d) =>
     val f = Tables.documents(s, d)
       .select(explode(TextOps.tokens(col("text"))).as("tok"))
@@ -1489,18 +1485,18 @@ object Advanced {
     * per-key counts. At 100 TB this is the cheap pre-flight that
     * decides between a plain, salted, or broadcast join. */
   val skewAudit: QueryDef = QueryDef.sql(
-    """WITH c AS (SELECT user_id, count(*) AS n FROM events GROUP BY 1),
+    s"""WITH c AS (SELECT user_id, count(*) AS n FROM events GROUP BY 1),
        r AS (SELECT n, row_number() OVER (ORDER BY n DESC, user_id)
                AS rk
              FROM c)
        SELECT (SELECT count(*) FROM c) AS n_keys,
          (SELECT max(n) FROM c) AS max_n,
-         floor(((SELECT max(n) FROM c) / ((SELECT sum(n) FROM c)
-                / (SELECT count(*) FROM c))) * 1000000 + 0.5) / 1000000
+         ${r6sql("""(SELECT max(n) FROM c) / ((SELECT sum(n) FROM c)
+                / (SELECT count(*) FROM c))""")}
            AS skew_ratio,
-         floor(((SELECT sum(n) FROM r WHERE rk <= 10)
-                / CAST((SELECT sum(n) FROM c) AS DOUBLE))
-               * 1000000 + 0.5) / 1000000 AS top10_share""") { (s, d) =>
+         ${r6sql("""(SELECT sum(n) FROM r WHERE rk <= 10)
+                / CAST((SELECT sum(n) FROM c) AS DOUBLE)""")}
+           AS top10_share""") { (s, d) =>
     val counts = Tables.events(s, d)
       .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
     val topk = graft.ops.TopK.topk(10)
@@ -1529,13 +1525,13 @@ object Advanced {
     * applied). One keyed shuffle over skinny (user, ts, …) rows;
     * state₁ never rescans the old half at apply time. */
   val cdcApply: QueryDef = QueryDef.sql(
-    """WITH latest AS (
+    s"""WITH latest AS (
          SELECT user_id, value, ts, event_type,
            row_number() OVER (PARTITION BY user_id
              ORDER BY ts DESC, event_id DESC) AS rk
          FROM events)
        SELECT user_id,
-         floor((value) * 1000000 + 0.5) / 1000000 AS last_value,
+         ${r6sql("value")} AS last_value,
          ts AS last_ts
        FROM latest WHERE rk = 1 AND event_type <> 'error'
        ORDER BY user_id""") { (s, d) =>
@@ -1570,7 +1566,7 @@ object Advanced {
     * order left-to-right over identical float64 products, then round
     * at the 1e-6 grain. */
   val ewmaSmoothing: QueryDef = QueryDef.sql(
-    """WITH seq AS (SELECT user_id, event_id, value,
+    s"""WITH seq AS (SELECT user_id, event_id, value,
            row_number() OVER (PARTITION BY user_id
              ORDER BY ts, event_id) AS rn
          FROM events WHERE event_type = 'click'),
@@ -1580,12 +1576,11 @@ object Advanced {
              AS win
          FROM seq)
        SELECT user_id, event_id,
-         floor((list_sum(list_transform(list_zip(win,
+         ${r6sql("""list_sum(list_transform(list_zip(win,
                range(0, len(win))),
                x -> x[1] * 0.3 * power(0.7, CAST(x[2] AS DOUBLE))))
              / list_sum(list_transform(range(0, len(win)),
-               i -> 0.3 * power(0.7, CAST(i AS DOUBLE)))))
-           * 1000000 + 0.5) / 1000000 AS ewma10
+               i -> 0.3 * power(0.7, CAST(i AS DOUBLE))))""")} AS ewma10
        FROM w ORDER BY user_id, event_id""") { (s, d) =>
     val wSeq = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
@@ -1618,7 +1613,7 @@ object Advanced {
     * size-only on both engines (element ORDER of a set intersection
     * is engine-internal; its cardinality is not). */
   val arrayBreadth: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents)
        SELECT doc_id,
          CAST(len(list_distinct(toks)) AS INTEGER) AS n_distinct,
@@ -1657,7 +1652,7 @@ object Advanced {
     * conditional-sum pivot — identical relation, engine-idiomatic
     * plans on both sides. */
   val mapBreadth: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents),
        e AS (SELECT doc_id, len(toks) AS n, unnest(toks) AS tok,
                     generate_subscripts(toks, 1) AS pos FROM t),
@@ -2118,19 +2113,19 @@ object Advanced {
     * silently dropped or double-counted by the observation path
     * fails the hash. */
   val observedIngest: QueryDef = QueryDef.sql(
-    """SELECT CAST(count(*) AS BIGINT) AS n_rows,
+    s"""SELECT CAST(count(*) AS BIGINT) AS n_rows,
          CAST(sum(CASE WHEN props IS NULL THEN 1 ELSE 0 END)
            AS BIGINT) AS n_null_props,
          CAST(sum(CASE WHEN value > 150 THEN 1 ELSE 0 END)
            AS BIGINT) AS n_high,
-         CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
+         CAST(sum(${microsSql("value")})
            AS BIGINT) AS sum_micro,
-         CAST(min(CAST(floor(value*1000000+0.5) AS BIGINT))
+         CAST(min(${microsSql("value")})
            AS BIGINT) AS min_micro,
-         CAST(max(CAST(floor(value*1000000+0.5) AS BIGINT))
+         CAST(max(${microsSql("value")})
            AS BIGINT) AS max_micro
        FROM events""") { (s, d) =>
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
+    val vk = micros(col("value"))
     val obs = org.apache.spark.sql.Observation()
     Tables.events(s, d)
       .observe(obs,
@@ -2285,8 +2280,8 @@ object Advanced {
     * count is ~half the oracle's — the exact failure a daily
     * overwrite-then-dashboard lake hits. */
   val refreshCacheInvalidation: QueryDef = QueryDef.sql(
-    """SELECT event_type, CAST(count(*) AS BIGINT) n,
-         CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
+    s"""SELECT event_type, CAST(count(*) AS BIGINT) n,
+         CAST(sum(${microsSql("value")})
            AS BIGINT) v_micro
        FROM events GROUP BY 1 ORDER BY 1""") { (s, d) =>
     val dir = graft.sources.ScratchDirs.perProcess("q292", d)
@@ -2300,7 +2295,7 @@ object Advanced {
     viaPath
       .groupBy(col("event_type"))
       .agg(count(lit(1)).cast("long").as("n"),
-        sum(floor(col("value") * 1000000 + lit(0.5)).cast("long"))
+        sum(micros(col("value")))
           .cast("long").as("v_micro"))
       .orderBy(col("event_type"))
   }
@@ -2312,14 +2307,14 @@ object Advanced {
     * nothing silently misaligns by position. DuckDB oracle: UNION
     * ALL BY NAME. */
   val unionSchemaDrift: QueryDef = QueryDef.sql(
-    """WITH a AS (SELECT event_id, user_id, value FROM events
+    s"""WITH a AS (SELECT event_id, user_id, value FROM events
          WHERE event_type='click'),
        b AS (SELECT event_id, user_id, value, props FROM events
          WHERE event_type='purchase'),
        u AS (SELECT * FROM a UNION ALL BY NAME SELECT * FROM b)
        SELECT CASE WHEN props IS NULL THEN 0 ELSE 1 END AS has_props,
          CAST(count(*) AS BIGINT) n,
-         CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
+         CAST(sum(${microsSql("value")})
            AS BIGINT) v_micro
        FROM u GROUP BY 1 ORDER BY 1""") { (s, d) =>
     val ev = Tables.events(s, d)
@@ -2332,7 +2327,7 @@ object Advanced {
       .groupBy(when(col("props").isNull, 0).otherwise(1)
         .as("has_props"))
       .agg(count(lit(1)).cast("long").as("n"),
-        sum(floor(col("value") * 1000000 + lit(0.5)).cast("long"))
+        sum(micros(col("value")))
           .cast("long").as("v_micro"))
       .orderBy(col("has_props"))
   }
@@ -2344,11 +2339,11 @@ object Advanced {
     * maintainability and plans identically (BroadcastHashJoin
     * against a LocalRelation). */
   val literalDimDecode: QueryDef = QueryDef.sql(
-    """WITH dim(et, dept) AS (VALUES ('click','growth'),
+    s"""WITH dim(et, dept) AS (VALUES ('click','growth'),
          ('view','growth'),('purchase','revenue'),
          ('signup','activation'),('error','platform')),
        g AS (SELECT dept, CAST(count(*) AS BIGINT) n,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
+           CAST(sum(${microsSql("value")})
              AS BIGINT) v_micro
          FROM events JOIN dim ON event_type = et GROUP BY 1)
        SELECT * FROM g ORDER BY 1""") { (s, d) =>
@@ -2360,7 +2355,7 @@ object Advanced {
       .join(broadcast(dim), col("event_type") === col("et"))
       .groupBy(col("dept"))
       .agg(count(lit(1)).cast("long").as("n"),
-        sum(floor(col("value") * 1000000 + lit(0.5)).cast("long"))
+        sum(micros(col("value")))
           .cast("long").as("v_micro"))
       .orderBy(col("dept"))
   }
@@ -2374,10 +2369,10 @@ object Advanced {
     * state-like series). Leading nulls (before the first
     * observation) stay excluded on both sides. */
   val locfImpute: QueryDef = QueryDef.sql(
-    """WITH d AS (SELECT event_type,
+    s"""WITH d AS (SELECT event_type,
            CAST(epoch_us(date_trunc('hour', ts)) // 3600000000
              AS BIGINT) hi,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
+           CAST(sum(${microsSql("value")})
              AS BIGINT) dv
          FROM events GROUP BY 1,2),
        b AS (SELECT event_type AS et, CAST(min(hi) AS BIGINT) lo,
@@ -2395,7 +2390,7 @@ object Advanced {
        SELECT et AS event_type, hi AS hour_idx,
          CAST(filled AS BIGINT) AS filled_micro, was_missing
        FROM f WHERE filled IS NOT NULL ORDER BY 1,2""") { (s, d) =>
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
+    val vk = micros(col("value"))
     val dg = Tables.events(s, d)
       .groupBy(col("event_type"),
         expr("unix_micros(date_trunc('hour', ts)) div 3600000000")

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.Rounding.{r6, r6sql}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -23,8 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object Cached {
 
-  private def r6(c: Column): Column = graft.Rounding.r6(c)
-
   /** events + derived feature columns, the shared cached input
     * (P1/E1/E2 features on the harness events table). */
   def featuredEvents(df: DataFrame): DataFrame =
@@ -32,19 +31,19 @@ object Cached {
       .withColumn("dow", dayofweek(col("ts")))
 
   val cachedMultiAgg: QueryDef = QueryDef.sql(
-    """WITH f AS (SELECT hour(ts) AS h, dayofweek(ts) + 1 AS dow,
+    s"""WITH f AS (SELECT hour(ts) AS h, dayofweek(ts) + 1 AS dow,
                          event_type, value
                   FROM events),
        u AS (
          SELECT 'by_hour' AS slice, lpad(CAST(h AS VARCHAR), 2, '0') AS key,
-                count(*) AS n, floor((sum(value)) * 1000000 + 0.5) / 1000000 AS total_value
+                count(*) AS n, ${r6sql("sum(value)")} AS total_value
          FROM f GROUP BY 2
          UNION ALL
          SELECT 'by_dow', CAST(dow AS VARCHAR),
-                count(*), floor((sum(value)) * 1000000 + 0.5) / 1000000
+                count(*), ${r6sql("sum(value)")}
          FROM f GROUP BY 2
          UNION ALL
-         SELECT 'by_type', event_type, count(*), floor((sum(value)) * 1000000 + 0.5) / 1000000
+         SELECT 'by_type', event_type, count(*), ${r6sql("sum(value)")}
          FROM f GROUP BY 2)
        SELECT slice, key, n, total_value FROM u ORDER BY slice, key""") {
     (s, d) =>

@@ -1,6 +1,9 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.Rounding.{r6, r6sql}
+import graft.text.TextOps
+import graft.text.TextOps.tokensSql
 import org.apache.spark.sql.functions._
 
 /** Corpus-governance tier: the source-level triage and documentation
@@ -8,8 +11,6 @@ import org.apache.spark.sql.functions._
   * sources duplicate each other, and the dataset-card summary row.
   */
 object Corpus {
-
-  private def r6(c: org.apache.spark.sql.Column) = graft.Rounding.r6(c)
 
   /** Source-vocabulary overlap: exact Jaccard between every source
     * pair over their distinct BIGRAM vocabularies (unigram vocab is
@@ -21,7 +22,7 @@ object Corpus {
     * is bounded by the token space, and the 190-pair output is
     * dimension-sized. */
   val sourceOverlap: QueryDef = QueryDef.sql(
-    s"""WITH t AS (SELECT source, string_split(trim(text), ' ')
+    s"""WITH t AS (SELECT source, ${tokensSql("text")}
              AS toks FROM documents),
        st AS (SELECT DISTINCT source,
                unnest(list_transform(range(1, len(toks)),
@@ -35,13 +36,13 @@ object Corpus {
                AND a.source < b.source
              GROUP BY 1, 2)
        SELECT s1, s2, common,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(common AS DOUBLE) / (za.nv + zb.nv - common)")}
            AS jaccard
        FROM p JOIN sz za ON s1 = za.sz_s JOIN sz zb ON s2 = zb.sz_s
        ORDER BY s1, s2""") { (s, d) =>
     val t = Tables.documents(s, d).select(col("source"),
-      graft.text.TextOps.tokens(col("text")).as("toks"))
+      TextOps.tokens(col("text")).as("toks"))
     val st = t.filter(size(col("toks")) >= 2)
       .select(col("source"), explode(transform(
         sequence(lit(0), size(col("toks")) - 2),
@@ -74,7 +75,7 @@ object Corpus {
     * multi-KB documents (same stance as q29's hash-group dedup). */
   val datasetCard: QueryDef = QueryDef.sql(
     s"""WITH t AS (SELECT doc_id, lang, source, n_chars,
-             CAST(len(string_split(trim(text), ' ')) AS BIGINT)
+             CAST(len(${tokensSql("text")}) AS BIGINT)
                AS n_tok,
              md5(text) AS h
            FROM documents)
@@ -84,14 +85,14 @@ object Corpus {
          CAST(sum(n_tok) AS BIGINT) AS total_tokens,
          CAST(min(n_tok) AS BIGINT) AS min_tokens,
          CAST(max(n_tok) AS BIGINT) AS max_tokens,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(sum(n_tok) AS DOUBLE) / count(*)")} AS mean_tokens,
          CAST(count(*) - count(DISTINCT h) AS BIGINT) AS n_exact_dups,
          CAST(sum(n_chars) AS BIGINT) AS total_chars
        FROM t""") { (s, d) =>
     Tables.documents(s, d)
       .select(col("lang"), col("source"), col("n_chars"),
-        size(graft.text.TextOps.tokens(col("text"))).cast("long")
+        size(TextOps.tokens(col("text"))).cast("long")
           .as("n_tok"),
         md5(col("text")).as("h"))
       .agg(count(lit(1)).cast("long").as("n_docs"),
@@ -121,12 +122,12 @@ object Corpus {
     * blocklist size. */
   val blocklistFilter: QueryDef = QueryDef.sql(
     s"""WITH f AS (SELECT source, doc_id,
-           CASE WHEN list_has_any(string_split(trim(text),' '),
+           CASE WHEN list_has_any(${tokensSql("text")},
              ['dup','slow','big']) THEN 1 ELSE 0 END AS hit
          FROM documents)
        SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
          CAST(sum(hit) AS BIGINT) AS n_flagged,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(sum(hit) AS DOUBLE)/count(*)")} AS flag_rate
        FROM f GROUP BY 1 ORDER BY 1""") { (s, d) =>
     import s.implicits._
@@ -134,7 +135,7 @@ object Corpus {
     val docs = Tables.documents(s, d)
     val flagged = docs
       .select(col("source"), col("doc_id"),
-        explode(graft.text.TextOps.tokens(col("text"))).as("tok"))
+        explode(TextOps.tokens(col("text"))).as("tok"))
       .join(broadcast(blocklist), col("tok") === col("term"),
         "left_semi")
       .select(col("source"), col("doc_id")).distinct()
@@ -163,7 +164,7 @@ object Corpus {
     * LIMIT boundary is deterministic) with a (doc_a, doc_b) total
     * tie-break, and only the emitted value is r6-rounded. */
   val containmentTopk: QueryDef = QueryDef.sql(
-    s"""WITH t AS (SELECT doc_id, string_split(trim(text),' ')
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")}
              AS toks FROM documents),
        s AS (SELECT DISTINCT doc_id,
                unnest(list_transform(range(1, len(toks)-1),
@@ -180,14 +181,14 @@ object Corpus {
                CAST(common AS DOUBLE)/sz.ns AS cont
              FROM p JOIN sz ON p.doc_a = sz.doc_id)
        SELECT doc_a, doc_b, common,
-         ${graft.Rounding.r6sql("cont")} AS containment
+         ${r6sql("cont")} AS containment
        FROM c ORDER BY cont DESC, doc_a, doc_b LIMIT 10""") { (s, d) =>
     val t = Tables.documents(s, d)
       .select(col("doc_id"),
-        graft.text.TextOps.tokens(col("text")).as("toks"))
+        TextOps.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 3)
     val sh = t.select(col("doc_id"),
-      explode(graft.text.TextOps.shingles(col("toks"), 3)).as("g"))
+      explode(TextOps.shingles(col("toks"), 3)).as("g"))
     val sz = sh.groupBy(col("doc_id"))
       .agg(count(lit(1)).cast("long").as("ns"))
     // Hot-shingle safety: a raw g===g self-join puts a shingle
@@ -237,7 +238,7 @@ object Corpus {
     * it to ~50-100. Denominator stays the FULL |S(A)| so the score
     * is comparable across caps. */
   val containmentDfCap: QueryDef = QueryDef.sql(
-    s"""WITH t AS (SELECT doc_id, string_split(trim(text),' ')
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")}
              AS toks FROM documents),
        s AS (SELECT DISTINCT doc_id,
                unnest(list_transform(range(1, len(toks)-1),
@@ -257,15 +258,15 @@ object Corpus {
                CAST(common AS DOUBLE)/sz.ns AS cont
              FROM p JOIN sz ON p.doc_a = sz.doc_id)
        SELECT doc_a, doc_b, common,
-         ${graft.Rounding.r6sql("cont")} AS containment_lb
+         ${r6sql("cont")} AS containment_lb
        FROM c ORDER BY cont DESC, doc_a, doc_b LIMIT 10""") { (s, d) =>
     val cap = 3
     val t = Tables.documents(s, d)
       .select(col("doc_id"),
-        graft.text.TextOps.tokens(col("text")).as("toks"))
+        TextOps.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 3)
     val sh = t.select(col("doc_id"),
-      explode(graft.text.TextOps.shingles(col("toks"), 3)).as("g"))
+      explode(TextOps.shingles(col("toks"), 3)).as("g"))
     val sz = sh.groupBy(col("doc_id"))
       .agg(count(lit(1)).cast("long").as("ns"))
     // df <= cap also implies df >= 2 for pair purposes, so the keep
@@ -306,7 +307,7 @@ object Corpus {
     * the composite order is a single range-partitionable column. */
   val sortedNeighborhood: QueryDef = QueryDef.sql(
     s"""WITH t AS (SELECT doc_id, lang, n_chars,
-             list_distinct(string_split(trim(text),' ')) AS toks
+             list_distinct(${tokensSql("text")}) AS toks
            FROM documents),
        o AS (SELECT doc_id, toks,
            lead(doc_id, 1) OVER w AS d1, lead(toks, 1) OVER w AS t1,
@@ -326,13 +327,13 @@ object Corpus {
              AS BIGINT) AS uni
          FROM pairs)
        SELECT a, b,
-         ${graft.Rounding.r6sql("CAST(inter AS DOUBLE)/uni")}
+         ${r6sql("CAST(inter AS DOUBLE)/uni")}
            AS jaccard
        FROM j WHERE CAST(inter AS DOUBLE)/uni >= 0.8
        ORDER BY a, b""") { (s, d) =>
     val t = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("n_chars"),
-        array_distinct(graft.text.TextOps.tokens(col("text")))
+        array_distinct(TextOps.tokens(col("text")))
           .as("toks"))
       .select(col("doc_id"), col("toks"),
         concat(col("lang"), lit("|"),
@@ -377,7 +378,7 @@ object Corpus {
        t AS (SELECT CAST(sum(n_chars) AS BIGINT) tc,
            CAST(count(*) AS BIGINT) ns FROM g)
        SELECT shard, n_docs, g.n_chars,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(g.n_chars AS DOUBLE)*ns/tc")} AS balance_ratio
        FROM g, t ORDER BY shard""") { (s, d) =>
     val g = Tables.documents(s, d)
@@ -390,7 +391,7 @@ object Corpus {
       count(lit(1)).cast("long").as("ns"))
     g.crossJoin(broadcast(t))
       .select(col("shard"), col("n_docs"), col("n_chars"),
-        graft.Rounding.r6(col("n_chars").cast("double") * col("ns")
+        r6(col("n_chars").cast("double") * col("ns")
           / col("tc")).as("balance_ratio"))
       .orderBy(col("shard"))
   }
@@ -414,16 +415,15 @@ object Corpus {
        q AS (SELECT CAST(bkt AS BIGINT) bkt,
            CAST(count(*) AS BIGINT) nq FROM d GROUP BY 1),
        qt AS (SELECT CAST(sum(nq) AS BIGINT) nt FROM q),
-       kl AS (SELECT source, list_sum(list(${graft.Rounding.r6sql(
+       kl AS (SELECT source, list_sum(list(${r6sql(
          """(CAST(np AS DOUBLE)/ns)
             * ln((CAST(np AS DOUBLE)/ns) / (CAST(nq AS DOUBLE)/nt))""")}
            ORDER BY p.bkt)) klv, CAST(sum(np) AS BIGINT) n_docs
          FROM p JOIN ps ON source = s2 JOIN q ON p.bkt = q.bkt, qt
          GROUP BY 1)
-       SELECT source, n_docs, ${graft.Rounding.r6sql("klv")}
+       SELECT source, n_docs, ${r6sql("klv")}
          AS kl_nats
        FROM kl ORDER BY 1""") { (s, d) =>
-    val r6 = graft.Rounding.r6 _
     val dd = Tables.documents(s, d)
       .select(col("source"),
         least(expr("n_chars div 200"), lit(9L)).cast("long")
@@ -460,7 +460,7 @@ object Corpus {
     * rank residue; checkpoint ranks are all-integer c·N/10
     * selections (q253's cross-multiplication recipe). */
   val heapsLaw: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} toks
              FROM documents),
        r AS (SELECT doc_id, len(toks) ntk,
            row_number() OVER (ORDER BY doc_id) rk FROM t),
@@ -480,7 +480,7 @@ object Corpus {
        SELECT CAST(cp.c AS BIGINT) cp_i, cum.vocab, cum.toks_seen
        FROM cp JOIN cum ON cum.rk = cp.brk ORDER BY 1""") { (s, d) =>
     val t = Tables.documents(s, d)
-      .select(col("doc_id"), split(trim(col("text")), " ").as("toks"))
+      .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
     val base = t.select(col("doc_id"),
       size(col("toks")).cast("long").as("ntk"), lit(1L).as("one"))
     val fo = t.select(col("doc_id"), explode(col("toks")).as("tk"))
@@ -518,7 +518,7 @@ object Corpus {
     * source. */
   val oovRate: QueryDef = QueryDef.sql(
     s"""WITH tok AS (SELECT source,
-           unnest(string_split(trim(text), ' ')) tk FROM documents),
+           unnest(${tokensSql("text")}) tk FROM documents),
        ref AS (SELECT tk FROM (SELECT tk, count(*) c FROM tok
            WHERE source = 'src0'
            GROUP BY 1 ORDER BY c DESC, tk LIMIT 20)),
@@ -527,12 +527,12 @@ object Corpus {
              AS BIGINT) n_oov
          FROM tok LEFT JOIN ref ON tok.tk = ref.tk GROUP BY 1)
        SELECT source, n_tok, n_oov,
-         ${graft.Rounding.r6sql("CAST(n_oov AS DOUBLE)/n_tok")}
+         ${r6sql("CAST(n_oov AS DOUBLE)/n_tok")}
            AS oov_rate
        FROM g ORDER BY 1""") { (s, d) =>
     val tok = Tables.documents(s, d)
       .select(col("source"),
-        explode(split(trim(col("text")), " ")).as("tk"))
+        explode(TextOps.tokens(col("text"))).as("tk"))
     val ref = tok.filter(col("source") === "src0")
       .groupBy(col("tk")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("tk")).limit(20)
@@ -543,7 +543,7 @@ object Corpus {
         sum(when(col("rtk").isNull, 1L).otherwise(0L)).cast("long")
           .as("n_oov"))
       .select(col("source"), col("n_tok"), col("n_oov"),
-        graft.Rounding.r6(col("n_oov").cast("double")
+        r6(col("n_oov").cast("double")
           / col("n_tok")).as("oov_rate"))
       .orderBy(col("source"))
   }
@@ -557,7 +557,7 @@ object Corpus {
     * fold residue-sized at any corpus scale. */
   val tokenJsd: QueryDef = QueryDef.sql(
     s"""WITH tok AS (SELECT source,
-           unnest(string_split(trim(text), ' ')) tk FROM documents),
+           unnest(${tokensSql("text")}) tk FROM documents),
        top AS (SELECT tk FROM (SELECT tk, count(*) c FROM tok
            GROUP BY 1 ORDER BY c DESC, tk LIMIT 100)),
        p AS (SELECT source, tok.tk, CAST(count(*) AS BIGINT) np
@@ -570,17 +570,16 @@ object Corpus {
        cells AS (SELECT source, p.tk, CAST(np AS DOUBLE)/ns AS pp,
            CAST(nq AS DOUBLE)/nt AS qq
          FROM p JOIN ps ON source=s2 JOIN q ON p.tk=qtk, qt),
-       kl AS (SELECT source, list_sum(list(${graft.Rounding.r6sql(
+       kl AS (SELECT source, list_sum(list(${r6sql(
          """0.5*pp*ln(pp/(0.5*pp+0.5*qq))
             + 0.5*qq*ln(qq/(0.5*pp+0.5*qq))""")} ORDER BY tk)) jsd,
            CAST(count(*) AS BIGINT) n_tokens FROM cells GROUP BY 1)
-       SELECT source, n_tokens, ${graft.Rounding.r6sql("jsd")}
+       SELECT source, n_tokens, ${r6sql("jsd")}
          AS jsd_nats
        FROM kl ORDER BY 1""") { (s, d) =>
-    val r6f = graft.Rounding.r6 _
     val tok = Tables.documents(s, d)
       .select(col("source"),
-        explode(split(trim(col("text")), " ")).as("tk"))
+        explode(TextOps.tokens(col("text"))).as("tk"))
     val top = tok.groupBy(col("tk")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("tk")).limit(100)
       .select(col("tk").as("ttk"))
@@ -602,11 +601,11 @@ object Corpus {
       .crossJoin(broadcast(qt))
       .groupBy(col("source"))
       .agg(aggregate(transform(array_sort(collect_list(struct(
-          col("tk"), r6f(cell).as("contrib")))),
+          col("tk"), r6(cell).as("contrib")))),
           _.getField("contrib")), lit(0.0), _ + _).as("jsd"),
         count(lit(1)).cast("long").as("n_tokens"))
       .select(col("source"), col("n_tokens"),
-        r6f(col("jsd")).as("jsd_nats"))
+        r6(col("jsd")).as("jsd_nats"))
       .orderBy(col("source"))
   }
 
@@ -620,14 +619,13 @@ object Corpus {
            FROM documents GROUP BY 1),
        t AS (SELECT CAST(sum(mass) AS BIGINT) tot,
            CAST(count(*) AS BIGINT) k FROM s),
-       h AS (SELECT list_sum(list(${graft.Rounding.r6sql(
+       h AS (SELECT list_sum(list(${r6sql(
          "(CAST(mass AS DOUBLE)/tot)*(CAST(mass AS DOUBLE)/tot)")}
            ORDER BY source)) hhi FROM s, t)
-       SELECT t.k AS n_sources, ${graft.Rounding.r6sql("hhi")}
+       SELECT t.k AS n_sources, ${r6sql("hhi")}
          AS herfindahl,
-         ${graft.Rounding.r6sql("1.0/hhi")} AS effective_sources
+         ${r6sql("1.0/hhi")} AS effective_sources
        FROM h, t""") { (s, d) =>
-    val r6f = graft.Rounding.r6 _
     val m = Tables.documents(s, d)
       .groupBy(col("source"))
       .agg(sum(col("n_chars")).cast("long").as("mass"))
@@ -637,11 +635,11 @@ object Corpus {
     m.crossJoin(broadcast(t))
       .groupBy(col("k"))
       .agg(aggregate(transform(array_sort(collect_list(struct(
-          col("source"), r6f(p * p).as("contrib")))),
+          col("source"), r6(p * p).as("contrib")))),
           _.getField("contrib")), lit(0.0), _ + _).as("hhi"))
       .select(col("k").as("n_sources"),
-        r6f(col("hhi")).as("herfindahl"),
-        r6f(lit(1.0) / col("hhi")).as("effective_sources"))
+        r6(col("hhi")).as("herfindahl"),
+        r6(lit(1.0) / col("hhi")).as("effective_sources"))
   }
 
   /** Token burstiness (Fano factor over per-doc term frequencies,
@@ -654,7 +652,7 @@ object Corpus {
     * token×doc join. */
   val tokenBurstiness: QueryDef = QueryDef.sql(
     s"""WITH tok AS (SELECT doc_id,
-           unnest(string_split(trim(text), ' ')) tk
+           unnest(${tokensSql("text")}) tk
          FROM documents),
        top AS (SELECT tk FROM (SELECT tk, count(*) c FROM tok
            GROUP BY 1 ORDER BY c DESC, tk LIMIT 20)),
@@ -667,14 +665,14 @@ object Corpus {
              DECIMAL(19,0))) AS DOUBLE) scc
          FROM dt GROUP BY 1)
        SELECT tk AS token, s AS n_occurrences,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            """(scc/n_docs - (CAST(s AS DOUBLE)/n_docs)
               *(CAST(s AS DOUBLE)/n_docs))
               / (CAST(s AS DOUBLE)/n_docs)""")} AS fano
        FROM st, nd ORDER BY 1""") { (s, d) =>
     val tok = Tables.documents(s, d)
       .select(col("doc_id"),
-        explode(split(trim(col("text")), " ")).as("tk"))
+        explode(TextOps.tokens(col("text"))).as("tk"))
     val top = tok.groupBy(col("tk")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("tk")).limit(20)
       .select(col("tk").as("ttk"))
@@ -691,7 +689,7 @@ object Corpus {
     val mean = col("s").cast("double") / col("n_docs")
     st.crossJoin(broadcast(nd))
       .select(col("tk").as("token"), col("s").as("n_occurrences"),
-        graft.Rounding.r6((col("scc") / col("n_docs")
+        r6((col("scc") / col("n_docs")
           - mean * mean) / mean).as("fano"))
       .orderBy(col("token"))
   }
@@ -708,7 +706,7 @@ object Corpus {
     * stance: no libm log2 on a bin boundary). The cumulative runs
     * over the ≤⌈log2 |V|⌉-row residue. */
   val vocabCoverageTiers: QueryDef = QueryDef.sql(
-    """WITH tok AS (SELECT unnest(string_split(trim(text), ' ')) tk
+    s"""WITH tok AS (SELECT unnest(${tokensSql("text")}) tk
                     FROM documents),
        c AS (SELECT tk, CAST(count(*) AS BIGINT) n FROM tok
              WHERE tk <> '' GROUP BY 1),
@@ -719,13 +717,13 @@ object Corpus {
                   CAST(sum(n) AS BIGINT) cn FROM rk GROUP BY 1)
        SELECT tier, cn AS tier_tokens,
          CAST(sum(cn) OVER (ORDER BY tier) AS BIGINT) AS cum_tokens,
-         floor(CAST(sum(cn) OVER (ORDER BY tier) AS DOUBLE)
-           / (SELECT tot FROM t) * 1000000 + 0.5)/1000000
+         ${r6sql("""CAST(sum(cn) OVER (ORDER BY tier) AS DOUBLE)
+           / (SELECT tot FROM t)""")}
            AS cum_coverage
        FROM tier ORDER BY 1""") { (s, d) =>
     import org.apache.spark.sql.expressions.Window
     val c = Tables.documents(s, d)
-      .select(explode(split(trim(col("text")), " ")).as("tk"))
+      .select(explode(TextOps.tokens(col("text"))).as("tk"))
       .filter(col("tk") =!= "")
       .groupBy(col("tk")).agg(count(lit(1)).cast("long").as("n"))
       .withColumn("negn", -col("n"))
@@ -760,7 +758,7 @@ object Corpus {
     * exactly one (possibly short) chunk; trailing windows clamp to
     * the token count. */
   val ragChunking: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents),
        c AS (SELECT doc_id, CAST(u.i AS INTEGER) AS chunk_idx,
                list_slice(toks, u.i * 24 + 1, u.i * 24 + 32) AS ch
@@ -781,7 +779,7 @@ object Corpus {
       d: String): org.apache.spark.sql.DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"),
-        graft.text.TextOps.tokens(col("text")).as("toks"))
+        TextOps.tokens(col("text")).as("toks"))
       .select(col("doc_id"),
         explode(sequence(lit(0),
           floor((size(col("toks")) - 1) / 24).cast("int")))
@@ -798,7 +796,7 @@ object Corpus {
     * cross the shuffle — the q29 exact-dedup shape one level below
     * the document. */
   val chunkDedup: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents),
        c AS (SELECT doc_id,
                list_slice(toks, u.i * 24 + 1, u.i * 24 + 32) AS ch
@@ -827,19 +825,17 @@ object Corpus {
     * single divisions of exact integer sums (no float-fold order
     * anywhere), r6 on output only. */
   val tokenizerFertility: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT lang, length(trim(text)) AS nc,
-                    len(string_split(trim(text), ' ')) AS nt
+    s"""WITH t AS (SELECT lang, length(trim(text)) AS nc,
+                    len(${tokensSql("text")}) AS nt
                   FROM documents)
        SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
               CAST(sum(nt) AS BIGINT) AS sum_toks,
-              floor((CAST(sum(nt) AS DOUBLE) / count(*))
-                * 1000000 + 0.5) / 1000000 AS avg_toks,
-              floor((CAST(sum(nc) AS DOUBLE) / sum(nt))
-                * 1000000 + 0.5) / 1000000 AS chars_per_tok
+              ${r6sql("CAST(sum(nt) AS DOUBLE) / count(*)")} AS avg_toks,
+              ${r6sql("CAST(sum(nc) AS DOUBLE) / sum(nt)")} AS chars_per_tok
        FROM t GROUP BY 1 ORDER BY 1""") { (s, d) =>
     Tables.documents(s, d)
       .select(col("lang"), length(trim(col("text"))).as("nc"),
-        graft.text.TextOps.tokenCount(col("text")).as("nt"))
+        TextOps.tokenCount(col("text")).as("nt"))
       .groupBy(col("lang"))
       .agg(count(lit(1)).cast("long").as("n_docs"),
         sum(col("nt")).cast("long").as("sum_toks"),
@@ -936,8 +932,8 @@ object Corpus {
     * rather than materialized through a per-phase window (which
     * would sort n/4 rows in one task at scale). */
   val curriculumPhases: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id,
-             len(string_split(trim(text), ' ')) AS score
+    s"""WITH t AS (SELECT doc_id,
+             len(${tokensSql("text")}) AS score
            FROM documents),
        r AS (SELECT doc_id, CAST(row_number() OVER
                (ORDER BY score, doc_id) AS BIGINT) AS i FROM t),
@@ -947,7 +943,7 @@ object Corpus {
        FROM r, n0 ORDER BY phase, shuf, doc_id""") { (s, d) =>
     val base = Tables.documents(s, d)
       .select(col("doc_id"),
-        graft.text.TextOps.tokenCount(col("text")).as("score"))
+        TextOps.tokenCount(col("text")).as("score"))
       .withColumn("one", lit(1L))
     val ranked = graft.ops.Packing.withGlobalOffsets(base, "score",
       "one", tieCols = Seq("doc_id"))
@@ -977,7 +973,7 @@ object Corpus {
     * the sketch is the only corpus-sized reduction and is KB-sized
     * mergeable state. */
   val cmsHeavyHitters: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT ${tokensSql("text")} AS toks
                   FROM documents),
        g AS (SELECT unnest(list_transform(range(1, len(toks)),
                i -> toks[i] || ' ' || toks[i+1])) AS bg
@@ -992,7 +988,7 @@ object Corpus {
     // raw occurrence stream, NOT TextOps.shingles (which dedups per
     // doc) — frequency sketches count multiplicity
     val bg = Tables.documents(s, d)
-      .select(graft.text.TextOps.tokens(col("text")).as("toks"))
+      .select(TextOps.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 2)
       .select(explode(zip_with(
         slice(col("toks"), lit(1), size(col("toks")) - 1),
@@ -1066,7 +1062,7 @@ object Corpus {
                FROM r$t)"""
     }.mkString(" UNION ALL ")
     QueryDef.sql(
-      s"""WITH t AS (SELECT doc_id, string_split(trim(text),' ')
+      s"""WITH t AS (SELECT doc_id, ${tokensSql("text")}
              AS toks FROM documents),
          p0 AS (SELECT doc_id, CAST(u.i AS BIGINT) AS pos, toks[u.i]
                   AS tok, CAST(len(toks) AS BIGINT) AS n
@@ -1097,7 +1093,7 @@ object Corpus {
       val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
       val p0 = Tables.documents(s, d)
         .select(col("doc_id"),
-          graft.text.TextOps.tokens(col("text")).as("toks"))
+          TextOps.tokens(col("text")).as("toks"))
         .select(col("doc_id"),
           posexplode(col("toks")).as(Seq("pos0", "tok")))
         .select(col("doc_id"), (col("pos0") + 1).cast("long").as("pos"),
@@ -1167,7 +1163,7 @@ object Corpus {
     * doc_id (range residual) plus a per-doc sort — all row-local in
     * the document dimension, nothing pairwise. */
   val dupSpanRemoval: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents),
        g AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
                array_to_string(toks[i:i+15], ' ') AS gram
@@ -1214,7 +1210,7 @@ object Corpus {
     val k = 16
     graft.functions.GraftFunctions.register(s)
     val toksDf = Tables.documents(s, d)
-      .select(col("doc_id"), graft.text.TextOps.tokens(col("text"))
+      .select(col("doc_id"), TextOps.tokens(col("text"))
         .as("toks"))
     // 8-byte positional gram hashes stand in for gram strings, the
     // q79 discipline (collision odds ~grams²/2^65)

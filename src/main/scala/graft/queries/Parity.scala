@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.ops.{Anomaly, Clean, Features}
-import org.apache.spark.sql.Column
+import graft.Rounding.{r6, r6sql}
 import org.apache.spark.sql.functions._
 
 /** Reference-parity queries: the 7 analytics tables of
@@ -22,8 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Parity {
 
-  private def r6(c: Column): Column = graft.Rounding.r6(c)
-
   /** A1 demand_heatmap — count by (zone, hour).
     * Ref: yellow_taxi_etl.py:101-105. */
   val demandHeatmap: QueryDef = QueryDef.sql(
@@ -40,8 +38,8 @@ object Parity {
   /** A2 tip_trends — avg ratio by (zone, payment type).
     * Ref: yellow_taxi_etl.py:110-116. l_discount plays tip_pct. */
   val tipTrends: QueryDef = QueryDef.sql(
-    """SELECT l_suppkey, l_returnflag,
-       floor((avg(l_discount)) * 1000000 + 0.5) / 1000000 AS avg_tip_pct, count(*) AS n_trips
+    s"""SELECT l_suppkey, l_returnflag,
+       ${r6sql("avg(l_discount)")} AS avg_tip_pct, count(*) AS n_trips
        FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""") { (s, d) =>
     Tables.lineitem(s, d)
       .groupBy(col("l_suppkey"), col("l_returnflag"))
@@ -70,10 +68,10 @@ object Parity {
   /** A4 trip_performance — multi-measure agg by (zone, hour, dow) +
     * post-agg weekend flag. Ref: yellow_taxi_etl.py:134-148. */
   val tripPerformance: QueryDef = QueryDef.sql(
-    """SELECT user_id, CAST(hour(ts) AS INTEGER) AS pickup_hour,
+    s"""SELECT user_id, CAST(hour(ts) AS INTEGER) AS pickup_hour,
        CAST(dayofweek(ts) + 1 AS INTEGER) AS pickup_dow,
-       floor((avg(value)) * 1000000 + 0.5) / 1000000 AS avg_value,
-       floor((sum(value)) * 1000000 + 0.5) / 1000000 AS total_value, count(*) AS n_trips,
+       ${r6sql("avg(value)")} AS avg_value,
+       ${r6sql("sum(value)")} AS total_value, count(*) AS n_trips,
        (CAST(dayofweek(ts) + 1 AS INTEGER) IN (1, 7)) AS is_weekend
        FROM events GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""") { (s, d) =>
     Tables.events(s, d)
@@ -91,9 +89,9 @@ object Parity {
     * DESC sort (tie-broken to total order, unlike the reference's
     * non-unique sort key — SURVEY §5.1). Ref: yellow_taxi_etl.py:153-164. */
   val popularRoutes: QueryDef = QueryDef.sql(
-    """SELECT l_partkey, l_suppkey, count(*) AS n_trips,
-       floor((avg(l_quantity)) * 1000000 + 0.5) / 1000000 AS avg_qty,
-       floor((avg(l_extendedprice)) * 1000000 + 0.5) / 1000000 AS avg_price
+    s"""SELECT l_partkey, l_suppkey, count(*) AS n_trips,
+       ${r6sql("avg(l_quantity)")} AS avg_qty,
+       ${r6sql("avg(l_extendedprice)")} AS avg_price
        FROM lineitem GROUP BY 1, 2 HAVING count(*) >= 5
        ORDER BY n_trips DESC, l_partkey, l_suppkey""") { (s, d) =>
     Tables.lineitem(s, d)
@@ -108,10 +106,10 @@ object Parity {
   /** A6 payment_analysis — agg by (zone, hour, payment type) + CASE
     * decode of the categorical. Ref: yellow_taxi_etl.py:169-186. */
   val paymentAnalysis: QueryDef = QueryDef.sql(
-    """SELECT user_id, CAST(hour(ts) AS INTEGER) AS pickup_hour,
+    s"""SELECT user_id, CAST(hour(ts) AS INTEGER) AS pickup_hour,
        event_type, count(*) AS n_trips,
-       floor((avg(value)) * 1000000 + 0.5) / 1000000 AS avg_value,
-       floor((sum(value)) * 1000000 + 0.5) / 1000000 AS total_value,
+       ${r6sql("avg(value)")} AS avg_value,
+       ${r6sql("sum(value)")} AS total_value,
        CASE WHEN event_type = 'purchase' THEN 'Revenue'
             WHEN event_type = 'click' THEN 'Engagement'
             WHEN event_type = 'view' THEN 'Engagement'
@@ -135,15 +133,15 @@ object Parity {
   /** A7 distance_distribution — agg grouped by a derived bucket CASE
     * column. Ref: yellow_taxi_etl.py:191-200 (5-bucket CASE :87-94). */
   val distanceDistribution: QueryDef = QueryDef.sql(
-    """SELECT l_suppkey,
+    s"""SELECT l_suppkey,
        CASE WHEN l_quantity < 10 THEN 'Very Short'
             WHEN l_quantity < 20 THEN 'Short'
             WHEN l_quantity < 30 THEN 'Medium'
             WHEN l_quantity < 40 THEN 'Long'
             ELSE 'Very Long' END AS qty_category,
        count(*) AS n_trips,
-       floor((avg(l_extendedprice)) * 1000000 + 0.5) / 1000000 AS avg_price,
-       floor((sum(l_extendedprice)) * 1000000 + 0.5) / 1000000 AS total_price
+       ${r6sql("avg(l_extendedprice)")} AS avg_price,
+       ${r6sql("sum(l_extendedprice)")} AS total_price
        FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""") { (s, d) =>
     Tables.lineitem(s, d)
       .withColumn("qty_category", Features.bucketize(col("l_quantity"),
@@ -174,13 +172,13 @@ object Parity {
     * guarded ratios, bucket CASE, weekend flag) with a pushed-down
     * key filter. Ref: yellow_taxi_etl.py:68-94. */
   val featureMatrix: QueryDef = QueryDef.sql(
-    """SELECT l_orderkey, l_linenumber,
+    s"""SELECT l_orderkey, l_linenumber,
        CAST(hour(l_shipdate) AS INTEGER) AS ship_hour,
        CAST(dayofweek(l_shipdate) + 1 AS INTEGER) AS ship_dow,
        (CAST(dayofweek(l_shipdate) + 1 AS INTEGER) IN (1, 7)) AS is_weekend,
-       floor((CASE WHEN l_quantity > 0
-             THEN l_extendedprice / l_quantity END) * 1000000 + 0.5) / 1000000 AS price_per_unit,
-       floor((l_extendedprice * (1 - l_discount)) * 1000000 + 0.5) / 1000000 AS discounted_price,
+       ${r6sql("""CASE WHEN l_quantity > 0
+             THEN l_extendedprice / l_quantity END""")} AS price_per_unit,
+       ${r6sql("l_extendedprice * (1 - l_discount)")} AS discounted_price,
        CASE WHEN l_quantity < 10 THEN 'Very Short'
             WHEN l_quantity < 20 THEN 'Short'
             WHEN l_quantity < 30 THEN 'Medium'

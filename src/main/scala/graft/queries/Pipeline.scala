@@ -3,7 +3,9 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import graft.dedup.Dedup
 import graft.multimodal.Multimodal
+import graft.Rounding.{micros, microsSql, r6, r6sql}
 import graft.text.TextOps
+import graft.text.TextOps.tokensSql
 import graft.vector.VectorOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -23,13 +25,11 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
-  private def r6(c: Column): Column = graft.Rounding.r6(c)
-
   /** Tumbling-window aggregation (batch form of the streaming op —
     * graft.streaming.StreamOps runs the same shape incrementally). */
   val tumblingWindow: QueryDef = QueryDef.sql(
-    """SELECT date_trunc('hour', ts) AS hour_start, event_type,
-       count(*) AS n, floor((sum(value)) * 1000000 + 0.5) / 1000000 AS total_value
+    s"""SELECT date_trunc('hour', ts) AS hour_start, event_type,
+       count(*) AS n, ${r6sql("sum(value)")} AS total_value
        FROM events GROUP BY 1, 2 ORDER BY 1, 2""") { (s, d) =>
     Tables.events(s, d)
       .groupBy(date_trunc("hour", col("ts")).as("hour_start"),
@@ -42,7 +42,7 @@ object Pipeline {
     * of session starts — the batch analogue of stateful streaming
     * sessionization; one shuffle on user_id). */
   val sessionize: QueryDef = QueryDef.sql(
-    """WITH g AS (
+    s"""WITH g AS (
          SELECT user_id, event_id, epoch_us(ts) AS us,
                 epoch_us(ts) - lag(epoch_us(ts)) OVER
                   (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
@@ -57,7 +57,7 @@ object Pipeline {
                   AS BIGINT) AS session_idx
          FROM g)
        SELECT user_id, session_idx, count(*) AS n_events,
-              floor(((max(us) - min(us)) / 60000000.0) * 1000000 + 0.5) / 1000000 AS duration_min
+              ${r6sql("(max(us) - min(us)) / 60000000.0")} AS duration_min
        FROM s GROUP BY 1, 2 ORDER BY 1, 2""") { (s, d) =>
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("us"), col("event_id"))
@@ -89,7 +89,7 @@ object Pipeline {
     * oracle must track the operator, not the data. Session end is
     * last event + gap by definition; emitted in µs for exactness. */
   val sessionWindowNative: QueryDef = QueryDef.sql(
-    """WITH g AS (
+    s"""WITH g AS (
          SELECT user_id, value, epoch_us(ts) AS us,
                 epoch_us(ts) - lag(epoch_us(ts)) OVER
                   (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
@@ -107,7 +107,7 @@ object Pipeline {
        SELECT user_id, min(us) AS session_start_us,
               max(us) + 1800000000 AS session_end_us,
               count(*) AS n_events,
-              floor((sum(value)) * 1000000 + 0.5) / 1000000
+              ${r6sql("sum(value)")}
                 AS total_value
        FROM s GROUP BY user_id, session_idx
        ORDER BY 1, 2""") { (s, d) =>
@@ -133,7 +133,7 @@ object Pipeline {
     * with no watermark-flush clause needed. The memory sink +
     * AvailableNow trigger is the harness adapter, as in q47. */
   val streamSessionWindow: QueryDef = QueryDef.sql(
-    """WITH g AS (
+    s"""WITH g AS (
          SELECT user_id, value, epoch_us(ts) AS us,
                 epoch_us(ts) - lag(epoch_us(ts)) OVER
                   (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
@@ -150,7 +150,7 @@ object Pipeline {
          FROM g)
        SELECT user_id, min(us) AS session_start_us,
               count(*) AS n_events,
-              floor((sum(value)) * 1000000 + 0.5) / 1000000
+              ${r6sql("sum(value)")}
                 AS total_value
        FROM s GROUP BY user_id, session_idx
        ORDER BY 1, 2""") { (s, d) =>
@@ -180,8 +180,8 @@ object Pipeline {
   /** Text quality stats: token counts, mean token length, stopword &
     * punctuation ratios, composite quality score — all row-local. */
   val textStats: QueryDef = QueryDef.sql(
-    """WITH t AS (
-         SELECT doc_id, text, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (
+         SELECT doc_id, text, ${tokensSql("text")} AS toks
          FROM documents),
        m AS (
          SELECT doc_id,
@@ -194,13 +194,12 @@ object Pipeline {
                 (length(text) - length(regexp_replace(text,
                   '[.,;:!?]', '', 'g')))::DOUBLE / length(text) AS punct
          FROM t)
-       SELECT doc_id, n_tokens, floor((avg_tok) * 1000000 + 0.5) / 1000000 AS avg_token_len,
-              floor((stop_ratio) * 1000000 + 0.5) / 1000000 AS stopword_ratio,
-              floor((punct) * 1000000 + 0.5) / 1000000 AS punct_ratio,
-              floor((0.4 * least(n_tokens / 200.0, 1.0)
+       SELECT doc_id, n_tokens, ${r6sql("avg_tok")} AS avg_token_len,
+              ${r6sql("stop_ratio")} AS stopword_ratio,
+              ${r6sql("punct")} AS punct_ratio,
+              ${r6sql("""0.4 * least(n_tokens / 200.0, 1.0)
                      + 0.3 * (1.0 - stop_ratio)
-                     + 0.3 * least(avg_tok / 8.0, 1.0)) * 1000000 + 0.5)
-                / 1000000 AS quality
+                     + 0.3 * least(avg_tok / 8.0, 1.0)""")} AS quality
        FROM m ORDER BY doc_id""") { (s, d) =>
     val df = Tables.documents(s, d)
       .withColumn("toks", TextOps.tokens(col("text")))
@@ -213,13 +212,10 @@ object Pipeline {
         r6(col("avg_tok")).as("avg_token_len"),
         r6(col("stop_ratio")).as("stopword_ratio"),
         r6(col("punct")).as("punct_ratio"),
-        // floor(x*1e6 + 0.5)/1e6 instead of round(): Spark rounds
-        // doubles HALF_UP, DuckDB half-to-even — exact .5e-6 ties
-        // (which this ratio arithmetic does produce) would diverge.
-        (floor((lit(0.4) * least(col("n_tokens") / lit(200.0), lit(1.0))
+        r6(lit(0.4) * least(col("n_tokens") / lit(200.0), lit(1.0))
           + lit(0.3) * (lit(1.0) - col("stop_ratio"))
           + lit(0.3) * least(col("avg_tok") / lit(8.0), lit(1.0)))
-          * lit(1000000) + lit(0.5)) / lit(1000000)).as("quality"))
+          .as("quality"))
       .orderBy(col("doc_id"))
   }
 
@@ -235,8 +231,8 @@ object Pipeline {
     * exp() rounding; the probability itself is r6-rounded with the
     * same left-to-right arithmetic on both engines. */
   val qualityLogit: QueryDef = QueryDef.sql(
-    """WITH t AS (
-         SELECT doc_id, text, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (
+         SELECT doc_id, text, ${tokensSql("text")} AS toks
          FROM documents),
        m AS (
          SELECT doc_id,
@@ -257,8 +253,7 @@ object Pipeline {
                  - 4.0 * punct) AS logit
          FROM m)
        SELECT doc_id,
-              floor((1.0 / (1.0 + exp(-logit))) * 1000000 + 0.5)
-                / 1000000 AS quality_prob,
+              ${r6sql("1.0 / (1.0 + exp(-logit))")} AS quality_prob,
               logit >= 0 AS kept
        FROM z ORDER BY doc_id""") { (s, d) =>
     val feats = Tables.documents(s, d)
@@ -333,7 +328,7 @@ object Pipeline {
   val fingerprint: QueryDef = QueryDef.sql(
     s"""SELECT doc_id, md5(lower(trim(text))) AS fingerprint,
        substr(md5(lower(trim(text))), 1, 8) AS fp_prefix,
-       greatest(CAST(len(string_split(trim(text), ' ')) AS BIGINT),
+       greatest(CAST(len(${tokensSql("text")}) AS BIGINT),
                 CAST(ceil(length(text) / 4.0) AS BIGINT)) AS token_est,
        CAST(len(regexp_extract_all(text,
             '${TextOps.bpePattern.replace("'", "''")}'))
@@ -370,7 +365,7 @@ object Pipeline {
     * Oracle = exact all-pairs 3-gram Jaccard (valid because the
     * verify stage is exact and banding recall ≈ 1 above 0.6). */
   val dedupMinhash: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents),
        s AS (SELECT doc_id,
                list_distinct(list_transform(
@@ -379,9 +374,9 @@ object Pipeline {
                  AS sh
              FROM t WHERE len(toks) >= 3)
        SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-              floor((len(list_intersect(a.sh, b.sh))::DOUBLE
+              ${r6sql("""len(list_intersect(a.sh, b.sh))::DOUBLE
                 / (len(a.sh) + len(b.sh)
-                   - len(list_intersect(a.sh, b.sh)))) * 1000000 + 0.5) / 1000000 AS jaccard
+                   - len(list_intersect(a.sh, b.sh)))""")} AS jaccard
        FROM s a JOIN s b ON a.doc_id < b.doc_id
        WHERE len(list_intersect(a.sh, b.sh))::DOUBLE
              / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
@@ -402,7 +397,7 @@ object Pipeline {
     * relation joined the same way (valid on q30's grounds — exact
     * verify, banding recall ≈ 1 at 0.6). */
   val dedupAudit: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents),
        s AS (SELECT doc_id,
                list_distinct(list_transform(
@@ -475,13 +470,13 @@ object Pipeline {
   /** Brute-force cosine top-5 per query vector — the exact ANN
     * baseline (broadcast queries, corpus never shuffled). */
   val cosineTopK: QueryDef = QueryDef.sql(
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                   FROM embeddings),
        q AS (SELECT vec_id AS q_id, v AS q_v FROM e WHERE vec_id < 10),
        p AS (SELECT q_id, e.vec_id AS n_id,
-               floor((list_dot_product(q_v, e.v)
+               ${r6sql("""list_dot_product(q_v, e.v)
                  / (sqrt(list_dot_product(q_v, q_v))
-                    * sqrt(list_dot_product(e.v, e.v)))) * 1000000 + 0.5) / 1000000 AS cos
+                    * sqrt(list_dot_product(e.v, e.v)))""")} AS cos
              FROM q JOIN e ON e.vec_id <> q_id),
        r AS (SELECT q_id, n_id, cos,
                CAST(row_number() OVER (PARTITION BY q_id
@@ -500,14 +495,14 @@ object Pipeline {
     * with ANN ([[VectorOps.labelFilteredTopK]]). Exact and
     * deterministic → full oracle. */
   val filteredTopK: QueryDef = QueryDef.sql(
-    """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
+    s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
                   FROM embeddings),
        q AS (SELECT vec_id AS q_id, label AS q_label, v AS q_v
              FROM e WHERE vec_id < 10),
        p AS (SELECT q_id, e.vec_id AS n_id,
-               floor((list_dot_product(q_v, e.v)
+               ${r6sql("""list_dot_product(q_v, e.v)
                  / (sqrt(list_dot_product(q_v, q_v))
-                    * sqrt(list_dot_product(e.v, e.v)))) * 1000000 + 0.5) / 1000000 AS cos
+                    * sqrt(list_dot_product(e.v, e.v)))""")} AS cos
              FROM q JOIN e ON e.label = q_label AND e.vec_id <> q_id),
        r AS (SELECT q_id, n_id, cos,
                CAST(row_number() OVER (PARTITION BY q_id
@@ -582,12 +577,12 @@ object Pipeline {
   /** Exact embedding near-dup pairs at cosine >= 0.45 (brute-force
     * baseline for the LSH path). */
   val embeddingNearDup: QueryDef = QueryDef.sql(
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                   FROM embeddings),
        p AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-               floor((list_dot_product(a.v, b.v)
+               ${r6sql("""list_dot_product(a.v, b.v)
                  / (sqrt(list_dot_product(a.v, a.v))
-                    * sqrt(list_dot_product(b.v, b.v)))) * 1000000 + 0.5) / 1000000 AS cos
+                    * sqrt(list_dot_product(b.v, b.v)))""")} AS cos
              FROM e a JOIN e b ON a.vec_id < b.vec_id)
        SELECT a_id, b_id, cos FROM p WHERE cos >= 0.45
        ORDER BY 1, 2""") { (s, d) =>
@@ -607,7 +602,7 @@ object Pipeline {
     * hash-mismatches. Hash-family-specific EXTRA candidates are
     * excluded; DedupSpec keeps the passage-detection gates. */
   val winnowPairs: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents),
        g AS (SELECT doc_id, unnest(list_distinct(list_transform(
                generate_series(1, len(toks) - 5),
@@ -652,7 +647,7 @@ object Pipeline {
     * string-shingle Jaccard (set sizes identical through the hashed
     * representation barring 2^-64 collisions). */
   val ngramJaccard: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents),
        s AS (SELECT doc_id,
                list_distinct(list_transform(
@@ -661,9 +656,9 @@ object Pipeline {
                  AS sh
              FROM t WHERE len(toks) >= 3)
        SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-              floor((len(list_intersect(a.sh, b.sh))::DOUBLE
+              ${r6sql("""len(list_intersect(a.sh, b.sh))::DOUBLE
                 / (len(a.sh) + len(b.sh)
-                   - len(list_intersect(a.sh, b.sh)))) * 1000000 + 0.5) / 1000000 AS jaccard
+                   - len(list_intersect(a.sh, b.sh)))""")} AS jaccard
        FROM s a JOIN s b ON a.doc_id < b.doc_id
        WHERE len(list_intersect(a.sh, b.sh))::DOUBLE
              / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
@@ -683,7 +678,7 @@ object Pipeline {
     * all-pairs, q30 approximate sub-quadratic, q156 exact
     * sub-quadratic. */
   val prefixFilterJaccard: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents),
        s AS (SELECT doc_id,
                list_distinct(list_transform(
@@ -692,9 +687,9 @@ object Pipeline {
                  AS sh
              FROM t WHERE len(toks) >= 3)
        SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-              floor((len(list_intersect(a.sh, b.sh))::DOUBLE
+              ${r6sql("""len(list_intersect(a.sh, b.sh))::DOUBLE
                 / (len(a.sh) + len(b.sh)
-                   - len(list_intersect(a.sh, b.sh)))) * 1000000 + 0.5) / 1000000 AS jaccard
+                   - len(list_intersect(a.sh, b.sh)))""")} AS jaccard
        FROM s a JOIN s b ON a.doc_id < b.doc_id
        WHERE len(list_intersect(a.sh, b.sh))::DOUBLE
              / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
@@ -1665,14 +1660,14 @@ object Pipeline {
     * oracle row: E3 was the one SURVEY §2 expression with only unit
     * coverage (VERDICT r2 missing #1). One shuffle on user_id. */
   val eventGapMinutes: QueryDef = QueryDef.sql(
-    """WITH g AS (
+    s"""WITH g AS (
          SELECT user_id, event_id, epoch_us(ts) // 1000000 AS s,
                 lag(epoch_us(ts) // 1000000) OVER
                   (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
                   AS prev_s
          FROM events)
        SELECT user_id, event_id,
-              floor(((s - prev_s) / 60.0) * 1000000 + 0.5) / 1000000
+              ${r6sql("(s - prev_s) / 60.0")}
                 AS gap_min
        FROM g WHERE prev_s IS NOT NULL ORDER BY user_id, event_id""") {
     (s, d) =>
@@ -1699,8 +1694,8 @@ object Pipeline {
     * recoverable production write is a `foreachBatch` append under a
     * checkpoint (StreamingSpec's lwwUpsert restart case). */
   val streamTumbling: QueryDef = QueryDef.sql(
-    """SELECT date_trunc('hour', ts) AS window_start, event_type,
-       count(*) AS n, floor((sum(value)) * 1000000 + 0.5) / 1000000 AS total_value
+    s"""SELECT date_trunc('hour', ts) AS window_start, event_type,
+       count(*) AS n, ${r6sql("sum(value)")} AS total_value
        FROM events GROUP BY 1, 2 ORDER BY 1, 2""") { (s, d) =>
     graft.streaming.StreamOps.drain(s, d, "complete") {
       graft.streaming.StreamOps.windowedCounts(
@@ -1723,8 +1718,8 @@ object Pipeline {
     * table are the right answer iff the dedup removed precisely the
     * redelivered copies. */
   val streamDropDup: QueryDef = QueryDef.sql(
-    """SELECT event_type, count(*) AS n,
-       floor((sum(value)) * 1000000 + 0.5) / 1000000 AS total_value
+    s"""SELECT event_type, count(*) AS n,
+       ${r6sql("sum(value)")} AS total_value
        FROM events GROUP BY 1 ORDER BY 1""") { (s, d) =>
     graft.streaming.StreamOps.drain(s, d, "complete") {
       graft.streaming.StreamOps.dedupedCounts(
@@ -1750,7 +1745,7 @@ object Pipeline {
     * the memory sink + AvailableNow trigger is the harness adapter
     * (same as q47/q120/q144). */
   val streamSessionize: QueryDef = QueryDef.sql(
-    """WITH g AS (
+    s"""WITH g AS (
          SELECT user_id, event_id, epoch_us(ts) AS us,
                 epoch_us(ts) - lag(epoch_us(ts)) OVER
                   (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
@@ -1773,8 +1768,7 @@ object Pipeline {
                    FROM agg GROUP BY 1)
        SELECT a.user_id, a.start_us AS session_start_us,
               a.n_events,
-              floor(((a.last_us - a.start_us) / 60000000.0)
-                    * 1000000 + 0.5) / 1000000 AS duration_min
+              ${r6sql("(a.last_us - a.start_us) / 60000000.0")} AS duration_min
        FROM agg a
        JOIN lastidx l ON a.user_id = l.user_id, wm
        WHERE a.session_idx < l.last_idx
@@ -1843,7 +1837,7 @@ object Pipeline {
     * windows the complete-mode fold per ingest epoch exactly like
     * q120's restart-after-merge contract. */
   val streamContamination: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents),
        g AS (SELECT doc_id, unnest(list_distinct(list_transform(
                generate_series(1, len(toks) - 2),
@@ -2013,7 +2007,7 @@ object Pipeline {
     * on. Proves a SQL-only user gets the native codegen'd
     * expressions with no Scala API. */
   val sqlSurface: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents),
        s AS (SELECT doc_id,
                list_distinct(list_transform(
@@ -2022,22 +2016,20 @@ object Pipeline {
                  AS sh
              FROM t WHERE len(toks) >= 3)
        SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-              floor((len(list_intersect(a.sh, b.sh))::DOUBLE
+              ${r6sql("""len(list_intersect(a.sh, b.sh))::DOUBLE
                 / (len(a.sh) + len(b.sh)
-                   - len(list_intersect(a.sh, b.sh)))) * 1000000 + 0.5)
-                / 1000000 AS jaccard
+                   - len(list_intersect(a.sh, b.sh)))""")} AS jaccard
        FROM s a JOIN s b ON b.doc_id = a.doc_id + 1
        ORDER BY 1""") { (s, d) =>
     graft.functions.GraftFunctions.register(s)
-    QueryDef.sqlOver(s, Tables.documents(s, d), "graft_q159_docs") { docs =>
+    val docs = Tables.documents(s, d)
+      .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
+    QueryDef.sqlOver(s, docs, "graft_q159_docs") { docs =>
       s"""WITH h AS (
-           SELECT doc_id,
-                  graft_shingle_hashes(split(trim(text), ' '), 3) AS hs
-           FROM $docs
-           WHERE size(split(trim(text), ' ')) >= 3)
+           SELECT doc_id, graft_shingle_hashes(toks, 3) AS hs
+           FROM $docs WHERE size(toks) >= 3)
          SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                floor(graft_jaccard(a.hs, b.hs) * 1000000 + 0.5)
-                  / 1000000 AS jaccard
+                ${r6sql("graft_jaccard(a.hs, b.hs)")} AS jaccard
          FROM h a JOIN h b ON b.doc_id = a.doc_id + 1
          ORDER BY a_id"""
     }
@@ -2053,8 +2045,8 @@ object Pipeline {
     * The sf0.01 fixture contains a 3-doc chain, so transitive closure
     * beyond direct pairs is exercised, not just mirrored pairs. */
   val dedupClusters: QueryDef = QueryDef.sql(
-    """WITH RECURSIVE
-       t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH RECURSIVE
+       t AS (SELECT doc_id, ${tokensSql("text")} AS toks
              FROM documents),
        s AS (SELECT doc_id,
                list_distinct(list_transform(
@@ -2093,7 +2085,7 @@ object Pipeline {
     * defined with the engine-portable floor(x/scale + 0.5) code
     * function. */
   val quantizeError: QueryDef = QueryDef.sql(
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                   FROM embeddings),
        s AS (SELECT vec_id, v,
                greatest(list_max(list_transform(v, x -> abs(x))),
@@ -2108,8 +2100,8 @@ object Pipeline {
                list_max(list_transform(v, x -> floor(x / sc + 0.5)))
                  AS cmax
              FROM s)
-       SELECT vec_id, floor(sc * 1000000 + 0.5) / 1000000 AS q_scale,
-              floor(sqrt(err2 / x2) * 1000000 + 0.5) / 1000000 AS rel_err,
+       SELECT vec_id, ${r6sql("sc")} AS q_scale,
+              ${r6sql("sqrt(err2 / x2)")} AS rel_err,
               CAST(cmin AS INTEGER) AS code_min,
               CAST(cmax AS INTEGER) AS code_max
        FROM r ORDER BY vec_id""") { (s, d) =>
@@ -2136,8 +2128,8 @@ object Pipeline {
     * count → threshold. At 100 TB: map-side combine bounds the
     * shuffle by vocabulary size, not corpus size. */
   val tokenFrequency: QueryDef = QueryDef.sql(
-    """SELECT token, count(*) AS n
-       FROM (SELECT unnest(string_split(trim(text), ' ')) AS token
+    s"""SELECT token, count(*) AS n
+       FROM (SELECT unnest(${tokensSql("text")}) AS token
              FROM documents)
        GROUP BY token HAVING count(*) >= 5
        ORDER BY n DESC, token""") { (s, d) =>
@@ -2182,7 +2174,7 @@ object Pipeline {
     * every token is covered and the last chunk may be short —
     * identical slicing arithmetic on both engines. */
   val chunkWindows: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents),
        c AS (SELECT doc_id, toks,
                unnest(generate_series(0, (len(toks) - 1) // 48)) AS i
@@ -2216,8 +2208,8 @@ object Pipeline {
     * ⇒ same key ⇒ same split BY CONSTRUCTION on both engines.
     * Oracle: q48's recursive-CTE components + the same md5 bucket. */
   val leakageSafeSplit: QueryDef = QueryDef.sql(
-    """WITH RECURSIVE
-       t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH RECURSIVE
+       t AS (SELECT doc_id, ${tokensSql("text")} AS toks
              FROM documents),
        s AS (SELECT doc_id,
                list_distinct(list_transform(
@@ -2334,7 +2326,7 @@ object Pipeline {
     * slicing, distance fold, tie-break — against an independent
     * engine. */
   val pqEncodeDet: QueryDef = QueryDef.sql(
-    """WITH cb AS (
+    s"""WITH cb AS (
          SELECT s.sub, c.code,
            list((CAST(('0x' || substr(md5(s.sub || '_' || c.code || '_'
                   || d.dim), 1, 8)) AS BIGINT) % 2001 - 1000) / 1000.0
@@ -2366,7 +2358,7 @@ object Pipeline {
          FROM d2)
        SELECT vec_id, CAST(sub AS INTEGER) AS sub,
               CAST(code AS INTEGER) AS code,
-              floor(d2 * 1000000 + 0.5) / 1000000 AS err2
+              ${r6sql("d2")} AS err2
        FROM r WHERE rn = 1 ORDER BY vec_id, sub""") { (s, d) =>
     val cb = VectorOps.pqCodebookDeterministic(s, 8, 16, 8)
     VectorOps.pqEncode(Tables.embeddings(s, d), cb, 8, 8)
@@ -2437,7 +2429,7 @@ object Pipeline {
     * (sorted-run fold, no per-doc shuffle); thresholds documented on
     * the flag column. */
   val qualityRepetition: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents),
        f AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 3),
        g2 AS (SELECT doc_id, unnest(list_transform(
@@ -2459,11 +2451,11 @@ object Pipeline {
                 len(toks) - 2 AS total3
               FROM f)
        SELECT a2.doc_id,
-         floor((maxw::DOUBLE / n) * 1000000 + 0.5) / 1000000
+         ${r6sql("maxw::DOUBLE / n")}
            AS topword_frac,
-         floor((maxg::DOUBLE / total) * 1000000 + 0.5) / 1000000
+         ${r6sql("maxg::DOUBLE / total")}
            AS top2gram_frac,
-         floor((1.0 - dist3::DOUBLE / total3) * 1000000 + 0.5) / 1000000
+         ${r6sql("1.0 - dist3::DOUBLE / total3")}
            AS dup3gram_frac,
          (maxw::DOUBLE / n <= 0.2 AND maxg::DOUBLE / total <= 0.1
           AND 1.0 - dist3::DOUBLE / total3 <= 0.6) AS quality_pass
@@ -2504,7 +2496,7 @@ object Pipeline {
     * broadcast; the corpus side streams through one semi-join-shaped
     * gram match + per-doc count, never doc×doc. */
   val contaminationCheck: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents),
        g AS (SELECT doc_id, unnest(list_distinct(list_transform(
                generate_series(1, len(toks) - 2),
@@ -2545,7 +2537,7 @@ object Pipeline {
     * ulp-level ln() difference between engines cannot flip ranks.
     * The canonical feature-extraction step. */
   val tfidfTopK: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents),
        n AS (SELECT count(*) AS nd FROM t),
        tf AS (SELECT doc_id, tok, count(*) AS cnt
@@ -2556,9 +2548,8 @@ object Pipeline {
                 (SELECT doc_id, unnest(list_distinct(toks)) AS tok FROM t)
               GROUP BY tok),
        sc AS (SELECT tf.doc_id, tf.tok,
-                floor(((tf.cnt::DOUBLE / len.len) *
-                  (ln((1.0 + nd) / (1.0 + df.df)) + 1.0))
-                  * 1000000 + 0.5) / 1000000 AS score
+                ${r6sql("""(tf.cnt::DOUBLE / len.len) *
+                  (ln((1.0 + nd) / (1.0 + df.df)) + 1.0)""")} AS score
               FROM tf JOIN len ON tf.doc_id = len.doc_id
                       JOIN df ON tf.tok = df.tok
                       CROSS JOIN n),
@@ -2625,7 +2616,7 @@ object Pipeline {
     * r6-rounded and components are O(1)-magnitude, so a flip would
     * need a value within ~1e-15 of a rounding boundary. */
   val centroidOutliers: QueryDef = QueryDef.sql(
-    """WITH j AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
+    s"""WITH j AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
                   FROM embeddings),
        c AS (SELECT label, i, avg(v[i]) AS m
              FROM j, (SELECT unnest(generate_series(1, 64)) AS i) g
@@ -2637,7 +2628,7 @@ object Pipeline {
                      * sqrt(list_dot_product(cv, cv))) AS cos
               FROM j JOIN cent ON j.label = cent.label)
        SELECT vec_id, label,
-              floor(cos * 1000000 + 0.5) / 1000000 AS centroid_cos,
+              ${r6sql("cos")} AS centroid_cos,
               cos < 0.0 AS is_outlier
        FROM sc ORDER BY vec_id""") { (s, d) =>
     val j = Tables.embeddings(s, d)
@@ -2666,7 +2657,7 @@ object Pipeline {
     * guaranteed superset; recount + integer threshold filters them),
     * so it hash-compares against DuckDB's exact counts. */
   val heavyHittersQ: QueryDef = QueryDef.sql(
-    """WITH w AS (SELECT unnest(string_split(trim(text), ' ')) AS tok
+    s"""WITH w AS (SELECT unnest(${tokensSql("text")}) AS tok
                   FROM documents),
        n AS (SELECT count(*) AS n FROM w),
        c AS (SELECT tok, count(*) AS cnt FROM w GROUP BY 1)
@@ -2719,16 +2710,15 @@ object Pipeline {
     * label propagation over the identical within-label pair set.
     * Output: every vector with its survivor (kept = itself). */
   val semanticDedup: QueryDef = QueryDef.sql(
-    """WITH RECURSIVE
+    s"""WITH RECURSIVE
        e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
              FROM embeddings),
        p AS (SELECT a.vec_id AS u, b.vec_id AS w
              FROM e a JOIN e b
                ON a.label = b.label AND a.vec_id < b.vec_id
-             WHERE floor(list_dot_product(a.v, b.v)
+             WHERE ${r6sql("""list_dot_product(a.v, b.v)
                      / (sqrt(list_dot_product(a.v, a.v))
-                        * sqrt(list_dot_product(b.v, b.v)))
-                     * 1000000 + 0.5) / 1000000 >= 0.35),
+                        * sqrt(list_dot_product(b.v, b.v)))""")} >= 0.35),
        sym AS (SELECT u, w FROM p UNION ALL SELECT w, u FROM p),
        lbl(u, l) AS (
          SELECT u, u FROM (SELECT DISTINCT u FROM sym)
@@ -2772,8 +2762,8 @@ object Pipeline {
     * oracle recomputes identical sparse vectors. Output: nonzero
     * (doc_id, dim, w) triples. */
   val featureHashing: QueryDef = QueryDef.sql(
-    """WITH w AS (SELECT doc_id,
-            unnest(string_split(trim(text), ' ')) AS tok
+    s"""WITH w AS (SELECT doc_id,
+            unnest(${tokensSql("text")}) AS tok
           FROM documents),
        h AS (SELECT doc_id,
             CAST(CAST(('0x' || substr(md5(tok), 1, 8)) AS BIGINT) % 128
@@ -2805,15 +2795,15 @@ object Pipeline {
     * only in the last ulp; summed over a doc that is ~1e-13, far
     * inside the r6 rounding. */
   val unigramLogprob: QueryDef = QueryDef.sql(
-    """WITH w AS (SELECT doc_id,
-            unnest(string_split(trim(text), ' ')) AS tok
+    s"""WITH w AS (SELECT doc_id,
+            unnest(${tokensSql("text")}) AS tok
           FROM documents),
        n AS (SELECT count(*) AS n FROM w),
        f AS (SELECT tok, count(*) AS cnt FROM w GROUP BY tok),
        sc AS (SELECT w.doc_id, ln(f.cnt / (SELECT n FROM n)) AS lp
               FROM w JOIN f ON w.tok = f.tok)
        SELECT doc_id,
-              floor(avg(lp) * 1000000 + 0.5) / 1000000 AS mean_logprob,
+              ${r6sql("avg(lp)")} AS mean_logprob,
               CAST(count(*) AS BIGINT) AS n_tokens
        FROM sc GROUP BY doc_id ORDER BY doc_id""") { (s, d) =>
     val toks = Tables.documents(s, d)
@@ -2835,8 +2825,8 @@ object Pipeline {
     * global window. Oracle: DuckDB's global window cumsum computes
     * the same offsets; integer arithmetic throughout. */
   val sequencePacking: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id,
-            CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n
+    s"""WITH t AS (SELECT doc_id,
+            CAST(len(${tokensSql("text")}) AS BIGINT) AS n
           FROM documents),
        o AS (SELECT doc_id, n,
             CAST(COALESCE(sum(n) OVER (ORDER BY doc_id
@@ -2868,8 +2858,8 @@ object Pipeline {
     * read — while the write cost and the *skipping* advantage are
     * gated by ZOrderSpec's measured file-overlap comparison. */
   val zorderReadback: QueryDef = QueryDef.sql(
-    """SELECT event_type, count(*) AS n,
-         floor((sum(value)) * 1000000 + 0.5) / 1000000 AS total_value
+    s"""SELECT event_type, count(*) AS n,
+         ${r6sql("sum(value)")} AS total_value
        FROM events
        WHERE user_id BETWEEN 10 AND 40 AND value BETWEEN 20 AND 120
        GROUP BY 1 ORDER BY 1""") { (s, d) =>
@@ -2897,7 +2887,7 @@ object Pipeline {
     * the operator scaladoc for why there is no anti-join). Oracle:
     * the naive dups + NOT IN formulation in DuckDB. */
   val lineDedup: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents),
        s AS (SELECT doc_id, toks,
                unnest(generate_series(0, (len(toks)-1)//8)) AS i FROM t),
@@ -2952,7 +2942,7 @@ object Pipeline {
          langf AS (SELECT doc_id, text FROM b
                    WHERE (CASE $cases ELSE 'und' END) = lang),
          q AS (SELECT doc_id, text,
-                 string_split(trim(text), ' ') AS toks FROM langf),
+                 ${tokensSql("text")} AS toks FROM langf),
          qual AS (SELECT doc_id, text, n FROM (
              SELECT doc_id, text, CAST(len(toks) AS BIGINT) AS n,
                1.0 - len(list_distinct(list_transform(
@@ -3155,7 +3145,7 @@ object Pipeline {
     * `ops/Anomaly.percentileFilter`), so query construction runs no
     * driver job (gated by `PlanAuditSpec`). */
   val bigramLogprob: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents),
        w AS (SELECT doc_id, unnest(toks) AS tok FROM t),
        uni AS (SELECT tok, count(*) AS c1 FROM w GROUP BY tok),
@@ -3171,7 +3161,7 @@ object Pipeline {
               FROM b JOIN bf USING (bg)
               JOIN uni ON string_split(bg, ' ')[1] = uni.tok)
        SELECT doc_id,
-              floor(avg(lp) * 1000000 + 0.5) / 1000000 AS mean_logprob,
+              ${r6sql("avg(lp)")} AS mean_logprob,
               CAST(count(*) AS BIGINT) AS n_bigrams
        FROM sc GROUP BY doc_id ORDER BY doc_id""") { (s, d) =>
     val docs = Tables.documents(s, d)
@@ -3205,8 +3195,8 @@ object Pipeline {
     * #4) so the timed region covers what this row is about:
     * compaction itself plus the post-compaction read. */
   val compactionReadback: QueryDef = QueryDef.sql(
-    """SELECT event_type, count(*) AS n,
-         floor((avg(value)) * 1000000 + 0.5) / 1000000 AS avg_value
+    s"""SELECT event_type, count(*) AS n,
+         ${r6sql("avg(value)")} AS avg_value
        FROM events WHERE user_id BETWEEN 5 AND 25
        GROUP BY 1 ORDER BY 1""") { (s, d) =>
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_q75_" +
@@ -3241,8 +3231,8 @@ object Pipeline {
     * source already exceeds budget × safety from a first-pass agg)
     * before the exact window. */
   val domainBudget: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, source,
-            CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_tokens,
+    s"""WITH t AS (SELECT doc_id, source,
+            CAST(len(${tokensSql("text")}) AS BIGINT) AS n_tokens,
             md5(CAST(doc_id AS VARCHAR)) AS h
           FROM documents),
        c AS (SELECT doc_id, source, n_tokens,
@@ -3345,7 +3335,7 @@ object Pipeline {
       s"sum(CASE WHEN list_contains(toks, '$t') THEN 1 ELSE 0 END)"
     QueryDef.sql(
       s"""WITH t AS (SELECT doc_id,
-              string_split(trim(text), ' ') AS toks FROM documents),
+              ${tokensSql("text")} AS toks FROM documents),
          st AS (SELECT count(*) AS n_docs,
               avg(len(toks)) AS avgdl,
               ${terms.zipWithIndex.map { case (t, i) =>
@@ -3360,7 +3350,7 @@ object Pipeline {
               }.mkString(" + ")} AS score
             FROM t, st)
          SELECT doc_id,
-                floor(score * 1000000 + 0.5) / 1000000 AS bm25
+                ${r6sql("score")} AS bm25
          FROM sc WHERE score > 0 ORDER BY doc_id""") { (s, d) =>
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
@@ -3395,15 +3385,14 @@ object Pipeline {
                    FROM embeddings),
          qv AS (SELECT v AS q_v FROM e WHERE vec_id = 0),
          cs AS (SELECT vec_id AS id,
-                  floor((list_dot_product(q_v, e.v)
+                  ${r6sql("""list_dot_product(q_v, e.v)
                     / (sqrt(list_dot_product(q_v, q_v))
-                       * sqrt(list_dot_product(e.v, e.v))))
-                    * 1000000 + 0.5) / 1000000 AS cos
+                       * sqrt(list_dot_product(e.v, e.v)))""")} AS cos
                 FROM e CROSS JOIN qv WHERE vec_id <> 0),
          cr AS (SELECT id, CAST(row_number() OVER
                   (ORDER BY cos DESC, id) AS BIGINT) AS r FROM cs),
          crk AS (SELECT id, r FROM cr WHERE r <= 50),
-         t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+         t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                FROM documents),
          st AS (SELECT count(*) AS n_docs, avg(len(toks)) AS avgdl,
                   sum(CASE WHEN list_contains(toks, 'spark')
@@ -3419,7 +3408,7 @@ object Pipeline {
                   AS score
                 FROM t, st),
          sb AS (SELECT doc_id AS id,
-                  floor(score * 1000000 + 0.5) / 1000000 AS bm25
+                  ${r6sql("score")} AS bm25
                 FROM sc WHERE score > 0),
          br AS (SELECT id, CAST(row_number() OVER
                   (ORDER BY bm25 DESC, id) AS BIGINT) AS r FROM sb),
@@ -3432,7 +3421,7 @@ object Pipeline {
                  COALESCE(b.r, 0) AS bm25_rank
                FROM crk c FULL OUTER JOIN brk b ON c.id = b.id)
          SELECT id AS doc_id,
-                floor(rrf * 1000000 + 0.5) / 1000000 AS rrf_score,
+                ${r6sql("rrf")} AS rrf_score,
                 cos_rank, bm25_rank
          FROM f ORDER BY rrf DESC, id LIMIT 20""") { (s, d) =>
       val emb = Tables.embeddings(s, d)
@@ -3474,7 +3463,7 @@ object Pipeline {
     * formulation gets the same spans for span length ≥ k with plan
     * shapes Spark already optimizes. */
   val dupSpans: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents),
        g AS (SELECT doc_id, i - 1 AS pos,
                array_to_string(toks[i:i+15], ' ') AS gram
@@ -3614,8 +3603,8 @@ object Pipeline {
     * agg off the parquet source; the plan check that matters
     * (PushedFilters on the ORC scan) is gated in PlanAuditSpec. */
   val orcRoundtrip: QueryDef = QueryDef.sql(
-    """SELECT event_type, count(*) AS n,
-         floor((sum(value)) * 1000000 + 0.5) / 1000000 AS total_value
+    s"""SELECT event_type, count(*) AS n,
+         ${r6sql("sum(value)")} AS total_value
        FROM events WHERE value > 100
        GROUP BY 1 ORDER BY 1""") { (s, d) =>
     // pid-suffixed like q128: the layout is rewritten every call, so
@@ -3643,8 +3632,8 @@ object Pipeline {
     * never changes content, so the oracle is the same aggregate off
     * the unpartitioned source. */
   val partitionPruning: QueryDef = QueryDef.sql(
-    """SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS d, count(*) AS n,
-         floor((sum(value)) * 1000000 + 0.5) / 1000000 AS total_value
+    s"""SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS d, count(*) AS n,
+         ${r6sql("sum(value)")} AS total_value
        FROM events WHERE event_type = 'click'
        GROUP BY 1 ORDER BY 1""") { (s, d) =>
     val dir = graft.sources.ScratchDirs.perProcess("q187", d)
@@ -3678,8 +3667,8 @@ object Pipeline {
            FROM events WHERE event_type='purchase'
            GROUP BY 1 ORDER BY c DESC, d LIMIT 3)
        SELECT e.event_type, CAST(count(*) AS BIGINT) n,
-         ${graft.Rounding.r6sql(
-           """CAST(sum(CAST(floor(e.value*1000000+0.5) AS BIGINT))
+         ${r6sql(
+           s"""CAST(sum(${microsSql("e.value")})
               AS DOUBLE)/1000000.0""")} AS revenue
        FROM events e JOIN hot
          ON CAST(CAST(e.ts AS DATE) AS VARCHAR) = hot.d
@@ -3701,7 +3690,7 @@ object Pipeline {
     fact.join(broadcast(hot), "d")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).cast("long").as("n"),
-        r6(sum(floor(col("value") * 1000000 + lit(0.5)).cast("long"))
+        r6(sum(micros(col("value")))
           .cast("double") / 1000000.0).as("revenue"))
       .orderBy(col("event_type"))
   }
@@ -3718,8 +3707,8 @@ object Pipeline {
     * newline-free text (production corpora escape or length-prefix
     * before a line-oriented export; nothing here asserts it). */
   val textSource: QueryDef = QueryDef.sql(
-    """SELECT doc_id,
-         CAST(len(string_split(trim(text), ' ')) AS INTEGER) AS n_toks,
+    s"""SELECT doc_id,
+         CAST(len(${tokensSql("text")}) AS INTEGER) AS n_toks,
          CAST(length(text) AS INTEGER) AS n_chars
        FROM documents ORDER BY doc_id""") { (s, d) =>
     val dir = graft.sources.ScratchDirs.perProcess("q182", d)
@@ -3748,11 +3737,11 @@ object Pipeline {
     * asserts the plan shape and rule-off equivalence; the oracle
     * checks semantics stay exact. */
   val tokenSearch: QueryDef = QueryDef.sql(
-    """SELECT lang, count(*) AS n,
-         CAST(sum(len(string_split(trim(text), ' '))) AS BIGINT)
+    s"""SELECT lang, count(*) AS n,
+         CAST(sum(len(${tokensSql("text")})) AS BIGINT)
            AS total_tokens
        FROM documents
-       WHERE list_contains(string_split(trim(text), ' '), 'spark')
+       WHERE list_contains(${tokensSql("text")}, 'spark')
        GROUP BY 1 ORDER BY 1""") { (s, d) =>
     Tables.documents(s, d)
       .filter(array_contains(TextOps.tokens(col("text")), "spark"))
@@ -3788,7 +3777,7 @@ object Pipeline {
     * information and is the same convention q53 (one code per
     * (vec_id, sub)) already uses. */
   val randomProjectionQ: QueryDef = QueryDef.sql(
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
              len(embedding) AS d FROM embeddings),
        iidx AS (SELECT DISTINCT generate_subscripts(v, 1) - 1 AS i FROM e),
        idx AS (SELECT p.range AS p, i FROM range(0, 16) p CROSS JOIN iidx),
@@ -3820,7 +3809,7 @@ object Pipeline {
        proj AS (SELECT vec_id, dim, list_sum(list(term ORDER BY i)) AS s
                 FROM terms GROUP BY vec_id, dim)
        SELECT vec_id, CAST(dim AS BIGINT) AS dim,
-         floor((s / sqrt(16.0)) * 1000000 + 0.5) / 1000000 AS value
+         ${r6sql("s / sqrt(16.0)")} AS value
        FROM proj ORDER BY vec_id, dim""") { (s, d) =>
     graft.functions.GraftFunctions.register(s)
     Tables.embeddings(s, d)
@@ -3972,9 +3961,9 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     c0 AS (SELECT vec_id AS cluster,
              list_transform(v, x -> CAST(x AS DOUBLE)) AS c
            FROM q WHERE vec_id < 8),""" +
-      Seq(1, 2, 3).map(kmIterCte).mkString(",") + """
+      Seq(1, 2, 3).map(kmIterCte).mkString(",") + s"""
     SELECT vec_id, CAST(cluster AS BIGINT) AS cluster,
-      floor(d * 1000000 + 0.5) / 1000000 AS dist
+      ${r6sql("d")} AS dist
     FROM a3 ORDER BY vec_id""") { (s, d) =>
     import org.apache.spark.sql.DataFrame
     val q = Tables.embeddings(s, d)
@@ -4014,12 +4003,12 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
   }
 
   val labelCentroids: QueryDef = QueryDef.sql(
-    """WITH e AS (SELECT CAST(label AS BIGINT) AS label,
+    s"""WITH e AS (SELECT CAST(label AS BIGINT) AS label,
            unnest(embedding) AS val,
            generate_subscripts(embedding, 1) AS dim
          FROM embeddings)
        SELECT label, CAST(dim - 1 AS BIGINT) AS dim,
-              floor((avg(val)) * 1000000 + 0.5) / 1000000 AS mv,
+              ${r6sql("avg(val)")} AS mv,
               count(*) AS n_members
        FROM e GROUP BY 1, 2 ORDER BY 1, 2""") { (s, d) =>
     Tables.embeddings(s, d)
@@ -4041,7 +4030,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * a row-local when-chain. Per-bin count + mass proves the
     * assignment. */
   val quantileBinning: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT quantile_cont(o_totalprice, 0.25) AS q1,
+    s"""WITH t AS (SELECT quantile_cont(o_totalprice, 0.25) AS q1,
              quantile_cont(o_totalprice, 0.5) AS q2,
              quantile_cont(o_totalprice, 0.75) AS q3
            FROM orders)
@@ -4050,7 +4039,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
               WHEN o_totalprice <= q3 THEN 2
               ELSE 3 END AS BIGINT) AS bin,
          count(*) AS n,
-         floor((sum(o_totalprice)) * 1000000 + 0.5) / 1000000 AS mass
+         ${r6sql("sum(o_totalprice)")} AS mass
        FROM orders, t GROUP BY 1 ORDER BY 1""") { (s, d) =>
     val orders = Tables.orders(s, d)
     val thr = orders.agg(
@@ -4081,7 +4070,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * exact shape a 100 TB tokenizer-training pass needs. `n_docs`
     * (document frequency) rides the same aggregate. */
   val bpePairCounts: QueryDef = QueryDef.sql(
-    """WITH w AS (SELECT doc_id, unnest(string_split(trim(text), ' '))
+    s"""WITH w AS (SELECT doc_id, unnest(${tokensSql("text")})
                     AS w
                   FROM documents),
        p AS (SELECT doc_id,
@@ -4117,19 +4106,18 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * broadcasts. Emits per-dim bounds, clip count, and the
     * winsorized mean as the audit surface. */
   val winsorizeEmbeddings: QueryDef = QueryDef.sql(
-    """WITH v AS (SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS x,
+    s"""WITH v AS (SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS x,
              CAST(generate_subscripts(embedding, 1) - 1 AS INTEGER) AS dim
            FROM embeddings),
        b AS (SELECT dim, quantile_cont(x, 0.01) AS lo,
                quantile_cont(x, 0.99) AS hi
              FROM v GROUP BY 1)
        SELECT v.dim,
-         floor((b.lo) * 1000000 + 0.5) / 1000000 AS p01,
-         floor((b.hi) * 1000000 + 0.5) / 1000000 AS p99,
+         ${r6sql("b.lo")} AS p01,
+         ${r6sql("b.hi")} AS p99,
          CAST(count(CASE WHEN x < b.lo OR x > b.hi THEN 1 END) AS BIGINT)
            AS n_clipped,
-         floor((avg(least(greatest(x, b.lo), b.hi))) * 1000000 + 0.5)
-           / 1000000 AS mean_winsorized
+         ${r6sql("avg(least(greatest(x, b.lo), b.hi))")} AS mean_winsorized
        FROM v JOIN b USING (dim)
        GROUP BY 1, b.lo, b.hi ORDER BY 1""") { (s, d) =>
     val v = Tables.embeddings(s, d)
@@ -4162,7 +4150,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * into band ids) with exact ordering only within buckets, without
     * changing batch semantics. */
   val lengthBatching: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, len(string_split(trim(text), ' '))
+    s"""WITH t AS (SELECT doc_id, len(${tokensSql("text")})
                     AS n_tokens
                   FROM documents),
        r AS (SELECT doc_id, n_tokens,
@@ -4172,9 +4160,8 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
          CAST(count(*) AS BIGINT) AS n_docs,
          CAST(max(n_tokens) AS BIGINT) AS max_len,
          CAST(sum(n_tokens) AS BIGINT) AS sum_len,
-         floor((1.0 - CAST(sum(n_tokens) AS DOUBLE)
-                / (max(n_tokens) * count(*))) * 1000000 + 0.5)
-           / 1000000 AS padding_frac
+         ${r6sql("""1.0 - CAST(sum(n_tokens) AS DOUBLE)
+                / (max(n_tokens) * count(*))""")} AS padding_frac
        FROM r GROUP BY 1 ORDER BY 1""") { (s, d) =>
     val B = 32
     val t = Tables.documents(s, d)
@@ -4239,7 +4226,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * aggregate state as a unique chunk. The oracle mirrors the
     * chunk/count/rebuild pipeline in set-based SQL. */
   val boilerplateRemoval: QueryDef = QueryDef.sql(
-    """WITH toks AS (SELECT doc_id, string_split(trim(text), ' ') AS t
+    s"""WITH toks AS (SELECT doc_id, ${tokensSql("text")} AS t
                      FROM documents),
        chunks AS (
          SELECT doc_id, CAST(i AS INTEGER) AS chunk_idx,
@@ -4405,12 +4392,12 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * whole table — and fail the oracle, whose untouched-type counts
     * are non-zero). At 100 TB this is THE idiom for late-arriving
     * corrections: the rewrite cost is proportional to the dirty
-    * partitions, not the table. Readback aggregates per-row integer
-    * quantizations (floor(v·1e6 + 0.5)), so the sums are exact. */
+    * partitions, not the table. Readback sums per-row `micros`
+    * quantizations, so the sums are exact. */
   val dynamicPartitionOverwrite: QueryDef = QueryDef.sql(
-    """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST(floor((CASE WHEN event_type = 'purchase'
-             THEN -value ELSE value END) * 1000000 + 0.5) AS BIGINT))
+    s"""SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+         CAST(sum(${microsSql("""CASE WHEN event_type = 'purchase'
+             THEN -value ELSE value END""")})
            AS BIGINT) AS qsum
        FROM events GROUP BY 1 ORDER BY 1""") { (s, d) =>
     val dir = graft.sources.ScratchDirs.perProcess("q200", d)
@@ -4425,7 +4412,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     s.read.parquet(dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).cast("long").as("n"),
-        sum(floor(col("value") * 1000000 + lit(0.5)).cast("long"))
+        sum(micros(col("value")))
           .cast("long").as("qsum"))
       .orderBy(col("event_type"))
   }
@@ -4446,8 +4433,8 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * (q158/q207). Version paths are distinct — a lake NEVER
     * overwrites the file set a running read depends on. */
   val mergeUpsert: QueryDef = QueryDef.sql(
-    """WITH base AS (SELECT o_orderkey,
-           CAST(floor(o_totalprice*1000000+0.5) AS BIGINT) AS pm
+    s"""WITH base AS (SELECT o_orderkey,
+           ${microsSql("o_totalprice")} AS pm
          FROM orders),
        kept AS (SELECT o_orderkey,
            CASE WHEN o_orderkey % 7 = 0 THEN pm*2 ELSE pm END AS pm
@@ -4466,8 +4453,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     // processes would accumulate snapshot files in tmp without bound
     val dir = graft.sources.ScratchDirs.perProcess("q327", d)
     val base = Tables.orders(s, d).select(col("o_orderkey"),
-      floor(col("o_totalprice") * 1000000 + lit(0.5)).cast("long")
-        .as("pm"))
+      micros(col("o_totalprice")).as("pm"))
     base.write.mode("overwrite").parquet(s"$dir/t_v1.parquet")
     val snap = s.read.parquet(s"$dir/t_v1.parquet")
     val changes = base.filter(col("o_orderkey") % 13 === 0)
@@ -4687,7 +4673,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * benchmark and joining ~(overlap + fpp) of them — the shape
     * real decontamination passes (e.g. 13-gram screens) run. */
   val bloomContamination: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents),
        g AS (SELECT doc_id, unnest(list_distinct(list_transform(
                generate_series(1, len(toks) - 2),
@@ -4783,11 +4769,11 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * Row-local after a broadcast of the ~|sources| threshold
     * relation — at 100 TB the corpus is touched once, map-side. */
   val temperatureSampling: QueryDef = QueryDef.sql(
-    """WITH s AS (SELECT source, count(*) AS n_s FROM documents GROUP BY 1),
+    s"""WITH s AS (SELECT source, count(*) AS n_s FROM documents GROUP BY 1),
        w AS (SELECT source, n_s,
-               floor((least(1.0, sqrt(n_s) / (SELECT sum(sqrt(n_s)) FROM s)
-                      * (SELECT count(*) FROM documents) * 0.5 / n_s))
-                 * 1000000 + 0.5) / 1000000 AS p_keep
+               ${r6sql("""least(1.0, sqrt(n_s) / (SELECT sum(sqrt(n_s)) FROM s)
+                      * (SELECT count(*) FROM documents) * 0.5 / n_s)""")}
+                 AS p_keep
              FROM s)
        SELECT d.doc_id, d.source, w.p_keep,
               (CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))
@@ -4868,7 +4854,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * per half over posexploded rows — embeddings never shuffle
     * whole; d-row join; row-local flagging. */
   val embeddingDrift: QueryDef = QueryDef.sql(
-    """WITH m AS (SELECT max(vec_id) // 2 AS mid FROM embeddings),
+    s"""WITH m AS (SELECT max(vec_id) // 2 AS mid FROM embeddings),
        v AS (SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS x,
                CAST(generate_subscripts(embedding, 1) - 1 AS INTEGER)
                  AS dim
@@ -4878,12 +4864,10 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
        n AS (SELECT dim, avg(x) AS mean_new
              FROM v, m WHERE vec_id >= mid GROUP BY 1)
        SELECT o.dim,
-         floor((o.mean_old) * 1000000 + 0.5) / 1000000 AS mean_old,
-         floor((n.mean_new) * 1000000 + 0.5) / 1000000 AS mean_new,
-         floor((abs(n.mean_new - o.mean_old) / o.sd_old) * 1000000 + 0.5)
-           / 1000000 AS std_shift,
-         floor((abs(n.mean_new - o.mean_old) / o.sd_old) * 1000000 + 0.5)
-           / 1000000 > 0.2 AS drifted
+         ${r6sql("o.mean_old")} AS mean_old,
+         ${r6sql("n.mean_new")} AS mean_new,
+         ${r6sql("abs(n.mean_new - o.mean_old) / o.sd_old")} AS std_shift,
+         ${r6sql("abs(n.mean_new - o.mean_old) / o.sd_old")} > 0.2 AS drifted
        FROM o JOIN n USING (dim) ORDER BY o.dim""") { (s, d) =>
     val emb = Tables.embeddings(s, d)
     val mid = emb.agg((max(col("vec_id")) / 2).cast("long"))
@@ -4921,16 +4905,15 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * shuffle of embeddings); at 100 TB the corpus side would go
     * through the q38 LSH prefilter with this as the verify stage. */
   val semanticContamination: QueryDef = QueryDef.sql(
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                   FROM embeddings),
        b AS (SELECT vec_id AS b_id, v AS b_v FROM e
              WHERE vec_id % 20 = 0),
        c AS (SELECT vec_id, v FROM e WHERE vec_id % 20 <> 0),
        p AS (SELECT c.vec_id,
-               floor((list_dot_product(c.v, b.b_v)
+               ${r6sql("""list_dot_product(c.v, b.b_v)
                  / (sqrt(list_dot_product(c.v, c.v))
-                    * sqrt(list_dot_product(b.b_v, b.b_v))))
-                 * 1000000 + 0.5) / 1000000 AS cos
+                    * sqrt(list_dot_product(b.b_v, b.b_v)))""")} AS cos
              FROM c CROSS JOIN b)
        SELECT vec_id, max(cos) AS max_cos, max(cos) >= 0.3 AS contaminated
        FROM p GROUP BY 1 ORDER BY 1""") { (s, d) =>
@@ -4964,16 +4947,15 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * driver red row); PlanAuditSpec gates that the executed plan
     * keeps the key-join prefilter and plans no cartesian/BNLJ. */
   val contaminationLsh: QueryDef = QueryDef.sql(
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                   FROM embeddings),
        b AS (SELECT vec_id AS b_id, v AS b_v FROM e
              WHERE vec_id % 20 = 0),
        c AS (SELECT vec_id, v FROM e WHERE vec_id % 20 <> 0),
        p AS (SELECT c.vec_id, b.b_id,
-               floor((list_dot_product(c.v, b.b_v)
+               ${r6sql("""list_dot_product(c.v, b.b_v)
                  / (sqrt(list_dot_product(c.v, c.v))
-                    * sqrt(list_dot_product(b.b_v, b.b_v))))
-                 * 1000000 + 0.5) / 1000000 AS cos
+                    * sqrt(list_dot_product(b.b_v, b.b_v)))""")} AS cos
              FROM c CROSS JOIN b)
        SELECT vec_id, b_id, cos FROM p WHERE cos >= 0.45
        ORDER BY 1, 2""") { (s, d) =>
@@ -5044,8 +5026,8 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * nonnegatives, so Spark `div` and DuckDB `//` agree exactly; no
     * float boundary can flip a selection). */
   val systematicResample: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id,
-             CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS len
+    s"""WITH t AS (SELECT doc_id,
+             CAST(len(${tokensSql("text")}) AS BIGINT) AS len
            FROM documents),
        c AS (SELECT doc_id, len,
                coalesce(sum(len) OVER (ORDER BY doc_id
@@ -5112,7 +5094,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * never a self-join; the per-doc fold is a broadcast-free
     * re-aggregation of the same skinny (gram, doc) stream. */
   val ngramNovelty: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
                   FROM documents),
        g AS (SELECT doc_id, unnest(list_distinct(list_transform(
                generate_series(1, len(toks) - 2),
@@ -5123,8 +5105,8 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
        SELECT g.doc_id, count(*) AS n_grams,
          CAST(count(CASE WHEN f.first_doc = g.doc_id THEN 1 END)
               AS BIGINT) AS n_novel,
-         floor((count(CASE WHEN f.first_doc = g.doc_id THEN 1 END)
-                / CAST(count(*) AS DOUBLE)) * 1000000 + 0.5) / 1000000
+         ${r6sql("""count(CASE WHEN f.first_doc = g.doc_id THEN 1 END)
+                / CAST(count(*) AS DOUBLE)""")}
            AS novelty
        FROM g JOIN f USING (g) GROUP BY 1 ORDER BY 1""") { (s, d) =>
     val grams = Tables.documents(s, d)
@@ -5191,7 +5173,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * two windows partitioned by doc — no fact-sized shuffle beyond
     * the doc key. */
   val spanCorruption: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} toks
              FROM documents),
        p AS (SELECT doc_id, len(toks) AS nt,
            unnest(generate_series(0, len(toks)-1)) AS pos
@@ -5216,11 +5198,10 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
              FROM grp GROUP BY 1,2,3)
        SELECT doc_id, CAST(count(*) AS BIGINT) n_spans,
          CAST(sum(me - ms + 1) AS BIGINT) masked_tokens,
-         floor(CAST(sum(me - ms + 1) AS DOUBLE)/nt*1000000+0.5)
-           /1000000 AS mask_ratio
+         ${r6sql("CAST(sum(me - ms + 1) AS DOUBLE)/nt")} AS mask_ratio
        FROM m GROUP BY doc_id, nt ORDER BY doc_id""") { (s, d) =>
     val toks = Tables.documents(s, d)
-      .select(col("doc_id"), split(trim(col("text")), " ").as("toks"))
+      .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 1)
       .select(col("doc_id"), size(col("toks")).cast("long").as("nt"),
         posexplode(col("toks")).as(Seq("pos", "tok")))
@@ -5260,13 +5241,13 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * under ANY micro-batch split (AvailableNow may deliver the file
     * in one batch today and several after a lake re-chunk). */
   val streamUpsert: QueryDef = QueryDef.sql(
-    """WITH latest AS (
+    s"""WITH latest AS (
          SELECT user_id, value, ts, event_id,
            row_number() OVER (PARTITION BY user_id
              ORDER BY ts DESC, event_id DESC) rk
          FROM events WHERE event_type IN ('purchase','signup','click'))
        SELECT user_id, event_id AS last_event_id,
-         floor(value*1000000+0.5)/1000000 AS last_value
+         ${r6sql("value")} AS last_value
        FROM latest WHERE rk=1 ORDER BY user_id""") { (s, d) =>
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts_us").desc, col("last_event_id").desc)
@@ -5293,8 +5274,8 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * for this drain only — the RocksDB state-store provider path.
     * Oracle: per-user count + exact quantized sum. */
   val streamTws: QueryDef = QueryDef.sql(
-    """SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT)) AS BIGINT)
+    s"""SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
+         CAST(sum(${microsSql("value")}) AS BIGINT)
            AS total_micro
        FROM events GROUP BY 1 ORDER BY 1""") { (s, d) =>
     val w = Window.partitionBy(col("user_id"))
@@ -5348,8 +5329,8 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * an in-plan one-row broadcast of n_min; emitted as per-class
     * aggregates of the kept set. */
   val balancedDownsample: QueryDef = QueryDef.sql(
-    """WITH e AS (SELECT event_type, event_id,
-           CAST(floor(value*1000000+0.5) AS BIGINT) v,
+    s"""WITH e AS (SELECT event_type, event_id,
+           ${microsSql("value")} v,
            (event_id * 2654435761) % 1000003 AS h
          FROM events),
        n AS (SELECT CAST(min(cnt) AS BIGINT) nmin
@@ -5364,8 +5345,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
        FROM r, n WHERE rk <= nmin GROUP BY 1 ORDER BY 1""") { (s, d) =>
     val e = Tables.events(s, d)
       .select(col("event_type"), col("event_id"),
-        floor(col("value") * 1000000 + lit(0.5)).cast("long")
-          .as("v"),
+        micros(col("value")).as("v"),
         ((col("event_id") * lit(2654435761L)) % lit(1000003L))
           .as("h"))
     val nmin = e.groupBy(col("event_type"))
@@ -5398,8 +5378,8 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * cell per ~100 at every SF before the fix). */
   val centroidConfusion: QueryDef = QueryDef.sql(
     s"""WITH c AS (SELECT CAST(label AS BIGINT) clabel, dim,
-           CAST(sum(CAST(floor(CAST(val AS DOUBLE)*1000000+0.5)
-             AS BIGINT)) AS DOUBLE) / count(*) / 1000000.0 mv
+           CAST(sum(${microsSql("CAST(val AS DOUBLE)")}) AS DOUBLE)
+             / count(*) / 1000000.0 mv
          FROM (SELECT label, unnest(embedding) val,
                generate_subscripts(embedding,1) dim FROM embeddings)
          GROUP BY clabel, dim),
@@ -5424,7 +5404,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
       .select(col("tlabel").as("clabel"),
         posexplode(col("vec")).as(Seq("dim", "val")))
       .groupBy(col("clabel"), col("dim"))
-      .agg((sum(floor(col("val") * 1000000 + lit(0.5)).cast("long"))
+      .agg((sum(micros(col("val")))
         .cast("double") / count(lit(1)) / 1000000.0).as("mv"))
       .groupBy(col("clabel"))
       .agg(transform(array_sort(collect_list(struct(col("dim"),
@@ -5485,7 +5465,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
        SELECT doc_id, CAST(x // 8 AS BIGINT) tile_x,
          CAST(y // 8 AS BIGINT) tile_y,
          CAST(count(*) AS BIGINT) n_pix,
-         ${graft.Rounding.r6sql("CAST(sum(l) AS DOUBLE)/count(*)")}
+         ${r6sql("CAST(sum(l) AS DOUBLE)/count(*)")}
            AS mean_lum
        FROM lum GROUP BY 1,2,3 ORDER BY 1,2,3""") { (s, d) =>
     import s.implicits._
@@ -5532,8 +5512,8 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
     * r6-pinned dots in vec_id order. */
   val classCohesion: QueryDef = QueryDef.sql(
     s"""WITH c AS (SELECT CAST(label AS BIGINT) AS lab, dim,
-           CAST(sum(CAST(floor(CAST(val AS DOUBLE)*1000000+0.5)
-             AS BIGINT)) AS DOUBLE) / count(*) / 1000000.0 mv
+           CAST(sum(${microsSql("CAST(val AS DOUBLE)")}) AS DOUBLE)
+             / count(*) / 1000000.0 mv
          FROM (SELECT label, unnest(embedding) val,
                generate_subscripts(embedding,1) dim FROM embeddings)
          GROUP BY lab, dim),
@@ -5546,10 +5526,10 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
          FROM embeddings e JOIN ca
            ON ca.lab = CAST(e.label AS BIGINT)),
        h AS (SELECT lab2, CAST(count(*) AS BIGINT) n_vecs,
-           list_sum(list(${graft.Rounding.r6sql("dt")}
+           list_sum(list(${r6sql("dt")}
              ORDER BY vec_id)) sd FROM d GROUP BY 1)
        SELECT lab2 AS label_id, n_vecs,
-         ${graft.Rounding.r6sql("sd / n_vecs")}
+         ${r6sql("sd / n_vecs")}
            AS mean_dot_centroid
        FROM h ORDER BY 1""") { (s, d) =>
     val emb = Tables.embeddings(s, d)
@@ -5559,7 +5539,7 @@ c$i AS (SELECT cluster, list(CAST(sv AS DOUBLE) / n ORDER BY dim) AS c
       .select(col("lab2").as("lab"),
         posexplode(col("vec")).as(Seq("dim", "val")))
       .groupBy(col("lab"), col("dim"))
-      .agg((sum(floor(col("val") * 1000000 + lit(0.5)).cast("long"))
+      .agg((sum(micros(col("val")))
         .cast("double") / count(lit(1)) / 1000000.0).as("mv"))
       .groupBy(col("lab"))
       .agg(transform(array_sort(collect_list(struct(col("dim"),

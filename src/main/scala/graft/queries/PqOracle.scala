@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.sources.OracleAux
+import graft.Rounding.r6sql
 
 /** DuckDB oracle SQL for the PQ search family (q54/q116/q130/q134),
   * generated against a FROZEN codebook/centroid artifact (see
@@ -69,10 +70,9 @@ object PqOracle {
        |           (PARTITION BY q_id ORDER BY adc DESC, n_id) AS rn
        |         FROM adc) WHERE rn <= ${topK * rerank}),
        |rr AS (SELECT s.q_id, s.n_id,
-       |         floor((list_dot_product(q.v, c.v)
+       |         ${r6sql("""list_dot_product(q.v, c.v)
        |           / (sqrt(list_dot_product(q.v, q.v))
-       |              * sqrt(list_dot_product(c.v, c.v))))
-       |           * 1000000 + 0.5) / 1000000 AS cos
+       |              * sqrt(list_dot_product(c.v, c.v)))""")} AS cos
        |       FROM sl s JOIN raw q ON q.vec_id = s.q_id
        |                 JOIN raw c ON c.vec_id = s.n_id)
        |SELECT q_id, n_id, cos, CAST(rk AS INTEGER) AS rank FROM (

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.Rounding.{r6, r6sql}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,8 +23,6 @@ import org.apache.spark.sql.functions._
   *    as a residual predicate, so no cross product.
   */
 object Relational {
-
-  private def r6(c: Column): Column = graft.Rounding.r6(c)
 
   /** Star-schema join: revenue by (region, nation) over
     * lineitem ⋈ orders ⋈ customer ⋈ nation ⋈ region. The revenue
@@ -79,13 +78,13 @@ object Relational {
   /** Analytic window: per-customer running total + lag delta over
     * order history. Sequential ROWS frame → deterministic doubles. */
   val windowRunning: QueryDef = QueryDef.sql(
-    """SELECT o_custkey, o_orderkey, o_orderdate,
-       floor((sum(o_totalprice) OVER (PARTITION BY o_custkey
+    s"""SELECT o_custkey, o_orderkey, o_orderdate,
+       ${r6sql("""sum(o_totalprice) OVER (PARTITION BY o_custkey
          ORDER BY o_orderdate, o_orderkey
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) * 1000000 + 0.5) / 1000000
+         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""")}
          AS running_total,
-       floor((o_totalprice - lag(o_totalprice) OVER (
-         PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)) * 1000000 + 0.5) / 1000000
+       ${r6sql("""o_totalprice - lag(o_totalprice) OVER (
+         PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""")}
          AS delta_prev
        FROM orders ORDER BY o_custkey, o_orderdate, o_orderkey""") { (s, d) =>
     val w = Window.partitionBy(col("o_custkey"))
@@ -155,9 +154,9 @@ object Relational {
   /** ROLLUP grouping sets (subtotal rows COALESCEd to 'ALL' so both
     * engines agree without NULL-ordering concerns). */
   val rollupAgg: QueryDef = QueryDef.sql(
-    """SELECT COALESCE(l_returnflag, 'ALL') AS rf,
+    s"""SELECT COALESCE(l_returnflag, 'ALL') AS rf,
        COALESCE(l_linestatus, 'ALL') AS ls,
-       floor((sum(l_quantity)) * 1000000 + 0.5) / 1000000 AS sum_qty, count(*) AS n_rows
+       ${r6sql("sum(l_quantity)")} AS sum_qty, count(*) AS n_rows
        FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
        ORDER BY 1, 2""") { (s, d) =>
     Tables.lineitem(s, d)
@@ -172,9 +171,9 @@ object Relational {
 
   /** CUBE grouping sets. */
   val cubeAgg: QueryDef = QueryDef.sql(
-    """SELECT COALESCE(l_returnflag, 'ALL') AS rf,
+    s"""SELECT COALESCE(l_returnflag, 'ALL') AS rf,
        COALESCE(l_linestatus, 'ALL') AS ls,
-       floor((avg(l_extendedprice)) * 1000000 + 0.5) / 1000000 AS avg_price, count(*) AS n_rows
+       ${r6sql("avg(l_extendedprice)")} AS avg_price, count(*) AS n_rows
        FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
        ORDER BY 1, 2""") { (s, d) =>
     Tables.lineitem(s, d)
@@ -194,11 +193,11 @@ object Relational {
     * grouping-flag vector disambiguating real NULLs from subtotal
     * rows (built per-column; DuckDB spells it GROUPING(col)). */
   val groupingSets: QueryDef = QueryDef.sql(
-    """SELECT COALESCE(o_orderpriority, 'ALL') AS pri,
+    s"""SELECT COALESCE(o_orderpriority, 'ALL') AS pri,
        COALESCE(o_orderstatus, 'ALL') AS status,
        CAST(GROUPING(o_orderpriority) * 2 + GROUPING(o_orderstatus)
          AS BIGINT) AS gid,
-       floor((sum(o_totalprice)) * 1000000 + 0.5) / 1000000 AS sum_price,
+       ${r6sql("sum(o_totalprice)")} AS sum_price,
        count(*) AS n_rows
        FROM orders
        GROUP BY GROUPING SETS ((o_orderpriority, o_orderstatus),
@@ -243,8 +242,8 @@ object Relational {
 
   /** JSON extraction from the events.props string column. */
   val jsonExtract: QueryDef = QueryDef.sql(
-    """SELECT CAST(props->>'$.k' AS INTEGER) AS k_value,
-       count(*) AS n, floor((avg(value)) * 1000000 + 0.5) / 1000000 AS avg_value
+    s"""SELECT CAST(props->>'$$.k' AS INTEGER) AS k_value,
+       count(*) AS n, ${r6sql("avg(value)")} AS avg_value
        FROM events GROUP BY 1 ORDER BY 1""") { (s, d) =>
     Tables.events(s, d)
       .withColumn("k_value",
@@ -411,11 +410,11 @@ object Relational {
     * are engine-independent). Oracle is DuckDB's native ASOF JOIN —
     * our union-merge must reproduce it row-for-row. */
   val asofJoin: QueryDef = QueryDef.sql(
-    """WITH l AS (SELECT user_id, event_id AS l_id, epoch_us(ts) AS l_us
+    s"""WITH l AS (SELECT user_id, event_id AS l_id, epoch_us(ts) AS l_us
                   FROM events WHERE event_id % 2 = 0),
        r AS (SELECT user_id, epoch_us(ts) AS r_us,
                arg_max(event_id, event_id) AS r_id,
-               floor((arg_max(value, event_id)) * 1000000 + 0.5) / 1000000 AS r_value
+               ${r6sql("arg_max(value, event_id)")} AS r_value
              FROM events WHERE event_id % 2 = 1 GROUP BY 1, 2)
        SELECT l.user_id, l.l_id, r.r_id, r.r_value
        FROM l ASOF LEFT JOIN r
@@ -490,12 +489,12 @@ object Relational {
     * arithmetic on identical inputs). One shuffle on user_id, all
     * five functions share the single sort. */
   val windowBreadth: QueryDef = QueryDef.sql(
-    """SELECT user_id, event_id,
+    s"""SELECT user_id, event_id,
        lag(event_id) OVER w AS prev_id,
        lead(event_id) OVER w AS next_id,
        CAST(ntile(4) OVER w AS INTEGER) AS quartile,
-       floor(percent_rank() OVER w * 1000000 + 0.5) / 1000000 AS pct_rank,
-       floor(cume_dist() OVER w * 1000000 + 0.5) / 1000000 AS cdist
+       ${r6sql("percent_rank() OVER w")} AS pct_rank,
+       ${r6sql("cume_dist() OVER w")} AS cdist
        FROM (SELECT user_id, event_id, epoch_us(ts) AS us FROM events)
        WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
        ORDER BY user_id, event_id""") { (s, d) =>
@@ -564,7 +563,7 @@ object Relational {
     * double sums by the group count, identical float64 inputs on
     * both engines, then round at the 1e-6 comparison grain. */
   val pricingSummary: QueryDef = QueryDef.sql(
-    """WITH a AS (SELECT l_returnflag, l_linestatus,
+    s"""WITH a AS (SELECT l_returnflag, l_linestatus,
          CAST(round(sum(CAST(l_quantity AS DECIMAL(30,10))), 6)
            AS DOUBLE) AS sum_qty,
          CAST(round(sum(CAST(l_extendedprice AS DECIMAL(30,10))), 6)
@@ -581,11 +580,11 @@ object Relational {
        GROUP BY l_returnflag, l_linestatus)
        SELECT l_returnflag, l_linestatus, sum_qty, sum_base_price,
          sum_disc_price, sum_charge,
-         floor(sum_qty / count_order * 1000000 + 0.5) / 1000000
+         ${r6sql("sum_qty / count_order")}
            AS avg_qty,
-         floor(sum_base_price / count_order * 1000000 + 0.5) / 1000000
+         ${r6sql("sum_base_price / count_order")}
            AS avg_price,
-         floor(sum_disc / count_order * 1000000 + 0.5) / 1000000
+         ${r6sql("sum_disc / count_order")}
            AS avg_disc,
          count_order
        FROM a ORDER BY l_returnflag, l_linestatus""") { (s, d) =>
@@ -667,8 +666,8 @@ object Relational {
     * boundary compares exact integers in both engines regardless of
     * summation order. */
   val largeOrders: QueryDef = QueryDef.sql(
-    """SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
-         floor((qty) * 1000000 + 0.5) / 1000000 AS qty
+    s"""SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
+         ${r6sql("qty")} AS qty
        FROM (SELECT l_orderkey, sum(l_quantity) AS qty FROM lineitem
              GROUP BY 1 HAVING sum(l_quantity) > 150) big
        JOIN orders ON o_orderkey = big.l_orderkey
@@ -755,7 +754,7 @@ object Relational {
     * the same rounded doubles — identical float64 inputs, then the
     * 1e-6 comparison grain. */
   val promoRevenue: QueryDef = QueryDef.sql(
-    """WITH a AS (SELECT
+    s"""WITH a AS (SELECT
          CAST(round(sum(CASE WHEN p_type = 'PROMO'
              THEN CAST(l_extendedprice * (1 - l_discount)
                        AS DECIMAL(30,10))
@@ -768,7 +767,7 @@ object Relational {
        WHERE l_shipdate >= TIMESTAMP '1997-01-01'
          AND l_shipdate < TIMESTAMP '1997-04-01')
        SELECT promo_rev, total_rev,
-         floor(100.0 * promo_rev / total_rev * 1000000 + 0.5) / 1000000
+         ${r6sql("100.0 * promo_rev / total_rev")}
            AS promo_pct
        FROM a""") { (s, d) =>
     val disc = (col("l_extendedprice") * (lit(1) - col("l_discount")))
@@ -842,11 +841,10 @@ object Relational {
     * integral doubles, so sum and count are exact and avg = an exact
     * integer division in float64, identical in any summation order. */
   val smallQtyRevenue: QueryDef = QueryDef.sql(
-    """WITH t AS (SELECT l_partkey, avg(l_quantity) AS thr
+    s"""WITH t AS (SELECT l_partkey, avg(l_quantity) AS thr
                   FROM lineitem GROUP BY 1)
-       SELECT floor(CAST(round(sum(CAST(l_extendedprice
-                AS DECIMAL(30,10))), 6) AS DOUBLE) / 7.0
-                * 1000000 + 0.5) / 1000000 AS avg_yearly,
+       SELECT ${r6sql("""CAST(round(sum(CAST(l_extendedprice
+                AS DECIMAL(30,10))), 6) AS DOUBLE) / 7.0""")} AS avg_yearly,
               count(*) AS n_small
        FROM lineitem
        JOIN part ON p_partkey = l_partkey
@@ -940,9 +938,9 @@ object Relational {
     * presentation sort's. Values share one type (double) — the
     * UNPIVOT contract on both engines. */
   val unpivotMetrics: QueryDef = QueryDef.sql(
-    """WITH agg AS (SELECT event_type,
-           floor(min(value)*1000000+0.5)/1000000 AS min_v,
-           floor(max(value)*1000000+0.5)/1000000 AS max_v,
+    s"""WITH agg AS (SELECT event_type,
+           ${r6sql("min(value)")} AS min_v,
+           ${r6sql("max(value)")} AS max_v,
            CAST(count(*) AS DOUBLE) AS cnt
          FROM events GROUP BY event_type)
        SELECT event_type, metric, val FROM agg

@@ -1,7 +1,11 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.Rounding.{micros, microsSql, r6, r6sql}
+import graft.ops.Features.{epochDay, epochDaySql}
+import graft.text.TextOps
+import graft.text.TextOps.tokensSql
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,7 +24,10 @@ import org.apache.spark.sql.functions._
   */
 object Stats {
 
-  private def r6(c: Column): Column = graft.Rounding.r6(c)
+  /** Whole 7-day blocks since the epoch of the events' `ts`; the
+    * oracles write `epochDaySql("ts") // 7`. */
+  private def epochWeek: Column =
+    call_function("div", epochDay(col("ts")), lit(7))
 
   /** Pearson correlation from exact sufficient statistics, computed
     * in double only at the final (single-row) step. try_divide, not
@@ -66,12 +73,12 @@ object Stats {
              FROM b JOIN tot ON b.event_type = tot.et AND b.half = tot.h
              GROUP BY 1, 2),
        cell AS (SELECT event_type, bucket,
-           ${graft.Rounding.r6sql(
+           ${r6sql(
              """(p1 - p0) * ln(greatest(p1, 0.0001)
                 / greatest(p0, 0.0001))""")} AS contrib
          FROM p)
        SELECT event_type,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "list_sum(list(contrib ORDER BY bucket))")} AS psi,
          CAST(count(*) AS BIGINT) AS n_buckets
        FROM cell GROUP BY 1 ORDER BY 1""") { (s, d) =>
@@ -123,7 +130,7 @@ object Stats {
        tot AS (SELECT from_type AS ftype, CAST(sum(cnt) AS BIGINT)
                  AS ft FROM t GROUP BY 1)
        SELECT from_type, to_type, cnt,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(cnt AS DOUBLE) / CAST(ft AS DOUBLE)")} AS prob
        FROM t JOIN tot ON t.from_type = tot.ftype
        ORDER BY from_type, to_type""") { (s, d) =>
@@ -164,7 +171,7 @@ object Stats {
              FROM d GROUP BY 1),
        t AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM c)
        SELECT digit, cnt,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(cnt AS DOUBLE) / CAST(n AS DOUBLE)")} AS share
        FROM c, t ORDER BY digit""") { (s, d) =>
     val c = Tables.events(s, d)
@@ -217,7 +224,7 @@ object Stats {
              sum(CAST(c*c AS DECIMAL(30,4))),
              sum(CAST(d*d AS DECIMAL(30,4))),
              sum(CAST(c*d AS DECIMAL(30,4))) FROM q)
-       SELECT pair, n, ${graft.Rounding.r6sql(
+       SELECT pair, n, ${r6sql(
          """(CAST(n AS DOUBLE)*CAST(sxy AS DOUBLE)
               - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE))
             / sqrt((CAST(n AS DOUBLE)*CAST(sxx AS DOUBLE)
@@ -271,7 +278,7 @@ object Stats {
                sum(x) AS sx, sum(y) AS sy, sum(x*x) AS sxx,
                sum(y*y) AS syy, sum(x*y) AS sxy
              FROM p WHERE x IS NOT NULL GROUP BY 1)
-       SELECT event_type, n, ${graft.Rounding.r6sql(
+       SELECT event_type, n, ${r6sql(
          """(CAST(n AS DOUBLE)*CAST(sxy AS DOUBLE)
               - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE))
             / sqrt((CAST(n AS DOUBLE)*CAST(sxx AS DOUBLE)
@@ -318,13 +325,13 @@ object Stats {
                sum(CAST(x*v AS DECIMAL(38,0))) AS sxv
              FROM q GROUP BY 1)
        SELECT event_type, n,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            """(CAST(n AS DOUBLE)*CAST(sxv AS DOUBLE)
                 - CAST(sx AS DOUBLE)*CAST(sv AS DOUBLE))
               / (CAST(n AS DOUBLE)*CAST(sxx AS DOUBLE)
                 - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE)) / 1000000.0"""
          )} AS slope,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            """(CAST(sv AS DOUBLE)
                 - ((CAST(n AS DOUBLE)*CAST(sxv AS DOUBLE)
                     - CAST(sx AS DOUBLE)*CAST(sv AS DOUBLE))
@@ -372,7 +379,7 @@ object Stats {
                CAST(sum(c) AS BIGINT) AS sc,
                CAST(sum(i*c) AS BIGINT) AS sic FROM r)
        SELECT n, sc AS total_events,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            """2.0 * CAST(sic AS DOUBLE)
                 / (CAST(n AS DOUBLE) * CAST(sc AS DOUBLE))
               - (CAST(n AS DOUBLE) + 1) / CAST(n AS DOUBLE)""")}
@@ -442,7 +449,7 @@ object Stats {
     * per-row. The flag compares the ROUNDED share so both engines
     * test the same 6-decimal constant (q143 stance). */
   val repetitionSignals: QueryDef = QueryDef.sql(
-    s"""WITH t AS (SELECT doc_id, string_split(trim(text), ' ')
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")}
              AS toks FROM documents),
        b AS (SELECT doc_id, unnest(list_transform(range(1, len(toks)),
                i -> toks[i] || ' ' || toks[i+1])) AS bg
@@ -455,20 +462,20 @@ object Stats {
                  CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct
                FROM t)
        SELECT doc_id, n_tok,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(n_distinct AS DOUBLE) / CAST(n_tok AS DOUBLE)")}
            AS distinct_ratio,
          top_c AS top_bigram_count,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(top_c AS DOUBLE) / CAST(n_bg AS DOUBLE)")}
            AS top_bigram_share,
-         CAST(CASE WHEN ${graft.Rounding.r6sql(
+         CAST(CASE WHEN ${r6sql(
            "CAST(top_c AS DOUBLE) / CAST(n_bg AS DOUBLE)")} > 0.05
            THEN 1 ELSE 0 END AS INTEGER) AS flagged
        FROM tok JOIN agg ON doc_id = a_id
        ORDER BY doc_id""") { (s, d) =>
     val t = Tables.documents(s, d).select(col("doc_id"),
-      graft.text.TextOps.tokens(col("text")).as("toks"))
+      TextOps.tokens(col("text")).as("toks"))
     val bc = t.filter(size(col("toks")) >= 2)
       .select(col("doc_id"), explode(transform(
         sequence(lit(0), size(col("toks")) - 2),
@@ -522,11 +529,11 @@ object Stats {
              AS BIGINT) AS tn
          FROM p)
        SELECT tp, fp, fn, tn,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(tp AS DOUBLE) / (tp + fp)")} AS precision,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(tp AS DOUBLE) / (tp + fn)")} AS recall,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "2.0 * tp / (2.0 * tp + fp + fn)")} AS f1
        FROM c""") { (s, d) =>
     val v = graft.vector.VectorOps.toDouble(col("embedding"))
@@ -580,13 +587,13 @@ object Stats {
                ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
        s AS (SELECT event_type AS s_et,
                CAST(dayofweek(day) AS INTEGER) AS dow,
-               ${graft.Rounding.r6sql(
+               ${r6sql(
                  "list_sum(list(c - trend ORDER BY day)) / count(*)")}
                  AS seasonal
              FROM t WHERE trend IS NOT NULL GROUP BY 1, 2)
        SELECT event_type, CAST(day AS VARCHAR) AS day, c,
-         ${graft.Rounding.r6sql("trend")} AS trend, seasonal,
-         ${graft.Rounding.r6sql("c - trend - seasonal")} AS remainder
+         ${r6sql("trend")} AS trend, seasonal,
+         ${r6sql("c - trend - seasonal")} AS remainder
        FROM t JOIN s ON event_type = s_et
          AND CAST(dayofweek(day) AS INTEGER) = dow
        WHERE trend IS NOT NULL
@@ -638,12 +645,12 @@ object Stats {
                AND a.day = c.day AND a.event_type < c.event_type
              GROUP BY 1, 2)
        SELECT ante, cons, cab,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(cab AS DOUBLE) / CAST(n AS DOUBLE)")} AS support,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(cab AS DOUBLE) / CAST(sa.c AS DOUBLE)")}
            AS confidence,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            """(CAST(cab AS DOUBLE) * CAST(n AS DOUBLE))
               / (CAST(sa.c AS DOUBLE) * CAST(sc.c AS DOUBLE))""")}
            AS lift
@@ -702,7 +709,7 @@ object Stats {
                sum(CAST(v AS DECIMAL(38,0)) * dur) AS sv
              FROM w GROUP BY 1)
        SELECT user_id, n_intervals, total_us,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(sv AS DOUBLE) / total_us / 1000000.0")} AS twap
        FROM a ORDER BY user_id""") { (s, d) =>
     val w = Window.partitionBy(col("user_id"))
@@ -743,9 +750,9 @@ object Stats {
     s"""WITH r AS (
          SELECT event_type,
            2*rank() OVER (PARTITION BY event_type
-               ORDER BY CAST(floor(value*1000000+0.5) AS BIGINT))
+               ORDER BY ${microsSql("value")})
              + count(*) OVER (PARTITION BY event_type,
-                 CAST(floor(value*1000000+0.5) AS BIGINT)) - 1 AS dx,
+                 ${microsSql("value")}) - 1 AS dx,
            2*rank() OVER (PARTITION BY event_type
                ORDER BY epoch_us(ts))
              + count(*) OVER (PARTITION BY event_type, epoch_us(ts))
@@ -759,7 +766,7 @@ object Stats {
            sum(CAST(dx*dy AS DECIMAL(38,0))) sxy
          FROM r GROUP BY 1)
        SELECT event_type, n,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            """(CAST(n AS DOUBLE)*CAST(sxy AS DOUBLE)
                 - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE))
               / sqrt((CAST(n AS DOUBLE)*CAST(sxx AS DOUBLE)
@@ -767,7 +774,7 @@ object Stats {
                 * (CAST(n AS DOUBLE)*CAST(syy AS DOUBLE)
                   - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE)))""")} AS rho
        FROM a ORDER BY 1""") { (s, d) =>
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
+    val vk = micros(col("value"))
     val base = Tables.events(s, d).select(col("event_type"),
       vk.as("vk"), unix_micros(col("ts")).as("tk"))
     val wx = Window.partitionBy(col("event_type")).orderBy(col("vk"))
@@ -804,10 +811,10 @@ object Stats {
     * zero-variance / n=1 cases that ANSI mode would throw on. */
   val welchTtest: QueryDef = QueryDef.sql(
     s"""WITH g AS (SELECT event_type, CAST(count(*) AS BIGINT) n,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
+           CAST(sum(${microsSql("value")})
              AS DECIMAL(38,0)) s,
-           sum(CAST(CAST(floor(value*1000000+0.5) AS BIGINT)
-               * CAST(floor(value*1000000+0.5) AS BIGINT)
+           sum(CAST(${microsSql("value")}
+               * ${microsSql("value")}
              AS DECIMAL(38,0))) ss
          FROM events WHERE event_type IN ('click','purchase')
          GROUP BY 1),
@@ -829,12 +836,12 @@ object Stats {
            (ss2 - s2*s2/n2)/(n2-1)/1000000.0/1000000.0/n2 AS se2
          FROM p)
        SELECT n1, n2,
-         ${graft.Rounding.r6sql("(m1-m2)/sqrt(se1+se2)")} AS t_stat,
-         ${graft.Rounding.r6sql(
+         ${r6sql("(m1-m2)/sqrt(se1+se2)")} AS t_stat,
+         ${r6sql(
            """(se1+se2)*(se1+se2)
               / (se1*se1/(n1-1)+se2*se2/(n2-1))""")} AS df
        FROM m""") { (s, d) =>
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
+    val vk = micros(col("value"))
     val g = Tables.events(s, d)
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("event_type"), vk.as("v"))
@@ -884,7 +891,7 @@ object Stats {
   val theilSen: QueryDef = QueryDef.sql(
     s"""WITH d AS (SELECT event_type,
            CAST(date_trunc('day', ts) AS DATE) AS day,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
+           CAST(sum(${microsSql("value")})
              AS BIGINT) AS dv
          FROM events GROUP BY 1,2),
        pr AS (SELECT a.event_type,
@@ -897,10 +904,10 @@ object Stats {
              ORDER BY slope) rn,
            count(*) OVER (PARTITION BY event_type) cnt FROM pr)
        SELECT event_type, CAST(max(cnt) AS BIGINT) AS n_pairs,
-         ${graft.Rounding.r6sql("avg(slope)/1000000.0")} AS ts_slope
+         ${r6sql("avg(slope)/1000000.0")} AS ts_slope
        FROM rk WHERE rn*2 IN (cnt, cnt+1, cnt+2)
        GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
+    val vk = micros(col("value"))
     val grid = Tables.events(s, d)
       .groupBy(col("event_type"),
         to_date(date_trunc("day", col("ts"))).as("day"))
@@ -945,7 +952,7 @@ object Stats {
   val linearInterpolate: QueryDef = QueryDef.sql(
     s"""WITH e AS (SELECT event_type,
            CAST(epoch_us(ts) // 3600000000 AS BIGINT) AS h,
-           CAST(floor(value*1000000+0.5) AS BIGINT) vk FROM events),
+           ${microsSql("value")} vk FROM events),
        hr AS (SELECT event_type, h, CAST(sum(vk) AS BIGINT) sv,
                CAST(count(*) AS BIGINT) c FROM e GROUP BY 1,2),
        bounds AS (SELECT min(h) h0, max(h) h1 FROM e),
@@ -974,13 +981,13 @@ object Stats {
          CASE WHEN obs IS NOT NULL THEN 'obs'
               WHEN pa IS NOT NULL AND na IS NOT NULL THEN 'interp'
               ELSE 'edge' END AS src,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            """CASE WHEN obs IS NOT NULL THEN obs/1000000.0
               WHEN pa IS NOT NULL AND na IS NOT NULL
                 THEN (pa + (na - pa) * (h - ph) / (nh - ph))/1000000.0
               ELSE NULL END""")} AS val
        FROM w ORDER BY 1,2""") { (s, d) =>
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
+    val vk = micros(col("value"))
     val e = Tables.events(s, d).select(col("event_type"),
       expr("unix_micros(ts) div 3600000000").as("h"), vk.as("vk"))
     val hr = e.groupBy(col("event_type"), col("h"))
@@ -1032,7 +1039,7 @@ object Stats {
     * exact long shift sums. */
   val quantileNormalize: QueryDef = QueryDef.sql(
     s"""WITH v AS (SELECT event_type, event_id,
-           CAST(floor(value*1000000+0.5) AS BIGINT) vk FROM events),
+           ${microsSql("value")} vk FROM events),
        g AS (SELECT vk, row_number() OVER (ORDER BY vk, event_id)
                rn_g FROM v),
        t AS (SELECT event_type, vk,
@@ -1045,14 +1052,14 @@ object Stats {
        j AS (SELECT m.event_type, m.vk, g.vk AS nvk
              FROM m JOIN g ON g.rn_g = m.gidx)
        SELECT event_type, CAST(count(*) AS BIGINT) n,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(sum(nvk - vk) AS DOUBLE)/count(*)/1000000.0")}
            AS mean_shift,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(sum(abs(nvk - vk)) AS DOUBLE)/count(*)/1000000.0")}
            AS mean_abs_shift
        FROM j GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
+    val vk = micros(col("value"))
     val v = Tables.events(s, d).select(col("event_type"),
       col("event_id"), vk.as("vk"))
     val g = graft.ops.Packing
@@ -1193,12 +1200,12 @@ object Stats {
              FROM d, n0),
        c AS (SELECT t, d_i, n_i,
            CASE WHEN d_i > 0 AND n_i > d_i THEN
-             ${graft.Rounding.r6sql(
+             ${r6sql(
                "ln(CAST(n_i - d_i AS DOUBLE) / n_i)")}
              ELSE 0.0 END AS contrib
          FROM r)
        SELECT t, d_i, n_i,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            """sum(contrib) OVER (ORDER BY t ROWS BETWEEN UNBOUNDED
               PRECEDING AND CURRENT ROW)""")} AS ln_surv
        FROM c WHERE d_i > 0 AND n_i > d_i ORDER BY t""") { (s, d) =>
@@ -1259,7 +1266,7 @@ object Stats {
              FROM tu a JOIN tu b ON a.user_id=b.user_id
                AND a.event_type < b.event_type GROUP BY 1,2)
        SELECT t1, t2, common, za.nu AS n1, zb.nu AS n2,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(common AS DOUBLE)/(za.nu + zb.nu - common)")}
            AS jaccard
        FROM p JOIN sz za ON p.t1=za.event_type
@@ -1305,12 +1312,12 @@ object Stats {
        my AS (SELECT bucket, CAST(sum(c) AS BIGINT) cy
               FROM b GROUP BY 1),
        cell AS (SELECT b.event_type, b.bucket,
-           ${graft.Rounding.r6sql(
+           ${r6sql(
              """(CAST(c AS DOUBLE)/n) * ln( (CAST(c AS DOUBLE)*n)
                 / (CAST(cx AS DOUBLE)*cy) )""")} AS contrib
          FROM b JOIN mx USING (event_type) JOIN my USING (bucket),
            n0)
-       SELECT ${graft.Rounding.r6sql(
+       SELECT ${r6sql(
            "list_sum(list(contrib ORDER BY event_type, bucket))")}
            AS mi_nats,
          CAST(count(*) AS BIGINT) AS n_cells
@@ -1340,6 +1347,21 @@ object Stats {
       count(lit(1)).cast("long").as("n_cells"))
   }
 
+  /** The daily series the time-series queries below read: per
+    * (event_type, epoch day `di`), the exact long sum `dv` of the
+    * events' micro-unit values. q245 and q304 build their own, each
+    * with one more group key (the day's DATE, its ISO weekday). */
+  private def dailyMicroSums(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .groupBy(col("event_type"), epochDay(col("ts")).as("di"))
+      .agg(sum(micros(col("value"))).cast("long").as("dv"))
+
+  /** [[dailyMicroSums]] as a DuckDB subquery. */
+  private def dailyMicroSumsSql: String =
+    s"""SELECT event_type, CAST(${epochDaySql("ts")} AS BIGINT) AS di,
+           CAST(sum(${microsSql("value")}) AS BIGINT) AS dv
+         FROM events GROUP BY 1, 2"""
+
   /** 7-day ROLLING OLS slope per event_type — the windowed model
     * fit (q208 fits one global line; operations wants "what's the
     * trend RIGHT NOW", refit every day over the trailing week). All
@@ -1351,12 +1373,8 @@ object Stats {
     * exact longs, and partial lead-in frames (n < 7) are excluded
     * so every slope means the same window. */
   val rollingOls: QueryDef = QueryDef.sql(
-    s"""WITH d AS (SELECT event_type,
-           CAST(epoch_us(date_trunc('day', ts)) // 86400000000
-             AS BIGINT) AS x,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
-             AS BIGINT) AS y
-         FROM events GROUP BY 1,2),
+    s"""WITH d AS (SELECT event_type, di AS x, dv AS y
+         FROM ($dailyMicroSumsSql)),
        w AS (SELECT event_type, x,
            CAST(count(*) OVER f AS BIGINT) n,
            CAST(sum(x) OVER f AS BIGINT) sx,
@@ -1366,17 +1384,13 @@ object Stats {
          FROM d WINDOW f AS (PARTITION BY event_type ORDER BY x
            ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))
        SELECT event_type, x AS day_idx,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            """CAST(n*sxy - sx*sy AS DOUBLE)
               / CAST(n*sxx - sx*sx AS DOUBLE) / 1000000.0""")}
            AS slope
        FROM w WHERE n = 7 ORDER BY 1,2""") { (s, d) =>
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
-    val g = Tables.events(s, d)
-      .groupBy(col("event_type"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000")
-          .as("x"))
-      .agg(sum(vk).cast("long").as("y"))
+    val g = dailyMicroSums(s, d)
+      .select(col("event_type"), col("di").as("x"), col("dv").as("y"))
     val f = Window.partitionBy(col("event_type")).orderBy(col("x"))
       .rowsBetween(-6, Window.currentRow)
     g.select(col("event_type"), col("x"),
@@ -1409,9 +1423,9 @@ object Stats {
   val dowAnomaly: QueryDef = QueryDef.sql(
     s"""WITH d AS (SELECT event_type,
            CAST(date_trunc('day', ts) AS DATE) AS day,
-           CAST(epoch_us(date_trunc('day', ts)) // 86400000000
+           CAST(${epochDaySql("ts")}
              AS BIGINT) AS di,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
+           CAST(sum(${microsSql("value")})
              AS BIGINT) AS dv
          FROM events GROUP BY 1,2,3),
        dw AS (SELECT *, dayofweek(day) AS dow FROM d),
@@ -1423,35 +1437,33 @@ object Stats {
              / 1000000.0 AS resid
          FROM dw JOIN m ON dw.event_type=m.et AND dw.dow=m.dw2),
        s AS (SELECT event_type,
-           ${graft.Rounding.r6sql(
-             s"list_sum(list(${graft.Rounding.r6sql("resid")} ORDER BY di))")}
+           ${r6sql(
+             s"list_sum(list(${r6sql("resid")} ORDER BY di))")}
              AS sr,
-           ${graft.Rounding.r6sql(
-             s"list_sum(list(${graft.Rounding.r6sql("resid*resid")} ORDER BY di))")}
+           ${r6sql(
+             s"list_sum(list(${r6sql("resid*resid")} ORDER BY di))")}
              AS srr,
            CAST(count(*) AS BIGINT) n FROM r GROUP BY 1)
        SELECT r.event_type, r.di AS day_idx,
-         ${graft.Rounding.r6sql("resid")} AS resid_val,
+         ${r6sql("resid")} AS resid_val,
          CASE WHEN abs(resid) > 2.0*sqrt((srr - sr*sr/n)/(n-1))
            THEN 1 ELSE 0 END AS is_anomaly
        FROM r JOIN s ON r.event_type=s.event_type
        WHERE abs(resid) > 2.0*sqrt((srr - sr*sr/n)/(n-1))
        ORDER BY 1,2""") { (s, d) =>
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
+    val vk = micros(col("value"))
     val g = Tables.events(s, d)
       .groupBy(col("event_type"),
         to_date(date_trunc("day", col("ts"))).as("day"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000")
-          .as("di"))
+        epochDay(col("ts")).as("di"))
       .agg(sum(vk).cast("long").as("dv"))
       .withColumn("dow", dayofweek(col("day")))
     val m = g.groupBy(col("event_type").as("et"),
         col("dow").as("dw2"))
       .agg(sum(col("dv")).cast("long").as("s"),
         count(lit(1)).cast("long").as("c"))
-    // residuals in VALUE units (micro residuals square past r6's
-    // 2^53/1e6 domain — Spark's floor(double) is a LONG and clamps
-    // at Long.MaxValue there, silently zeroing the variance)
+    // residuals in VALUE units: squared micro residuals leave r6's
+    // domain (the q245 lesson in Rounding)
     val r = g.join(m, col("event_type") === col("et")
         && col("dow") === col("dw2"))
       .select(col("event_type"), col("di"),
@@ -1492,12 +1504,7 @@ object Stats {
     * integers — no float anywhere. At 100 TB the window runs on the
     * dimension-sized daily residue. */
   val hampelOutliers: QueryDef = QueryDef.sql(
-    """WITH d AS (SELECT event_type,
-           CAST(epoch_us(date_trunc('day', ts)) // 86400000000
-             AS BIGINT) AS di,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
-             AS BIGINT) AS dv
-         FROM events GROUP BY 1,2),
+    s"""WITH d AS ($dailyMicroSumsSql),
        w AS (SELECT event_type, di, dv,
            list(dv) OVER (PARTITION BY event_type ORDER BY di
              ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS fr
@@ -1511,12 +1518,7 @@ object Stats {
          med AS med_micro, mad AS mad_micro
        FROM m WHERE abs(dv - med) > 3*mad AND mad > 0
        ORDER BY 1, 2""") { (s, d) =>
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
-    val g = Tables.events(s, d)
-      .groupBy(col("event_type"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000")
-          .as("di"))
-      .agg(sum(vk).cast("long").as("dv"))
+    val g = dailyMicroSums(s, d)
     val f = Window.partitionBy(col("event_type")).orderBy(col("di"))
       .rowsBetween(-3, 3)
     g.withColumn("fr", collect_list(col("dv")).over(f))
@@ -1545,7 +1547,7 @@ object Stats {
   val bootstrapCi: QueryDef = QueryDef.sql(
     s"""WITH reps AS (SELECT unnest(generate_series(0, 199)) AS rb),
        x AS (SELECT e.event_type, reps.rb,
-           CAST(floor(e.value*1000000+0.5) AS BIGINT) v,
+           ${microsSql("e.value")} v,
            ((e.event_id * 2654435761 + reps.rb * 97) % 1000003) % 4
              AS h4
          FROM events e CROSS JOIN reps),
@@ -1559,15 +1561,14 @@ object Stats {
            list_sort(list(CAST(sv AS DOUBLE)/sw/1000000.0)) ms
          FROM w WHERE sw > 0 GROUP BY 1)
        SELECT event_type, CAST(len(ms) AS BIGINT) AS n_boot,
-         ${graft.Rounding.r6sql("ms[6]")} AS ci_lo,
-         ${graft.Rounding.r6sql("ms[195]")} AS ci_hi
+         ${r6sql("ms[6]")} AS ci_lo,
+         ${r6sql("ms[195]")} AS ci_hi
        FROM m ORDER BY 1""") { (s, d) =>
     val wt = when(col("h4") === 0, 0L).when(col("h4") === 3, 2L)
       .otherwise(1L)
     val x = Tables.events(s, d)
       .select(col("event_type"), col("event_id"),
-        floor(col("value") * 1000000 + lit(0.5)).cast("long")
-          .as("v"))
+        micros(col("value")).as("v"))
       .withColumn("rb", explode(sequence(lit(0L), lit(199L))))
       .withColumn("h4",
         ((col("event_id") * lit(2654435761L) + col("rb") * lit(97L))
@@ -1597,7 +1598,7 @@ object Stats {
     * those exact inputs. One fact pass, one-row result. */
   val anovaF: QueryDef = QueryDef.sql(
     s"""WITH e AS (SELECT event_type,
-           CAST(floor(value*1000000+0.5) AS BIGINT) v FROM events),
+           ${microsSql("value")} v FROM events),
        g AS (SELECT event_type, CAST(sum(v) AS BIGINT) s,
                CAST(count(*) AS BIGINT) n FROM e GROUP BY 1),
        tot AS (SELECT CAST(sum(s) AS BIGINT) st,
@@ -1608,14 +1609,13 @@ object Stats {
        ssw AS (SELECT CAST(sum(CAST(v AS DECIMAL(19,0))
              * CAST(v AS DECIMAL(19,0))) AS DOUBLE) svv FROM e)
        SELECT k-1 AS df_between, nt-k AS df_within,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            """((sb_raw - CAST(st AS DOUBLE)*st/nt)/(k-1))
               / ((svv - sb_raw)/(nt-k))""")} AS f_stat
        FROM tot, ssw""") { (s, d) =>
     val e = Tables.events(s, d)
       .select(col("event_type"),
-        floor(col("value") * 1000000 + lit(0.5)).cast("long")
-          .as("v"))
+        micros(col("value")).as("v"))
     val g = e.groupBy(col("event_type"))
       .agg(sum(col("v")).cast("long").as("s"),
         count(lit(1)).cast("long").as("n"))
@@ -1650,12 +1650,7 @@ object Stats {
     * both engines. try_divide guards the σ=0 degenerate type (both
     * engines then emit the 'd' branch). */
   val saxSymbols: QueryDef = QueryDef.sql(
-    """WITH d AS (SELECT event_type,
-           CAST(epoch_us(date_trunc('day', ts)) // 86400000000
-             AS BIGINT) AS di,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
-             AS BIGINT) AS dv
-         FROM events GROUP BY 1,2),
+    s"""WITH d AS ($dailyMicroSumsSql),
        st AS (SELECT event_type AS et, CAST(sum(dv) AS BIGINT) s,
            CAST(count(*) AS BIGINT) n,
            CAST(sum(CAST(dv AS DECIMAL(19,0))
@@ -1672,12 +1667,7 @@ object Stats {
        SELECT event_type, CAST(wk AS BIGINT) AS week_idx,
          string_agg(sy, '' ORDER BY di) AS sax_word
        FROM sym GROUP BY 1,2 ORDER BY 1,2""") { (s, d) =>
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
-    val dg = Tables.events(s, d)
-      .groupBy(col("event_type"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000")
-          .as("di"))
-      .agg(sum(vk).cast("long").as("dv"))
+    val dg = dailyMicroSums(s, d)
     val st = dg.groupBy(col("event_type").as("et"))
       .agg(sum(col("dv")).cast("long").as("s"),
         count(lit(1)).cast("long").as("n"),
@@ -1718,7 +1708,7 @@ object Stats {
     * the single divide happens once per type at the end. */
   val wassersteinDrift: QueryDef = QueryDef.sql(
     s"""WITH e AS (SELECT event_type, user_id % 2 AS cohort,
-           CAST(floor(value*1000000+0.5) AS BIGINT) v FROM events),
+           ${microsSql("value")} v FROM events),
        n AS (SELECT event_type,
            CAST(sum(CASE WHEN cohort=0 THEN 1 ELSE 0 END) AS BIGINT)
              na,
@@ -1744,13 +1734,12 @@ object Stats {
          FROM cum JOIN n ON cum.event_type = n.event_type
          WHERE nv IS NOT NULL GROUP BY 1,2,3)
        SELECT event_type, na AS n_a, nb AS n_b,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(num AS DOUBLE)/na/nb/1000000.0")} AS w1_dist
        FROM t ORDER BY 1""") { (s, d) =>
     val e = Tables.events(s, d)
       .select(col("event_type"), (col("user_id") % 2).as("cohort"),
-        floor(col("value") * 1000000 + lit(0.5)).cast("long")
-          .as("v"))
+        micros(col("value")).as("v"))
     val cnt = e.groupBy(col("event_type").as("n_et"))
       .agg(sum(when(col("cohort") === 0, 1L).otherwise(0L))
         .cast("long").as("na"),
@@ -1790,8 +1779,8 @@ object Stats {
     * distinct-value residue, an 8-way row-local expansion —
     * dimension-sized everywhere past the first aggregate. */
   val equiHeightHistogram: QueryDef = QueryDef.sql(
-    """WITH e AS (SELECT event_type,
-           CAST(floor(value*1000000+0.5) AS BIGINT) v FROM events),
+    s"""WITH e AS (SELECT event_type,
+           ${microsSql("value")} v FROM events),
        c AS (SELECT event_type, v, CAST(count(*) AS BIGINT) n
              FROM e GROUP BY 1,2),
        cum AS (SELECT event_type, v,
@@ -1810,8 +1799,7 @@ object Stats {
        FROM b ORDER BY 1,2""") { (s, d) =>
     val e = Tables.events(s, d)
       .select(col("event_type"),
-        floor(col("value") * 1000000 + lit(0.5)).cast("long")
-          .as("v"))
+        micros(col("value")).as("v"))
     val c = e.groupBy(col("event_type"), col("v"))
       .agg(count(lit(1)).cast("long").as("n"))
     val win = Window.partitionBy(col("event_type")).orderBy(col("v"))
@@ -1842,27 +1830,27 @@ object Stats {
          SELECT 'event_type' AS col_name, event_type AS k FROM events
          UNION ALL
          SELECT 'value_decile',
-           CAST((CAST(floor(value*1000000+0.5) AS BIGINT) * 10)
+           CAST((${microsSql("value")} * 10)
              // 327530001 AS VARCHAR) FROM events),
        c AS (SELECT col_name, k, CAST(count(*) AS BIGINT) n
              FROM s GROUP BY 1,2),
        t AS (SELECT col_name AS cn, CAST(sum(n) AS BIGINT) nt
              FROM c GROUP BY 1),
        h AS (SELECT col_name, CAST(count(*) AS BIGINT) n_distinct,
-           list_sum(list(${graft.Rounding.r6sql(
+           list_sum(list(${r6sql(
              "-(CAST(n AS DOUBLE)/nt) * ln(CAST(n AS DOUBLE)/nt)")}
              ORDER BY k)) ent
          FROM c JOIN t ON col_name = cn GROUP BY 1)
        SELECT col_name, n_distinct,
-         ${graft.Rounding.r6sql("ent")} AS entropy_nats
+         ${r6sql("ent")} AS entropy_nats
        FROM h ORDER BY 1""") { (s, d) =>
     val ev = Tables.events(s, d)
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
+    val vk = micros(col("value"))
     val stacked = ev.select(lit("event_type").as("col_name"),
         col("event_type").as("k"))
       .unionByName(ev.select(lit("value_decile").as("col_name"),
-        expr(s"cast((cast(floor(value*1000000+0.5) as bigint) * 10)"
-          + " div 327530001 as string)").as("k")))
+        call_function("div", vk * 10, lit(327530001)).cast("string")
+          .as("k")))
     val c = stacked.groupBy(col("col_name"), col("k"))
       .agg(count(lit(1)).cast("long").as("n"))
     val t = c.groupBy(col("col_name").as("cn"))
@@ -1893,7 +1881,7 @@ object Stats {
        u AS (SELECT user_id AS u2, CAST(sum(n) AS BIGINT) nt
              FROM c GROUP BY 1),
        h AS (SELECT user_id,
-           list_sum(list(${graft.Rounding.r6sql(
+           list_sum(list(${r6sql(
              "-(CAST(n AS DOUBLE)/nt) * ln(CAST(n AS DOUBLE)/nt)")}
              ORDER BY event_type)) ent
          FROM c JOIN u ON user_id = u2 GROUP BY 1)
@@ -1924,8 +1912,8 @@ object Stats {
     * (user; ts, event_id) window shared by both halves; the argmax
     * is total-order deterministic (count desc, type asc). */
   val markovAccuracy: QueryDef = QueryDef.sql(
-    """WITH seq AS (SELECT user_id, event_type,
-           CAST(epoch_us(date_trunc('day', ts)) // 86400000000
+    s"""WITH seq AS (SELECT user_id, event_type,
+           CAST(${epochDaySql("ts")}
              AS BIGINT) di,
            lead(event_type) OVER (PARTITION BY user_id
              ORDER BY ts, event_id) nxt
@@ -1943,8 +1931,8 @@ object Stats {
        SELECT test.p AS prev_type, CAST(count(*) AS BIGINT) n_test,
          CAST(sum(CASE WHEN test.n2 = pred.predicted THEN 1 ELSE 0
            END) AS BIGINT) n_correct,
-         floor(CAST(sum(CASE WHEN test.n2 = pred.predicted THEN 1
-           ELSE 0 END) AS DOUBLE)/count(*)*1000000+0.5)/1000000
+         ${r6sql("""CAST(sum(CASE WHEN test.n2 = pred.predicted THEN 1
+           ELSE 0 END) AS DOUBLE)/count(*)""")}
            AS accuracy
        FROM test JOIN pred ON test.p = pred.p
        GROUP BY 1 ORDER BY 1""") { (s, d) =>
@@ -1952,8 +1940,7 @@ object Stats {
       .orderBy(col("ts"), col("event_id"))
     val seq = Tables.events(s, d)
       .select(col("user_id"), col("event_type"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000")
-          .as("di"),
+        epochDay(col("ts")).as("di"),
         lead(col("event_type"), 1).over(w).as("nxt"))
       .filter(col("nxt").isNotNull)
     val bounds = seq.agg(
@@ -1990,12 +1977,7 @@ object Stats {
     * excluded by lag-index checks so both engines evaluate the same
     * terms; the single divide is try-guarded and r6-rounded. */
   val maseSeasonal: QueryDef = QueryDef.sql(
-    s"""WITH d AS (SELECT event_type,
-           CAST(epoch_us(date_trunc('day', ts)) // 86400000000
-             AS BIGINT) di,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
-             AS BIGINT) dv
-         FROM events GROUP BY 1,2),
+    s"""WITH d AS ($dailyMicroSumsSql),
        l AS (SELECT event_type, di, dv,
            lag(dv, 7) OVER (PARTITION BY event_type ORDER BY di) p7,
            lag(dv, 1) OVER (PARTITION BY event_type ORDER BY di) p1,
@@ -2010,15 +1992,10 @@ object Stats {
            CAST(sum(CASE WHEN d7 = di - 7 THEN 1 END) AS BIGINT) n7
          FROM l GROUP BY 1)
        SELECT event_type, n7 AS n_eval,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(e7 AS DOUBLE)/NULLIF(e1, 0)")} AS mase
        FROM e ORDER BY 1""") { (s, d) =>
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
-    val dg = Tables.events(s, d)
-      .groupBy(col("event_type"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000")
-          .as("di"))
-      .agg(sum(vk).cast("long").as("dv"))
+    val dg = dailyMicroSums(s, d)
     val w = Window.partitionBy(col("event_type")).orderBy(col("di"))
     val l = dg.select(col("event_type"), col("di"), col("dv"),
       lag(col("dv"), 7).over(w).as("p7"),
@@ -2059,7 +2036,7 @@ object Stats {
        SELECT CAST(dw AS BIGINT) iso_dow,
          CAST(count(*) AS BIGINT) n_clicks,
          CAST(sum(converted) AS BIGINT) n_converted,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(sum(converted) AS DOUBLE)/count(*)")} AS conv_rate
        FROM conv GROUP BY 1 ORDER BY 1""") { (s, d) =>
     val ev = Tables.events(s, d)
@@ -2094,21 +2071,20 @@ object Stats {
     * lesson). */
   val dispersionIndex: QueryDef = QueryDef.sql(
     s"""WITH e AS (SELECT event_type,
-           CAST(floor(value*1000000+0.5) AS BIGINT) v FROM events),
+           ${microsSql("value")} v FROM events),
        g AS (SELECT event_type, CAST(sum(v) AS BIGINT) s,
            CAST(count(*) AS BIGINT) n,
            CAST(sum(CAST(v AS DECIMAL(19,0)) * CAST(v AS
              DECIMAL(19,0))) AS DOUBLE) svv
          FROM e GROUP BY 1)
        SELECT event_type, n,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            """((svv - CAST(s AS DOUBLE)*s/n)/(n-1))
               / (CAST(s AS DOUBLE)/n) / 1000000.0""")} AS dispersion
        FROM g ORDER BY 1""") { (s, d) =>
     Tables.events(s, d)
       .select(col("event_type"),
-        floor(col("value") * 1000000 + lit(0.5)).cast("long")
-          .as("v"))
+        micros(col("value")).as("v"))
       .groupBy(col("event_type"))
       .agg(sum(col("v")).cast("long").as("s"),
         count(lit(1)).cast("long").as("n"),
@@ -2135,7 +2111,7 @@ object Stats {
     * never a global sort. */
   val hillTailIndex: QueryDef = QueryDef.sql(
     s"""WITH e AS (SELECT event_type, event_id,
-           CAST(floor(value*1000000+0.5) AS BIGINT) v FROM events
+           ${microsSql("value")} v FROM events
          WHERE value > 0),
        r AS (SELECT event_type, v,
            row_number() OVER (PARTITION BY event_type
@@ -2143,17 +2119,16 @@ object Stats {
        xk AS (SELECT event_type AS et, v AS vk FROM r
               WHERE rk = 101),
        h AS (SELECT event_type,
-           list_sum(list(${graft.Rounding.r6sql(
+           list_sum(list(${r6sql(
              "ln(CAST(v AS DOUBLE)/vk)")} ORDER BY rk)) sh
          FROM r JOIN xk ON event_type = et WHERE rk <= 100
          GROUP BY 1)
-       SELECT event_type, ${graft.Rounding.r6sql("sh/100.0")}
+       SELECT event_type, ${r6sql("sh/100.0")}
          AS hill_alpha_inv
        FROM h ORDER BY 1""") { (s, d) =>
     val e = Tables.events(s, d).filter(col("value") > 0)
       .select(col("event_type"), col("event_id"),
-        floor(col("value") * 1000000 + lit(0.5)).cast("long")
-          .as("v"))
+        micros(col("value")).as("v"))
     val w = Window.partitionBy(col("event_type"))
       .orderBy(col("v").desc, col("event_id"))
     val r = e.withColumn("rk", row_number().over(w))
@@ -2181,7 +2156,7 @@ object Stats {
     * excluded so every ratio means the same window. */
   val stickinessRatio: QueryDef = QueryDef.sql(
     s"""WITH ud AS (SELECT DISTINCT user_id,
-           CAST(epoch_us(date_trunc('day', ts)) // 86400000000
+           CAST(${epochDaySql("ts")}
              AS BIGINT) di
          FROM events),
        dau AS (SELECT di, CAST(count(*) AS BIGINT) dau FROM ud
@@ -2193,14 +2168,13 @@ object Stats {
          FROM ex GROUP BY 1),
        b AS (SELECT CAST(min(di) AS BIGINT) d0 FROM ud)
        SELECT dau.di AS day_idx, dau.dau, mau.mau,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(dau.dau AS DOUBLE)/mau.mau")} AS stickiness
        FROM dau JOIN mau ON dau.di = mau.di, b
        WHERE dau.di >= d0 + 29 ORDER BY 1""") { (s, d) =>
     val ud = Tables.events(s, d)
       .select(col("user_id"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000")
-          .as("di"))
+        epochDay(col("ts")).as("di"))
       .distinct()
     val dau = ud.groupBy(col("di"))
       .agg(count(lit(1)).cast("long").as("dau"))
@@ -2227,10 +2201,10 @@ object Stats {
     * recency stance: anchor to the DATA, not the wall clock). One
     * fact aggregate; rank over the |types| residue. */
   val decayedPopularity: QueryDef = QueryDef.sql(
-    """WITH b AS (SELECT CAST(max(epoch_us(date_trunc('day', ts))
-           // 86400000000) AS BIGINT) md FROM events),
+    s"""WITH b AS (SELECT CAST(max(${epochDaySql("ts")}) AS BIGINT) md
+         FROM events),
        e AS (SELECT event_type,
-           CAST(epoch_us(date_trunc('day', ts)) // 86400000000
+           CAST(${epochDaySql("ts")}
              AS BIGINT) di FROM events),
        w AS (SELECT event_type,
            CAST(1000000 >> CAST(least((md - di) // 7, 19) AS INTEGER)
@@ -2245,8 +2219,7 @@ object Stats {
        FROM g ORDER BY rnk""") { (s, d) =>
     val e = Tables.events(s, d)
       .select(col("event_type"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000")
-          .as("di"))
+        epochDay(col("ts")).as("di"))
     val b = e.agg(max(col("di")).cast("long").as("md"))
     val g = e.crossJoin(broadcast(b))
       .withColumn("age", least(expr("(md - di) div 7"), lit(19L))
@@ -2271,13 +2244,12 @@ object Stats {
     * divides, the DiD a fixed IEEE sequence on a one-row conditional
     * aggregate broadcast back onto the two output rows. */
   val diffInDiff: QueryDef = QueryDef.sql(
-    s"""WITH b AS (SELECT (CAST(min(epoch_us(date_trunc('day', ts))
-           // 86400000000) AS BIGINT)
-           + CAST(max(epoch_us(date_trunc('day', ts))
-           // 86400000000) AS BIGINT)) // 2 AS split FROM events),
+    s"""WITH b AS (SELECT (CAST(min(${epochDaySql("ts")}) AS BIGINT)
+           + CAST(max(${epochDaySql("ts")}) AS BIGINT)) // 2 AS split
+         FROM events),
        e AS (SELECT user_id % 2 AS cohort,
-           CASE WHEN CAST(epoch_us(date_trunc('day', ts))
-             // 86400000000 AS BIGINT) <= split THEN 0 ELSE 1 END
+           CASE WHEN CAST(${epochDaySql("ts")}
+             AS BIGINT) <= split THEN 0 ELSE 1 END
              AS period,
            CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
              AS is_p
@@ -2295,15 +2267,14 @@ object Stats {
             - max(CASE WHEN cohort=0 AND period=0 THEN r END))
            AS did FROM r)
        SELECT a.cohort, a.n AS n_pre, b2.n AS n_post,
-         ${graft.Rounding.r6sql("b2.r - a.r")} AS delta,
-         ${graft.Rounding.r6sql("did")} AS did
+         ${r6sql("b2.r - a.r")} AS delta,
+         ${r6sql("did")} AS did
        FROM r a JOIN r b2 ON a.cohort = b2.cohort
          AND a.period = 0 AND b2.period = 1, d
        ORDER BY a.cohort""") { (s, d) =>
     val ev = Tables.events(s, d)
       .select((col("user_id") % 2).as("cohort"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000")
-          .as("di"),
+        epochDay(col("ts")).as("di"),
         when(col("event_type") === "purchase", 1L).otherwise(0L)
           .as("is_p"))
     val b = ev.agg(((min(col("di")) + max(col("di"))) / 2)
@@ -2342,7 +2313,7 @@ object Stats {
   val rankMatching: QueryDef = QueryDef.sql(
     s"""WITH u AS (SELECT user_id, user_id % 2 AS cohort,
            CAST(count(*) AS BIGINT) n_ev,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
+           CAST(sum(${microsSql("value")})
              AS BIGINT) spend
          FROM events GROUP BY 1,2),
        st AS (SELECT *, least(n_ev // 20, 9) AS stratum,
@@ -2353,14 +2324,14 @@ object Stats {
            AND a.rk = b.rk AND a.cohort = 0 AND b.cohort = 1)
        SELECT CAST(stratum AS BIGINT) stratum,
          CAST(count(*) AS BIGINT) n_pairs,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(sum(abs(sa - sb)) AS DOUBLE)/count(*)/1000000.0")}
            AS mean_abs_diff
        FROM m GROUP BY 1 ORDER BY 1""") { (s, d) =>
     val u = Tables.events(s, d)
       .groupBy(col("user_id"), (col("user_id") % 2).as("cohort"))
       .agg(count(lit(1)).cast("long").as("n_ev"),
-        sum(floor(col("value") * 1000000 + lit(0.5)).cast("long"))
+        sum(micros(col("value")))
           .cast("long").as("spend"))
       .withColumn("stratum",
         least(expr("n_ev div 20"), lit(9L)).cast("long"))
@@ -2403,8 +2374,8 @@ object Stats {
              / (CAST(sg AS DOUBLE)/n) AS cv
          FROM a WHERE n >= 2)
        SELECT event_type, n AS n_gaps,
-         ${graft.Rounding.r6sql("cv")} AS cv,
-         ${graft.Rounding.r6sql("(cv - 1.0)/(cv + 1.0)")}
+         ${r6sql("cv")} AS cv,
+         ${r6sql("(cv - 1.0)/(cv + 1.0)")}
            AS burstiness
        FROM c ORDER BY 1""") { (s, d) =>
     val w = Window.partitionBy(col("event_type"))
@@ -2457,8 +2428,8 @@ object Stats {
          FROM g a JOIN g b ON a.dw=b.dw AND a.cohort=0
            AND b.cohort=1)
        SELECT sd.dw AS iso_dow,
-         ${graft.Rounding.r6sql("strat_diff")} AS strat_diff,
-         ${graft.Rounding.r6sql("pooled_diff")} AS pooled_diff,
+         ${r6sql("strat_diff")} AS strat_diff,
+         ${r6sql("pooled_diff")} AS pooled_diff,
          CASE WHEN (strat_diff >= 0) = (pooled_diff >= 0) THEN 1
            ELSE 0 END AS agrees
        FROM sd, pd ORDER BY 1""") { (s, d) =>
@@ -2503,12 +2474,7 @@ object Stats {
     * only) on exact counts. Flat days (Δ=0) are dropped per the
     * classic two-category formulation. */
   val runsTest: QueryDef = QueryDef.sql(
-    s"""WITH d AS (SELECT event_type,
-           CAST(epoch_us(date_trunc('day', ts)) // 86400000000
-             AS BIGINT) di,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
-             AS BIGINT) dv
-         FROM events GROUP BY 1,2),
+    s"""WITH d AS ($dailyMicroSumsSql),
        s AS (SELECT event_type, di,
            CASE WHEN dv > lag(dv) OVER w THEN 1
                 WHEN dv < lag(dv) OVER w THEN -1 ELSE 0 END sg
@@ -2523,17 +2489,12 @@ object Stats {
              ELSE 0 END) AS BIGINT) runs
          FROM nz GROUP BY 1)
        SELECT event_type, n, n_up, runs,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            """(runs - (2.0*n_up*(n-n_up)/n + 1))
               / sqrt( (2.0*n_up*(n-n_up)*(2.0*n_up*(n-n_up)-n))
                 / (CAST(n AS DOUBLE)*n*(n-1)) )""")} AS z
        FROM g WHERE n_up > 0 AND n_up < n ORDER BY 1""") { (s, d) =>
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
-    val dg = Tables.events(s, d)
-      .groupBy(col("event_type"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000")
-          .as("di"))
-      .agg(sum(vk).cast("long").as("dv"))
+    val dg = dailyMicroSums(s, d)
     val w = Window.partitionBy(col("event_type")).orderBy(col("di"))
     val sg = when(col("dv") > lag(col("dv"), 1).over(w), 1L)
       .when(col("dv") < lag(col("dv"), 1).over(w), -1L)
@@ -2566,12 +2527,7 @@ object Stats {
     * cross-products as DECIMAL(19)²); the correlation is one IEEE
     * sequence per (type, lag) row. */
   val acfLags: QueryDef = QueryDef.sql(
-    s"""WITH d AS (SELECT event_type,
-           CAST(epoch_us(date_trunc('day', ts)) // 86400000000
-             AS BIGINT) di,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
-             AS BIGINT) dv
-         FROM events GROUP BY 1,2),
+    s"""WITH d AS ($dailyMicroSumsSql),
        lg AS (SELECT unnest(generate_series(1,7)) AS lag_k),
        p AS (SELECT a.event_type, lg.lag_k, a.dv x, b.dv y
          FROM d a JOIN lg ON true
@@ -2587,17 +2543,12 @@ object Stats {
              DECIMAL(19,0))) AS DOUBLE) sxy
          FROM p GROUP BY 1,2 HAVING count(*) >= 3)
        SELECT event_type, CAST(lag_k AS BIGINT) lag_k, n,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            """(n*sxy - CAST(sx AS DOUBLE)*sy)
               / sqrt((n*sxx - CAST(sx AS DOUBLE)*sx)
                 * (n*syy - CAST(sy AS DOUBLE)*sy))""")} AS acf
        FROM st ORDER BY 1,2""") { (s, d) =>
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
-    val dg = Tables.events(s, d)
-      .groupBy(col("event_type"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000")
-          .as("di"))
-      .agg(sum(vk).cast("long").as("dv"))
+    val dg = dailyMicroSums(s, d)
     val a = dg.withColumn("lag_k",
       explode(sequence(lit(1L), lit(7L))))
     val b = dg.select(col("event_type").as("et2"),
@@ -2632,8 +2583,8 @@ object Stats {
     * have to repair (this audits; q107 fixes). Pure integer
     * aggregate. */
   val missingDays: QueryDef = QueryDef.sql(
-    """WITH d AS (SELECT event_type,
-           CAST(epoch_us(date_trunc('day', ts)) // 86400000000
+    s"""WITH d AS (SELECT event_type,
+           CAST(${epochDaySql("ts")}
              AS BIGINT) di
          FROM events GROUP BY 1,2),
        b AS (SELECT event_type, CAST(min(di) AS BIGINT) lo,
@@ -2644,8 +2595,7 @@ object Stats {
        FROM b ORDER BY 1""") { (s, d) =>
     Tables.events(s, d)
       .select(col("event_type"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000")
-          .as("di"))
+        epochDay(col("ts")).as("di"))
       .distinct()
       .groupBy(col("event_type"))
       .agg(min(col("di")).cast("long").as("lo"),
@@ -2672,22 +2622,21 @@ object Stats {
     * and are excluded on both sides. */
   val theilIndex: QueryDef = QueryDef.sql(
     s"""WITH u AS (SELECT user_id,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
+           CAST(sum(${microsSql("value")})
              AS BIGINT) x
          FROM events GROUP BY 1),
        t AS (SELECT CAST(sum(x) AS BIGINT) sx,
            CAST(count(*) AS BIGINT) n FROM u),
        c AS (SELECT user_id, (CAST(x AS DOUBLE)*n/sx) AS ratio
              FROM u, t),
-       h AS (SELECT CAST(sum(CAST(floor(ratio * ln(ratio) * 1000000
-               + 0.5) AS BIGINT)) AS BIGINT) thk
+       h AS (SELECT CAST(sum(${microsSql("ratio * ln(ratio)")}) AS BIGINT) thk
          FROM c WHERE ratio > 0)
        SELECT t.n AS n_users,
-         ${graft.Rounding.r6sql("(thk / 1000000.0) / t.n")} AS theil
+         ${r6sql("(thk / 1000000.0) / t.n")} AS theil
        FROM h, t""") { (s, d) =>
     val u = Tables.events(s, d)
       .groupBy(col("user_id"))
-      .agg(sum(floor(col("value") * 1000000 + lit(0.5)).cast("long"))
+      .agg(sum(micros(col("value")))
         .cast("long").as("x"))
     val t = u.agg(sum(col("x")).cast("long").as("sx"),
       count(lit(1)).cast("long").as("n"))
@@ -2696,8 +2645,7 @@ object Stats {
       .select(col("user_id"), ratio.as("ratio"), col("n"))
       .filter(col("ratio") > 0)
       .groupBy(col("n"))
-      .agg(sum(floor(col("ratio") * log(col("ratio"))
-          * 1000000 + lit(0.5)).cast("long")).as("thk"))
+      .agg(sum(micros(col("ratio") * log(col("ratio")))).as("thk"))
       .select(col("n").as("n_users"),
         r6((col("thk") / lit(1000000.0)) / col("n")).as("theil"))
   }
@@ -2709,12 +2657,7 @@ object Stats {
     * bounds on both engines. All values exact micro-longs; one
     * (type, day) sort serves every function. */
   val windowValueBreadth: QueryDef = QueryDef.sql(
-    """WITH d AS (SELECT event_type,
-           CAST(epoch_us(date_trunc('day', ts)) // 86400000000
-             AS BIGINT) di,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
-             AS BIGINT) dv
-         FROM events GROUP BY 1,2),
+    s"""WITH d AS ($dailyMicroSumsSql),
        w AS (SELECT event_type, di, dv,
            first_value(dv) OVER f AS w_first,
            last_value(dv) OVER f AS w_last,
@@ -2726,12 +2669,7 @@ object Stats {
        SELECT event_type, di AS day_idx, dv, w_first, w_second,
          w_last, w_max - w_min AS w_range
        FROM w ORDER BY 1,2""") { (s, d) =>
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
-    val dg = Tables.events(s, d)
-      .groupBy(col("event_type"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000")
-          .as("di"))
-      .agg(sum(vk).cast("long").as("dv"))
+    val dg = dailyMicroSums(s, d)
     val f = Window.partitionBy(col("event_type")).orderBy(col("di"))
       .rowsBetween(-2, 2)
     dg.select(col("event_type"), col("di").as("day_idx"), col("dv"),
@@ -2750,25 +2688,24 @@ object Stats {
     * weeks via one min-aggregate per user; one user-keyed join. */
   val newcomerShare: QueryDef = QueryDef.sql(
     s"""WITH f AS (SELECT user_id,
-           CAST(min(epoch_us(date_trunc('day', ts)) // 86400000000)
+           CAST(min(${epochDaySql("ts")})
              // 7 AS BIGINT) fw
          FROM events GROUP BY 1),
        e AS (SELECT user_id,
-           CAST((epoch_us(date_trunc('day', ts)) // 86400000000)
+           CAST((${epochDaySql("ts")})
              // 7 AS BIGINT) wk FROM events),
        g AS (SELECT e.wk, CAST(count(*) AS BIGINT) n_events,
            CAST(sum(CASE WHEN f.fw = e.wk THEN 1 ELSE 0 END)
              AS BIGINT) newcomer_events
          FROM e JOIN f ON e.user_id = f.user_id GROUP BY 1)
        SELECT wk AS week_idx, n_events, newcomer_events,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(newcomer_events AS DOUBLE)/n_events")}
            AS newcomer_share
        FROM g ORDER BY 1""") { (s, d) =>
     val ev = Tables.events(s, d)
       .select(col("user_id"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000"
-          + " div 7").as("wk"))
+        epochWeek.as("wk"))
     val f = ev.groupBy(col("user_id").as("u2"))
       .agg(min(col("wk")).cast("long").as("fw"))
     ev.join(f, col("user_id") === col("u2"))
@@ -2799,12 +2736,12 @@ object Stats {
        m AS (SELECT p AS p2, CAST(sum(c) AS BIGINT) cp FROM tr
              GROUP BY 1),
        t AS (SELECT CAST(sum(c) AS BIGINT) ct FROM tr),
-       h AS (SELECT list_sum(list(${graft.Rounding.r6sql(
+       h AS (SELECT list_sum(list(${r6sql(
          "-(CAST(c AS DOUBLE)/ct) * ln(CAST(c AS DOUBLE)/cp)")}
            ORDER BY p, n2)) er,
            CAST(count(*) AS BIGINT) n_pairs
          FROM tr JOIN m ON p = p2, t)
-       SELECT n_pairs, ${graft.Rounding.r6sql("er")}
+       SELECT n_pairs, ${r6sql("er")}
          AS entropy_rate_nats FROM h""") { (s, d) =>
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
@@ -2836,8 +2773,8 @@ object Stats {
     * Lead-in and lead-out weeks excluded so every row compares two
     * real weeks. */
   val weeklyTurnover: QueryDef = QueryDef.sql(
-    """WITH uw AS (SELECT DISTINCT user_id,
-           CAST((epoch_us(date_trunc('day', ts)) // 86400000000)
+    s"""WITH uw AS (SELECT DISTINCT user_id,
+           CAST((${epochDaySql("ts")})
              // 7 AS BIGINT) wk FROM events),
        p AS (SELECT a.wk + 1 AS wk, a.user_id FROM uw a),
        j AS (SELECT coalesce(c.wk, p.wk) wk,
@@ -2858,8 +2795,7 @@ object Stats {
        FROM j, b WHERE wk > w0 AND wk <= w1 ORDER BY 1""") { (s, d) =>
     val uw = Tables.events(s, d)
       .select(col("user_id"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000"
-          + " div 7").as("wk"))
+        epochWeek.as("wk"))
       .distinct()
     val p = uw.select((col("wk") + 1).as("pwk"),
       col("user_id").as("pu"))
@@ -2900,7 +2836,7 @@ object Stats {
        g AS (SELECT user_id, us - lag(us) OVER (PARTITION BY user_id
              ORDER BY us) gp FROM e),
        med AS (SELECT user_id AS u2,
-           ${graft.Rounding.r6sql("quantile_cont(gp, 0.5)")} mg
+           ${r6sql("quantile_cont(gp, 0.5)")} mg
          FROM g WHERE gp IS NOT NULL GROUP BY 1),
        lastv AS (SELECT user_id, CAST(max(us) AS BIGINT) lu,
            CAST(count(*) AS BIGINT) n_ev FROM e GROUP BY 1),
@@ -2940,10 +2876,10 @@ object Stats {
     * OUTER join of adjacent weekly (user, revenue) residues; all
     * money exact micro-longs. */
   val gmvBridge: QueryDef = QueryDef.sql(
-    """WITH uwv AS (SELECT user_id,
-           CAST((epoch_us(date_trunc('day', ts)) // 86400000000)
+    s"""WITH uwv AS (SELECT user_id,
+           CAST((${epochDaySql("ts")})
              // 7 AS BIGINT) wk,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
+           CAST(sum(${microsSql("value")})
              AS BIGINT) v
          FROM events WHERE event_type='purchase' GROUP BY 1,2),
        p AS (SELECT user_id, wk + 1 AS wk, v FROM uwv),
@@ -2967,9 +2903,8 @@ object Stats {
     val uwv = Tables.events(s, d)
       .filter(col("event_type") === "purchase")
       .groupBy(col("user_id"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000"
-          + " div 7").as("wk"))
-      .agg(sum(floor(col("value") * 1000000 + lit(0.5)).cast("long"))
+        epochWeek.as("wk"))
+      .agg(sum(micros(col("value")))
         .cast("long").as("v"))
     val p = uwv.select(col("user_id").as("pu"),
       (col("wk") + 1).as("pwk"), col("v").as("pvv"))
@@ -3006,12 +2941,7 @@ object Stats {
     * exact longs so the ranking doubles are bit-identical; ties
     * break by day. */
   val peakDetection: QueryDef = QueryDef.sql(
-    s"""WITH d AS (SELECT event_type,
-           CAST(epoch_us(date_trunc('day', ts)) // 86400000000
-             AS BIGINT) di,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
-             AS BIGINT) dv
-         FROM events GROUP BY 1,2),
+    s"""WITH d AS ($dailyMicroSumsSql),
        w AS (SELECT event_type, di, dv, lag(dv) OVER f pv,
            lead(dv) OVER f nv,
            CAST(sum(dv) OVER (PARTITION BY event_type ORDER BY di
@@ -3029,14 +2959,9 @@ object Stats {
            AND dv > pv AND dv > nv)
        SELECT event_type, CAST(rk AS BIGINT) peak_rank,
          di AS day_idx, dv AS day_val_micro,
-         ${graft.Rounding.r6sql("prom")} AS prominence
+         ${r6sql("prom")} AS prominence
        FROM pk WHERE rk <= 3 ORDER BY 1,2""") { (s, d) =>
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
-    val dg = Tables.events(s, d)
-      .groupBy(col("event_type"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000")
-          .as("di"))
-      .agg(sum(vk).cast("long").as("dv"))
+    val dg = dailyMicroSums(s, d)
     val f = Window.partitionBy(col("event_type")).orderBy(col("di"))
     val f7 = f.rowsBetween(-3, 3)
     val w = dg.select(col("event_type"), col("di"), col("dv"),
@@ -3063,8 +2988,8 @@ object Stats {
     * is constant within a consecutive run). Everything integer; the
     * per-user window partitions by user. */
   val streakHistogram: QueryDef = QueryDef.sql(
-    """WITH ud AS (SELECT DISTINCT user_id,
-           CAST(epoch_us(date_trunc('day', ts)) // 86400000000
+    s"""WITH ud AS (SELECT DISTINCT user_id,
+           CAST(${epochDaySql("ts")}
              AS BIGINT) di FROM events),
        g AS (SELECT user_id, di,
            di - row_number() OVER (PARTITION BY user_id
@@ -3077,8 +3002,7 @@ object Stats {
        FROM mx GROUP BY 1 ORDER BY 1""") { (s, d) =>
     val ud = Tables.events(s, d)
       .select(col("user_id"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000")
-          .as("di"))
+        epochDay(col("ts")).as("di"))
       .distinct()
     val w = Window.partitionBy(col("user_id")).orderBy(col("di"))
     ud.withColumn("grp", col("di") - row_number().over(w))
@@ -3100,10 +3024,10 @@ object Stats {
     * lesson). */
   val seasonalStrength: QueryDef = QueryDef.sql(
     s"""WITH d AS (SELECT event_type,
-           CAST(epoch_us(date_trunc('day', ts)) // 86400000000
+           CAST(${epochDaySql("ts")}
              AS BIGINT) di,
            isodow(CAST(date_trunc('day', ts) AS DATE)) dw,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
+           CAST(sum(${microsSql("value")})
              AS BIGINT) dv
          FROM events GROUP BY 1,2,3),
        m AS (SELECT event_type et, dw dw2, CAST(sum(dv) AS BIGINT)
@@ -3117,18 +3041,17 @@ object Stats {
              AS resid
          FROM d JOIN m ON d.event_type=m.et AND d.dw=m.dw2),
        ss AS (SELECT event_type, list_sum(list(
-           ${graft.Rounding.r6sql("resid*resid")} ORDER BY resid))
+           ${r6sql("resid*resid")} ORDER BY resid))
            ssr FROM r GROUP BY 1)
        SELECT t.et2 AS event_type, t.n,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            """1.0 - ssr/((svv - CAST(st AS DOUBLE)*st/n)
               /1000000.0/1000000.0)""")} AS seasonal_strength
        FROM ss JOIN t ON event_type = et2 ORDER BY 1""") { (s, d) =>
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
+    val vk = micros(col("value"))
     val dg = Tables.events(s, d)
       .groupBy(col("event_type"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000")
-          .as("di"),
+        epochDay(col("ts")).as("di"),
         (weekday(to_date(date_trunc("day", col("ts")))) + 1)
           .as("dw"))
       .agg(sum(vk).cast("long").as("dv"))
@@ -3169,23 +3092,22 @@ object Stats {
     * median, decimal Σv²). */
   val nonparamSkew: QueryDef = QueryDef.sql(
     s"""WITH e AS (SELECT event_type,
-           CAST(floor(value*1000000+0.5) AS BIGINT) v FROM events),
+           ${microsSql("value")} v FROM events),
        g AS (SELECT event_type, CAST(sum(v) AS BIGINT) s,
            CAST(count(*) AS BIGINT) n,
            CAST(sum(CAST(v AS DECIMAL(19,0))*CAST(v AS
              DECIMAL(19,0))) AS DOUBLE) svv,
-           ${graft.Rounding.r6sql("quantile_cont(v, 0.5)")} med
+           ${r6sql("quantile_cont(v, 0.5)")} med
          FROM e GROUP BY 1)
        SELECT event_type, n,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            """(CAST(s AS DOUBLE)/n - med)
               / sqrt((svv - CAST(s AS DOUBLE)*s/n)/(n-1))""")}
            AS nonparam_skew
        FROM g ORDER BY 1""") { (s, d) =>
     Tables.events(s, d)
       .select(col("event_type"),
-        floor(col("value") * 1000000 + lit(0.5)).cast("long")
-          .as("v"))
+        micros(col("value")).as("v"))
       .groupBy(col("event_type"))
       .agg(sum(col("v")).cast("long").as("s"),
         count(lit(1)).cast("long").as("n"),
@@ -3226,9 +3148,9 @@ object Stats {
          FROM r, tot WHERE rk*10 <= np)
        SELECT u.nu AS n_users, t.nt AS n_types,
          z.nz AS nonzero_cells,
-         ${graft.Rounding.r6sql("CAST(nz AS DOUBLE)/(nu*nt)")}
+         ${r6sql("CAST(nz AS DOUBLE)/(nu*nt)")}
            AS density,
-         ${graft.Rounding.r6sql("CAST(top_mass AS DOUBLE)/te")}
+         ${r6sql("CAST(top_mass AS DOUBLE)/te")}
            AS top_decile_mass
        FROM u, t, z, topd, tot""") { (s, d) =>
     val ev = Tables.events(s, d)
@@ -3264,12 +3186,7 @@ object Stats {
     * pair nothing); exact sufficient statistics, one IEEE sequence
     * per row (the q284 machinery pointed at absolute changes). */
   val volClustering: QueryDef = QueryDef.sql(
-    s"""WITH d AS (SELECT event_type,
-           CAST(epoch_us(date_trunc('day', ts)) // 86400000000
-             AS BIGINT) di,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
-             AS BIGINT) dv
-         FROM events GROUP BY 1,2),
+    s"""WITH d AS ($dailyMicroSumsSql),
        ch AS (SELECT event_type, di,
            abs(dv - lag(dv) OVER (PARTITION BY event_type
              ORDER BY di)) AS adlt
@@ -3288,18 +3205,13 @@ object Stats {
              DECIMAL(19,0))) AS DOUBLE) sxy
          FROM pr GROUP BY 1 HAVING count(*) >= 3)
        SELECT event_type, n,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            """(n*sxy - CAST(sx AS DOUBLE)*sy)
               / sqrt((n*sxx - CAST(sx AS DOUBLE)*sx)
                 * (n*syy - CAST(sy AS DOUBLE)*sy))""")}
            AS vol_autocorr
        FROM st ORDER BY 1""") { (s, d) =>
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
-    val dg = Tables.events(s, d)
-      .groupBy(col("event_type"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000")
-          .as("di"))
-      .agg(sum(vk).cast("long").as("dv"))
+    val dg = dailyMicroSums(s, d)
     val w = Window.partitionBy(col("event_type")).orderBy(col("di"))
     val ch = dg.select(col("event_type"), col("di"),
         abs(col("dv") - lag(col("dv"), 1).over(w)).as("adlt"))
@@ -3337,13 +3249,8 @@ object Stats {
     * machinery on an offset equi-join of the two per-type series;
     * everything exact up to the one IEEE sequence per lag row. */
   val crossCorrelation: QueryDef = QueryDef.sql(
-    s"""WITH d AS (SELECT event_type,
-           CAST(epoch_us(date_trunc('day', ts)) // 86400000000
-             AS BIGINT) di,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
-             AS BIGINT) dv
-         FROM events WHERE event_type IN ('click','purchase')
-         GROUP BY 1,2),
+    s"""WITH d AS (SELECT * FROM ($dailyMicroSumsSql)
+         WHERE event_type IN ('click','purchase')),
        a AS (SELECT di, dv x FROM d WHERE event_type='click'),
        b AS (SELECT di, dv y FROM d WHERE event_type='purchase'),
        lg AS (SELECT unnest(generate_series(-3,3)) AS lag_k),
@@ -3359,18 +3266,13 @@ object Stats {
              DECIMAL(19,0))) AS DOUBLE) sxy
          FROM p GROUP BY 1 HAVING count(*) >= 3)
        SELECT CAST(lag_k AS BIGINT) lag_k, n,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            """(n*sxy - CAST(sx AS DOUBLE)*sy)
               / sqrt((n*sxx - CAST(sx AS DOUBLE)*sx)
                 * (n*syy - CAST(sy AS DOUBLE)*sy))""")} AS xcorr
        FROM st ORDER BY 1""") { (s, d) =>
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
-    val dg = Tables.events(s, d)
+    val dg = dailyMicroSums(s, d)
       .filter(col("event_type").isin("click", "purchase"))
-      .groupBy(col("event_type"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000")
-          .as("di"))
-      .agg(sum(vk).cast("long").as("dv"))
     val a = dg.filter(col("event_type") === "click")
       .select(col("di"), col("dv").as("x"))
       .withColumn("lag_k", explode(sequence(lit(-3L), lit(3L))))
@@ -3403,21 +3305,18 @@ object Stats {
     * summary scalar row next to q238's full survival curve. */
   val lifetimePercentiles: QueryDef = QueryDef.sql(
     s"""WITH u AS (SELECT user_id,
-           CAST(max(epoch_us(date_trunc('day', ts)) // 86400000000)
-             - min(epoch_us(date_trunc('day', ts)) // 86400000000)
+           CAST(max(${epochDaySql("ts")})
+             - min(${epochDaySql("ts")})
              AS BIGINT) span
          FROM events GROUP BY 1)
        SELECT CAST(count(*) AS BIGINT) n_users,
-         ${graft.Rounding.r6sql("quantile_cont(span, 0.25)")} AS p25,
-         ${graft.Rounding.r6sql("quantile_cont(span, 0.5)")} AS p50,
-         ${graft.Rounding.r6sql("quantile_cont(span, 0.9)")} AS p90
+         ${r6sql("quantile_cont(span, 0.25)")} AS p25,
+         ${r6sql("quantile_cont(span, 0.5)")} AS p50,
+         ${r6sql("quantile_cont(span, 0.9)")} AS p90
        FROM u""") { (s, d) =>
     Tables.events(s, d)
       .groupBy(col("user_id"))
-      .agg((max(expr(
-        "unix_micros(date_trunc('day', ts)) div 86400000000"))
-        - min(expr(
-          "unix_micros(date_trunc('day', ts)) div 86400000000")))
+      .agg((max(epochDay(col("ts"))) - min(epochDay(col("ts"))))
         .cast("long").as("span"))
       .agg(count(lit(1)).cast("long").as("n_users"),
         r6(percentile(col("span"), lit(0.25))).as("p25"),
@@ -3445,7 +3344,7 @@ object Stats {
          LEFT JOIN p ON pu = c.user_id GROUP BY 1,2)
        SELECT CAST(count(*) AS BIGINT) n_clicks,
          CAST(sum(conv) AS BIGINT) n_full_funnel,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(sum(conv) AS DOUBLE)/count(*)")} AS funnel_rate
        FROM f""") { (s, d) =>
     val ev = Tables.events(s, d)
@@ -3479,9 +3378,9 @@ object Stats {
     * money. */
   val growthContribution: QueryDef = QueryDef.sql(
     s"""WITH d AS (SELECT event_type,
-           CAST((epoch_us(date_trunc('day', ts)) // 86400000000)
+           CAST((${epochDaySql("ts")})
              // 7 AS BIGINT) wk,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
+           CAST(sum(${microsSql("value")})
              AS BIGINT) v
          FROM events GROUP BY 1,2),
        pr AS (SELECT event_type, wk + 1 AS wk, v pv FROM d),
@@ -3496,7 +3395,7 @@ object Stats {
            CAST(max(wk) AS BIGINT) w1 FROM d)
        SELECT j.wk AS week_idx, et AS event_type,
          CAST(cv - pv AS BIGINT) delta_micro,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(cv - pv AS DOUBLE)/tot_prev")}
            AS growth_contribution
        FROM j JOIN tw ON j.wk = tw.wk, b
@@ -3504,9 +3403,8 @@ object Stats {
        ORDER BY 1,2""") { (s, d) =>
     val dg = Tables.events(s, d)
       .groupBy(col("event_type"),
-        expr("unix_micros(date_trunc('day', ts)) div 86400000000"
-          + " div 7").as("wk"))
-      .agg(sum(floor(col("value") * 1000000 + lit(0.5)).cast("long"))
+        epochWeek.as("wk"))
+      .agg(sum(micros(col("value")))
         .cast("long").as("v"))
     val pr = dg.select(col("event_type").as("pet"),
       (col("wk") + 1).as("pwk"), col("v").as("pv"))
@@ -3573,10 +3471,10 @@ object Stats {
     * two derived user metrics). */
   val tenureSpendCorr: QueryDef = QueryDef.sql(
     s"""WITH u AS (SELECT user_id,
-           CAST(max(epoch_us(date_trunc('day', ts)) // 86400000000)
-             - min(epoch_us(date_trunc('day', ts)) // 86400000000)
+           CAST(max(${epochDaySql("ts")})
+             - min(${epochDaySql("ts")})
              AS BIGINT) x,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
+           CAST(sum(${microsSql("value")})
              AS BIGINT) y
          FROM events GROUP BY 1),
        st AS (SELECT CAST(count(*) AS BIGINT) n,
@@ -3587,18 +3485,17 @@ object Stats {
              DECIMAL(19,0))) AS DOUBLE) syy,
            CAST(sum(CAST(x AS DECIMAL(19,0))*CAST(y AS
              DECIMAL(19,0))) AS DOUBLE) sxy FROM u)
-       SELECT n, ${graft.Rounding.r6sql(
+       SELECT n, ${r6sql(
          """(n*sxy - CAST(sx AS DOUBLE)*sy)
             / sqrt((n*sxx - CAST(sx AS DOUBLE)*sx)
               * (n*syy - CAST(sy AS DOUBLE)*sy))""")}
          AS tenure_spend_corr
        FROM st""") { (s, d) =>
-    val di = expr("unix_micros(date_trunc('day', ts))"
-      + " div 86400000000")
+    val di = epochDay(col("ts"))
     Tables.events(s, d)
       .groupBy(col("user_id"))
       .agg((max(di) - min(di)).cast("long").as("x"),
-        sum(floor(col("value") * 1000000 + lit(0.5)).cast("long"))
+        sum(micros(col("value")))
           .cast("long").as("y"))
       .agg(count(lit(1)).cast("long").as("n"),
         sum(col("x")).cast("long").as("sx"),
@@ -3651,22 +3548,21 @@ object Stats {
     * to q238's full survival curve and q246's LTV triangle. */
   val timeToFirstPurchase: QueryDef = QueryDef.sql(
     s"""WITH su AS (SELECT user_id,
-           CAST(min(epoch_us(date_trunc('day', ts)) // 86400000000)
+           CAST(min(${epochDaySql("ts")})
              AS BIGINT) sd
          FROM events WHERE event_type='signup' GROUP BY 1),
        fp AS (SELECT user_id pu,
-           CAST(min(epoch_us(date_trunc('day', ts)) // 86400000000)
+           CAST(min(${epochDaySql("ts")})
              AS BIGINT) pd
          FROM events WHERE event_type='purchase' GROUP BY 1),
        l AS (SELECT su.user_id, CAST(sd // 7 AS BIGINT) cohort_wk,
            pd - sd AS lag_d
          FROM su JOIN fp ON pu = su.user_id WHERE pd >= sd)
        SELECT cohort_wk, CAST(count(*) AS BIGINT) n_converted,
-         ${graft.Rounding.r6sql("quantile_cont(lag_d, 0.5)")}
+         ${r6sql("quantile_cont(lag_d, 0.5)")}
            AS median_days
        FROM l GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    val di = expr("unix_micros(date_trunc('day', ts))"
-      + " div 86400000000")
+    val di = epochDay(col("ts"))
     val ev = Tables.events(s, d)
     val su = ev.filter(col("event_type") === "signup")
       .groupBy(col("user_id"))
@@ -3697,8 +3593,8 @@ object Stats {
     * (even-spread integer form; n and the per-decile counts are
     * exact longs, lift is two IEEE divides on the 10-row residue). */
   val decileLift: QueryDef = QueryDef.sql(
-    """WITH s AS (SELECT o_orderkey,
-           CAST(floor(o_totalprice*1000000+0.5) AS BIGINT) pm,
+    s"""WITH s AS (SELECT o_orderkey,
+           ${microsSql("o_totalprice")} pm,
            CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
              THEN 1 ELSE 0 END y
          FROM orders),
@@ -3712,13 +3608,12 @@ object Stats {
        t AS (SELECT CAST(sum(n_pos) AS BIGINT) tot_pos,
                CAST(sum(n_rows) AS BIGINT) tot_n FROM g)
        SELECT decile, n_rows, n_pos,
-         floor((CAST(n_pos AS DOUBLE)/n_rows)
-           / (CAST(tot_pos AS DOUBLE)/tot_n) * 1000000 + 0.5)/1000000
+         ${r6sql("""(CAST(n_pos AS DOUBLE)/n_rows)
+           / (CAST(tot_pos AS DOUBLE)/tot_n)""")}
            AS lift
        FROM g, t ORDER BY 1""") { (s, d) =>
     val base = Tables.orders(s, d).select(col("o_orderkey"),
-        floor(col("o_totalprice") * 1000000 + lit(0.5)).cast("long")
-          .as("pm"),
+        micros(col("o_totalprice")).as("pm"),
         when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
           .otherwise(0L).as("y"))
       .withColumn("negpm", -col("pm"))
@@ -3754,8 +3649,8 @@ object Stats {
     * no fold-order pinning is needed; U and the rank-biserial
     * effect size are IEEE ops on the 1-row residue. */
   val mannWhitneyU: QueryDef = QueryDef.sql(
-    """WITH s AS (SELECT event_type,
-           CAST(floor(value*1000000+0.5) AS BIGINT) v FROM events
+    s"""WITH s AS (SELECT event_type,
+           ${microsSql("value")} v FROM events
          WHERE event_type IN ('purchase','click')
            AND value IS NOT NULL),
        c AS (SELECT v, CAST(count(*) AS BIGINT) n,
@@ -3771,17 +3666,16 @@ object Stats {
                CAST(sum(n - n1v) AS BIGINT) n2,
                sum(n1v * (offp + 1 + (n-1)/2.0)) r1 FROM p)
        SELECT n1, n2,
-         floor((r1 - CAST(n1 AS DOUBLE)*(n1+1)/2.0)*1000000+0.5)
-           /1000000 AS u1,
-         floor((1 - 2*(r1 - CAST(n1 AS DOUBLE)*(n1+1)/2.0)
-           / (CAST(n1 AS DOUBLE)*n2))*1000000+0.5)/1000000
+         ${r6sql("r1 - CAST(n1 AS DOUBLE)*(n1+1)/2.0")} AS u1,
+         ${r6sql("""1 - 2*(r1 - CAST(n1 AS DOUBLE)*(n1+1)/2.0)
+           / (CAST(n1 AS DOUBLE)*n2)""")}
            AS rank_biserial
        FROM a""") { (s, d) =>
     val sv = Tables.events(s, d)
       .filter(col("event_type").isin("purchase", "click")
         && col("value").isNotNull)
       .select(col("event_type"),
-        floor(col("value") * 1000000 + lit(0.5)).cast("long").as("v"))
+        micros(col("value")).as("v"))
     val c = sv.groupBy(col("v"))
       .agg(count(lit(1)).cast("long").as("n"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
@@ -3812,7 +3706,7 @@ object Stats {
     * (m2^1.5 spelled m2·sqrt(m2) — pow(x,1.5) is a different libm
     * entry point on each engine). */
   val momentStats: QueryDef = QueryDef.sql(
-    """WITH s AS (SELECT event_type,
+    s"""WITH s AS (SELECT event_type,
            CAST(floor(value*100+0.5) AS BIGINT) v FROM events
          WHERE value IS NOT NULL),
        b AS (SELECT event_type, CAST(sum(v) AS BIGINT) s1,
@@ -3833,12 +3727,10 @@ object Stats {
                CAST(c3 AS DOUBLE)/n u3, CAST(c4 AS DOUBLE)/n u4
              FROM m)
        SELECT event_type, n,
-         floor((u3 - 3*u2*u1 + 2*u1*u1*u1)
-           / ((u2 - u1*u1) * sqrt(u2 - u1*u1)) * 1000000 + 0.5)
-           /1000000 AS skewness,
-         floor(((u4 - 4*u3*u1 + 6*u2*(u1*u1) - 3*(u1*u1)*(u1*u1))
-           / ((u2 - u1*u1) * (u2 - u1*u1)) - 3) * 1000000 + 0.5)
-           /1000000 AS kurtosis_excess
+         ${r6sql("""(u3 - 3*u2*u1 + 2*u1*u1*u1)
+           / ((u2 - u1*u1) * sqrt(u2 - u1*u1))""")} AS skewness,
+         ${r6sql("""(u4 - 4*u3*u1 + 6*u2*(u1*u1) - 3*(u1*u1)*(u1*u1))
+           / ((u2 - u1*u1) * (u2 - u1*u1)) - 3""")} AS kurtosis_excess
        FROM u ORDER BY 1""") { (s, d) =>
     val sv = Tables.events(s, d).filter(col("value").isNotNull)
       .select(col("event_type"),
@@ -3894,7 +3786,7 @@ object Stats {
     * long and exact-double range), mean/variance/sqrt on the 5-row
     * residue. */
   val interarrivalCv: QueryDef = QueryDef.sql(
-    """WITH g AS (SELECT event_type, epoch_us(ts) - lag(epoch_us(ts))
+    s"""WITH g AS (SELECT event_type, epoch_us(ts) - lag(epoch_us(ts))
            OVER (PARTITION BY event_type ORDER BY ts, event_id) gap
          FROM events),
        m AS (SELECT event_type, CAST(count(*) AS BIGINT) n,
@@ -3903,9 +3795,9 @@ object Stats {
                  AS DECIMAL(38,0)) s2
              FROM g WHERE gap IS NOT NULL GROUP BY 1)
        SELECT event_type, n,
-         floor(sqrt(CAST(s2 AS DOUBLE)/n
+         ${r6sql("""sqrt(CAST(s2 AS DOUBLE)/n
              - (CAST(s1 AS DOUBLE)/n)*(CAST(s1 AS DOUBLE)/n))
-           / (CAST(s1 AS DOUBLE)/n) * 1000000 + 0.5)/1000000 AS cv
+           / (CAST(s1 AS DOUBLE)/n)""")} AS cv
        FROM m ORDER BY 1""") { (s, d) =>
     val w = Window.partitionBy(col("event_type"))
       .orderBy(col("ts"), col("event_id"))
@@ -3938,7 +3830,7 @@ object Stats {
     * every downstream question (retention, streaks, L28) is mask
     * arithmetic. */
   val bitmapRetention: QueryDef = QueryDef.sql(
-    """WITH d0 AS (SELECT min(datediff('day', DATE '1970-01-01',
+    s"""WITH d0 AS (SELECT min(datediff('day', DATE '1970-01-01',
            CAST(ts AS DATE))) m FROM events),
        u AS (SELECT user_id,
                bit_or(CAST(1 AS BIGINT) <<
@@ -3953,8 +3845,7 @@ object Stats {
                  THEN 1 ELSE 0 END) AS BIGINT) n_ret
                FROM u, days GROUP BY 1)
        SELECT CAST(d AS BIGINT) day_offset, n_ret,
-         floor(CAST(n_ret AS DOUBLE)/(SELECT n0 FROM base)
-           *1000000+0.5)/1000000 AS retention
+         ${r6sql("CAST(n_ret AS DOUBLE)/(SELECT n0 FROM base)")} AS retention
        FROM ret ORDER BY 1""") { (s, d) =>
     val ev = Tables.events(s, d).select(col("user_id"),
       datediff(col("ts").cast("date"), to_date(lit("1970-01-01")))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.Rounding.{micros, microsSql, r6, r6sql}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,7 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object TpchShapes {
 
-  private def r6(c: Column): Column = graft.Rounding.r6(c)
   private def dsum(c: Column): Column =
     round(sum(c.cast("decimal(30,10)")), 6).cast("double")
 
@@ -132,13 +132,12 @@ object TpchShapes {
     * bit-identical double. The NOT EXISTS is a left-anti join on
     * custkey against the priority-pruned orders scan. */
   val dormantPremiumCustomers: QueryDef = QueryDef.sql(
-    """SELECT n_name, count(*) AS numcust,
+    s"""SELECT n_name, count(*) AS numcust,
          CAST(round(sum(CAST(c_acctbal AS DECIMAL(30,10))), 6)
            AS DOUBLE) AS totacctbal
        FROM customer JOIN nation ON n_nationkey = c_nationkey
-       WHERE c_acctbal > (SELECT floor((CAST(round(sum(CAST(c_acctbal
-                 AS DECIMAL(30,10))), 6) AS DOUBLE) / count(*))
-                 * 1000000 + 0.5) / 1000000
+       WHERE c_acctbal > (SELECT ${r6sql("""CAST(round(sum(CAST(c_acctbal
+                 AS DECIMAL(30,10))), 6) AS DOUBLE) / count(*)""")}
                FROM customer WHERE c_acctbal > 0)
          AND NOT EXISTS (SELECT 1 FROM orders
                          WHERE o_custkey = c_custkey
@@ -231,13 +230,13 @@ object TpchShapes {
     * one broadcast mini-dim; the (partkey,suppkey) aggregate is the
     * only fact shuffle. */
   val minCostSupplier: QueryDef = QueryDef.sql(
-    """WITH u AS (SELECT l_partkey, l_suppkey,
+    s"""WITH u AS (SELECT l_partkey, l_suppkey,
                     min(l_extendedprice / l_quantity) AS unit
                   FROM lineitem GROUP BY l_partkey, l_suppkey),
             m AS (SELECT l_partkey, min(unit) AS best FROM u
                   GROUP BY l_partkey)
        SELECT u.l_partkey, u.l_suppkey, s_name,
-              floor(u.unit * 1000000 + 0.5) / 1000000 AS unit_price
+              ${r6sql("u.unit")} AS unit_price
        FROM u JOIN m ON u.l_partkey = m.l_partkey AND u.unit = m.best
        JOIN supplier ON s_suppkey = u.l_suppkey
        JOIN nation ON n_nationkey = s_nationkey
@@ -273,7 +272,7 @@ object TpchShapes {
     * and only then divide — both engines divide bit-identical
     * float64s. */
   val marketShare: QueryDef = QueryDef.sql(
-    """WITH base AS (
+    s"""WITH base AS (
          SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
            CAST(round(sum(CASE WHEN sr.r_name = 'EUROPE'
                THEN CAST(l_extendedprice * (1 - l_discount)
@@ -295,7 +294,7 @@ object TpchShapes {
            AND o_orderdate < TIMESTAMP '1999-01-01'
          GROUP BY 1)
        SELECT o_year, europe_vol, total_vol,
-         floor(europe_vol / total_vol * 1000000 + 0.5) / 1000000
+         ${r6sql("europe_vol / total_vol")}
            AS mkt_share
        FROM base ORDER BY o_year""") { (s, d) =>
     val custAsia = broadcast(Tables.customer(s, d)
@@ -554,8 +553,8 @@ object TpchShapes {
     * SF). */
   val abcClassification: QueryDef = QueryDef.sql(
     s"""WITH r AS (SELECT p_type,
-           CAST(sum(CAST(floor(l_extendedprice*(1-l_discount)
-             *1000000+0.5) AS BIGINT)) AS BIGINT) rev
+           CAST(sum(${microsSql("l_extendedprice*(1-l_discount)")})
+             AS BIGINT) rev
          FROM lineitem JOIN part ON p_partkey = l_partkey
          GROUP BY 1),
        t AS (SELECT CAST(sum(rev) AS BIGINT) tot FROM r),
@@ -563,7 +562,7 @@ object TpchShapes {
            CAST(sum(rev) OVER (ORDER BY rev DESC, p_type)
              AS BIGINT) crev FROM r)
        SELECT p_type, rev AS rev_micro,
-         ${graft.Rounding.r6sql("CAST(crev AS DOUBLE)/tot")}
+         ${r6sql("CAST(crev AS DOUBLE)/tot")}
            AS cum_share,
          CASE WHEN CAST(crev AS DECIMAL(20,0))*100
                 <= CAST(tot AS DECIMAL(20,0))*80 THEN 'A'
@@ -577,9 +576,8 @@ object TpchShapes {
         .select(col("p_partkey"), col("p_type"))),
         col("p_partkey") === col("l_partkey"))
       .groupBy(col("p_type"))
-      .agg(sum(floor(col("l_extendedprice")
-        * (lit(1) - col("l_discount")) * 1000000 + lit(0.5))
-        .cast("long")).cast("long").as("rev"))
+      .agg(sum(micros(col("l_extendedprice")
+        * (lit(1) - col("l_discount")))).cast("long").as("rev"))
     val t = r.agg(sum(col("rev")).cast("long").as("tot"))
     val w = Window.orderBy(col("rev").desc, col("p_type"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -602,27 +600,24 @@ object TpchShapes {
   val discountElasticity: QueryDef = QueryDef.sql(
     s"""WITH l AS (SELECT
            CAST(floor(l_discount*100+0.5) AS BIGINT) disc_pct,
-           CAST(floor(l_quantity*1000000+0.5) AS BIGINT) qm,
-           CAST(floor(l_extendedprice*(1-l_discount)*1000000+0.5)
-             AS BIGINT) rm
+           ${microsSql("l_quantity")} qm,
+           ${microsSql("l_extendedprice*(1-l_discount)")} rm
          FROM lineitem),
        g AS (SELECT disc_pct, CAST(count(*) AS BIGINT) n,
            CAST(sum(qm) AS BIGINT) sq, CAST(sum(rm) AS BIGINT) sr
          FROM l GROUP BY 1),
        t AS (SELECT CAST(sum(sr) AS BIGINT) tot FROM g)
        SELECT disc_pct, n,
-         ${graft.Rounding.r6sql("CAST(sq AS DOUBLE)/n/1000000.0")}
+         ${r6sql("CAST(sq AS DOUBLE)/n/1000000.0")}
            AS avg_qty,
-         ${graft.Rounding.r6sql("CAST(sr AS DOUBLE)/tot")}
+         ${r6sql("CAST(sr AS DOUBLE)/tot")}
            AS revenue_share
        FROM g, t ORDER BY 1""") { (s, d) =>
     val g = Tables.lineitem(s, d)
       .select(floor(col("l_discount") * 100 + lit(0.5)).cast("long")
           .as("disc_pct"),
-        floor(col("l_quantity") * 1000000 + lit(0.5)).cast("long")
-          .as("qm"),
-        floor(col("l_extendedprice") * (lit(1) - col("l_discount"))
-          * 1000000 + lit(0.5)).cast("long").as("rm"))
+        micros(col("l_quantity")).as("qm"),
+        micros(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rm"))
       .groupBy(col("disc_pct"))
       .agg(count(lit(1)).cast("long").as("n"),
         sum(col("qm")).cast("long").as("sq"),
@@ -654,7 +649,7 @@ object TpchShapes {
        t AS (SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) n_ord
              FROM ol)
        SELECT ta, tb, sup,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(sup AS DOUBLE)*n_ord/(na.c*nb.c)")} AS lift
        FROM pr JOIN n na ON na.p_type=ta JOIN n nb ON nb.p_type=tb,
          t
@@ -697,8 +692,8 @@ object TpchShapes {
              CAST(l_shipdate AS DATE)) lag_d
          FROM lineitem JOIN orders ON o_orderkey=l_orderkey),
        g AS (SELECT pri,
-           ${graft.Rounding.r6sql("quantile_cont(lag_d, 0.5)")} p50,
-           ${graft.Rounding.r6sql("quantile_cont(lag_d, 0.9)")} p90,
+           ${r6sql("quantile_cont(lag_d, 0.5)")} p50,
+           ${r6sql("quantile_cont(lag_d, 0.9)")} p90,
            CAST(count(*) AS BIGINT) n FROM l GROUP BY 1)
        SELECT pri AS priority, n, p50, p90 FROM g
        ORDER BY 1""") { (s, d) =>
@@ -725,8 +720,7 @@ object TpchShapes {
     * residue. */
   val priceDispersion: QueryDef = QueryDef.sql(
     s"""WITH u AS (SELECT l_partkey,
-           CAST(floor(l_extendedprice/l_quantity*1000000+0.5)
-             AS BIGINT) up
+           ${microsSql("l_extendedprice/l_quantity")} up
          FROM lineitem),
        st AS (SELECT l_partkey, CAST(count(*) AS BIGINT) n,
            CAST(sum(up) AS BIGINT) s,
@@ -738,15 +732,14 @@ object TpchShapes {
              / (CAST(s AS DOUBLE)/n) AS cv FROM st),
        r AS (SELECT *, row_number() OVER (ORDER BY cv DESC,
              l_partkey) rk FROM cv)
-       SELECT l_partkey, n, ${graft.Rounding.r6sql("cv")}
+       SELECT l_partkey, n, ${r6sql("cv")}
          AS price_cv
        FROM r WHERE rk <= 10
        ORDER BY price_cv DESC, l_partkey""") { (s, d) =>
     import org.apache.spark.sql.expressions.Window
     val st = Tables.lineitem(s, d)
       .select(col("l_partkey"),
-        floor(col("l_extendedprice") / col("l_quantity") * 1000000
-          + lit(0.5)).cast("long").as("up"))
+        micros(col("l_extendedprice") / col("l_quantity")).as("up"))
       .groupBy(col("l_partkey"))
       .agg(count(lit(1)).cast("long").as("n"),
         sum(col("up")).cast("long").as("s"),
@@ -774,7 +767,7 @@ object TpchShapes {
     * the minimal orderkey (unique, total), so the flag is exact
     * integer arithmetic end to end. */
   val reorderRate: QueryDef = QueryDef.sql(
-    """WITH op AS (SELECT DISTINCT c_mktsegment, o_custkey, l_partkey,
+    s"""WITH op AS (SELECT DISTINCT c_mktsegment, o_custkey, l_partkey,
            o_orderkey
          FROM orders JOIN lineitem ON l_orderkey = o_orderkey
               JOIN customer ON c_custkey = o_custkey),
@@ -787,7 +780,7 @@ object TpchShapes {
                   AND f.l_partkey = op.l_partkey)
        SELECT c_mktsegment, CAST(count(*) AS BIGINT) n_pairs,
          CAST(sum(re) AS BIGINT) n_reorders,
-         floor(CAST(sum(re) AS DOUBLE)/count(*)*1000000+0.5)/1000000
+         ${r6sql("CAST(sum(re) AS DOUBLE)/count(*)")}
            AS reorder_rate
        FROM j GROUP BY 1 ORDER BY 1""") { (s, d) =>
     val op = Tables.orders(s, d)
@@ -824,7 +817,7 @@ object TpchShapes {
     * completed by suppkey so the flag is deterministic when one
     * order sources the same part from two suppliers. */
   val supplierSwitches: QueryDef = QueryDef.sql(
-    """WITH op AS (SELECT DISTINCT o_custkey, l_partkey, o_orderkey,
+    s"""WITH op AS (SELECT DISTINCT o_custkey, l_partkey, o_orderkey,
            l_suppkey
          FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
        lg AS (SELECT l_suppkey, lag(l_suppkey) OVER
@@ -834,8 +827,8 @@ object TpchShapes {
        SELECT CAST(count(*) AS BIGINT) n_repeats,
          CAST(sum(CASE WHEN l_suppkey <> ps THEN 1 ELSE 0 END)
            AS BIGINT) n_switches,
-         floor(CAST(sum(CASE WHEN l_suppkey <> ps THEN 1 ELSE 0 END)
-           AS DOUBLE)/count(*)*1000000+0.5)/1000000 AS switch_rate
+         ${r6sql("""CAST(sum(CASE WHEN l_suppkey <> ps THEN 1 ELSE 0 END)
+           AS DOUBLE)/count(*)""")} AS switch_rate
        FROM lg WHERE ps IS NOT NULL""") { (s, d) =>
     val op = Tables.orders(s, d)
       .join(Tables.lineitem(s, d),
@@ -860,10 +853,10 @@ object TpchShapes {
     * bounded partitions of ~400 weeks each — never a global sort),
     * percent change as a single IEEE divide per emitted row. */
   val wowRevenueChange: QueryDef = QueryDef.sql(
-    """WITH w AS (SELECT c_mktsegment,
+    s"""WITH w AS (SELECT c_mktsegment,
            datediff('day', DATE '1970-01-01',
              CAST(o_orderdate AS DATE)) // 7 AS wk,
-           CAST(sum(CAST(floor(o_totalprice*1000000+0.5) AS BIGINT))
+           CAST(sum(${microsSql("o_totalprice")})
              AS BIGINT) rev
          FROM orders JOIN customer ON c_custkey = o_custkey
          GROUP BY 1, 2),
@@ -871,7 +864,7 @@ object TpchShapes {
                lag(rev) OVER (PARTITION BY c_mktsegment ORDER BY wk)
                  pr FROM w)
        SELECT c_mktsegment, CAST(wk AS BIGINT) wk, rev,
-         floor((CAST(rev AS DOUBLE)-pr)/pr*1000000+0.5)/1000000
+         ${r6sql("(CAST(rev AS DOUBLE)-pr)/pr")}
            AS wow_pct
        FROM l WHERE pr IS NOT NULL ORDER BY 1, 2""") { (s, d) =>
     val wk = (datediff(col("o_orderdate").cast("date"),
@@ -879,8 +872,7 @@ object TpchShapes {
     val w = Tables.orders(s, d)
       .join(Tables.customer(s, d), col("c_custkey") === col("o_custkey"))
       .groupBy(col("c_mktsegment"), wk.as("wk"))
-      .agg(sum(floor(col("o_totalprice") * 1000000 + lit(0.5))
-        .cast("long")).cast("long").as("rev"))
+      .agg(sum(micros(col("o_totalprice"))).cast("long").as("rev"))
     val win = Window.partitionBy(col("c_mktsegment")).orderBy(col("wk"))
     w.withColumn("pr", lag(col("rev"), 1).over(win))
       .filter(col("pr").isNotNull)
@@ -897,10 +889,10 @@ object TpchShapes {
     * partitions); everything is exact micro-longs — no float ever
     * ranks a drawdown. */
   val maxDrawdown: QueryDef = QueryDef.sql(
-    """WITH w AS (SELECT c_mktsegment,
+    s"""WITH w AS (SELECT c_mktsegment,
            datediff('day', DATE '1970-01-01',
              CAST(o_orderdate AS DATE)) // 7 AS wk,
-           CAST(sum(CAST(floor(o_totalprice*1000000+0.5) AS BIGINT))
+           CAST(sum(${microsSql("o_totalprice")})
              AS BIGINT) rev
          FROM orders JOIN customer ON c_custkey = o_custkey
          GROUP BY 1, 2),
@@ -921,8 +913,7 @@ object TpchShapes {
     val w = Tables.orders(s, d)
       .join(Tables.customer(s, d), col("c_custkey") === col("o_custkey"))
       .groupBy(col("c_mktsegment"), wkCol.as("wk"))
-      .agg(sum(floor(col("o_totalprice") * 1000000 + lit(0.5))
-        .cast("long")).cast("long").as("rev"))
+      .agg(sum(micros(col("o_totalprice"))).cast("long").as("rev"))
     val win = Window.partitionBy(col("c_mktsegment")).orderBy(col("wk"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val dd = w.select(col("c_mktsegment"), col("wk"),
@@ -947,7 +938,7 @@ object TpchShapes {
     * an ordered float product is fold-order-fragile cross-engine,
     * while the hazard table carries the same information exactly. */
   val hazardTable: QueryDef = QueryDef.sql(
-    """WITH o AS (SELECT DISTINCT o_custkey,
+    s"""WITH o AS (SELECT DISTINCT o_custkey,
            datediff('day', DATE '1970-01-01',
              CAST(o_orderdate AS DATE)) d FROM orders),
        g AS (SELECT d - lag(d) OVER (PARTITION BY o_custkey
@@ -961,7 +952,7 @@ object TpchShapes {
                   at_risk FROM c)
        SELECT CAST(gap_m AS BIGINT) gap_month, ev AS n_events,
          at_risk,
-         floor(CAST(ev AS DOUBLE)/at_risk*1000000+0.5)/1000000
+         ${r6sql("CAST(ev AS DOUBLE)/at_risk")}
            AS hazard
        FROM r0 ORDER BY 1""") { (s, d) =>
     val o = Tables.orders(s, d)

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.Rounding.{micros, microsSql, r6, r6sql}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,8 +13,6 @@ import org.apache.spark.sql.functions._
   * standing r6 convention.
   */
 object Warehouse {
-
-  private def r6(c: org.apache.spark.sql.Column) = graft.Rounding.r6(c)
 
   /** PIVOT: per user-cohort event counts reshaped wide, one column
     * per event_type. The value list is EXPLICIT (the 5 fixture
@@ -90,8 +89,8 @@ object Warehouse {
                ORDER BY o_totalprice, o_orderkey) AS cd
            FROM orders)
        SELECT pri, quartile, CAST(count(*) AS BIGINT) AS n,
-         ${graft.Rounding.r6sql("max(pr)")} AS max_pr,
-         ${graft.Rounding.r6sql("max(cd)")} AS max_cd
+         ${r6sql("max(pr)")} AS max_pr,
+         ${r6sql("max(cd)")} AS max_cd
        FROM w GROUP BY 1, 2 ORDER BY 1, 2""") { (s, d) =>
     val w = Window.partitionBy(col("o_orderpriority"))
       .orderBy(col("o_totalprice"), col("o_orderkey"))
@@ -156,7 +155,7 @@ object Warehouse {
     * shuffle once, AQE handles size asymmetry); value comparison on
     * 1e-6 integer quantizations, never raw doubles. */
   val reconciliation: QueryDef = QueryDef.sql(
-    """WITH src AS (SELECT event_id, event_type, value FROM events),
+    s"""WITH src AS (SELECT event_id, event_type, value FROM events),
        tgt AS (
          SELECT event_id, event_type,
              CASE WHEN event_id % 37 = 5 THEN value + 1 ELSE value END
@@ -169,8 +168,8 @@ object Warehouse {
                AS event_type,
              CASE WHEN src.event_id IS NULL THEN 'extra_target'
                   WHEN tgt.event_id IS NULL THEN 'missing_target'
-                  WHEN floor(src.value * 1000000 + 0.5)
-                    <> floor(tgt.value * 1000000 + 0.5)
+                  WHEN ${microsSql("src.value")}
+                    <> ${microsSql("tgt.value")}
                     THEN 'value_mismatch'
                   ELSE 'matched' END AS status
            FROM src FULL OUTER JOIN tgt
@@ -185,15 +184,13 @@ object Warehouse {
         col("value") + 1).otherwise(col("value")))
       .unionAll(ev.filter(col("event_id") % 41 === 3)
         .withColumn("event_id", col("event_id") + 5000000000L))
-    val q = (c: org.apache.spark.sql.Column) =>
-      floor(c * 1000000 + lit(0.5))
     src.as("src").join(tgt.as("tgt"),
         col("src.event_id") === col("tgt.event_id"), "full_outer")
       .select(coalesce(col("src.event_type"), col("tgt.event_type"))
           .as("event_type"),
         when(col("src.event_id").isNull, "extra_target")
           .when(col("tgt.event_id").isNull, "missing_target")
-          .when(q(col("src.value")) =!= q(col("tgt.value")),
+          .when(micros(col("src.value")) =!= micros(col("tgt.value")),
             "value_mismatch")
           .otherwise("matched").as("status"))
       .groupBy(col("event_type"), col("status"))
@@ -309,8 +306,8 @@ object Warehouse {
     * key is emitted as epoch microseconds (BIGINT on both engines —
     * the q85 no-native-temporal-output convention). */
   val ohlcBars: QueryDef = QueryDef.sql(
-    """WITH q AS (SELECT event_type, date_trunc('hour', ts) AS h,
-           CAST(floor(value*1000000+0.5) AS BIGINT) v, ts, event_id
+    s"""WITH q AS (SELECT event_type, date_trunc('hour', ts) AS h,
+           ${microsSql("value")} v, ts, event_id
          FROM events),
        o AS (SELECT *,
            row_number() OVER (PARTITION BY event_type, h
@@ -325,7 +322,7 @@ object Warehouse {
          CAST(sum(v) AS BIGINT) AS vol_v,
          CAST(count(*) AS BIGINT) AS n
        FROM o GROUP BY 1,2 ORDER BY 1,2""") { (s, d) =>
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
+    val vk = micros(col("value"))
     Tables.events(s, d)
       .select(col("event_type"), date_trunc("hour", col("ts")).as("h"),
         vk.as("v"), col("ts"), col("event_id"))
@@ -360,7 +357,7 @@ object Warehouse {
   val rfmSegments: QueryDef = QueryDef.sql(
     s"""WITH p AS (SELECT user_id, max(CAST(ts AS DATE)) last_day,
            CAST(count(*) AS BIGINT) freq,
-           CAST(sum(CAST(floor(value*1000000+0.5) AS BIGINT))
+           CAST(sum(${microsSql("value")})
              AS BIGINT) money
          FROM events WHERE event_type='purchase' GROUP BY 1),
        mx AS (SELECT max(last_day) d1 FROM p),
@@ -378,11 +375,11 @@ object Warehouse {
        SELECT CAST(r AS VARCHAR) || '-' || CAST(f AS VARCHAR)
            || '-' || CAST(m AS VARCHAR) AS segment,
          CAST(count(*) AS BIGINT) n_users,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(sum(money) AS DOUBLE)/count(*)/1000000.0")}
            AS avg_money
        FROM sc GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
+    val vk = micros(col("value"))
     val p = Tables.events(s, d)
       .filter(col("event_type") === "purchase")
       .groupBy(col("user_id"))
@@ -431,7 +428,7 @@ object Warehouse {
        w AS (SELECT co.cohort,
                (datediff('day', co.sd, CAST(e.ts AS DATE))) // 7
                  AS age_w,
-               CAST(floor(e.value*1000000+0.5) AS BIGINT) v
+               ${microsSql("e.value")} v
              FROM co JOIN events e ON e.user_id=co.user_id
              WHERE e.event_type='purchase'
                AND datediff('day', co.sd, CAST(e.ts AS DATE)) >= 0),
@@ -440,7 +437,7 @@ object Warehouse {
        SELECT CAST(a.cohort AS VARCHAR) cohort, age_w, cs.n_users,
          CAST(sum(rev) OVER (PARTITION BY a.cohort ORDER BY age_w)
            AS BIGINT) cum_rev_micro,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            """CAST(sum(rev) OVER (PARTITION BY a.cohort
               ORDER BY age_w) AS DOUBLE)/cs.n_users/1000000.0""")}
            AS ltv_per_user
@@ -454,7 +451,7 @@ object Warehouse {
         col("sd"))
     val cs = su.groupBy(col("cohort"))
       .agg(count(lit(1)).cast("long").as("n_users"))
-    val vk = floor(col("value") * 1000000 + lit(0.5)).cast("long")
+    val vk = micros(col("value"))
     val a = Tables.events(s, d)
       .filter(col("event_type") === "purchase")
       .join(su, "user_id")
@@ -486,7 +483,7 @@ object Warehouse {
     * the fact; the cumulative window on 10 rows. */
   val lorenzDeciles: QueryDef = QueryDef.sql(
     s"""WITH r AS (SELECT o_custkey,
-           CAST(sum(CAST(floor(o_totalprice*1000000+0.5) AS BIGINT))
+           CAST(sum(${microsSql("o_totalprice")})
              AS BIGINT) rev
          FROM orders GROUP BY 1),
        d AS (SELECT o_custkey, rev,
@@ -497,14 +494,13 @@ object Warehouse {
            CAST(sum(rev) AS BIGINT) rev_micro FROM d GROUP BY 1),
        t AS (SELECT CAST(sum(rev_micro) AS BIGINT) tot FROM g)
        SELECT decile, n_cust, rev_micro,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            """CAST(sum(rev_micro) OVER (ORDER BY decile) AS DOUBLE)
               / tot""")} AS cum_share
        FROM g, t ORDER BY decile""") { (s, d) =>
     val r = Tables.orders(s, d)
       .groupBy(col("o_custkey"))
-      .agg(sum(floor(col("o_totalprice") * 1000000 + lit(0.5))
-        .cast("long")).cast("long").as("rev"))
+      .agg(sum(micros(col("o_totalprice"))).cast("long").as("rev"))
     val dec = r.withColumn("decile",
       ntile(10).over(Window.orderBy(col("rev"), col("o_custkey"))))
     val g = dec.groupBy(col("decile").cast("long").as("decile"))
@@ -581,7 +577,7 @@ object Warehouse {
     * (25 rows), each an exact-long divide. */
   val shareOfParent: QueryDef = QueryDef.sql(
     s"""WITH rev AS (SELECT n_name, r_name,
-           CAST(sum(CAST(floor(o_totalprice*1000000+0.5) AS BIGINT))
+           CAST(sum(${microsSql("o_totalprice")})
              AS BIGINT) rv
          FROM orders JOIN customer ON c_custkey = o_custkey
          JOIN nation ON n_nationkey = c_nationkey
@@ -590,9 +586,9 @@ object Warehouse {
            CAST(sum(rv) OVER (PARTITION BY r_name) AS BIGINT) rr,
            CAST(sum(rv) OVER () AS BIGINT) tot FROM rev)
        SELECT r_name, n_name, rv AS rev_micro,
-         ${graft.Rounding.r6sql("CAST(rv AS DOUBLE)/rr")}
+         ${r6sql("CAST(rv AS DOUBLE)/rr")}
            AS share_of_region,
-         ${graft.Rounding.r6sql("CAST(rr AS DOUBLE)/tot")}
+         ${r6sql("CAST(rr AS DOUBLE)/tot")}
            AS region_share_of_total
        FROM w ORDER BY 1,2""") { (s, d) =>
     val rev = Tables.orders(s, d)
@@ -604,16 +600,15 @@ object Warehouse {
       .join(broadcast(Tables.region(s, d)),
         col("r_regionkey") === col("n_regionkey"))
       .groupBy(col("n_name"), col("r_name"))
-      .agg(sum(floor(col("o_totalprice") * 1000000 + lit(0.5))
-        .cast("long")).cast("long").as("rv"))
+      .agg(sum(micros(col("o_totalprice"))).cast("long").as("rv"))
     val wr = Window.partitionBy(col("r_name"))
     val wt = Window.partitionBy()
     rev.select(col("r_name"), col("n_name"),
         col("rv").as("rev_micro"),
-        graft.Rounding.r6(col("rv").cast("double")
+        r6(col("rv").cast("double")
           / sum(col("rv")).over(wr).cast("long"))
           .as("share_of_region"),
-        graft.Rounding.r6(sum(col("rv")).over(wr).cast("long")
+        r6(sum(col("rv")).over(wr).cast("long")
           .cast("double") / sum(col("rv")).over(wt).cast("long"))
           .as("region_share_of_total"))
       .orderBy(col("r_name"), col("n_name"))
@@ -625,27 +620,26 @@ object Warehouse {
     * (mean-vs-median divergence flags skew q307 quantifies). */
   val segmentBalanceProfile: QueryDef = QueryDef.sql(
     s"""WITH c AS (SELECT c_mktsegment seg,
-           CAST(floor(c_acctbal*1000000+0.5) AS BIGINT) b
+           ${microsSql("c_acctbal")} b
          FROM customer)
        SELECT seg, CAST(count(*) AS BIGINT) n,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            "CAST(sum(b) AS DOUBLE)/count(*)/1000000.0")} AS mean_bal,
-         ${graft.Rounding.r6sql("quantile_cont(b, 0.5)/1000000.0")}
+         ${r6sql("quantile_cont(b, 0.5)/1000000.0")}
            AS median_bal,
-         ${graft.Rounding.r6sql("quantile_cont(b, 0.9)/1000000.0")}
+         ${r6sql("quantile_cont(b, 0.9)/1000000.0")}
            AS p90_bal
        FROM c GROUP BY 1 ORDER BY 1""") { (s, d) =>
     Tables.customer(s, d)
       .select(col("c_mktsegment").as("seg"),
-        floor(col("c_acctbal") * 1000000 + lit(0.5)).cast("long")
-          .as("b"))
+        micros(col("c_acctbal")).as("b"))
       .groupBy(col("seg"))
       .agg(count(lit(1)).cast("long").as("n"),
-        graft.Rounding.r6(sum(col("b")).cast("double")
+        r6(sum(col("b")).cast("double")
           / count(lit(1)) / 1000000.0).as("mean_bal"),
-        graft.Rounding.r6(percentile(col("b"), lit(0.5))
+        r6(percentile(col("b"), lit(0.5))
           / 1000000.0).as("median_bal"),
-        graft.Rounding.r6(percentile(col("b"), lit(0.9))
+        r6(percentile(col("b"), lit(0.9))
           / 1000000.0).as("p90_bal"))
       .orderBy(col("seg"))
   }
@@ -657,14 +651,14 @@ object Warehouse {
     * onto the supplier residue. */
   val supplierBalanceOutliers: QueryDef = QueryDef.sql(
     s"""WITH s AS (SELECT s_suppkey, s_name,
-           CAST(floor(s_acctbal*1000000+0.5) AS BIGINT) b
+           ${microsSql("s_acctbal")} b
          FROM supplier),
        t AS (SELECT CAST(sum(b) AS BIGINT) sb,
            CAST(count(*) AS BIGINT) n,
            CAST(sum(CAST(b AS DECIMAL(19,0))*CAST(b AS
              DECIMAL(19,0))) AS DOUBLE) sbb FROM s)
        SELECT s_suppkey, s_name,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            """(CAST(b AS DOUBLE) - CAST(sb AS DOUBLE)/n)
               / sqrt((sbb - CAST(sb AS DOUBLE)*sb/n)/(n-1))""")}
            AS z
@@ -673,8 +667,7 @@ object Warehouse {
        ORDER BY 1""") { (s, d) =>
     val sp = Tables.supplier(s, d)
       .select(col("s_suppkey"), col("s_name"),
-        floor(col("s_acctbal") * 1000000 + lit(0.5)).cast("long")
-          .as("b"))
+        micros(col("s_acctbal")).as("b"))
     val t = sp.agg(sum(col("b")).cast("long").as("sb"),
       count(lit(1)).cast("long").as("n"),
       sum(col("b").cast("decimal(19,0)")
@@ -687,7 +680,7 @@ object Warehouse {
     sp.crossJoin(broadcast(t))
       .filter(abs(z) > 1.5)
       .select(col("s_suppkey"), col("s_name"),
-        graft.Rounding.r6(z).as("z"))
+        r6(z).as("z"))
       .orderBy(col("s_suppkey"))
   }
 
@@ -700,32 +693,30 @@ object Warehouse {
     s"""WITH m AS (SELECT
            CAST(month(CAST(o_orderdate AS DATE)) AS BIGINT) mo,
            CAST(count(*) AS BIGINT) n,
-           CAST(sum(CAST(floor(o_totalprice*1000000+0.5)
-             AS BIGINT)) AS BIGINT) rev
+           CAST(sum(${microsSql("o_totalprice")}) AS BIGINT) rev
          FROM orders GROUP BY 1),
        t AS (SELECT CAST(sum(n) AS BIGINT) tn,
            CAST(sum(rev) AS BIGINT) tr,
            CAST(count(*) AS BIGINT) k FROM m)
        SELECT mo AS month, n,
-         ${graft.Rounding.r6sql("CAST(n AS DOUBLE)*k/tn")}
+         ${r6sql("CAST(n AS DOUBLE)*k/tn")}
            AS volume_index,
-         ${graft.Rounding.r6sql("CAST(rev AS DOUBLE)*k/tr")}
+         ${r6sql("CAST(rev AS DOUBLE)*k/tr")}
            AS revenue_index
        FROM m, t ORDER BY 1""") { (s, d) =>
     val m = Tables.orders(s, d)
       .groupBy(month(to_date(col("o_orderdate"))).cast("long")
         .as("month"))
       .agg(count(lit(1)).cast("long").as("n"),
-        sum(floor(col("o_totalprice") * 1000000 + lit(0.5))
-          .cast("long")).cast("long").as("rev"))
+        sum(micros(col("o_totalprice"))).cast("long").as("rev"))
     val t = m.agg(sum(col("n")).cast("long").as("tn"),
       sum(col("rev")).cast("long").as("tr"),
       count(lit(1)).cast("long").as("k"))
     m.crossJoin(broadcast(t))
       .select(col("month"), col("n"),
-        graft.Rounding.r6(col("n").cast("double") * col("k")
+        r6(col("n").cast("double") * col("k")
           / col("tn")).as("volume_index"),
-        graft.Rounding.r6(col("rev").cast("double") * col("k")
+        r6(col("rev").cast("double") * col("k")
           / col("tr")).as("revenue_index"))
       .orderBy(col("month"))
   }
@@ -735,12 +726,12 @@ object Warehouse {
     * orders×customer join (customer dim broadcast). */
   val segmentOrderPercentiles: QueryDef = QueryDef.sql(
     s"""WITH j AS (SELECT c_mktsegment seg,
-           CAST(floor(o_totalprice*1000000+0.5) AS BIGINT) v
+           ${microsSql("o_totalprice")} v
          FROM orders JOIN customer ON c_custkey = o_custkey)
        SELECT seg, CAST(count(*) AS BIGINT) n_orders,
-         ${graft.Rounding.r6sql("quantile_cont(v, 0.5)/1000000.0")}
+         ${r6sql("quantile_cont(v, 0.5)/1000000.0")}
            AS p50_order,
-         ${graft.Rounding.r6sql("quantile_cont(v, 0.9)/1000000.0")}
+         ${r6sql("quantile_cont(v, 0.9)/1000000.0")}
            AS p90_order
        FROM j GROUP BY 1 ORDER BY 1""") { (s, d) =>
     Tables.orders(s, d)
@@ -748,13 +739,12 @@ object Warehouse {
         .select(col("c_custkey"), col("c_mktsegment"))),
         col("c_custkey") === col("o_custkey"))
       .select(col("c_mktsegment").as("seg"),
-        floor(col("o_totalprice") * 1000000 + lit(0.5)).cast("long")
-          .as("v"))
+        micros(col("o_totalprice")).as("v"))
       .groupBy(col("seg"))
       .agg(count(lit(1)).cast("long").as("n_orders"),
-        graft.Rounding.r6(percentile(col("v"), lit(0.5))
+        r6(percentile(col("v"), lit(0.5))
           / 1000000.0).as("p50_order"),
-        graft.Rounding.r6(percentile(col("v"), lit(0.9))
+        r6(percentile(col("v"), lit(0.9))
           / 1000000.0).as("p90_order"))
       .orderBy(col("seg"))
   }
@@ -768,8 +758,8 @@ object Warehouse {
   val brandShareSlope: QueryDef = QueryDef.sql(
     s"""WITH r AS (SELECT p_brand,
            CAST(month(CAST(o_orderdate AS DATE)) AS BIGINT) mo,
-           CAST(sum(CAST(floor(l_extendedprice*(1-l_discount)
-             *1000000+0.5) AS BIGINT)) AS BIGINT) rev
+           CAST(sum(${microsSql("l_extendedprice*(1-l_discount)")})
+             AS BIGINT) rev
          FROM lineitem JOIN part ON p_partkey=l_partkey
          JOIN orders ON o_orderkey=l_orderkey GROUP BY 1,2),
        t AS (SELECT mo mo2, CAST(sum(rev) AS BIGINT) tot FROM r
@@ -784,7 +774,7 @@ object Warehouse {
            CAST(sum(mo*ppm) AS BIGINT) sxy
          FROM sh GROUP BY 1 HAVING count(*) >= 6)
        SELECT p_brand, n,
-         ${graft.Rounding.r6sql(
+         ${r6sql(
            """CAST(n*sxy - sx*sy AS DOUBLE)
               / CAST(n*sxx - sx*sx AS DOUBLE) / 1000000.0""")}
            AS share_slope
@@ -798,9 +788,8 @@ object Warehouse {
           month(to_date(col("o_orderdate"))).cast("long").as("mo")),
         col("o_orderkey") === col("l_orderkey"))
       .groupBy(col("p_brand"), col("mo"))
-      .agg(sum(floor(col("l_extendedprice")
-        * (lit(1) - col("l_discount")) * 1000000 + lit(0.5))
-        .cast("long")).cast("long").as("rev"))
+      .agg(sum(micros(col("l_extendedprice")
+        * (lit(1) - col("l_discount")))).cast("long").as("rev"))
     val t = r.groupBy(col("mo").as("mo2"))
       .agg(sum(col("rev")).cast("long").as("tot"))
     val sh = r.join(broadcast(t), col("mo") === col("mo2"))
@@ -815,7 +804,7 @@ object Warehouse {
         sum(col("mo") * col("ppm")).cast("long").as("sxy"))
       .filter(col("n") >= 6)
       .select(col("p_brand"), col("n"),
-        graft.Rounding.r6(
+        r6(
           (col("n") * col("sxy") - col("sx") * col("sy"))
             .cast("double")
           / (col("n") * col("sxx") - col("sx") * col("sx"))
@@ -833,8 +822,8 @@ object Warehouse {
     * customers, never a global sort), and only the ≤3 ranked rows
     * per segment reach the aggregation. */
   val listaggTopSpenders: QueryDef = QueryDef.sql(
-    """WITH s AS (SELECT c_mktsegment, o_custkey,
-           CAST(sum(CAST(floor(o_totalprice*1000000+0.5) AS BIGINT))
+    s"""WITH s AS (SELECT c_mktsegment, o_custkey,
+           CAST(sum(${microsSql("o_totalprice")})
              AS BIGINT) sp
          FROM orders JOIN customer ON c_custkey = o_custkey
          GROUP BY 1, 2),
@@ -850,8 +839,7 @@ object Warehouse {
     val sp = Tables.orders(s, d)
       .join(Tables.customer(s, d), col("c_custkey") === col("o_custkey"))
       .groupBy(col("c_mktsegment"), col("o_custkey"))
-      .agg(sum(floor(col("o_totalprice") * 1000000 + lit(0.5))
-        .cast("long")).cast("long").as("sp"))
+      .agg(sum(micros(col("o_totalprice"))).cast("long").as("sp"))
     val w = Window.partitionBy(col("c_mktsegment"))
       .orderBy(col("sp").desc, col("o_custkey"))
     sp.withColumn("rk", row_number().over(w))
@@ -873,9 +861,9 @@ object Warehouse {
     * identical groups, counts, and micro-sums or the collation path
     * is broken. */
   val collatedGroup: QueryDef = QueryDef.sql(
-    """WITH m AS (SELECT CASE WHEN p_partkey % 2 = 0 THEN upper(p_type)
+    s"""WITH m AS (SELECT CASE WHEN p_partkey % 2 = 0 THEN upper(p_type)
              ELSE p_type END AS t,
-           CAST(floor(p_retailprice*1000000+0.5) AS BIGINT) pm
+           ${microsSql("p_retailprice")} pm
          FROM part)
        SELECT lower(t) AS p_type_lc, CAST(count(*) AS BIGINT) AS n,
          CAST(sum(pm) AS BIGINT) AS price_micro
@@ -883,8 +871,7 @@ object Warehouse {
     Tables.part(s, d)
       .select(when(col("p_partkey") % 2 === 0, upper(col("p_type")))
           .otherwise(col("p_type")).as("t"),
-        floor(col("p_retailprice") * 1000000 + lit(0.5)).cast("long")
-          .as("pm"))
+        micros(col("p_retailprice")).as("pm"))
       .groupBy(expr("collate(t, 'UTF8_LCASE')").as("tc"))
       .agg(count(lit(1)).cast("long").as("n"),
         sum(col("pm")).cast("long").as("price_micro"))

@@ -105,7 +105,7 @@ object StreamOps {
     import spark.implicits._
     events
       .select(col("user_id").as[Long],
-        floor(col("value") * 1000000 + lit(0.5)).cast("long").as[Long])
+        graft.Rounding.micros(col("value")).as[Long])
       .groupByKey(_._1)
       .transformWithState(new RunningTotalsProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),

@@ -20,6 +20,9 @@ object TextOps {
     * the documents fixture; swap the pattern for real corpora. */
   def tokens(text: Column): Column = split(trim(text), " ")
 
+  /** The identical tokens as DuckDB SQL text. */
+  def tokensSql(text: String): String = s"string_split(trim($text), ' ')"
+
   def tokenCount(text: Column): Column = size(tokens(text))
 
   /** Mean token length via a row-local fold (sum of lengths / n). */

@@ -1205,7 +1205,7 @@ object VectorOps {
             beam(qv, qn, n, ef).iterator
               .filter(j => pts(j)._1 != qid)
               .map(j => (qid, pts(j)._1,
-                math.floor(cosTo(qv, qn, j) * 1e6 + 0.5) / 1e6))
+                graft.Rounding.r6(cosTo(qv, qn, j))))
               .take(k)
           }
         }

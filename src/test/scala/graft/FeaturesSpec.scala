@@ -63,4 +63,24 @@ class FeaturesSpec extends AnyFunSuite {
         col("a").cast("timestamp"), col("b").cast("timestamp")).as("m"))
     assert(df.collect()(0).getDouble(0) == 1.5)
   }
+
+  test("micros: half-up micro-units as a long, ties away from floor") {
+    val df = Seq(0.5e-6, -0.5e-6, -1.5e-6).toDF("v")
+      .select(Rounding.micros(col("v")).as("m"))
+    assert(df.schema("m").dataType == org.apache.spark.sql.types.LongType)
+    assert(df.collect().map(_.getLong(0)).toSeq == Seq(1L, 0L, -1L))
+    assert(Rounding.microsSql("v") ==
+      "CAST(floor((v) * 1000000 + 0.5) AS BIGINT)")
+  }
+
+  test("epochDay: whole UTC days since 1970-01-01, negative before") {
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    // 1970-01-01T00:00, 1970-01-01T23:59:59.999999, 1969-12-31T12:00
+    val df = Seq(0L, 86399999999L, -43200000000L).toDF("us")
+      .select(Features.epochDay(timestamp_micros(col("us"))).as("di"))
+    assert(df.schema("di").dataType == org.apache.spark.sql.types.LongType)
+    assert(df.collect().map(_.getLong(0)).toSeq == Seq(0L, 0L, -1L))
+    assert(Features.epochDaySql("ts") ==
+      "epoch_us(date_trunc('day', ts)) // 86400000000")
+  }
 }

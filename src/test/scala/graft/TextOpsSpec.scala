@@ -14,6 +14,13 @@ class TextOpsSpec extends AnyFunSuite {
     assert(df.select(TextOps.tokenCount(col("t"))).collect()(0).getInt(0) == 4)
   }
 
+  test("tokens: leading spaces trimmed, a doubled space is an empty token") {
+    val toks = Seq("  spark  graft").toDF("t")
+      .select(TextOps.tokens(col("t"))).collect()(0).getSeq[String](0)
+    assert(toks == Seq("spark", "", "graft"))
+    assert(TextOps.tokensSql("t") == "string_split(trim(t), ' ')")
+  }
+
   test("shingles: 3-grams of 5 tokens, deduplicated") {
     val df = Seq("a b c d e", "x y x y x y").toDF("t")
       .select(TextOps.shingles(TextOps.tokens(col("t")), 3).as("sh"))

@@ -46,30 +46,72 @@ ALLOW = {
 DEF = re.compile(r"^\s*((?:(?:@[\w.]+(?:\([^)]*\))?|"
                  r"(?:private|protected)(?:\[\w+\])?|final|"
                  r"implicit|override|inline)\s+)*)def\s+([A-Za-z_]\w*)")
-LITERAL = re.compile(r'"""(?:.|\n)*?"""|"(?:\\.|[^"\\\n])*"'
-                     r"|'(?:\\.|[^'\\\n])'")
+CHAR = re.compile(r"'(?:\\.|[^'\\\n])'")
 
 
 def strip_comments(text):
     """Blank out // and /* */ comments, keeping string and char
-    literals and line numbers."""
-    out, i, n = [], 0, len(text)
-    while i < n:
-        m = LITERAL.match(text, i)
-        if m:
-            out.append(m.group(0))
-            i = m.end()
-        elif text.startswith("//", i):
-            j = text.find("\n", i)
-            i = n if j < 0 else j
-        elif text.startswith("/*", i):
-            j = text.find("*/", i + 2)
-            j = n if j < 0 else j + 2
-            out.append("\n" * text.count("\n", i, j))
-            i = j
-        else:
-            out.append(text[i])
-            i += 1
+    literals and line numbers. Interpolated strings are followed into
+    their `${...}` blocks, so a literal nested in one (an oracle that
+    passes a triple-quoted argument to `r6sql`) neither ends the outer
+    literal nor turns SQL after it into code."""
+    out, n = [], len(text)
+
+    def code(i, nested):
+        depth = 0
+        while i < n:
+            if text.startswith("//", i):
+                j = text.find("\n", i)
+                i = n if j < 0 else j
+            elif text.startswith("/*", i):
+                j = text.find("*/", i + 2)
+                j = n if j < 0 else j + 2
+                out.append("\n" * text.count("\n", i, j))
+                i = j
+            elif text[i] == '"':
+                i = string(i)
+            elif m := CHAR.match(text, i):
+                out.append(m.group(0))
+                i = m.end()
+            else:
+                if nested and text[i] == "}":
+                    if depth == 0:
+                        return i
+                    depth -= 1
+                elif nested and text[i] == "{":
+                    depth += 1
+                out.append(text[i])
+                i += 1
+        return i
+
+    def string(i):
+        interp = i > 0 and (text[i - 1].isalnum() or text[i - 1] == "_")
+        q = '"""' if text.startswith('"""', i) else '"'
+        out.append(q)
+        i += len(q)
+        while i < n:
+            if text.startswith(q, i):
+                if q == '"""':
+                    while text.startswith('""""', i):
+                        out.append('"')
+                        i += 1
+                out.append(q)
+                return i + len(q)
+            if (q == '"' and text[i] == "\\") or (
+                    interp and text.startswith("$$", i)):
+                out.append(text[i:i + 2])
+                i += 2
+            elif interp and text.startswith("${", i):
+                out.append("${")
+                i = code(i + 2, True)
+                out.append("}")
+                i += 1
+            else:
+                out.append(text[i])
+                i += 1
+        return i
+
+    code(0, False)
     return "".join(out)
 
 
