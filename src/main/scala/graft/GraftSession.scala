@@ -24,6 +24,22 @@ object GraftSession {
       // GraftFunctions.register below covers this session and any
       // pre-existing context)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      // Spark keys its compiled-class cache on (context classloader,
+      // source), and artifact isolation runs each session's work under
+      // that session's own classloader. StreamOps.drain's start()
+      // clones the session, so with isolation on every drain
+      // recompiled classes it had already compiled (a windowedCounts
+      // drain: 14 per run) and those misses evicted the batch
+      // queries' classes. graft adds no session artifacts, so every session
+      // and clone can share one classloader and one set of classes.
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // static conf, like spark.sql.extensions: only the JVM's first
+      // session sizes the compiled-class cache. The default holds 100
+      // classes; one catalog pass at sf0.01 compiles about 4,700
+      // distinct ones, so a second pass recompiled nearly all. 8192
+      // (the next power of two) holds the catalog, at roughly 32 KB
+      // of heap per class kept.
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       // events.ts is parquet TIMESTAMP(NANOS), which Spark 4 rejects

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * against SPARK_GRAFT_SF_DIR (default: the sf0.1 fixture) at
   * local[SPARK_GRAFT_CPUS] (default 32). Modes:
   *  - `q <query>...`: per-query wall, cache-cold, run 1 and run 2,
-  *    with the max task of each run; for run 2 (JVM-warm, the number
+  *    with the max task and the classes codegen compiled (a JVM-wide
+  *    count) of each run; for run 2 (JVM-warm, the number
   *    that matters) also the job count, job wall, driver gap and the
   *    stages with the most task time;
   *  - `explain <outDir> <suffix> <query>...`: executes each query,
@@ -62,7 +63,8 @@ object Profile {
         trace.flush()
         val w = trace.window
         println(f"[profile] $name%-34s run$i $sec%8.3f s " +
-          f"max_task=${w.maxTaskMs / 1e3}%7.3f s")
+          f"max_task=${w.maxTaskMs / 1e3}%7.3f s " +
+          f"codegen=${w.codegenCompiles}%4d")
         if (i == 2) {
           // wall not covered by any running job ≈ driver-side work
           // (planning, codegen, collect gaps between jobs)

@@ -5,6 +5,7 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import scala.collection.mutable
 
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 
 /** The engine's one run-statistics listener. For the window since its
@@ -14,7 +15,8 @@ import org.apache.spark.scheduler._
   * feed it; AQE submits stages from a thread pool, so the callsite
   * says nothing). [[window]] turns that into a [[QueryTrace.Window]]:
   * job count, the wall covered by the union of the job spans, the
-  * driver gap (window wall minus that union) and the stage table.
+  * driver gap (window wall minus that union), the stage table and the
+  * classes codegen compiled.
   *
   * Listener events arrive asynchronously; call [[flush]] after a pass
   * so the window holds every event the pass posted. Bench and Profile
@@ -25,6 +27,8 @@ final class QueryTrace private (sc: SparkContext) extends SparkListener {
   private val token = s"${getClass.getName}@${System.identityHashCode(this)}"
   private var t0 = System.currentTimeMillis()
   private var t1 = -1L
+  private var c0 = compiles
+  private var c1 = -1L
   private val jobStart = mutable.HashMap.empty[Int, Long]
   private val spans = mutable.ArrayBuffer.empty[(Long, Long)]
   private val stages = mutable.LinkedHashMap.empty[Int, StageAgg]
@@ -35,6 +39,7 @@ final class QueryTrace private (sc: SparkContext) extends SparkListener {
   /** Start a new, empty window. */
   def reset(): Unit = synchronized {
     t0 = System.currentTimeMillis(); t1 = -1L
+    c0 = compiles; c1 = -1L
     jobStart.clear(); spans.clear(); stages.clear()
   }
 
@@ -44,7 +49,7 @@ final class QueryTrace private (sc: SparkContext) extends SparkListener {
     * event on the same queue has too. The window's wall ends here. */
   def flush(): Unit = {
     val latch = synchronized {
-      if (t1 < 0) t1 = System.currentTimeMillis()
+      if (t1 < 0) { t1 = System.currentTimeMillis(); c1 = compiles }
       flushLatch = new CountDownLatch(1); flushLatch
     }
     val prev = sc.getLocalProperty(FlushKey)
@@ -63,7 +68,8 @@ final class QueryTrace private (sc: SparkContext) extends SparkListener {
   /** The window so far: its finished jobs and the stages of those
     * jobs that ran tasks. Its wall runs from [[reset]] to the first
     * [[flush]] after it (or to now, before any); job spans are clipped
-    * to it, so 0 ≤ driver gap ≤ wall. */
+    * to it, so 0 ≤ driver gap ≤ wall. Its codegen count ends there
+    * too. */
   def window: Window = synchronized {
     val end = if (t1 >= 0) t1 else System.currentTimeMillis()
     var covered, hi = 0L
@@ -73,7 +79,8 @@ final class QueryTrace private (sc: SparkContext) extends SparkListener {
         if (e > from) { covered += e - from; hi = e }
       }
     Window(end - t0, spans.size, covered,
-      stages.values.map(_.stage).filter(_.tasks > 0).toSeq)
+      stages.values.map(_.stage).filter(_.tasks > 0).toSeq,
+      (if (c1 >= 0) c1 else compiles) - c0)
   }
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
@@ -119,9 +126,17 @@ object QueryTrace {
   final case class Stage(id: Int, tasks: Int, taskMs: Long, maxTaskMs: Long,
       shuffleReadBytes: Long, shuffleWriteBytes: Long, scopes: String)
 
-  /** One window's reading; times in ms. */
+  /** Classes compiled by codegen in this JVM so far. */
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** One window's reading; times in ms. `codegenCompiles` is the
+    * number of classes codegen compiled in the window. The counter
+    * behind it is JVM-wide: it also counts compiles of other sessions
+    * and of work outside the window's jobs (planning, a drain's
+    * micro-batches), and a class served from the compiled-class cache
+    * counts nothing. */
   final case class Window(wallMs: Long, jobs: Int, jobWallMs: Long,
-      stages: Seq[Stage]) {
+      stages: Seq[Stage], codegenCompiles: Long) {
     def driverGapMs: Long = wallMs - jobWallMs
     def taskMs: Long = stages.map(_.taskMs).sum
     def maxTaskMs: Long = stages.map(_.maxTaskMs).maxOption.getOrElse(0L)

@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** QueryTrace's window over a job of known shape: one job whose map
   * stage runs 3 tasks and whose reduce stage runs 4, read right after
-  * a flush; then an empty window after reset, and nothing after close. */
+  * a flush; then an empty window after reset, and nothing after close;
+  * and the codegen count of a window that compiles a new projection. */
 class QueryTraceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -38,6 +39,23 @@ class QueryTraceSpec extends AnyFunSuite {
       val empty = trace.window
       assert(empty.jobs == 0 && empty.stages.isEmpty && empty.taskMs == 0)
       assert(empty.jobWallMs == 0 && empty.driverGapMs == empty.wallMs)
+    } finally trace.close()
+  }
+
+  test("codegenCompiles counts the window's new classes and ends at flush") {
+    // a constant no earlier plan used: its projection is a new source
+    val k = System.nanoTime() % 1000000007L
+    def project() = spark.range(8).selectExpr(s"id * $k + 1 AS x")
+      .agg(org.apache.spark.sql.functions.sum("x")).collect()
+    val trace = QueryTrace.start(spark.sparkContext)
+    try {
+      trace.reset()
+      project()
+      trace.flush()
+      val first = trace.window.codegenCompiles
+      assert(first >= 1, "a new projection compiled no class")
+      project() // after the flush: not in the window
+      assert(trace.window.codegenCompiles == first)
     } finally trace.close()
   }
 

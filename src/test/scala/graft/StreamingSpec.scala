@@ -62,6 +62,31 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.getLong(1) == batch.getLong(1)) // distinct windows
   }
 
+  test("a repeated drain and a batch query re-run after it compile no " +
+      "new classes") {
+    // every drain runs on a clone of the session; the clones and the
+    // session must share one compiled-class cache key, and the cache
+    // must keep the batch query's classes across the drains
+    val trace = QueryTrace.start(spark.sparkContext)
+    def compiles(body: => Unit): Long = {
+      trace.reset(); body; trace.flush(); trace.window.codegenCompiles
+    }
+    def batch(): Unit = Tables.events(spark, dir)
+      .groupBy(col("user_id")).agg(max(col("value")), count(lit(1)))
+      .collect()
+    def drained(): Unit = StreamOps.drain(spark, dir, "complete") {
+      StreamOps.windowedCounts(StreamOps.eventsStream(spark, dir))
+    }.collect()
+    try {
+      compiles(batch())
+      compiles(drained())
+      val again = compiles(drained())
+      assert(again == 0, s"the second drain compiled $again classes")
+      val rerun = compiles(batch())
+      assert(rerun == 0, s"the batch re-run compiled $rerun classes")
+    } finally trace.close()
+  }
+
   test("intervalJoin: stream-stream result equals the batch range join") {
     val streamed = StreamOps.drain(spark, dir, "append", floor = 8) {
       StreamOps.intervalJoin(
